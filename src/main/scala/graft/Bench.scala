@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Pure validity arithmetic for the bench artifact, factored out of
   * the main so the gate policy is unit-pinnable without running a
@@ -220,7 +219,6 @@ object Bench {
     // and participates in the min() below.
     val loadFirst = loadAvg()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // Optional comma-separated query-name filter for targeted profiling
     // (e.g. SPARK_GRAFT_ONLY=j_role_playing,x_embed_neardup). Unset →
     // the full registry, which is the only mode whose total is the
@@ -233,7 +231,7 @@ object Bench {
     // file the builder commits per round (bench/roundN.json) — per-query
     // regression attribution needs the full history, not the tail.
     val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "")
-    // Probe BEFORE the SparkSession spins up its own 32 threads: by
+    // Probe BEFORE the SparkSession spins up its own threads: by
     // the time the warm-up runs, loadavg and steal already reflect
     // us, not the host. Policy is run-first/stamp-after (BenchGate):
     // the pre-run wait is a bounded 2 x 45 s decay wait (trend-
@@ -300,25 +298,16 @@ object Bench {
     // override: it is a pure function of (cores, input bytes), so two
     // default-config runs at the same sf are still comparable.
     val partitionsOverridden = sys.env.contains("SPARK_GRAFT_SHUFFLE_PARTITIONS")
-    val shufflePartitions = SessionTuning.shufflePartitions(cpus.toInt, sfDir)
-    // Same master resolution as Verify: env > spark-submit > local[cpus].
-    // A non-default master is a different execution topology — real
-    // executor JVMs, network shuffle — so it also invalidates the
-    // artifact for cross-round comparison (and is emitted in the JSON).
+    // A non-default master (env or spark-submit) is a different
+    // execution topology — real executor JVMs, network shuffle — so it
+    // also invalidates the artifact for cross-round comparison (and is
+    // emitted in the JSON).
     val masterOverridden =
       sys.env.contains("SPARK_GRAFT_MASTER") || sys.props.contains("spark.master")
-    val master = sys.env.get("SPARK_GRAFT_MASTER")
-      .orElse(sys.props.get("spark.master"))
-      .getOrElse(s"local[$cpus]")
-    val spark = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config(Tables.NanosAsLongKey, "true") // legacy-encoding tolerance; see Tables.normalizeTs
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SessionTuning.session(sfDir)
+    val cpus = SessionTuning.cpus()
+    val master = spark.sparkContext.master
+    val shufflePartitions = spark.conf.get("spark.sql.shuffle.partitions")
     // Bootstrap warm-up + shared index, GUARDED like the query loop:
     // a broken loader here (e.g. regenerated testdata the scan
     // rejects) must still produce the JSON artifact below with

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
+
 /** Data-adaptive session sizing — the one knob the sf10 probe showed a
   * cluster operator always turns (TESTDATA.md round-13 wave): shuffle
   * partitions sized to the DATA, not pinned to the core count.
@@ -57,4 +59,33 @@ object SessionTuning {
   def shufflePartitions(cores: Int, sfDir: String): String =
     sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS",
       shufflePartitionsFor(cores, inputBytes(sfDir)).toString)
+
+  /** Core count: `SPARK_GRAFT_CPUS`, else the cores the JVM sees. */
+  def cpus(env: Map[String, String] = sys.env): Int =
+    env.get("SPARK_GRAFT_CPUS").fold(Runtime.getRuntime.availableProcessors)(_.toInt)
+
+  /** Master: `SPARK_GRAFT_MASTER`, then the `spark.master` system
+    * property (spark-submit's `--master`, which a hard-coded builder
+    * value would clobber), then in-process `local[cpus]`.
+    */
+  def master(env: Map[String, String] = sys.env,
+      props: Map[String, String] = sys.props.toMap): String =
+    env.get("SPARK_GRAFT_MASTER").orElse(props.get("spark.master"))
+      .getOrElse(s"local[${cpus(env)}]")
+
+  /** The engine's one session configuration, used by every main:
+    * resolved master, data-sized shuffle partitions, the legacy
+    * nanos-timestamp tolerance (see Tables.normalizeTs), UTC, no UI.
+    */
+  def session(sfDir: String): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(master())
+      .config("spark.sql.shuffle.partitions", shufflePartitions(cpus(), sfDir))
+      .config(Tables.NanosAsLongKey, "true")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
 }

@@ -1,28 +1,18 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Local smoke runner mirroring the driver's t1 check: `entry` on
   * sf0.001 must return >0 rows. Optional arg = an explain target
   * query name to print its formatted physical plan.
   */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config(Tables.NanosAsLongKey, "true") // legacy-encoding tolerance; see Tables.normalizeTs
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.001"
+    val spark = SessionTuning.session(sfDir)
     if (args.isEmpty) {
       val n = SparkEntry.entry(spark).count()
       println(s"[smoke] entry rows=$n ${if (n > 0) "OK" else "FAIL"}")
     } else {
       val q = args(0)
-      val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.001"
       if (sys.env.contains("EXPLAIN"))
         SparkEntry.queries(q)(spark, sfDir).explain("formatted")
       for (i <- 1 to 3) {

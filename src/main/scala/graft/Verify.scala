@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,26 +8,7 @@ object Verify {
     // optional 3rd arg: comma-separated query names — dump only those
     // (local iteration aid; the driver always runs the full surface)
     val only: Option[Set[String]] = args.drop(2).headOption.map(_.split(",").toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // Master resolution order: explicit env > spark-submit's spark.master
-    // system property (the local-cluster gate submits this class through
-    // /opt/spark/bin/spark-submit, whose --master must not be clobbered
-    // by a hardcoded builder value) > in-process local[cpus].
-    val master = sys.env.get("SPARK_GRAFT_MASTER")
-      .orElse(sys.props.get("spark.master"))
-      .getOrElse(s"local[$cpus]")
-    val spark = SparkSession.builder()
-      .master(master)
-      // Data-adaptive: resolves to the core count at every driver test
-      // scale (sf0.001-sf1 input fits the cores x ~1.5MiB working set)
-      // and grows with input bytes past that — see SessionTuning.
-      .config("spark.sql.shuffle.partitions",
-        SessionTuning.shufflePartitions(cpus.toInt, sfDir))
-      .config(Tables.NanosAsLongKey, "true") // legacy-encoding tolerance; see Tables.normalizeTs
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SessionTuning.session(sfDir)
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }

@@ -243,11 +243,11 @@ object DedupQueries {
     // Majority vote as plain bit-sums against the row count: bit b is
     // set iff 2·Σ((h>>b)&1) > n, which equals the ±1-vote sign test
     // (v_b = 2·s_b − n > 0) — but the update expression is a branch-
-    // free shift+mask instead of a CASE per row per bit (Prof
-    // `simhash`: the 60-column vote aggregate drops 0.70 s → 0.41 s;
-    // a bit-sliced packed-counter variant was faster still (0.28 s)
-    // but caps postings-per-doc at the counter width, a scale hazard,
-    // and was rejected). Buffers stay one long per bit — map-side
+    // free shift+mask instead of a CASE per row per bit
+    // (OPTIMIZATION_r17.md §4: the 60-column vote aggregate drops
+    // 0.70 s → 0.41 s; a bit-sliced packed-counter variant was faster
+    // still (0.28 s) but caps postings-per-doc at the counter width, a
+    // scale hazard, and was rejected). Buffers stay one long per bit — map-side
     // combinable, no per-doc-size ceiling.
     val bitCols = (0 until bits).map(b => sum(expr(s"(h >> $b) & 1")).as(s"s$b"))
     val votes = hashes.groupBy("doc_id")
@@ -1321,7 +1321,7 @@ object DedupQueries {
     // both read `merged`, and without the pin each branch re-derives
     // BOTH full pair chains (MinHash band+verify AND the SimHash
     // vote+band join) from the postings — the audit's entire cost,
-    // twice (Prof `agreement`: mh 0.66 s + sh 1.10 s, full query
+    // twice (OPTIMIZATION_r17.md §3: mh 0.66 s + sh 1.10 s, full query
     // 2.21 s). The pinned frame is ≤ |pairs| narrow rows; the
     // declared oracle SQL is unchanged.
     val merged = mh.join(sh,

@@ -54,7 +54,7 @@ object SharedIndex {
   private val builtPaths = mutable.HashMap.empty[String, String]
 
   /** Test-only accounting: how many times each artifact key's builder
-    * actually RAN in this JVM (key = normalized dir, or dir#tag for
+    * actually RAN in this JVM (key = normalized dir#tag, see
     * [[materialized]]). The spans queries pin their gram stream behind
     * a lazy localCheckpoint whose LogicalRDD hides lineage, so the
     * warm-artifact contract ("the whole winnow/span/cut/decon family
@@ -72,49 +72,39 @@ object SharedIndex {
     builtPaths.synchronized { buildCounts.toMap }
 
   /** The `(doc_id, sid)` postings for the documents table under `dir`,
-    * building + persisting on first use. The whole check-and-build runs
-    * under one lock so concurrent first callers can't race a rebuild of
-    * the same path; the key is the normalized absolute path so spelling
-    * variants (trailing slash, relative) share one index.
+    * built + persisted on first use as the `sid_postings` artifact.
     */
-  def sidPostings(spark: SparkSession, dir: String): DataFrame = {
-    val key = Paths.get(dir).toAbsolutePath.normalize.toString
-    val path = builtPaths.synchronized {
-      builtPaths.getOrElseUpdate(key, {
-        val tag = key.replaceAll("[^A-Za-z0-9._-]", "_")
-        val p = root.resolve(s"sid_postings_$tag").toString
-        // THREE measured non-wins keep this formulation as-is: persisting
-        // `sh` before its two consumers costs ~+1 s (the codegen'd
-        // shingle pipeline recomputes cheaper than it materializes,
-        // 3-trial cold builds at sf0.1/local[32], baseline ~10.2 s),
-        // a "one-pass" dense_rank directly over the postings costs
-        // ~+3 s (sorting every posting row dwarfs ranking the distinct
-        // set plus joining back), and building the shingles FROM the
-        // materialized token-hash frame (skipping tokenize+posexplode)
-        // costs ~+1 s combined (2-trial r12: tok_build-first 3.9-4.0 s
-        // + index 5.3-6.1 s vs 1.2 s + 7.0-7.4 s as-is — scanning the
-        // 1.9M-row frame parquet is slower than re-tokenizing 50k docs
-        // inside the scan's codegen stage).
-        countBuild(key)
-        val sh = TextOps.shinglePostings(Tables.documents(spark, dir), 3)
-        sh.join(TextOps.shingleDict(sh), "shingle")
-          .select("doc_id", "sid")
-          .write.mode("overwrite").parquet(p)
-        p
-      })
+  def sidPostings(spark: SparkSession, dir: String): DataFrame =
+    materialized(spark, dir, "sid_postings") {
+      // THREE measured non-wins keep this formulation as-is: persisting
+      // `sh` before its two consumers costs ~+1 s (the codegen'd
+      // shingle pipeline recomputes cheaper than it materializes,
+      // 3-trial cold builds at sf0.1/local[32], baseline ~10.2 s),
+      // a "one-pass" dense_rank directly over the postings costs
+      // ~+3 s (sorting every posting row dwarfs ranking the distinct
+      // set plus joining back), and building the shingles FROM the
+      // materialized token-hash frame (skipping tokenize+posexplode)
+      // costs ~+1 s combined (2-trial r12: tok_build-first 3.9-4.0 s
+      // + index 5.3-6.1 s vs 1.2 s + 7.0-7.4 s as-is — scanning the
+      // 1.9M-row frame parquet is slower than re-tokenizing 50k docs
+      // inside the scan's codegen stage).
+      val sh = TextOps.shinglePostings(Tables.documents(spark, dir), 3)
+      sh.join(TextOps.shingleDict(sh), "shingle").select("doc_id", "sid")
     }
-    spark.read.parquet(path)
-  }
 
   /** Generic once-per-(JVM, sf-dir) materialized artifact: `build` is
     * evaluated and persisted as parquet on the first call for a given
     * (dir, tag), and every later call — across queries — is a plain
-    * columnar scan. The same production shape as the postings index
-    * above: a labeling or index that an entire job family consumes is
-    * an artifact you compute once, not a plan fragment each query
-    * re-derives. Used for the near-dup CC labeling (nine queries
-    * consume one clustering); Bench builds it explicitly as its own
-    * `cc_build` metric line so per-query numbers are warm-artifact.
+    * columnar scan. The whole check-and-build runs under one lock so
+    * concurrent first callers can't race a rebuild of the same path;
+    * the key is the normalized absolute path so spelling variants
+    * (trailing slash, relative) share one artifact. A labeling or index
+    * that an entire job family consumes is an artifact you compute
+    * once, not a plan fragment each query re-derives. Used for the
+    * shingle postings above and the near-dup CC labeling (nine queries
+    * consume one clustering); Bench builds each explicitly as its own
+    * metric line (`index_build`, `cc_build`) so per-query numbers are
+    * warm-artifact.
     */
   def materialized(spark: SparkSession, dir: String, tag: String)(
       build: => DataFrame): DataFrame = {

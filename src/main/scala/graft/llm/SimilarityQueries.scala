@@ -985,7 +985,7 @@ object SimilarityQueries {
     * builds growing superlinearly (exponent 1.14/1.28) for exactly
     * this reason. Growing r with log2(N) holds buckets ∝ N, so
     * expected occupancy — and per-node candidate yield — stays
-    * constant. MEASURED (KnnProbe, TESTDATA.md round-13 wave), with
+    * constant. MEASURED (cold kNN edge builds, TESTDATA.md round-13 wave), with
     * the anchor (rBase=8 @ nBase=2000 vectors = the sf0.1 corpus):
     * sf1 (20k) → r=11: 34.2 s / 99,768 edges vs 39.6 s / 100,000 at
     * the fixed r=8; sf10 (200k) → r=15: 994,890 edges ≈ the same

@@ -29,10 +29,10 @@ object AggQueries {
     // single-distinct rewrite forces phase 1 to aggregate per
     // (flag, status, orderkey) — |orders|-sized, the query's wide
     // stage — and decimal sum buffers there (isEmpty flag + overflow
-    // checks per row) measured 2–2.5× the primitive path (Prof
-    // `q1agg`: decimal sums alone 0.60 s, distinct alone 0.64 s,
-    // combined 1.31 s; long-cent partials 1.02 s). Cents are exact
-    // (values carry ≤ 2 decimals by the declared cast) and the
+    // checks per row) measured 2–2.5× the primitive path
+    // (OPTIMIZATION_r17.md §1: decimal sums alone 0.60 s, distinct
+    // alone 0.64 s, combined 1.31 s; long-cent partials 1.02 s). Cents
+    // are exact (values carry ≤ 2 decimals by the declared cast) and the
     // per-group partial is bounded by lines-per-order × max price —
     // schema constants, not corpus size — so the long never
     // overflows at any scale; the decimal sum over per-order

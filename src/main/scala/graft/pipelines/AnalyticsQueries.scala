@@ -604,8 +604,9 @@ object AnalyticsQueries {
     // pinned (lazy localCheckpoint): every step frame AND the total-
     // session count read the session-indexed events, and without the
     // pin each of the |steps|+1 branches re-runs the two-window
-    // sessionization chain from the scan (Prof `funnel`: sessionIndexed
-    // 0.39 s alone, the 2-step funnel 0.98 s ≈ 3 re-derivations) —
+    // sessionization chain from the scan (OPTIMIZATION_r17.md §2:
+    // sessionIndexed 0.39 s alone, the 2-step funnel 0.98 s ≈ 3
+    // re-derivations) —
     // within-query pin, same pattern as pairOverlaps' cnt
     val sx = graft.streaming.Sessionize.sessionIndexed(Tables.events(s, d), gapMs)
       .select("user_id", "session_idx", "ts", "event_type")

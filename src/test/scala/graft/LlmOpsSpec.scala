@@ -624,6 +624,10 @@ class LlmOpsSpec extends SparkSpec {
     import llm.DedupQueries._
     val d = "/root/testdata/sf0.001"
     val post = llm.SharedIndex.sidPostings(spark, d)
+    // a second call on the same dir (spelled differently) scans the
+    // persisted artifact: the postings build ran once in this JVM
+    llm.SharedIndex.sidPostings(spark, d + "/")
+    assert(llm.SharedIndex.buildCountsSnapshot.get(s"$d#sid_postings").contains(1))
     def pairSet(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
       df.select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
     val candBase = pairSet(bandCandidates(post, perms = 8, bands = 4))

@@ -1,6 +1,9 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
+
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins the data-adaptive shuffle-partitions heuristic against the
@@ -11,7 +14,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * resolve to exactly today's measured values at today's scales — an
   * sf0.1 bench under the adaptive default has to be byte-comparable to
   * every pre-adaptive round — and keep growing in full waves of cores
-  * past them.
+  * past them. Also pins the session's master/cpus resolution order and
+  * the rule that `SessionTuning.session` is the only session builder in
+  * the engine's main sources.
   */
 class SessionTuningSpec extends AnyFunSuite {
   import SessionTuning._
@@ -67,5 +72,35 @@ class SessionTuningSpec extends AnyFunSuite {
   test("bad sizing inputs fail loudly, not with a zero-partition session") {
     intercept[IllegalArgumentException](shufflePartitionsFor(0, 1000L))
     intercept[IllegalArgumentException](shufflePartitionsFor(32, 1000L, 0L))
+  }
+
+  private val nproc = Runtime.getRuntime.availableProcessors
+
+  test("master resolution: SPARK_GRAFT_MASTER > spark.master > local[SPARK_GRAFT_CPUS] > local[nproc]") {
+    val env = Map("SPARK_GRAFT_MASTER" -> "spark://env:7077", "SPARK_GRAFT_CPUS" -> "3")
+    val props = Map("spark.master" -> "local-cluster[2,1,1024]")
+    assert(master(env, props) === "spark://env:7077")
+    assert(master(env - "SPARK_GRAFT_MASTER", props) === "local-cluster[2,1,1024]")
+    assert(master(env - "SPARK_GRAFT_MASTER", Map.empty) === "local[3]")
+    assert(cpus(env) === 3)
+  }
+
+  test("nothing set: local[nproc], never the old hard-coded local[32]") {
+    assert(cpus(Map.empty) === nproc)
+    assert(master(Map.empty, Map.empty) === s"local[$nproc]")
+  }
+
+  test("one session builder: SparkSession.builder only in SessionTuning.scala") {
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), s"${root.toAbsolutePath} missing — the guard would be vacuous")
+    val w = Files.walk(root)
+    val offenders =
+      try w.iterator().asScala
+        .filter(p => p.toString.endsWith(".scala") && p.getFileName.toString != "SessionTuning.scala")
+        .filter(p => Files.readString(p).contains("SparkSession.builder"))
+        .map(root.relativize(_).toString).toList
+      finally w.close()
+    assert(offenders.isEmpty,
+      s"build sessions through SessionTuning.session, not a new builder in: $offenders")
   }
 }
