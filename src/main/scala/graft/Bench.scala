@@ -11,7 +11,7 @@ package graft
   *    bench burned its whole window in the pre-wait on a host whose
   *    steal floor sat above the threshold, then timed out (rc=124)
   *    with no artifact at all. The pre-run wait is now a BOUNDED
-  *    decay wait (SPARK_GRAFT_LOADAVG_RETRIES, default 2 × 45 s,
+  *    decay wait (LoadRetries × LoadSleepMs = 2 × 45 s,
   *    taken only when a probe is over threshold, extendable to 2×
   *    that while loadavg is still strictly falling) — it covers the
   *    launcher JVM's own loadavg decay, never minutes of starvation.
@@ -33,7 +33,7 @@ package graft
   *    excess) so cross-round comparability is adjudicated from the
   *    artifact itself: two runs at similar floors compare; a run at
   *    a 20% loaded floor against one at 3% does not, and the JSON
-  *    says so. Only a catastrophic whole-run ceiling (default 25%)
+  *    says so. Only a catastrophic whole-run ceiling (StealCeil, 25%)
   *    still invalidates — beyond it the guest was barely scheduled
   *    at all and per-query numbers are noise.
   *
@@ -60,6 +60,32 @@ object BenchGate {
   val CalibKeys: Long = 10000000L
   val CalibPartitions: Int = 64
 
+  // FROZEN host-gate thresholds, pinned by BenchGateSpec: a loosened
+  // gate would stamp `valid` on a run the fixed gate rejects.
+  // loadavg, lowest clean read: other processes on the box.
+  val MaxLoad: Double = 0.5
+  // The looser allowance the POST-decay-wait loadavg read gates
+  // against: residual self-load from a degenerately-timed startup may
+  // legitimately read up to ~1 here, but contamination that ramped up
+  // right after the entry-instant read — which the min-of-reads alone
+  // would never see — reads its full magnitude and invalidates.
+  val MaxLoadPost: Double = 1.0
+  // Catastrophic whole-run steal ceiling (%), see the policy note.
+  val StealCeil: Double = 25.0
+  // Write bandwidth floor (GB/s) at both the start and emit probes.
+  val MinWriteGBps: Double = 1.0
+  // 2 x 45 s: a bounded DECAY wait, not the round-14 starvation loop.
+  // The launcher JVM's startup burst alone reads ~1.3 on the 1-minute
+  // loadavg (measured: 0.36 idle before launch, 1.27 at main() on an
+  // otherwise-quiet host), and the exponential decay needs ~90 s to
+  // fall back under the 0.5 gate — so with zero retries every artifact
+  // self-invalidates on its own startup noise. Two 45 s retries (taken
+  // only when a probe is actually over threshold) cover exactly that
+  // decay; a genuinely busy host still runs after 90 s and stamps
+  // invalid.
+  val LoadRetries: Int = 2
+  val LoadSleepMs: Long = 45000L
+
   def median(xs: Seq[Double]): Double = {
     val s = xs.sorted
     if (s.isEmpty) -1.0
@@ -74,20 +100,18 @@ object BenchGate {
     * TWO loadavg reads gate (round 16, closing the r15 ADVICE hole):
     * `loadMin` — the lowest clean read (entry-instant vs post-wait;
     * the run's own startup burst is not host contention) against the
-    * strict `maxLoad`; and `loadPost` — the post-decay-wait read —
-    * against a looser `maxLoadPost` allowance for residual self-load.
+    * strict `MaxLoad`; and `loadPost` — the post-decay-wait read —
+    * against a looser `MaxLoadPost` allowance for residual self-load.
     * Gating only the min let contamination that ramps up seconds
     * after launch (entry read idle-clean, host loaded for the whole
     * run) stamp valid under the very gate the policy makes primary.
     */
-  def hostValid(loadMin: Double, maxLoad: Double,
-      loadPost: Double, maxLoadPost: Double,
-      stealRun: Double, stealCeil: Double,
-      writeStart: Double, writeEnd: Double, minWrite: Double): Boolean =
-    loadMin >= 0 && loadMin <= maxLoad &&
-      loadPost >= 0 && loadPost <= maxLoadPost &&
-      stealRun >= 0 && stealRun <= stealCeil &&
-      writeStart >= minWrite && writeEnd >= minWrite
+  def hostValid(loadMin: Double, loadPost: Double, stealRun: Double,
+      writeStart: Double, writeEnd: Double): Boolean =
+    loadMin >= 0 && loadMin <= MaxLoad &&
+      loadPost >= 0 && loadPost <= MaxLoadPost &&
+      stealRun >= 0 && stealRun <= StealCeil &&
+      writeStart >= MinWriteGBps && writeEnd >= MinWriteGBps
 }
 
 object Bench {
@@ -174,8 +198,8 @@ object Bench {
       if (buf(12345) == 1 && dt > 0) 0.25 / dt else -1.0
     } catch { case _: Throwable => -1.0 }
 
-  /** Bounded decay-wait before the run (default 2 x 45 s, taken only
-    * when a probe is over threshold — see the retries doc in main),
+  /** Bounded decay-wait before the run (2 x 45 s, taken only when a
+    * probe is over threshold — see BenchGate.LoadRetries),
     * TREND-AWARE since round 16: after the base retries are spent,
     * waiting continues — up to the same budget again (2 x retries
     * sleeps total) — only while loadavg is BOTH still over the gate
@@ -186,23 +210,23 @@ object Bench {
     * This is NOT round 14's starvation loop: that one defaulted to
     * 5 x 60 s against a threshold the host could never meet and cost
     * the round its artifact (driver rc=124); this one covers exactly
-    * the launcher JVM's own loadavg decay (worst case 4 x 45 s at
-    * the defaults), and a genuinely busy host still runs after it
-    * and stamps itself invalid.
+    * the launcher JVM's own loadavg decay (worst case 4 x 45 s), and
+    * a genuinely busy host still runs after it and stamps itself
+    * invalid.
     */
-  private def awaitIdleHost(maxLoad: Double, stealFloor: Double, maxExcess: Double,
-      minWrite: Double, retries: Int, sleepMs: Long): (Double, Double, Double) = {
+  private def awaitIdleHost(stealFloor: Double): (Double, Double, Double) = {
+    import BenchGate.{LoadRetries, LoadSleepMs, MaxLoad, MinWriteGBps, StealCeil}
     var load = loadAvg()
     var steal = stealPct()
     var write = writeGBps()
     var waits = 0
     var prevLoad = Double.MaxValue
-    val hardCap = retries * 2
-    def busy = load > maxLoad || steal - stealFloor > maxExcess || write < minWrite
-    while (busy && (waits < retries || (waits < hardCap && load > maxLoad && load < prevLoad))) {
-      System.err.println(f"bench: host busy (loadavg $load%.2f vs $maxLoad%.2f, steal $steal%.1f%% vs floor $stealFloor%.1f%%+$maxExcess%.1f%%, write $write%.2f GB/s vs min $minWrite%.2f), waiting ${sleepMs / 1000}s (wait ${waits + 1}/$hardCap)")
+    val hardCap = LoadRetries * 2
+    def busy = load > MaxLoad || steal - stealFloor > StealCeil || write < MinWriteGBps
+    while (busy && (waits < LoadRetries || (waits < hardCap && load > MaxLoad && load < prevLoad))) {
+      System.err.println(f"bench: host busy (loadavg $load%.2f vs $MaxLoad%.2f, steal $steal%.1f%% vs floor $stealFloor%.1f%%+$StealCeil%.1f%%, write $write%.2f GB/s vs min $MinWriteGBps%.2f), waiting ${LoadSleepMs / 1000}s (wait ${waits + 1}/$hardCap)")
       prevLoad = load
-      Thread.sleep(sleepMs)
+      Thread.sleep(LoadSleepMs)
       load = loadAvg()
       steal = stealPct()
       write = writeGBps()
@@ -238,31 +262,6 @@ object Bench {
     // extendable to 4 x 45 s while loadavg is still falling), taken
     // only when a probe is over threshold — an unattended caller on
     // a clean host pays ~8 s of calibration, never minutes.
-    val maxLoad = sys.env.getOrElse("SPARK_GRAFT_LOADAVG_MAX", "0.5").toDouble
-    // The looser allowance the POST-decay-wait loadavg read gates
-    // against (the min-of-reads gates against maxLoad): residual
-    // self-load from a degenerately-timed startup may legitimately
-    // read up to ~1 here, but contamination that ramped up right
-    // after the entry-instant read — which the min() alone would
-    // never see — reads its full magnitude and invalidates.
-    val maxLoadPost = sys.env.getOrElse("SPARK_GRAFT_LOADAVG_POST_MAX", "1.0").toDouble
-    // The catastrophic whole-run steal ceiling — see BenchGate's
-    // policy note: steal is emitted as a covariate (floors + run +
-    // excess) and only invalidates past the point where the guest
-    // was barely scheduled and per-query numbers are noise.
-    val stealCeil = sys.env.getOrElse("SPARK_GRAFT_STEAL_CEIL", "25.0").toDouble
-    val minWrite = sys.env.getOrElse("SPARK_GRAFT_WRITE_GBPS_MIN", "1.0").toDouble
-    // Default 2 x 45 s: a bounded DECAY wait, not the round-14
-    // starvation loop. The launcher JVM's startup burst alone reads
-    // ~1.3 on the 1-minute loadavg (measured: 0.36 idle before
-    // launch, 1.27 at main() on an otherwise-quiet host), and the
-    // exponential decay needs ~90 s to fall back under the 0.5 gate
-    // — so with zero retries every artifact self-invalidates on its
-    // own startup noise. Two 45 s retries (taken only when a probe
-    // is actually over threshold) cover exactly that decay; a
-    // genuinely busy host still runs after 90 s and stamps invalid.
-    val retries = sys.env.getOrElse("SPARK_GRAFT_LOADAVG_RETRIES", "2").toInt
-    val sleepMs = sys.env.getOrElse("SPARK_GRAFT_LOADAVG_SLEEP_MS", "45000").toLong
     // Host-capacity calibration, both emitted as covariates: the idle
     // floor (median of 3 x 2 s samples while this process is still
     // single-threaded — the structural hypervisor tax, 2-3% here) and
@@ -273,7 +272,7 @@ object Bench {
     val stealFloor = BenchGate.median(Seq.fill(3)(stealPct()))
     val stealFloorLoaded = stealUnderLoad()
     val (loadStart0, stealStart, writeStart) =
-      awaitIdleHost(maxLoad, stealFloor, stealCeil, minWrite, retries, sleepMs)
+      awaitIdleHost(stealFloor)
     // The calibration burn and the launcher's startup both nudge the
     // 1-minute loadavg; the wait loop above lets that self-load
     // decay, and the artifact is charged the LOWEST clean read (its
@@ -524,8 +523,7 @@ object Bench {
     // adjudication — see BenchGate's policy note.
     val allValid = failures.isEmpty && results.size == ok.size &&
       only.isEmpty && buildFilter.isEmpty && !partitionsOverridden && !masterOverridden &&
-      BenchGate.hostValid(loadStart, maxLoad, loadStart0, maxLoadPost, stealRun, stealCeil,
-        writeStart, writeEnd, minWrite)
+      BenchGate.hostValid(loadStart, loadStart0, stealRun, writeStart, writeEnd)
     val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"query_loadavg":$loads,"build_rows":$buildRows,"sf":"$sfDir","cpus":$cpus,"master":${jstr(master)},"shuffle_partitions":$shufflePartitions,"calib_s":$calibS,"calib_end_s":$calibEndS,"loadavg_start":$loadStart,"loadavg_post_wait":$loadStart0,"loadavg_end":$loadEnd,"steal_pct_floor":$stealFloor,"steal_pct_floor_loaded":$stealFloorLoaded,"steal_pct_start":$stealStart,"steal_pct_run":$stealRun,"steal_pct_excess_run":${stealRun - stealFloor},"write_gbps_start":$writeStart,"write_gbps_end":$writeEnd,"n_queries":${ok.size},"n_failed":${results.size - ok.size},"errors":$errs,"valid":$allValid}"""
     println(line)
     if (outFile.nonEmpty)

@@ -1,9 +1,11 @@
 package graft
 
-import scala.jdk.CollectionConverters._
+import java.nio.file.{Files, Paths, StandardCopyOption}
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+
+import graft.streaming.UpsertSink
 
 /** Scale-up generator for correctness checkpoints beyond the driver's
   * largest test set: replicates the text/embedding tables `factor`×
@@ -73,44 +75,31 @@ object ScaleGen {
     val factor = if (args.length > 2) args(2).toInt else 10
     val spark = SessionTuning.session(src)
 
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dst))
     // single-FILE tables, matching the source layout (the DuckDB side
-    // of the oracle reads '<dir>/<table>.parquet' as one file)
-    def writeSingle(df: DataFrame, table: String): Unit = {
-      val scratch = java.nio.file.Files.createTempDirectory("graftscale")
-      df.coalesce(1).write.mode("overwrite").parquet(s"$scratch/out")
-      val part = new java.io.File(s"$scratch/out").listFiles()
-        .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-        .getOrElse(sys.error(s"no part file for $table"))
-      java.nio.file.Files.move(part.toPath,
-        java.nio.file.Paths.get(dst, s"$table.parquet"),
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      val w = java.nio.file.Files.walk(scratch)
-      try w.iterator().asScala.toSeq.reverse.foreach(java.nio.file.Files.deleteIfExists(_))
-      finally w.close()
-      ()
-    }
+    // of the oracle reads '<dir>/<table>.parquet' as one file); the
+    // first publish creates `dst`
+    def writeSingle(df: DataFrame, table: String): Unit =
+      if (UpsertSink.publishSingleFile(df, Paths.get(dst), s"$table.parquet").isEmpty)
+        sys.error(s"no part file for $table")
     writeSingle(scaleDocuments(Tables.documents(spark, src), factor), "documents")
     writeSingle(scaleEmbeddings(Tables.embeddings(spark, src), factor), "embeddings")
     // remaining tables: byte-identical copies (keeps parquet logical
     // types exactly — Spark would rewrite nanos timestamps)
     for (t <- Seq("region", "nation", "customer", "supplier", "part",
         "orders", "lineitem", "events")) {
-      val from = java.nio.file.Paths.get(src, s"$t.parquet")
-      val to = java.nio.file.Paths.get(dst, s"$t.parquet")
-      if (java.nio.file.Files.isDirectory(from)) {
+      val from = Paths.get(src, s"$t.parquet")
+      val to = Paths.get(dst, s"$t.parquet")
+      if (Files.isDirectory(from)) {
         // directory-style parquet: copy the whole tree
-        val w = java.nio.file.Files.walk(from)
+        val w = Files.walk(from)
         try w.forEach { p =>
           val rel = to.resolve(from.relativize(p).toString)
-          if (java.nio.file.Files.isDirectory(p)) java.nio.file.Files.createDirectories(rel)
-          else java.nio.file.Files.copy(p, rel,
-            java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+          if (Files.isDirectory(p)) Files.createDirectories(rel)
+          else Files.copy(p, rel, StandardCopyOption.REPLACE_EXISTING)
           ()
         } finally w.close()
       } else {
-        java.nio.file.Files.copy(from, to,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+        Files.copy(from, to, StandardCopyOption.REPLACE_EXISTING)
       }
     }
     println(s"""{"scaled":"$dst","factor":$factor,"docs":${

@@ -22,7 +22,7 @@ import graft.llm.TextOps._
   *     as the standard two-phase distributed prefix sum instead:
   *     range-partition by doc_id, running-sum locally per partition
   *     (parallel), then add broadcast per-partition offsets — the same
-  *     shape as [[TextOps.shingleDict]]'s distributed rank.
+  *     shape as [[graft.operators.Relational.rangeRank]]'s distributed rank.
   */
 object CurationQueries {
 
@@ -90,7 +90,7 @@ object CurationQueries {
     * out into the window branch and the per-pid totals below, and
     * without pinning, the branches agree only while exchange reuse
     * dedupes the identical range shuffle (same hazard as
-    * TextOps.shingleDict, same fix; regression-pinned with exchange
+    * Relational.rangeRank, same fix; regression-pinned with exchange
     * reuse off in CurationSpec). Lazy (not eager) so that PLANNING
     * the query stays free — blocks materialize once at the first
     * action and every branch reads that snapshot. Unlike .cache(),
@@ -108,7 +108,7 @@ object CurationQueries {
       sum(tokenCol).over(Window.partitionBy("pid").orderBy(orderCols.map(col): _*)))
     val counts = local.groupBy("pid").agg(max("run").as("cnt"))
     // running-sum offsets over the per-partition totals (one row per
-    // partition — bounded by cluster config; see TextOps.shingleDict)
+    // partition — bounded by cluster config; see Relational.rangeRank)
     val offsets = counts.withColumn("off",
       coalesce(sum("cnt").over(Window.orderBy("pid")
         .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))

@@ -41,13 +41,7 @@ object SharedIndex {
   // per-JVM root; paths never collide across runs
   private lazy val root = {
     val dir = Files.createTempDirectory("graft-sidindex-")
-    sys.addShutdownHook {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm))
-        f.delete(); ()
-      }
-      rm(dir.toFile)
-    }
+    sys.addShutdownHook(graft.streaming.UpsertSink.rmTree(dir))
     dir
   }
 

@@ -1,7 +1,6 @@
 package graft.llm
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Shared text/embedding column helpers for the LLM-pipeline operators.
@@ -40,62 +39,15 @@ object TextOps {
           .as("shingle"))
       .distinct()
 
-  /** Global shingle dictionary: deterministic dense integer ids —
-    * sid = global rank of the shingle among sorted distinct shingles
-    * (matching the oracle's `row_number() OVER (ORDER BY shingle)`).
-    *
-    * Computed as a two-phase distributed rank, NOT a no-partition
-    * window (which would funnel the whole vocabulary through one
-    * task): range-partition the distinct shingles, rank locally
-    * within each ordered partition (parallel), then add per-partition
-    * offsets. The offset table has one row per partition — bounded by
-    * cluster config, not data — so it broadcasts. sid is invariant to
-    * the partition boundaries: it is always the global sorted rank.
+  /** Global shingle dictionary: deterministic dense integer ids, sid =
+    * global rank among the sorted distinct shingles (the oracle's
+    * `row_number() OVER (ORDER BY shingle)`), by
+    * [[graft.operators.Relational.rangeRank]]: never one task for the
+    * whole vocabulary, and independent of the partition boundaries.
     */
-  def shingleDict(postings: DataFrame): DataFrame = {
-    val distinct = postings.select("shingle").distinct()
-    // range partitions are ordered by pid: every shingle in pid i
-    // sorts before every shingle in pid i+1 (AQE coalescing merges
-    // contiguous partitions, preserving this). The lazy
-    // localCheckpoint pins one pid assignment: the plan fans out
-    // below, and without pinning the fan-out branches agree only
-    // while exchange reuse dedupes the identical range shuffle —
-    // re-sampled boundaries would silently skew sids. Lazy keeps
-    // plan-only paths free (blocks materialize at the first action,
-    // then every branch reads the snapshot); unlike .cache(),
-    // checkpointed blocks are released by the ContextCleaner once
-    // unreferenced (no CacheManager entry), so the dict build does
-    // not pin storage for the session lifetime.
-    val parted = distinct.repartitionByRange(col("shingle"))
-      .withColumn("pid", spark_partition_id())
-      .localCheckpoint(eager = false)
-    // local rank WITHOUT a window (optimization round): a
-    // Window.partitionBy("pid") would force a hashpartitioning(pid)
-    // exchange + sort of the whole vocabulary even though the rows
-    // already sit in exactly those partitions (range partitioning
-    // cannot satisfy a hash-distribution requirement). Instead sort
-    // within the pinned partitions and read the per-partition row
-    // ordinal out of monotonically_increasing_id (partition index in
-    // the high bits, a 0-based consecutive counter in the low 33) —
-    // identical lr values, one full exchange + sort fewer.
-    val local = parted.sortWithinPartitions("shingle")
-      .withColumn("lr",
-        (monotonically_increasing_id().bitwiseAND(lit((1L << 33) - 1)) + 1L).as("lr"))
-    // per-partition sizes fall out of the window for free: cnt = max lr
-    val counts = local.groupBy("pid").agg(max("lr").as("cnt"))
-    // offset(p) = Σ cnt over pid < p — one running-sum window over the
-    // per-partition counts. The frame is one row per partition
-    // (bounded by cluster config, never by data), so the global window
-    // is a constant-size single task; the previous triangular
-    // self-join compiled three extra codegen units and paid a
-    // broadcast job for the same 32-row arithmetic.
-    val offsets = counts.withColumn("off",
-      coalesce(sum("cnt").over(Window.orderBy("pid")
-        .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select("pid", "off")
-    local.join(broadcast(offsets), "pid")
-      .select(col("shingle"), (col("off") + col("lr")).as("sid"))
-  }
+  def shingleDict(postings: DataFrame): DataFrame =
+    graft.operators.Relational.rangeRank(
+      postings.select("shingle").distinct(), "shingle", "sid")._1
 
   /** Karp-Rabin modulus shared by the winnowing / repeated-span /
     * fingerprint family and their DuckDB oracles.

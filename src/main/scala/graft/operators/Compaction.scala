@@ -2,6 +2,8 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.streaming.UpsertSink
+
 /** Small-file compaction — the table-maintenance job every long-lived
   * 100 TB dataset needs: streaming sinks and frequent small batch
   * appends accumulate files far below the ideal scan granularity
@@ -286,12 +288,6 @@ object Compaction {
   private def compactLocked(spark: SparkSession, dir: String, root: Path,
       targetFileBytes: Long): (Int, Int) = {
 
-    def rmTree(p: Path): Unit = {
-      val w = Files.walk(p)
-      try w.iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists(_))
-      finally w.close()
-    }
-
     // Recovery + retention sweep. (1) staging dirs of THIS dataset
     // orphaned by a hard crash (scoped by a name hash — never another
     // dataset's staging); (2) never-committed generation files;
@@ -302,7 +298,7 @@ object Compaction {
     list(root.getParent)
       .filter(p => Files.isDirectory(p) &&
         p.getFileName.toString.startsWith(stagingPrefix(root)))
-      .foreach(rmTree)
+      .foreach(UpsertSink.rmTree)
     // Crash orphans from the pre-hash '.compact-<name>-' staging scheme
     // would otherwise leak forever after the prefix upgrade. The
     // digits-only suffix createTempDirectory appends is what lets this
@@ -312,7 +308,7 @@ object Compaction {
     val legacy = (java.util.regex.Pattern.quote(s".compact-${root.getFileName}-") + "\\d+").r
     list(root.getParent)
       .filter(p => Files.isDirectory(p) && legacy.matches(p.getFileName.toString))
-      .foreach(rmTree)
+      .foreach(UpsertSink.rmTree)
     readManifest(root).foreach { m =>
       val committed = m.live.toSet
       parquetFiles(root)
@@ -361,7 +357,7 @@ object Compaction {
       // staging is scratch in every outcome — success (files already
       // moved out) or failure (half-written output) — so reclaim it
       // unconditionally; the manifest keeps the dataset consistent.
-      rmTree(staging)
+      UpsertSink.rmTree(staging)
     }
   }
 

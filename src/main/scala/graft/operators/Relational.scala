@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Reusable relational operator library — the Spark-first re-expression
@@ -125,5 +126,51 @@ object Relational {
         salted(factKey) === replicated(dimKey) && salted("__salt") === replicated("__salt"),
         joinType)
       .drop("__salt")
+  }
+
+  // ------------------------------------------------------------- rank
+  /** Global 1-based rank of `values` by column `key`: a two-phase
+    * distributed rank, never a no-partition window (which funnels
+    * every row through one task). Range-partition, rank within each
+    * ordered partition in parallel, then add per-partition offsets;
+    * the offsets table has one row per partition (bounded by cluster
+    * config, not data), so it broadcasts. The rank is always the
+    * global sorted rank, whatever the partition boundaries.
+    *
+    * @return (ranked: (`key`, `rankCol`); counts: (pid, cnt), one row
+    *         per partition, so totals come from a tiny frame)
+    */
+  def rangeRank(values: DataFrame, key: String, rankCol: String): (DataFrame, DataFrame) = {
+    // Range partitions are ordered by pid (AQE coalescing merges only
+    // contiguous ones). The lazy localCheckpoint pins one pid
+    // assignment for the fan-out below: unpinned, the branches agree
+    // only while exchange reuse dedupes the identical range shuffle,
+    // and re-sampled boundaries would silently skew ranks. Lazy keeps
+    // plan-only paths free; unlike .cache(), the blocks have no
+    // CacheManager entry and the ContextCleaner releases them once
+    // unreferenced, so a rank does not pin storage for the session.
+    val parted = values.repartitionByRange(col(key))
+      .withColumn("pid", spark_partition_id())
+      .localCheckpoint(eager = false)
+    // Windowless local rank: Window.partitionBy("pid") would force a
+    // hashpartitioning(pid) exchange + sort although the rows already
+    // sit in exactly those partitions (range partitioning cannot
+    // satisfy a hash distribution). After sortWithinPartitions,
+    // monotonically_increasing_id's low 33 bits are the 0-based
+    // in-partition ordinal: identical lr, one exchange + sort fewer.
+    val local = parted.sortWithinPartitions(key)
+      .withColumn("lr",
+        (monotonically_increasing_id().bitwiseAND(lit((1L << 33) - 1)) + 1L).as("lr"))
+    val counts = local.groupBy("pid").agg(max("lr").as("cnt")) // cnt = max lr
+    // offset(p) = Σ cnt over pid < p: one running-sum window over the
+    // one-row-per-partition counts, a constant-size single task (a
+    // triangular self-join cost three extra codegen units and a
+    // broadcast job for the same arithmetic).
+    val offsets = counts.withColumn("off",
+      coalesce(sum("cnt").over(Window.orderBy("pid")
+        .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
+      .select("pid", "off")
+    (local.join(broadcast(offsets), "pid")
+      .select(col(key), (col("off") + col("lr")).as(rankCol)), counts)
   }
 }

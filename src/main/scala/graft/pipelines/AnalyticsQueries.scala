@@ -146,10 +146,10 @@ object AnalyticsQueries {
     * alone on sf0.1's 600k-distinct price column, and at 100 TB the
     * merged map IS the value set — a driver/executor memory cliff.
     * This formulation is the classic scale shape: range-partition the
-    * values, rank locally within each sorted partition (the same
-    * two-phase rank as [[graft.llm.TextOps.shingleDict]] — no
-    * single-task global window), then read the two order statistics
-    * each percentile interpolates between.
+    * values, rank locally within each sorted partition
+    * ([[graft.operators.Relational.rangeRank]] — no single-task global
+    * window), then read the two order statistics each percentile
+    * interpolates between; n is summed from the per-partition counts.
     *
     * Semantics replicate Spark's `Percentile.getPercentile` exactly:
     * `pos = q·(n−1)` (0-based over the sorted non-null multiset),
@@ -167,24 +167,7 @@ object AnalyticsQueries {
       qs: Seq[(String, Double)]): DataFrame = {
     val v = values.select(col(values.columns.head).cast("double").as("v"))
       .where(col("v").isNotNull)
-    val parted = v.repartitionByRange(col("v"))
-      .withColumn("pid", spark_partition_id())
-      .localCheckpoint(eager = false) // pin one pid assignment; see shingleDict
-    // windowless local rank — same shape as shingleDict: sort within
-    // the pinned partitions, ordinal from monotonically_increasing_id
-    // (avoids the hashpartitioning(pid) exchange a window would force)
-    val local = parted.sortWithinPartitions("v")
-      .withColumn("lr",
-        (monotonically_increasing_id().bitwiseAND(lit((1L << 33) - 1)) + 1L).as("lr"))
-    val counts = local.groupBy("pid").agg(max("lr").as("cnt"))
-    // running-sum offsets over the per-partition counts (one row per
-    // partition — bounded by cluster config; see shingleDict)
-    val offsets = counts.withColumn("off",
-      coalesce(sum("cnt").over(Window.orderBy("pid")
-        .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select("pid", "off")
-    val ranked = local.join(broadcast(offsets), "pid")
-      .select(col("v"), (col("off") + col("lr")).as("rn"))
+    val (ranked, counts) = graft.operators.Relational.rangeRank(v, "v", "rn")
     // 1-row bounds table: n plus each percentile's position and the
     // 1-based ranks of the two order statistics it interpolates
     val bounds = counts.agg(sum("cnt").as("n_vals")).select(

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -219,11 +219,9 @@ object NearDupIngest {
     * partitioned read when no leaf has been compacted yet.
     */
   private def readPartIdx(spark: SparkSession, dir: String, schema: StructType): DataFrame = {
-    val leaves = Option(new java.io.File(dir).listFiles())
-      .getOrElse(Array.empty[java.io.File])
-      .filter(f => f.isDirectory && f.getName.startsWith("pfx="))
-    if (leaves.exists(l => Files.exists(l.toPath.resolve(Compaction.ManifestName)))) {
-      val files = leaves.toSeq.flatMap(l => Compaction.livePaths(l.getPath))
+    val leaves = UpsertSink.subdirs(Paths.get(dir), "pfx=")
+    if (leaves.exists(l => Files.exists(l.resolve(Compaction.ManifestName)))) {
+      val files = leaves.flatMap(l => Compaction.livePaths(l.toString))
       if (files.isEmpty)
         spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
       else
@@ -245,11 +243,11 @@ object NearDupIngest {
     val target = Paths.get(idxDir)
     if (!Files.exists(target)) {
       val tmp = Paths.get(idxDir + ".tmp")
-      rmTree(tmp.toFile)
+      UpsertSink.rmTree(tmp)
       derive.write.mode("overwrite").partitionBy(partitionCols: _*).parquet(tmp.toString)
       try Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE)
       catch {
-        case _: java.nio.file.FileAlreadyExistsException => rmTree(tmp.toFile)
+        case _: java.nio.file.FileAlreadyExistsException => UpsertSink.rmTree(tmp)
       }
     }
   }
@@ -450,16 +448,17 @@ object NearDupIngest {
     // verify unaffected) or a candidate doc without a cnt row (its
     // pair drops — dup admitted, swept later), never a dropped novel
     // doc.
-    val n = appendIdempotent(spark, survivors.select("doc_id", "text"), storeDir, batchId)
-    appendIdempotentPartitioned(spark,
+    val n = rowsIn(spark,
+      appendIdempotent(survivors.select("doc_id", "text"), storeDir, batchId))
+    appendIdempotent(
       survivors.select(col("doc_id"), col("fp"), pfxOf(col("fp"), fpPfx).as("pfx")),
-      fpIdxDir(storeDir, fpPfx), batchId)
+      fpIdxDir(storeDir, fpPfx), batchId, partitionCol = Some("pfx"))
     val shNew = shingleDigests(survivors, shingleK).localCheckpoint(false)
-    appendIdempotent(spark, shNew, shIdxDir(storeDir, shingleK), batchId)
-    appendIdempotent(spark,
+    appendIdempotent(shNew, shIdxDir(storeDir, shingleK), batchId)
+    appendIdempotent(
       shNew.groupBy("sh").agg(count(lit(1)).as("df")).withColumn("batch_id", lit(batchId)),
       dfIdxDir(storeDir, shingleK), batchId)
-    appendIdempotent(spark, shNew.groupBy("doc_id").agg(count(lit(1)).as("n")),
+    appendIdempotent(shNew.groupBy("doc_id").agg(count(lit(1)).as("n")),
       cntIdxDir(storeDir, shingleK), batchId)
     appendStats(spark, storeDir, batchId, batch.count(), n)
     n
@@ -483,7 +482,7 @@ object NearDupIngest {
   private def appendStats(spark: SparkSession, storeDir: String, batchId: Long,
       nIn: Long, nAdmitted: Long): Unit = {
     import spark.implicits._
-    appendIdempotent(spark,
+    appendIdempotent(
       Seq((batchId, nIn, nAdmitted)).toDF("batch_id", "n_in", "n_admitted"),
       statsDir(storeDir), batchId)
     ()
@@ -559,7 +558,7 @@ object NearDupIngest {
       .writeStream
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, monitorBatchId: Long) =>
-        appendIdempotent(spark, batch, alarmsDir(storeDir), monitorBatchId)
+        appendIdempotent(batch, alarmsDir(storeDir), monitorBatchId)
         ()
       }
       .start()
@@ -575,82 +574,34 @@ object NearDupIngest {
     else spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
   }
 
-  /** Idempotent single-file append into `dir`: the batch lands as ONE
-    * file named by its batchId via atomic rename-replace, so a
+  /** Idempotent single-file append into `dir`, shared by the store and
+    * every side table: the batch lands as ONE `ingest-<id>.parquet` in
+    * each leaf it touches (`dir` itself, or each `<partitionCol>=…`
+    * leaf) via [[UpsertSink.publishSingleFile]]'s rename-replace, so a
     * foreachBatch replay overwrites its own previous attempt and rows
-    * can never double. An all-dropped batch removes a crashed
-    * attempt's file to keep replays aligned with the recomputation.
-    * Shared by the store and every index side table.
+    * never double. Leaves a PRIOR attempt touched but this one does not
+    * lose their `ingest-<id>` file, so a replay converges on exactly
+    * this attempt's rows. Per-leaf publishes are not jointly atomic: a
+    * crash mid-append leaves a PARTIAL index append — the safe
+    * direction (a doc missing from the fp index can at worst let a
+    * future exact dup through, swept by the batch-mode corpus pass),
+    * and invisible to a same-batch replay, since every index read
+    * self-excludes the batch's own doc_ids. The publish creates `dir`
+    * (the stats table has no bootstrap). Returns the published files.
     */
-  private def appendIdempotent(spark: SparkSession, rows: DataFrame,
-      dir: String, batchId: Long): Long = {
-    val scratch = java.nio.file.Files.createTempDirectory(s"graft-ingest-$batchId-")
-    try {
-      rows.coalesce(1).write.mode("overwrite").parquet(s"$scratch/out")
-      val part = Option(new java.io.File(s"$scratch/out").listFiles())
-        .getOrElse(Array.empty[java.io.File])
-        .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-      val target = java.nio.file.Paths.get(dir, s"ingest-$batchId.parquet")
-      // the stats table has no bootstrap (its first row IS the first
-      // batch), so the append creates its directory itself
-      java.nio.file.Files.createDirectories(target.getParent)
-      part match {
-        case Some(p) =>
-          java.nio.file.Files.move(p.toPath, target,
-            java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-            java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-          spark.read.parquet(target.toString).count()
-        case None =>
-          java.nio.file.Files.deleteIfExists(target)
-          0L
-      }
-    } finally rmTree(scratch.toFile)
+  private def appendIdempotent(rows: DataFrame, dir: String, batchId: Long,
+      partitionCol: Option[String] = None): Seq[Path] = {
+    val root = Paths.get(dir)
+    val name = s"ingest-$batchId.parquet"
+    val published = UpsertSink.publishSingleFile(rows, root, name, partitionCol)
+    val leaves = partitionCol.fold(Seq(root))(c => UpsertSink.subdirs(root, s"$c="))
+    leaves.map(_.resolve(name)).filterNot(published.contains).foreach(Files.deleteIfExists)
+    published
   }
 
-  /** The partitioned-layout form of [[appendIdempotent]]: the batch
-    * lands as ONE file per TOUCHED `pfx=…` leaf (each via the same
-    * atomic rename-replace), and leaves this batch touched on a PRIOR
-    * attempt but not this one have their `ingest-<id>` file removed —
-    * so a replay converges on exactly this attempt's rows, just like
-    * the flat form. The per-leaf moves are not jointly atomic; a crash
-    * mid-append leaves a PARTIAL index append, which is the documented
-    * safe direction (an admitted doc missing from the fp index can at
-    * worst let a future exact dup through — swept by the batch-mode
-    * corpus pass — never drop novel content), and the torn window is
-    * invisible to a same-batch replay because every index read
-    * self-excludes the batch's own doc_ids.
-    */
-  private def appendIdempotentPartitioned(spark: SparkSession, rows: DataFrame,
-      dir: String, batchId: Long): Unit = {
-    val scratch = java.nio.file.Files.createTempDirectory(s"graft-ingest-$batchId-")
-    try {
-      rows.coalesce(1).write.partitionBy("pfx").mode("overwrite")
-        .parquet(s"$scratch/out")
-      val leaves = Option(new java.io.File(s"$scratch/out").listFiles())
-        .getOrElse(Array.empty[java.io.File])
-        .filter(f => f.isDirectory && f.getName.startsWith("pfx="))
-      val touched = leaves.flatMap { leaf =>
-        Option(leaf.listFiles()).getOrElse(Array.empty[java.io.File])
-          .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-          .map { p =>
-            val target = Paths.get(dir, leaf.getName, s"ingest-$batchId.parquet")
-            Files.createDirectories(target.getParent)
-            Files.move(p.toPath, target, StandardCopyOption.ATOMIC_MOVE,
-              StandardCopyOption.REPLACE_EXISTING)
-            leaf.getName
-          }
-      }.toSet
-      Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty[java.io.File])
-        .filter(f => f.isDirectory && f.getName.startsWith("pfx=") && !touched(f.getName))
-        .foreach { leaf =>
-          Files.deleteIfExists(Paths.get(leaf.getPath, s"ingest-$batchId.parquet"))
-        }
-    } finally rmTree(scratch.toFile)
-  }
-
-  private def rmTree(f: java.io.File): Unit = {
-    Option(f.listFiles()).foreach(_.foreach(rmTree)); f.delete(); ()
-  }
+  /** Rows a store append published (a footer read of its one file). */
+  private def rowsIn(spark: SparkSession, published: Seq[Path]): Long =
+    if (published.isEmpty) 0L else spark.read.parquet(published.map(_.toString): _*).count()
 
   /** Single maintenance entry point: fold the store AND every sibling
     * index side table it has accreted (each gains one file per batch).
@@ -680,22 +631,16 @@ object NearDupIngest {
     def ours(n: String): Boolean =
       exact(n) || parameterized.exists(p =>
         n.length > p.length && n.startsWith(p) && n.drop(p.length).forall(_.isDigit))
-    val siblings = Option(store.getParent).map { parent =>
-      Option(parent.toFile.listFiles()).getOrElse(Array.empty[java.io.File])
-        .filter(f => f.isDirectory && ours(f.getName))
-        .map(_.getAbsolutePath).toSeq.sorted
-    }.getOrElse(Seq.empty)
+    val siblings = Option(store.getParent).toSeq
+      .flatMap(UpsertSink.subdirs(_, name)).filter(d => ours(d.getFileName.toString))
     // a pfx-partitioned index is compacted per LEAF — each `pfx=…`
     // directory is an independently-atomic flat dataset (compacting
     // the root would collapse the partition column into the data
     // files and corrupt partition discovery; Compaction rejects it)
     siblings.foreach { s =>
-      val leaves = Option(new java.io.File(s).listFiles())
-        .getOrElse(Array.empty[java.io.File])
-        .filter(f => f.isDirectory && f.getName.startsWith("pfx="))
-      if (leaves.nonEmpty) leaves.sortBy(_.getName)
-        .foreach(l => Compaction.compactParquet(spark, l.getAbsolutePath))
-      else Compaction.compactParquet(spark, s)
+      val leaves = UpsertSink.subdirs(s, "pfx=")
+      (if (leaves.nonEmpty) leaves else Seq(s))
+        .foreach(d => Compaction.compactParquet(spark, d.toString))
     }
   }
 
@@ -855,8 +800,9 @@ object NearDupIngest {
     val rebuilt = novel.groupBy("doc_id").agg(
       array_join(transform(array_sort(collect_list(struct(col("chunk_id"), col("chunk_text")))),
         s => s.getField("chunk_text")), " ").as("text"))
-    val n = appendIdempotent(spark, rebuilt.select("doc_id", "text"), storeDir, batchId)
-    appendIdempotent(spark, novel.select("doc_id", "pg"),
+    val n = rowsIn(spark,
+      appendIdempotent(rebuilt.select("doc_id", "text"), storeDir, batchId))
+    appendIdempotent(novel.select("doc_id", "pg"),
       pgIdxDir(storeDir, chunkTokens), batchId)
     // funnel at CHUNK granularity: the passage ingest reassembles one
     // store row per doc with any novel chunk, so a doc-level rate

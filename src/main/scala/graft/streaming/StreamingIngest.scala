@@ -128,28 +128,6 @@ object StreamingIngest {
         col(rts) >= col(lts) - expr(s"INTERVAL $withinSec SECOND") &&
         col(rts) <= col(lts) + expr(s"INTERVAL $withinSec SECOND"))
 
-  /** foreachBatch sink — the write-then-publish commit protocol of the
-    * reference's OneDrive upsert (K2/K3, one_drive.py:164-211 /
-    * callable.py:102-116): each micro-batch is written atomically
-    * (mode overwrite per batch dir = idempotent PUT-replace), and the
-    * "publish" side-effect runs only after the write succeeds.
-    */
-  def startForeachBatchSink(
-      spark: SparkSession, dir: String, outDir: String): StreamingQuery =
-    windowedCounts(readEvents(spark, dir))
-      .writeStream
-      .outputMode("complete")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val target = s"$outDir/batch_$batchId"
-        batch.write.mode("overwrite").parquet(target) // write…
-        // …then publish (driver-side post-commit step in the reference;
-        // here: an atomic marker the downstream consumer watches).
-        java.nio.file.Files.writeString(
-          java.nio.file.Paths.get(s"$outDir/_published_$batchId"), target)
-        ()
-      }
-      .start()
-
   /** foreachBatch sink through the FULL K2 upsert protocol
     * ([[UpsertSink]]): each micro-batch is rendered as a single-file
     * report (K1) and upserted into the target folder under one stable
@@ -167,27 +145,10 @@ object StreamingIngest {
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val folder = UpsertSink.resolveFolder(folderLink).getOrElse(
           throw new IllegalArgumentException(s"cannot resolve report folder: $folderLink"))
-        // K1 single-file render: one part file in a scratch dir, then
-        // that file IS the staged content for the atomic upsert.
-        val scratch = java.nio.file.Files.createTempDirectory("graft-report-")
-        try {
-          batch.coalesce(1).write.mode("overwrite").parquet(s"$scratch/out")
-          val part = Option(new java.io.File(s"$scratch/out").listFiles())
-            .getOrElse(Array.empty[java.io.File])
-            .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-            .getOrElse(sys.error("no part file produced"))
-          UpsertSink.upsert(folder, fileName, { tmp =>
-            java.nio.file.Files.copy(part.toPath, tmp,
-              java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-            ()
-          })
-          ()
-        } finally {
-          def rm(f: java.io.File): Unit = {
-            Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-          }
-          rm(scratch.toFile)
-        }
+        // K1 single-file render, then the atomic upsert of that file
+        if (UpsertSink.publishSingleFile(batch, folder, fileName).isEmpty)
+          sys.error("no part file produced")
+        ()
       }
       .start()
 }

@@ -1,6 +1,10 @@
 package graft.streaming
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, LinkOption, Path, Paths, StandardCopyOption}
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.DataFrame
 
 /** Outcome of an upsert — which leg of the reference protocol ran. */
 sealed trait UpsertOutcome
@@ -41,8 +45,7 @@ object UpsertSink {
     * decide which upload leg to take).
     */
   def findFileInFolder(folder: Path, name: String): Option[Path] =
-    Option(folder.toFile.listFiles()).getOrElse(Array.empty)
-      .find(_.getName == name).map(_.toPath)
+    ls(folder).find(_.getName == name).map(_.toPath)
 
   /** Steps 3a/3b — replace-or-create. `write` stages the content to a
     * temp sibling (same filesystem, so the final move is atomic); the
@@ -59,4 +62,54 @@ object UpsertSink {
     } finally { Files.deleteIfExists(tmp); () }
     if (existing.isDefined) Replaced else Created
   }
+
+  /** K1 single-file render + K2 publish, the one path every one-file
+    * parquet write takes: `df` is rendered with `coalesce(1)` into a
+    * scratch directory (with `partitionCol`, one part file per
+    * `col=value` leaf) and each part file is [[upsert]]ed as `name`
+    * into the matching leaf of `folder` (created if absent). The part
+    * file is MOVED into upsert's staging file inside the target leaf;
+    * across filesystems that move degrades to copy + delete, so the
+    * one atomic step, the rename-replace, stays within the target
+    * directory. Returns the published paths and deletes nothing under
+    * `folder`: a partitioned render of zero rows publishes nothing, and
+    * pruning stale leaves is the caller's policy.
+    */
+  def publishSingleFile(df: DataFrame, folder: Path, name: String,
+      partitionCol: Option[String] = None): Seq[Path] = {
+    val scratch = Files.createTempDirectory("graft-publish-")
+    try {
+      val out = scratch.resolve("out")
+      val w = df.coalesce(1).write.mode("overwrite")
+      partitionCol.fold(w)(w.partitionBy(_)).parquet(out.toString)
+      val leaves = partitionCol.fold(Seq(out -> folder)) { c =>
+        subdirs(out, s"$c=").map(l => l -> folder.resolve(l.getFileName.toString))
+      }
+      for {
+        (from, to) <- leaves
+        part <- ls(from).find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
+      } yield {
+        Files.createDirectories(to)
+        upsert(to, name, { tmp =>
+          Files.move(part.toPath, tmp, StandardCopyOption.REPLACE_EXISTING); ()
+        })
+        to.resolve(name)
+      }
+    } finally rmTree(scratch)
+  }
+
+  private def ls(dir: Path): Seq[java.io.File] =
+    Option(dir.toFile.listFiles()).fold(Seq.empty[java.io.File])(_.toSeq)
+
+  /** Subdirectories of `dir` named `prefix…`, by name; none if `dir` is unreadable. */
+  private[graft] def subdirs(dir: Path, prefix: String): Seq[Path] =
+    ls(dir).filter(f => f.isDirectory && f.getName.startsWith(prefix)).map(_.toPath).sortBy(_.toString)
+
+  /** Recursive delete; symlinks are removed, never followed; a missing path is a no-op. */
+  private[graft] def rmTree(p: Path): Unit =
+    if (Files.exists(p, LinkOption.NOFOLLOW_LINKS)) {
+      val w = Files.walk(p)
+      try w.iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists(_))
+      finally w.close()
+    }
 }

@@ -28,11 +28,18 @@ class BenchGateSpec extends AnyFunSuite {
     assert(median(Nil) === -1.0)
   }
 
-  // The defaults these scenarios pin: maxLoad=0.5, maxLoadPost=1.0,
-  // stealCeil=25.0, minWrite=1.0 (Bench.main's env defaults).
   private def gate(load: Double = 0.2, loadPost: Double = 0.2, run: Double = 7.5,
       wStart: Double = 6.0, wEnd: Double = 6.0): Boolean =
-    hostValid(load, 0.5, loadPost, 1.0, run, 25.0, wStart, wEnd, 1.0)
+    hostValid(load, loadPost, run, wStart, wEnd)
+
+  test("host-gate thresholds are FROZEN constants, not environment knobs") {
+    assert(MaxLoad === 0.5)
+    assert(MaxLoadPost === 1.0)
+    assert(StealCeil === 25.0)
+    assert(MinWriteGBps === 1.0)
+    assert(LoadRetries === 2)
+    assert(LoadSleepMs === 45000L)
+  }
 
   test("calibration workload parameters are FROZEN (round 16): changing them re-baselines the total/calib series") {
     assert(CalibRows === 100000000L)

@@ -5,7 +5,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 import graft.operators.Compaction
-import graft.streaming.NearDupIngest
+import graft.streaming.{NearDupIngest, UpsertSink}
 
 /** The composed flow: stream-edge exact dedup → per-batch
   * delta-vs-corpus near-dup check → idempotent append into the
@@ -165,6 +165,54 @@ class NearDupIngestSpec extends SparkSpec {
   private def storeTexts(dir: String): Map[Long, String] =
     Compaction.readCompacted(spark, dir).select("doc_id", "text")
       .as[(Long, String)].collect().toMap
+
+  test("a replay touching fewer pfx leaves removes its file from the leaves it left") {
+    val dir = java.nio.file.Files.createTempDirectory("graftndstale").resolve("t").toString
+    Seq((1L, t1)).toDF("doc_id", "text").write.mode("overwrite").parquet(dir)
+    val docs = (1 to 6).map(k => Doc(100L + k, ts(k), text((1 to 20).map(i => s"w${k}x$i"): _*)))
+    def pfxOf(ds: Seq[Doc]): Set[String] = ds.map { d =>
+      val norm = d.text.toLowerCase.replaceAll("\\s+", " ").trim
+      val md5 = java.security.MessageDigest.getInstance("MD5").digest(norm.getBytes("UTF-8"))
+      "pfx=" + f"${md5(0)}%02x".take(NearDupIngest.FpPfxChars)
+    }.toSet
+    val firstLeaves = pfxOf(docs)
+    val replayLeaves = pfxOf(docs.take(1))
+    assert(replayLeaves.size < firstLeaves.size, s"fixture must shrink: $firstLeaves")
+
+    val fpDir = NearDupIngest.fpIdxDir(dir)
+    def leavesWithFile: Set[String] = fpLeaves(fpDir)
+      .filter(l => new java.io.File(l, "ingest-3.parquet").exists).map(_.getName).toSet
+    assert(NearDupIngest.ingestBatch(spark, docs.toDF(), dir, batchId = 3) == 6L)
+    assert(leavesWithFile == firstLeaves)
+    // the replay of batch 3 recomputes only doc 101: every leaf the
+    // first attempt touched and this one does not loses its file
+    assert(NearDupIngest.ingestBatch(spark, docs.take(1).toDF(), dir, batchId = 3) == 1L)
+    assert(leavesWithFile == replayLeaves, s"stale fp files left behind: $leavesWithFile")
+    assert(storeIds(dir) == Set(1L, 101L))
+  }
+
+  test("ingest into a store on another filesystem than java.io.tmpdir") {
+    import java.nio.file.{Files, Paths}
+    val shm = Paths.get("/dev/shm")
+    val tmp = Paths.get(System.getProperty("java.io.tmpdir"))
+    assume(Files.isDirectory(shm) && Files.isWritable(shm) &&
+      Files.getFileStore(shm) != Files.getFileStore(tmp),
+      "needs a writable /dev/shm on a different filesystem than java.io.tmpdir")
+    val root = Files.createTempDirectory(shm, "graftndxfs")
+    try {
+      val dir = root.resolve("t").toString
+      Seq((1L, t1), (2L, t2)).toDF("doc_id", "text").write.mode("overwrite").parquet(dir)
+      val batch = Seq(Doc(10, ts(0), tNovel), Doc(11, ts(1), t1), Doc(12, ts(2), t2near)).toDF()
+      assert(NearDupIngest.ingestBatch(spark, batch, dir, batchId = 0) == 1L)
+      assert(storeIds(dir) == Set(1L, 2L, 10L))
+
+      val pdir = root.resolve("p").toString
+      Seq((1L, s"$pA $pB")).toDF("doc_id", "text").write.mode("overwrite").parquet(pdir)
+      assert(NearDupIngest.ingestPassageBatch(spark,
+        Seq((10L, s"$pA $pC")).toDF("doc_id", "text"), pdir, batchId = 0) == 1L)
+      assert(storeTexts(pdir) == Map(1L -> s"$pA $pB", 10L -> pC))
+    } finally UpsertSink.rmTree(root)
+  }
 
   test("passage ingest cuts store-recycled and batch-claimed passages, drops empty docs") {
     val dir = java.nio.file.Files.createTempDirectory("graftpassage").resolve("t").toString
@@ -562,11 +610,9 @@ class NearDupIngestSpec extends SparkSpec {
     NearDupIngest.ingestBatch(spark, Seq(Doc(10, ts(0), tNovel)).toDF(), dir, batchId = 0)
     // repair path: lose the indexes; the next batch bootstraps them
     // from the CURRENT store (seed + batch 0) and still catches dups
-    def rm(f: java.io.File): Unit = { Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); () }
-    rm(new java.io.File(NearDupIngest.fpIdxDir(dir)))
-    rm(new java.io.File(NearDupIngest.shIdxDir(dir, 3)))
-    rm(new java.io.File(NearDupIngest.dfIdxDir(dir, 3)))
-    rm(new java.io.File(NearDupIngest.cntIdxDir(dir, 3)))
+    for (idx <- Seq(NearDupIngest.fpIdxDir(dir), NearDupIngest.shIdxDir(dir, 3),
+        NearDupIngest.dfIdxDir(dir, 3), NearDupIngest.cntIdxDir(dir, 3)))
+      UpsertSink.rmTree(java.nio.file.Paths.get(idx))
     assert(NearDupIngest.ingestBatch(spark, Seq(Doc(20, ts(5), t1), Doc(21, ts(6), tNovelNear)).toDF(), dir, 1) == 0L)
     assert(storeIds(dir) == Set(1L, 10L))
   }
@@ -734,13 +780,8 @@ class NearDupIngestSpec extends SparkSpec {
     // window whose skew direction is "dup admitted, swept later".
     // 30 = exact dup of seed 1; 31 = near-dup of admitted doc 10.
     val t10near = text(((1 to 19).map(i => s"delta$i") :+ "deltaY"): _*)
-    val scratch = java.nio.file.Files.createTempDirectory("graftndlifedup")
-    Seq((30L, t1), (31L, t10near)).toDF("doc_id", "text")
-      .coalesce(1).write.parquet(s"$scratch/out")
-    val part = new java.io.File(s"$scratch/out").listFiles()
-      .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).get
-    java.nio.file.Files.move(part.toPath,
-      java.nio.file.Paths.get(dir, "ingest-99.parquet"))
+    UpsertSink.publishSingleFile(Seq((30L, t1), (31L, t10near)).toDF("doc_id", "text"),
+      java.nio.file.Paths.get(dir), "ingest-99.parquet")
     assert(storeIds(dir) == Set(1L, 2L, 10L, 20L, 30L, 31L))
 
     // the sweep finds EXACTLY the safe-skew admissions, with reasons —
@@ -776,13 +817,8 @@ class NearDupIngestSpec extends SparkSpec {
     // crash window: doc 30's store append landed carrying pA again,
     // but the passage-index append was lost — the next sweep finds the
     // re-admitted passage (doc 1 chunk 0 is the first holder)
-    val scratch = java.nio.file.Files.createTempDirectory("graftndpsweepdup")
-    Seq((30L, s"$pA $pE")).toDF("doc_id", "text")
-      .coalesce(1).write.parquet(s"$scratch/out")
-    val part = new java.io.File(s"$scratch/out").listFiles()
-      .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).get
-    java.nio.file.Files.move(part.toPath,
-      java.nio.file.Paths.get(dir, "ingest-99.parquet"))
+    UpsertSink.publishSingleFile(Seq((30L, s"$pA $pE")).toDF("doc_id", "text"),
+      java.nio.file.Paths.get(dir), "ingest-99.parquet")
     val swept = NearDupIngest.passageSweep(spark, dir)
       .select("doc_id", "chunk_id", "reason")
       .as[(Long, Long, String)].collect().toSet

@@ -14,9 +14,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * resolve to exactly today's measured values at today's scales — an
   * sf0.1 bench under the adaptive default has to be byte-comparable to
   * every pre-adaptive round — and keep growing in full waves of cores
-  * past them. Also pins the session's master/cpus resolution order and
-  * the rule that `SessionTuning.session` is the only session builder in
-  * the engine's main sources.
+  * past them. Also pins the session's master/cpus resolution order, and
+  * two one-mechanism rules over the engine's main sources:
+  * `SessionTuning.session` is the only session builder, and
+  * `UpsertSink.publishSingleFile` the only single-file parquet publish.
   */
 class SessionTuningSpec extends AnyFunSuite {
   import SessionTuning._
@@ -90,17 +91,27 @@ class SessionTuningSpec extends AnyFunSuite {
     assert(master(Map.empty, Map.empty) === s"local[$nproc]")
   }
 
-  test("one session builder: SparkSession.builder only in SessionTuning.scala") {
+  /** Main sources (relative paths) other than `owner` that contain `needle`. */
+  private def mainSourcesWith(needle: String, owner: String): List[String] = {
     val root = Paths.get("src/main/scala")
     assert(Files.isDirectory(root), s"${root.toAbsolutePath} missing — the guard would be vacuous")
     val w = Files.walk(root)
-    val offenders =
-      try w.iterator().asScala
-        .filter(p => p.toString.endsWith(".scala") && p.getFileName.toString != "SessionTuning.scala")
-        .filter(p => Files.readString(p).contains("SparkSession.builder"))
-        .map(root.relativize(_).toString).toList
-      finally w.close()
+    try w.iterator().asScala
+      .filter(p => p.toString.endsWith(".scala") && p.getFileName.toString != owner)
+      .filter(p => Files.readString(p).contains(needle))
+      .map(root.relativize(_).toString).toList
+    finally w.close()
+  }
+
+  test("one session builder: SparkSession.builder only in SessionTuning.scala") {
+    val offenders = mainSourcesWith("SparkSession.builder", "SessionTuning.scala")
     assert(offenders.isEmpty,
       s"build sessions through SessionTuning.session, not a new builder in: $offenders")
+  }
+
+  test("one single-file publish path: the part-file lookup only in UpsertSink.scala") {
+    val offenders = mainSourcesWith("startsWith(\"part-\")", "UpsertSink.scala")
+    assert(offenders.isEmpty,
+      s"publish one-file parquet through UpsertSink.publishSingleFile, not in: $offenders")
   }
 }

@@ -89,17 +89,6 @@ class StreamingSpec extends SparkSpec {
     assert(spark.read.parquet(report).count() == n)
   }
 
-  test("foreachBatch sink writes then publishes (K2/K3 commit protocol)") {
-    val out = java.nio.file.Files.createTempDirectory("graftsink").toString
-    val q = StreamingIngest.startForeachBatchSink(spark, "/root/testdata/sf0.001", out)
-    try q.processAllAvailable() finally q.stop()
-    val published = new java.io.File(out).listFiles.map(_.getName).filter(_.startsWith("_published_"))
-    assert(published.nonEmpty)
-    val target = java.nio.file.Files.readString(
-      java.nio.file.Paths.get(s"$out/${published.head}"))
-    assert(spark.read.parquet(target).count() > 0)
-  }
-
   test("stream-static enrichment: each micro-batch probes the broadcast dim") {
     import java.sql.Timestamp
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
