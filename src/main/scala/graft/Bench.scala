@@ -368,7 +368,7 @@ object Bench {
     // Builders return their artifact's ROW COUNT: the scaling-exponent
     // measurements (TESTDATA.md) need seconds AND output rows side by
     // side, and the count() was already being forced for the build.
-    val allBuilders: Seq[(String, () => Long)] = Seq(
+    val artifactBuilders: Seq[(String, () => Long)] = Seq(
       "index_build" -> (() => llm.SharedIndex.sidPostings(spark, sfDir).count()),
       "pairs_build" -> (() => llm.DedupQueries.rareOverlaps(spark, sfDir).count()),
       "cc_build" -> (() => llm.DedupQueries.ccLabels(spark, sfDir).count()),
@@ -391,22 +391,6 @@ object Bench {
       }),
       "bpe_build" -> (() => llm.TextQueries.bpeBuildDf(spark, sfDir).count()),
       "tok_build" -> (() => llm.TextQueries.tokFrame(spark, sfDir).count()))
-    // Optional build-line filter, the builder-side sibling of
-    // SPARK_GRAFT_ONLY (names without the _build suffix, e.g.
-    // SPARK_GRAFT_BUILDS=index,pairs,cc): targeted profiling at scale
-    // points where the unmeasured families would dominate wall-clock.
-    // Unset -> all builders, the only mode whose total is comparable.
-    val buildFilter: Option[Set[String]] =
-      sys.env.get("SPARK_GRAFT_BUILDS").map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val artifactBuilders = buildFilter match {
-      // Match the stripped convention AND the full builder name: the
-      // kNN edge builders' suffix is `_build_b4`/`_build_b6`, which
-      // stripSuffix("_build") leaves untouched — without the full-name
-      // fallback, `SPARK_GRAFT_BUILDS=knn_build_b4` silently selected
-      // nothing.
-      case Some(names) => allBuilders.filter { case (n, _) => names(n.stripSuffix("_build")) || names(n) }
-      case None        => allBuilders
-    }
     // Build lines carry per-entry loadavg exactly like registry
     // queries, so `query_loadavg` is keyed identically to `queries`
     // (r11's artifacts omitted the build lines from the load map).
@@ -522,7 +506,7 @@ object Bench {
     // pair are emitted as covariates for cross-round comparability
     // adjudication — see BenchGate's policy note.
     val allValid = failures.isEmpty && results.size == ok.size &&
-      only.isEmpty && buildFilter.isEmpty && !partitionsOverridden && !masterOverridden &&
+      only.isEmpty && !partitionsOverridden && !masterOverridden &&
       BenchGate.hostValid(loadStart, loadStart0, stealRun, writeStart, writeEnd)
     val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"query_loadavg":$loads,"build_rows":$buildRows,"sf":"$sfDir","cpus":$cpus,"master":${jstr(master)},"shuffle_partitions":$shufflePartitions,"calib_s":$calibS,"calib_end_s":$calibEndS,"loadavg_start":$loadStart,"loadavg_post_wait":$loadStart0,"loadavg_end":$loadEnd,"steal_pct_floor":$stealFloor,"steal_pct_floor_loaded":$stealFloorLoaded,"steal_pct_start":$stealStart,"steal_pct_run":$stealRun,"steal_pct_excess_run":${stealRun - stealFloor},"write_gbps_start":$writeStart,"write_gbps_end":$writeEnd,"n_queries":${ok.size},"n_failed":${results.size - ok.size},"errors":$errs,"valid":$allValid}"""
     println(line)

@@ -31,10 +31,7 @@ import graft.operators.Compaction
   * full-corpus scan per batch, exactly what kills the design at
   * 100 TB. So each store keeps digest side tables as siblings:
   *
-  *   - `<store>.fpidx-p<h>`     — (doc_id, fp): exact-dup
-  *     fingerprints, laid out in `pfx=…` partitions keyed by the
-  *     first h hex chars of fp so the probe join is partition-pruned
-  *     (see [[FpPfxChars]])
+  *   - `<store>.fpidx`          — (doc_id, fp): exact-dup fingerprints
   *   - `<store>.shidx-k<k>`     — (doc_id, sh): md5 shingle digests
   *   - `<store>.pgidx-c<c>`     — (doc_id, pg): md5 passage digests
   *   - `<store>.dfidx-k<k>`     — (sh, df, batch_id): PARTIAL
@@ -112,15 +109,13 @@ import graft.operators.Compaction
   * on the admission plan (index-dirs-only scans; no full-index
   * Aggregate; no index on an anti/semi build side). The remaining
   * per-batch index cost is scan I/O — the probes stream the digest
-  * files under a broadcast of the delta keys. For the FP index that
-  * scan is now partition-pruned: the index is laid out by a
-  * fingerprint prefix and the probe joins on (pfx, fp), so dynamic
-  * partition pruning skips the leaves a batch's fingerprints cannot
-  * touch (`NearDupIngestSpec` asserts the pruning subquery is
-  * planned; [[FpPfxChars]] documents why the shingle/df/cnt/pg
-  * probes deliberately stay flat — delta-dense probes and pinned
-  * probe sides make pruning there cosmetic). The shingle-side scan
-  * I/O is thus the honest per-batch floor for this layout.
+  * files under a broadcast of the delta keys. Every side table is
+  * flat: the shingle and df probes are delta-dense (a batch of B docs
+  * probes ~B × shingles-per-doc digests, touching nearly every digest
+  * prefix), so a prefix-partitioned layout would prune nothing there
+  * while multiplying the per-batch small-file accretion, and the fp
+  * index, at one digest per doc, is a few percent of their bytes. The
+  * shingle-side scan I/O is thus the honest per-batch floor.
   * Store growth is one file per batch per target, exactly the
   * small-file accretion [[Compaction.compactParquet]] exists to fold.
   */
@@ -134,57 +129,14 @@ object NearDupIngest {
   // Index side tables
   // ---------------------------------------------------------------
 
-  /** Hex chars of the fingerprint used as the fp index's PARTITION
-    * prefix — the "next layout decade" the flat design documented:
-    * the fp index is laid out `pfx=<first hex chars>/...`, the probe
-    * joins on (pfx, fp), and Catalyst's dynamic partition pruning
-    * (broadcast-reuse form — the probe's delta side already
-    * broadcasts for the semi-join) skips every partition the batch's
-    * fingerprints cannot touch. Probe I/O drops from O(index) to
-    * ~`1 - (1-1/P)^B` of it for a batch of B docs over P=16^chars
-    * partitions — a real decade for the trickle-batch regime the
-    * streaming ingest exists for (B ≪ P), degrading gracefully to
-    * the old full scan when B ≳ P. 1 hex char (16 partitions) keeps
-    * local tests honest; a 100 TB deployment would use 3–4 (4k–65k
-    * partitions — the value is baked into the directory name, so
-    * differently-laid-out indexes can never alias).
-    *
-    * Only the FP index gets this treatment, deliberately:
-    *   - the shingle/df probes are DELTA-DENSE (a batch of B docs
-    *     probes ~B × shingles-per-doc digests — at any plausible P
-    *     nearly every partition is touched, so pruning buys ~nothing
-    *     while multiplying the per-batch small-file accretion by P);
-    *   - the passage probe's delta side is behind the production
-    *     `localCheckpoint` pin, which erases the selective predicate
-    *     DPP's planner precondition looks for — the pruning would
-    *     exist in the plan test and silently not in production;
-    *   - the cnt probe's candidate set derives from the pinned
-    *     candidate frame, same story.
-    * The fp probe is the one that is both sparse (ONE digest per doc)
-    * and un-pinned on the delta side, so its pruning is real in the
-    * production plan — and `NearDupIngestSpec` asserts the dynamic
-    * pruning subquery is actually planned.
-    */
-  private[graft] val FpPfxChars = 1
-
-  private def pfxOf(c: org.apache.spark.sql.Column, p: Int) = substring(c, 1, p)
-
-  /** The width is a STORE parameter (threaded from [[ingestBatch]] /
-    * [[start]], default [[FpPfxChars]]) and is baked into the index
-    * directory name, so stores laid out at different widths can never
-    * alias: a width change simply names a new index dir, and the next
-    * batch bootstraps it from the store (the documented repair path).
-    */
-  private[graft] def fpIdxDir(storeDir: String, p: Int = FpPfxChars): String =
-    s"$storeDir.fpidx-p$p"
+  private[graft] def fpIdxDir(storeDir: String): String = storeDir + ".fpidx"
   private[graft] def shIdxDir(storeDir: String, k: Int): String = s"$storeDir.shidx-k$k"
   private[graft] def pgIdxDir(storeDir: String, c: Int): String = s"$storeDir.pgidx-c$c"
   private[graft] def dfIdxDir(storeDir: String, k: Int): String = s"$storeDir.dfidx-k$k"
   private[graft] def cntIdxDir(storeDir: String, k: Int): String = s"$storeDir.cntidx-k$k"
   private[graft] def statsDir(storeDir: String): String = storeDir + ".stats"
 
-  // pfx is the partition column of the fp index's directory layout
-  private val fpSchema = StructType.fromDDL("doc_id BIGINT, fp STRING, pfx STRING")
+  private val fpSchema = StructType.fromDDL("doc_id BIGINT, fp STRING")
   private val shSchema = StructType.fromDDL("doc_id BIGINT, sh STRING")
   private val pgSchema = StructType.fromDDL("doc_id BIGINT, pg STRING")
   private val dfSchema = StructType.fromDDL("sh STRING, df BIGINT, batch_id BIGINT")
@@ -211,25 +163,6 @@ object NearDupIngest {
       Compaction.readCompacted(spark, dir).select(schema.fieldNames.map(col): _*)
     else spark.read.schema(schema).parquet(dir)
 
-  /** Manifest-aware read of a `pfx=…`-partitioned index. Each leaf is
-    * an independently-compacted FLAT dataset (manifest per leaf); the
-    * live files of every leaf are read together under one `basePath`
-    * so the pfx partition column — and with it dynamic partition
-    * pruning on the probe join — survives. Falls back to the plain
-    * partitioned read when no leaf has been compacted yet.
-    */
-  private def readPartIdx(spark: SparkSession, dir: String, schema: StructType): DataFrame = {
-    val leaves = UpsertSink.subdirs(Paths.get(dir), "pfx=")
-    if (leaves.exists(l => Files.exists(l.resolve(Compaction.ManifestName)))) {
-      val files = leaves.flatMap(l => Compaction.livePaths(l.toString))
-      if (files.isEmpty)
-        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-      else
-        spark.read.option("basePath", dir).schema(schema).parquet(files: _*)
-          .select(schema.fieldNames.map(col): _*)
-    } else spark.read.schema(schema).parquet(dir)
-  }
-
   /** One-time bootstrap: derive the index from the store's text and
     * publish it with an atomic directory rename (derive → `.tmp` →
     * move), so a crashed bootstrap leaves no half-index a later call
@@ -238,16 +171,20 @@ object NearDupIngest {
     * documented repair path: delete an index directory and the next
     * batch rebuilds it from the store.
     */
-  private def ensureIdx(idxDir: String, partitionCols: Seq[String] = Nil)(
-      derive: => DataFrame): Unit = {
+  private[graft] def ensureIdx(idxDir: String)(derive: => DataFrame): Unit = {
     val target = Paths.get(idxDir)
     if (!Files.exists(target)) {
       val tmp = Paths.get(idxDir + ".tmp")
       UpsertSink.rmTree(tmp)
-      derive.write.mode("overwrite").partitionBy(partitionCols: _*).parquet(tmp.toString)
+      derive.write.mode("overwrite").parquet(tmp.toString)
+      // a directory renamed onto a non-empty one fails with
+      // FileAlreadyExistsException or, on Linux, a plain
+      // FileSystemException ("Directory not empty"): whichever it is,
+      // a target that now exists is the lost race
       try Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE)
       catch {
-        case _: java.nio.file.FileAlreadyExistsException => UpsertSink.rmTree(tmp)
+        case e: java.io.IOException =>
+          if (Files.exists(target)) UpsertSink.rmTree(tmp) else throw e
       }
     }
   }
@@ -257,11 +194,9 @@ object NearDupIngest {
       .select(col("doc_id").cast("long").as("doc_id"),
         col("text").cast("string").as("text"))
 
-  private[graft] def ensureDocIdx(spark: SparkSession, storeDir: String, k: Int,
-      fpPfx: Int = FpPfxChars): Unit = {
-    ensureIdx(fpIdxDir(storeDir, fpPfx), partitionCols = Seq("pfx")) {
+  private[graft] def ensureDocIdx(spark: SparkSession, storeDir: String, k: Int): Unit = {
+    ensureIdx(fpIdxDir(storeDir)) {
       storeText(spark, storeDir).select(col("doc_id"), fp(col("text")).as("fp"))
-        .withColumn("pfx", pfxOf(col("fp"), fpPfx))
     }
     ensureIdx(shIdxDir(storeDir, k)) { shingleDigests(storeText(spark, storeDir), k) }
     // Count side tables bootstrap from the shingle index (a ONE-TIME
@@ -342,8 +277,7 @@ object NearDupIngest {
   private[graft] def admitDocsFlow(spark: SparkSession, batch: DataFrame,
       storeDir: String, jaccardMin: Double, shingleK: Int, maxDf: Int,
       batchId: Long, pin: DataFrame => DataFrame,
-      gate: DataFrame => DataFrame = identity,
-      fpPfx: Int = FpPfxChars): DataFrame = {
+      gate: DataFrame => DataFrame = identity): DataFrame = {
     val docs = gate(normalizedDocs(batch))
     val batchIds = docs.select("doc_id")
     val shIdx = readIdx(spark, shIdxDir(storeDir, shingleK), shSchema)
@@ -357,18 +291,14 @@ object NearDupIngest {
     // full-index aggregate). Instead the index is semi-joined down to
     // the batch's fingerprints first (the index STREAMS under a
     // broadcast of the delta keys — no index-side exchange), and the
-    // anti-join's build side is then the delta-bounded hit set.
-    // Join order matters for pruning: the semi-probe runs DIRECTLY on
-    // the partitioned scan with pfx in the join key — an intervening
-    // join would break the scan⟶join pattern Catalyst's partition-
-    // pruning rule matches — and the replay self-exclusion by doc_id
-    // follows on the delta-bounded hit rows (semi and anti are both
-    // row filters on the index, so they commute).
+    // anti-join's build side is then the delta-bounded hit set. The
+    // replay self-exclusion by doc_id runs on the hit rows (semi and
+    // anti are both row filters on the index, so they commute).
     val keeper = Window.partitionBy("fp").orderBy("doc_id")
     val docsFp = docs.withColumn("fp", fp(col("text")))
       .withColumn("rn", row_number().over(keeper)).where(col("rn") === 1)
-    val hitRows = readPartIdx(spark, fpIdxDir(storeDir, fpPfx), fpSchema)
-      .join(docsFp.select(pfxOf(col("fp"), fpPfx).as("pfx"), col("fp")), Seq("pfx", "fp"), "left_semi")
+    val hitRows = readIdx(spark, fpIdxDir(storeDir), fpSchema)
+      .join(docsFp.select("fp"), Seq("fp"), "left_semi")
     val hitFps = hitRows.join(batchIds, Seq("doc_id"), "left_anti").select("fp")
     val exactNew = pin(docsFp.join(hitFps, Seq("fp"), "left_anti")
       .select("doc_id", "text", "fp"))
@@ -428,19 +358,16 @@ object NearDupIngest {
     */
   def ingestBatch(spark: SparkSession, batch: DataFrame, storeDir: String,
       batchId: Long, jaccardMin: Double = 0.8, shingleK: Int = 3,
-      maxDf: Int = 8, gate: DataFrame => DataFrame = identity,
-      fpPfx: Int = FpPfxChars): Long = {
+      maxDf: Int = 8, gate: DataFrame => DataFrame = identity): Long = {
     // -1 is the bootstrap sentinel in the df-partials table; a batch
     // claiming it would silently exclude the ENTIRE bootstrap from
     // the df probe (admission then over-drops) and corrupt future
     // replay exclusion with its own -1-tagged partial. foreachBatch
     // ids are always >= 0.
     require(batchId >= 0, s"batchId must be >= 0 (-1 is the bootstrap sentinel): $batchId")
-    require(fpPfx >= 1 && fpPfx <= 8, s"fp prefix width must be 1..8 hex chars: $fpPfx")
-    ensureDocIdx(spark, storeDir, shingleK, fpPfx)
+    ensureDocIdx(spark, storeDir, shingleK)
     val survivors = admitDocsFlow(spark, batch, storeDir, jaccardMin, shingleK,
-      maxDf, batchId, pin = _.localCheckpoint(false), gate = gate,
-      fpPfx = fpPfx).localCheckpoint(false)
+      maxDf, batchId, pin = _.localCheckpoint(false), gate = gate).localCheckpoint(false)
     // store first (see scaladoc: no-replay skew must fail toward a
     // future sweepable dup, never toward dropping novel content).
     // The count tables go LAST for the same reason: a crash between
@@ -450,9 +377,7 @@ object NearDupIngest {
     // doc.
     val n = rowsIn(spark,
       appendIdempotent(survivors.select("doc_id", "text"), storeDir, batchId))
-    appendIdempotent(
-      survivors.select(col("doc_id"), col("fp"), pfxOf(col("fp"), fpPfx).as("pfx")),
-      fpIdxDir(storeDir, fpPfx), batchId, partitionCol = Some("pfx"))
+    appendIdempotent(survivors.select("doc_id", "fp"), fpIdxDir(storeDir), batchId)
     val shNew = shingleDigests(survivors, shingleK).localCheckpoint(false)
     appendIdempotent(shNew, shIdxDir(storeDir, shingleK), batchId)
     appendIdempotent(
@@ -575,37 +500,22 @@ object NearDupIngest {
   }
 
   /** Idempotent single-file append into `dir`, shared by the store and
-    * every side table: the batch lands as ONE `ingest-<id>.parquet` in
-    * each leaf it touches (`dir` itself, or each `<partitionCol>=…`
-    * leaf) via [[UpsertSink.publishSingleFile]]'s rename-replace, so a
+    * every side table: the batch lands as ONE `ingest-<id>.parquet` via
+    * [[UpsertSink.publishSingleFile]]'s rename-replace, so a
     * foreachBatch replay overwrites its own previous attempt and rows
-    * never double. Leaves a PRIOR attempt touched but this one does not
-    * lose their `ingest-<id>` file, so a replay converges on exactly
-    * this attempt's rows. Per-leaf publishes are not jointly atomic: a
-    * crash mid-append leaves a PARTIAL index append — the safe
-    * direction (a doc missing from the fp index can at worst let a
-    * future exact dup through, swept by the batch-mode corpus pass),
-    * and invisible to a same-batch replay, since every index read
-    * self-excludes the batch's own doc_ids. The publish creates `dir`
-    * (the stats table has no bootstrap). Returns the published files.
+    * never double. The publish creates `dir` (the stats table has no
+    * bootstrap). Returns the published file.
     */
-  private def appendIdempotent(rows: DataFrame, dir: String, batchId: Long,
-      partitionCol: Option[String] = None): Seq[Path] = {
-    val root = Paths.get(dir)
-    val name = s"ingest-$batchId.parquet"
-    val published = UpsertSink.publishSingleFile(rows, root, name, partitionCol)
-    val leaves = partitionCol.fold(Seq(root))(c => UpsertSink.subdirs(root, s"$c="))
-    leaves.map(_.resolve(name)).filterNot(published.contains).foreach(Files.deleteIfExists)
-    published
-  }
+  private def appendIdempotent(rows: DataFrame, dir: String, batchId: Long): Option[Path] =
+    UpsertSink.publishSingleFile(rows, Paths.get(dir), s"ingest-$batchId.parquet")
 
   /** Rows a store append published (a footer read of its one file). */
-  private def rowsIn(spark: SparkSession, published: Seq[Path]): Long =
-    if (published.isEmpty) 0L else spark.read.parquet(published.map(_.toString): _*).count()
+  private def rowsIn(spark: SparkSession, published: Option[Path]): Long =
+    published.fold(0L)(p => spark.read.parquet(p.toString).count())
 
   /** Single maintenance entry point: fold the store AND every sibling
     * index side table it has accreted (each gains one file per batch).
-    * Discovery is by the directory-name contract (`<store>.fpidx-p*`,
+    * Discovery is by the directory-name contract (`<store>.fpidx`,
     * `.shidx-k*`, `.pgidx-c*`, `.dfidx-k*`, `.cntidx-k*`), so a
     * maintenance job needs no knowledge of which k/c configs ran.
     * Safe concurrently with the stream: each directory's compaction is
@@ -624,24 +534,17 @@ object NearDupIngest {
     // inside) would otherwise match its index's prefix and abort the
     // whole sweep when compactParquet rejects the subdirectory — and
     // an unluckily-named sibling store (`t.fpidxfoo`) must never be
-    // swept by `t`'s maintenance.
-    val exact = Set(name + ".stats", name + ".alarms")
-    val parameterized =
-      Seq(".fpidx-p", ".shidx-k", ".pgidx-c", ".dfidx-k", ".cntidx-k").map(name + _)
+    // swept by `t`'s maintenance. A prefix-partitioned
+    // `<store>.fpidx-p<h>` left by an older engine is skipped too: no
+    // read path uses it, and its subdirectories would abort the sweep.
+    val exact = Set(".fpidx", ".stats", ".alarms").map(name + _)
+    val parameterized = Seq(".shidx-k", ".pgidx-c", ".dfidx-k", ".cntidx-k").map(name + _)
     def ours(n: String): Boolean =
       exact(n) || parameterized.exists(p =>
         n.length > p.length && n.startsWith(p) && n.drop(p.length).forall(_.isDigit))
-    val siblings = Option(store.getParent).toSeq
+    Option(store.getParent).toSeq
       .flatMap(UpsertSink.subdirs(_, name)).filter(d => ours(d.getFileName.toString))
-    // a pfx-partitioned index is compacted per LEAF — each `pfx=…`
-    // directory is an independently-atomic flat dataset (compacting
-    // the root would collapse the partition column into the data
-    // files and corrupt partition discovery; Compaction rejects it)
-    siblings.foreach { s =>
-      val leaves = UpsertSink.subdirs(s, "pfx=")
-      (if (leaves.nonEmpty) leaves else Seq(s))
-        .foreach(d => Compaction.compactParquet(spark, d.toString))
-    }
+      .foreach(d => Compaction.compactParquet(spark, d.toString))
   }
 
   // ---------------------------------------------------------------
@@ -858,11 +761,9 @@ object NearDupIngest {
     */
   def start(spark: SparkSession, docs: DataFrame, storeDir: String,
       dupWindow: String = "1 hour", jaccardMin: Double = 0.8,
-      gate: DataFrame => DataFrame = identity,
-      fpPfx: Int = FpPfxChars): StreamingQuery =
+      gate: DataFrame => DataFrame = identity): StreamingQuery =
     startWith(docs, dupWindow) { (batch, batchId) =>
-      ingestBatch(spark, batch, storeDir, batchId, jaccardMin, gate = gate,
-        fpPfx = fpPfx)
+      ingestBatch(spark, batch, storeDir, batchId, jaccardMin, gate = gate)
       ()
     }
 }

@@ -65,35 +65,25 @@ object UpsertSink {
 
   /** K1 single-file render + K2 publish, the one path every one-file
     * parquet write takes: `df` is rendered with `coalesce(1)` into a
-    * scratch directory (with `partitionCol`, one part file per
-    * `col=value` leaf) and each part file is [[upsert]]ed as `name`
-    * into the matching leaf of `folder` (created if absent). The part
-    * file is MOVED into upsert's staging file inside the target leaf;
-    * across filesystems that move degrades to copy + delete, so the
-    * one atomic step, the rename-replace, stays within the target
-    * directory. Returns the published paths and deletes nothing under
-    * `folder`: a partitioned render of zero rows publishes nothing, and
-    * pruning stale leaves is the caller's policy.
+    * scratch directory and its part file is [[upsert]]ed as `name`
+    * into `folder` (created if absent). The part file is MOVED into
+    * upsert's staging file inside `folder`; across filesystems that
+    * move degrades to copy + delete, so the one atomic step, the
+    * rename-replace, stays within the target directory. Returns the
+    * published path (None when the render left no part file) and
+    * deletes nothing under `folder`.
     */
-  def publishSingleFile(df: DataFrame, folder: Path, name: String,
-      partitionCol: Option[String] = None): Seq[Path] = {
+  def publishSingleFile(df: DataFrame, folder: Path, name: String): Option[Path] = {
     val scratch = Files.createTempDirectory("graft-publish-")
     try {
       val out = scratch.resolve("out")
-      val w = df.coalesce(1).write.mode("overwrite")
-      partitionCol.fold(w)(w.partitionBy(_)).parquet(out.toString)
-      val leaves = partitionCol.fold(Seq(out -> folder)) { c =>
-        subdirs(out, s"$c=").map(l => l -> folder.resolve(l.getFileName.toString))
-      }
-      for {
-        (from, to) <- leaves
-        part <- ls(from).find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-      } yield {
-        Files.createDirectories(to)
-        upsert(to, name, { tmp =>
+      df.coalesce(1).write.mode("overwrite").parquet(out.toString)
+      ls(out).find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).map { part =>
+        Files.createDirectories(folder)
+        upsert(folder, name, { tmp =>
           Files.move(part.toPath, tmp, StandardCopyOption.REPLACE_EXISTING); ()
         })
-        to.resolve(name)
+        folder.resolve(name)
       }
     } finally rmTree(scratch)
   }

@@ -129,21 +129,13 @@ class NearDupIngestSpec extends SparkSpec {
       java.nio.file.Files.exists(java.nio.file.Paths.get(d, Compaction.ManifestName))
     assert(!hasManifest(dirA + ".dfidx-k3.tmp") && !hasManifest(dirA + ".fpidxfoo"),
       "maintenance swept a staging leftover or an unrelated sibling")
-    for (idx <- Seq(NearDupIngest.shIdxDir(dirA, 3), NearDupIngest.statsDir(dirA)))
+    for (idx <- Seq(NearDupIngest.fpIdxDir(dirA), NearDupIngest.shIdxDir(dirA, 3),
+        NearDupIngest.statsDir(dirA)))
       assert(hasManifest(idx), s"own side table not folded: $idx")
-    // the fp index is pfx-partitioned: maintenance folds each LEAF
-    assert(fpLeaves(NearDupIngest.fpIdxDir(dirA)).nonEmpty &&
-      fpLeaves(NearDupIngest.fpIdxDir(dirA)).forall(l => hasManifest(l.getPath)),
-      s"fp index leaves not folded under ${NearDupIngest.fpIdxDir(dirA)}")
-    for (idx <- Seq(dirB, NearDupIngest.shIdxDir(dirB, 3), NearDupIngest.statsDir(dirB)))
+    for (idx <- Seq(dirB, NearDupIngest.fpIdxDir(dirB), NearDupIngest.shIdxDir(dirB, 3),
+        NearDupIngest.statsDir(dirB)))
       assert(!hasManifest(idx), s"sibling store's directory touched: $idx")
-    assert(fpLeaves(NearDupIngest.fpIdxDir(dirB)).forall(l => !hasManifest(l.getPath)),
-      "sibling store's fp index touched")
   }
-
-  private def fpLeaves(dir: String): Seq[java.io.File] =
-    Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty[java.io.File])
-      .filter(f => f.isDirectory && f.getName.startsWith("pfx=")).toSeq
 
   test("ingestBatch with an all-duplicate batch appends nothing and replays clean") {
     val dir = java.nio.file.Files.createTempDirectory("graftndempty").resolve("t").toString
@@ -165,31 +157,6 @@ class NearDupIngestSpec extends SparkSpec {
   private def storeTexts(dir: String): Map[Long, String] =
     Compaction.readCompacted(spark, dir).select("doc_id", "text")
       .as[(Long, String)].collect().toMap
-
-  test("a replay touching fewer pfx leaves removes its file from the leaves it left") {
-    val dir = java.nio.file.Files.createTempDirectory("graftndstale").resolve("t").toString
-    Seq((1L, t1)).toDF("doc_id", "text").write.mode("overwrite").parquet(dir)
-    val docs = (1 to 6).map(k => Doc(100L + k, ts(k), text((1 to 20).map(i => s"w${k}x$i"): _*)))
-    def pfxOf(ds: Seq[Doc]): Set[String] = ds.map { d =>
-      val norm = d.text.toLowerCase.replaceAll("\\s+", " ").trim
-      val md5 = java.security.MessageDigest.getInstance("MD5").digest(norm.getBytes("UTF-8"))
-      "pfx=" + f"${md5(0)}%02x".take(NearDupIngest.FpPfxChars)
-    }.toSet
-    val firstLeaves = pfxOf(docs)
-    val replayLeaves = pfxOf(docs.take(1))
-    assert(replayLeaves.size < firstLeaves.size, s"fixture must shrink: $firstLeaves")
-
-    val fpDir = NearDupIngest.fpIdxDir(dir)
-    def leavesWithFile: Set[String] = fpLeaves(fpDir)
-      .filter(l => new java.io.File(l, "ingest-3.parquet").exists).map(_.getName).toSet
-    assert(NearDupIngest.ingestBatch(spark, docs.toDF(), dir, batchId = 3) == 6L)
-    assert(leavesWithFile == firstLeaves)
-    // the replay of batch 3 recomputes only doc 101: every leaf the
-    // first attempt touched and this one does not loses its file
-    assert(NearDupIngest.ingestBatch(spark, docs.take(1).toDF(), dir, batchId = 3) == 1L)
-    assert(leavesWithFile == replayLeaves, s"stale fp files left behind: $leavesWithFile")
-    assert(storeIds(dir) == Set(1L, 101L))
-  }
 
   test("ingest into a store on another filesystem than java.io.tmpdir") {
     import java.nio.file.{Files, Paths}
@@ -430,82 +397,6 @@ class NearDupIngestSpec extends SparkSpec {
       "calculus failed to flag an index on an anti-join build side")
   }
 
-  test("fp-index probe plans a real dynamic partition-pruning subquery on the pfx layout") {
-    val dir = java.nio.file.Files.createTempDirectory("graftnddpp").resolve("t").toString
-    Seq((1L, t1), (2L, t2), (3L, t3)).toDF("doc_id", "text").write.mode("overwrite").parquet(dir)
-    NearDupIngest.ensureDocIdx(spark, dir, 3)
-    assert(fpLeaves(NearDupIngest.fpIdxDir(dir)).nonEmpty, "fp index is not pfx-partitioned")
-    val batch = Seq(Doc(10, ts(0), tNovel), Doc(11, ts(1), t1)).toDF()
-    val flow = NearDupIngest.admitDocsFlow(spark, batch, dir,
-      jaccardMin = 0.8, shingleK = 3, maxDf = 8, batchId = 0, pin = identity)
-    // the fp scan's line in the physical plan must carry a NON-fallback
-    // pruning subquery on pfx: `dynamicpruningexpression(true)` is the
-    // planner's gave-up form (broadcast not reusable), which would mean
-    // the partitioned layout prunes nothing at runtime
-    val fpScanLines = flow.queryExecution.executedPlan.toString.linesIterator
-      .filter(_.contains(".fpidx-p")).toSeq
-    assert(fpScanLines.nonEmpty, "no fp-index scan in the admission plan")
-    assert(fpScanLines.exists(l =>
-        l.contains("dynamicpruningexpression(") && !l.contains("dynamicpruningexpression(true)")),
-      s"fp probe is not partition-pruned:\n${fpScanLines.mkString("\n")}")
-    // and the pruned probe still computes the right answer: doc 11 is
-    // an exact dup of corpus doc 1, doc 10 is novel
-    val admitted = flow.select("doc_id").as[Long].collect().toSet
-    assert(admitted == Set(10L), s"pruned probe admitted $admitted")
-
-    // the MANIFEST read path (per-leaf compaction -> explicit live-file
-    // list under one basePath) must keep both properties: partition
-    // discovery survives the file-list read, so the pruning subquery
-    // still plans, and admission is unchanged
-    NearDupIngest.compactStoreAndIndexes(spark, dir)
-    assert(fpLeaves(NearDupIngest.fpIdxDir(dir)).exists(l =>
-        java.nio.file.Files.exists(l.toPath.resolve(Compaction.ManifestName))),
-      "precondition: no fp leaf was compacted")
-    val flow2 = NearDupIngest.admitDocsFlow(spark, batch, dir,
-      jaccardMin = 0.8, shingleK = 3, maxDf = 8, batchId = 0, pin = identity)
-    val fpScanLines2 = flow2.queryExecution.executedPlan.toString.linesIterator
-      .filter(_.contains(".fpidx-p")).toSeq
-    assert(fpScanLines2.exists(l =>
-        l.contains("dynamicpruningexpression(") && !l.contains("dynamicpruningexpression(true)")),
-      s"fp probe lost pruning on the compacted (file-list) read path:\n${fpScanLines2.mkString("\n")}")
-    val admitted2 = flow2.select("doc_id").as[Long].collect().toSet
-    assert(admitted2 == Set(10L), s"compacted-path probe admitted $admitted2")
-  }
-
-  test("fp prefix width is a real store parameter: p=2 lays out 256-way, plans the same DPP subquery, admits identically") {
-    val dir = java.nio.file.Files.createTempDirectory("graftnddpp2").resolve("t").toString
-    Seq((1L, t1), (2L, t2), (3L, t3)).toDF("doc_id", "text").write.mode("overwrite").parquet(dir)
-    NearDupIngest.ensureDocIdx(spark, dir, 3, fpPfx = 2)
-    // width is baked into the directory name — a p=2 store can never
-    // alias a p=1 index
-    assert(NearDupIngest.fpIdxDir(dir, 2).endsWith(".fpidx-p2"))
-    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(NearDupIngest.fpIdxDir(dir, 1))),
-      "p=2 bootstrap must not create the p=1 layout")
-    val leaves = fpLeaves(NearDupIngest.fpIdxDir(dir, 2))
-    assert(leaves.nonEmpty, "fp index is not pfx-partitioned at p=2")
-    assert(leaves.forall(l => l.getName.stripPrefix("pfx=").length == 2),
-      s"p=2 leaves must carry 2-hex-char prefixes: ${leaves.map(_.getName).toSeq}")
-    val batch = Seq(Doc(10, ts(0), tNovel), Doc(11, ts(1), t1)).toDF()
-    val flow = NearDupIngest.admitDocsFlow(spark, batch, dir,
-      jaccardMin = 0.8, shingleK = 3, maxDf = 8, batchId = 0, pin = identity,
-      fpPfx = 2)
-    val fpScanLines = flow.queryExecution.executedPlan.toString.linesIterator
-      .filter(_.contains(".fpidx-p2")).toSeq
-    assert(fpScanLines.nonEmpty, "no p=2 fp-index scan in the admission plan")
-    assert(fpScanLines.exists(l =>
-        l.contains("dynamicpruningexpression(") && !l.contains("dynamicpruningexpression(true)")),
-      s"p=2 fp probe is not partition-pruned:\n${fpScanLines.mkString("\n")}")
-    val admitted = flow.select("doc_id").as[Long].collect().toSet
-    assert(admitted == Set(10L), s"p=2 probe admitted $admitted")
-    // end-to-end at p=2: ingest appends the survivor + its p=2 index
-    // rows, and an exact replay of the batch admits nothing
-    val n = NearDupIngest.ingestBatch(spark, batch, dir, batchId = 0, fpPfx = 2)
-    assert(n == 1L, s"p=2 ingest admitted $n rows")
-    assert(storeIds(dir) == Set(1L, 2L, 3L, 10L))
-    assert(NearDupIngest.ingestBatch(spark, batch, dir, batchId = 0, fpPfx = 2) == 1L &&
-      storeIds(dir) == Set(1L, 2L, 3L, 10L), "p=2 replay must converge")
-  }
-
   /** The pre-index formulation (full store-text rescan per batch),
     * kept as the equivalence oracle: the incremental-index ingest must
     * admit EXACTLY the docs this admits.
@@ -590,18 +481,63 @@ class NearDupIngestSpec extends SparkSpec {
     // that compaction preserves the partial-row multiset (df is
     // derived by summation)
     NearDupIngest.compactStoreAndIndexes(spark, dir)
-    for (idx <- Seq(NearDupIngest.shIdxDir(dir, 3),
+    for (idx <- Seq(NearDupIngest.fpIdxDir(dir), NearDupIngest.shIdxDir(dir, 3),
         NearDupIngest.dfIdxDir(dir, 3), NearDupIngest.cntIdxDir(dir, 3)))
       assert(java.nio.file.Files.exists(java.nio.file.Paths.get(idx, Compaction.ManifestName)),
         s"maintenance entry point skipped $idx")
-    assert(fpLeaves(NearDupIngest.fpIdxDir(dir)).nonEmpty &&
-      fpLeaves(NearDupIngest.fpIdxDir(dir)).forall(l =>
-        java.nio.file.Files.exists(l.toPath.resolve(Compaction.ManifestName))),
-      s"maintenance entry point skipped fp index leaves under ${NearDupIngest.fpIdxDir(dir)}")
     // near-dup of the pre-compaction append must still be caught, and
     // a replayed batchId must not resurrect via the rewritten store
     assert(NearDupIngest.ingestBatch(spark, Seq(Doc(20, ts(5), tNovelNear)).toDF(), dir, 1) == 0L)
     assert(storeIds(dir) == Set(1L, 10L))
+  }
+
+  test("a bootstrap that loses the race to a concurrent one discards its snapshot") {
+    import java.nio.file.{Files, Paths}
+    val idx = Files.createTempDirectory("graftndrace").resolve("t.fpidx").toString
+    NearDupIngest.ensureIdx(idx) {
+      // a concurrent bootstrap publishes the index between our
+      // existence check and our rename
+      Seq((1L, "winner")).toDF("doc_id", "fp").write.parquet(idx)
+      Seq((1L, "loser")).toDF("doc_id", "fp")
+    }
+    assert(!Files.exists(Paths.get(idx + ".tmp")), "the loser left its staging dir behind")
+    assert(spark.read.parquet(idx).as[(Long, String)].collect().toSeq == Seq((1L, "winner")))
+  }
+
+  test("a store with a prefix-partitioned fp index from an older engine bootstraps the flat one") {
+    import java.nio.file.{Files, Path, Paths}
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.functions._
+    val dir = Files.createTempDirectory("graftndlegacy").resolve("t").toString
+    Seq((1L, t1), (2L, t2)).toDF("doc_id", "text").write.mode("overwrite").parquet(dir)
+    assert(NearDupIngest.ingestBatch(spark, Seq(Doc(10, ts(0), tNovel)).toDF(), dir, 0) == 1L)
+    // the older layout: no flat fp index, `pfx=<first hex char>` leaves
+    // under `<store>.fpidx-p1` holding the store's fingerprints
+    UpsertSink.rmTree(Paths.get(NearDupIngest.fpIdxDir(dir)))
+    val legacy = Paths.get(dir + ".fpidx-p1")
+    Compaction.readCompacted(spark, dir)
+      .select(col("doc_id"), md5(trim(regexp_replace(lower(col("text")), "\\s+", " "))).as("fp"))
+      .withColumn("pfx", substring(col("fp"), 1, 1))
+      .write.partitionBy("pfx").parquet(legacy.toString)
+    def snapshot: Seq[(String, Long, Long)] = {
+      val w = Files.walk(legacy)
+      try w.iterator().asScala.toSeq.map((p: Path) => (legacy.relativize(p).toString,
+        Files.size(p), Files.getLastModifiedTime(p).toMillis)).sorted
+      finally w.close()
+    }
+    val before = snapshot
+    assert(before.exists(_._1.startsWith("pfx=")), s"fixture has no pfx= leaves: $before")
+
+    NearDupIngest.compactStoreAndIndexes(spark, dir)
+    assert(snapshot == before, "maintenance touched the legacy fp index")
+    assert(Files.exists(Paths.get(NearDupIngest.shIdxDir(dir, 3), Compaction.ManifestName)))
+
+    // 20 repeats store doc 1 exactly; 21 is novel
+    val batch = Seq(Doc(20, ts(5), t1), Doc(21, ts(6), tNovel2)).toDF()
+    assert(NearDupIngest.ingestBatch(spark, batch, dir, batchId = 1) == 1L)
+    assert(Files.isDirectory(Paths.get(NearDupIngest.fpIdxDir(dir))), "flat fp index not bootstrapped")
+    assert(storeIds(dir) == Set(1L, 2L, 10L, 21L))
+    assert(snapshot == before, "ingest touched the legacy fp index")
   }
 
   test("deleting an index directory triggers an exact rebuild from the store") {
