@@ -2,9 +2,13 @@ package graft.streaming
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.StringShingles
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
 
@@ -99,21 +103,33 @@ import graft.operators.Compaction
   * × df-capped index digests) + the exact-verify join — the
   * x_dedup_incremental dataflow with the delta bounded by micro-batch
   * size. Steady-state per-batch cost is O(batch × doc-size) in
-  * SHUFFLE and AGGREGATION terms, independent of corpus length: the
-  * store's text is never read, the indexes appear only as streamed
-  * probe sides of digest/doc_id equi-joins (never on an anti/semi
-  * build side, never under an exchange), and every aggregation input
-  * is delta- or candidate-bounded (df from partial-count sums after
-  * the delta semi-join, per-doc counts from the cnt table after the
-  * candidate semi-join). `NearDupIngestSpec` machine-checks all of it
-  * on the admission plan (index-dirs-only scans; no full-index
-  * Aggregate; no index on an anti/semi build side). The remaining
-  * per-batch index cost is scan I/O — the probes stream the digest
-  * files under a broadcast of the delta keys. Every side table is
-  * flat: the shingle and df probes are delta-dense (a batch of B docs
-  * probes ~B × shingles-per-doc digests, touching nearly every digest
-  * prefix), so a prefix-partitioned layout would prune nothing there
-  * while multiplying the per-batch small-file accretion, and the fp
+  * SHUFFLE and AGGREGATION terms, independent of corpus length, and
+  * the plan enforces it with hints rather than leaving it to size
+  * estimates:
+  *   - every index is read only as the streamed side of a join whose
+  *     other side is an explicit `broadcast` of delta- or
+  *     candidate-bounded keys (batch ids, batch fps, delta digests,
+  *     rare digests, candidate docs), so no index is ever shuffled or
+  *     broadcast whole, at any corpus size; the rows that survive the
+  *     probe join the delta side however the planner sizes them;
+  *   - the store's text is never read, and every aggregation input is
+  *     delta- or candidate-bounded (df from partial-count sums after
+  *     the delta probe, per-doc counts from the cnt table after the
+  *     candidate probe).
+  * The delta side is an ordinary parallel plan; what the hints bound
+  * by the micro-batch is each broadcast key set, the largest being the
+  * batch's distinct shingle digests (~B × shingles-per-doc md5s).
+  * `NearDupIngestSpec` machine-checks both levels: the physical plans
+  * a real ingest runs (index rows cross an exchange only after a
+  * broadcast probe filtered them — with size-based broadcasting off,
+  * so the hints carry it) and the logical admission plan
+  * (index-dirs-only scans; no full-index Aggregate; no index on an
+  * anti/semi build side). The remaining per-batch index cost is scan
+  * I/O. Every side table is flat: the shingle and df probes are
+  * delta-dense (a batch of B docs probes ~B × shingles-per-doc
+  * digests, touching nearly every digest prefix), so a
+  * prefix-partitioned layout would prune nothing there while
+  * multiplying the per-batch small-file accretion, and the fp
   * index, at one digest per doc, is a few percent of their bytes. The
   * shingle-side scan I/O is thus the honest per-batch floor.
   * Store growth is one file per batch per target, exactly the
@@ -142,13 +158,17 @@ object NearDupIngest {
   private val dfSchema = StructType.fromDDL("sh STRING, df BIGINT, batch_id BIGINT")
   private val cntSchema = StructType.fromDDL("doc_id BIGINT, n BIGINT")
 
-  /** Delta-side shingle digests: the same k-token shingles as the
-    * batch dedup family, md5'd — every downstream operation is an
-    * equality test, so the digest is a drop-in for the raw shingle.
+  /** Per-doc shingle digests as one array: the doc's distinct k-token
+    * shingles (the batch dedup family's), md5'd — every downstream
+    * operation is an equality test, so the digest is a drop-in for the
+    * raw shingle.
     */
+  private def shingleDigestArray(text: Column, k: Int): Column =
+    transform(array_distinct(StringShingles(graft.llm.TextOps.tokens(text), k)), s => md5(s))
+
+  /** (doc_id, sh) shingle-digest rows of `docs`. */
   private def shingleDigests(docs: DataFrame, k: Int): DataFrame =
-    graft.llm.TextOps.shinglePostings(docs, k)
-      .select(col("doc_id"), md5(col("shingle")).as("sh"))
+    docs.select(col("doc_id"), explode(shingleDigestArray(col("text"), k)).as("sh"))
 
   /** Delta-side passage digests at fixed non-overlapping windows. */
   private def passageDigests(docs: DataFrame, c: Int): DataFrame =
@@ -198,7 +218,7 @@ object NearDupIngest {
     ensureIdx(fpIdxDir(storeDir)) {
       storeText(spark, storeDir).select(col("doc_id"), fp(col("text")).as("fp"))
     }
-    ensureIdx(shIdxDir(storeDir, k)) { shingleDigests(storeText(spark, storeDir), k) }
+    ensureIdx(shIdxDir(storeDir, k)) { shingleDigests(storeText(spark, storeDir), k).distinct() }
     // Count side tables bootstrap from the shingle index (a ONE-TIME
     // full-index aggregate; thereafter maintained by per-batch delta
     // appends). The shingle index is ensured above, so a repair-path
@@ -253,35 +273,42 @@ object NearDupIngest {
     * replay-deterministic), exact dedup vs the fingerprint index
     * (anti-join), near-dup vs the shingle-digest index (rare-digest
     * candidates + exact Jaccard ≥ `jaccardMin`). Returns survivors as
-    * (doc_id, text, fp); replay self-exclusion is applied to EVERY
-    * index read — by the batch's doc_ids where the index carries one
-    * (fp/sh/cnt), by `batchId` for the df partials — mirroring the
-    * corpus self-exclusion of the pre-index formulation.
+    * (doc_id, text, fp, shs), `shs` the doc's shingle digests; replay
+    * self-exclusion is applied to EVERY index read — by the batch's
+    * doc_ids where the index carries one (fp/sh; the cnt read is
+    * keyed by candidate docs, which already exclude them), by
+    * `batchId` for the df partials — mirroring the corpus
+    * self-exclusion of the pre-index formulation.
     *
-    * '''Every aggregation here is delta-bounded''' — the per-batch
-    * cost is O(batch × doc-size), independent of corpus length:
+    * '''Shape: indexes only as broadcast probes.''' The normalized,
+    * gated batch is pinned once, and the exact-new docs with their
+    * digest arrays once more. Each index read streams its files under
+    * an explicit `broadcast` of a delta- or candidate-bounded key set
+    * (semi-join), and only what survives the probe meets the delta
+    * side. So an index is never shuffled, whatever the size estimates
+    * say:
     *   - a digest's combined df = its delta count + the SUM of its
-    *     matching df-partials (the partials are semi-joined down to
-    *     the delta's digests BEFORE the sum — the full (sh, df) table
+    *     matching df-partials (the partials are probed by the delta's
+    *     digests and summed after the probe — the full (sh, df) table
     *     is probed, never re-aggregated);
-    *   - per-doc shingle counts come from `deltaPost` for the delta
-    *     side and from the cnt index — semi-joined down to candidate
-    *     docs — for the corpus side;
-    *   - overlap counting joins delta postings against only the
-    *     CANDIDATE docs' index postings (semi-join on doc_b first).
-    * The shingle index itself appears only as the probe side of
-    * equi-joins keyed by digest or doc_id. `NearDupIngestSpec`
-    * machine-checks this ("no full-index aggregate" plan calculus),
-    * on top of the store's-text-never-scanned assertion.
+    *   - candidates come from the shingle index probed by the RARE
+    *     delta digests (≤ maxDf corpus rows each);
+    *   - per-doc shingle counts come from the delta digests for the
+    *     delta side and from the cnt index — probed by candidate docs
+    *     — for the corpus side;
+    *   - overlap counting joins delta digests against only the
+    *     CANDIDATE docs' index postings.
+    * `NearDupIngestSpec` machine-checks this on the physical plans a
+    * real ingest runs (index rows cross an exchange only as probe
+    * hits), and on the logical plan ("no full-index aggregate",
+    * store's text never scanned).
     */
   private[graft] def admitDocsFlow(spark: SparkSession, batch: DataFrame,
       storeDir: String, jaccardMin: Double, shingleK: Int, maxDf: Int,
       batchId: Long, pin: DataFrame => DataFrame,
       gate: DataFrame => DataFrame = identity): DataFrame = {
-    val docs = gate(normalizedDocs(batch))
-    val batchIds = docs.select("doc_id")
-    val shIdx = readIdx(spark, shIdxDir(storeDir, shingleK), shSchema)
-      .join(batchIds, Seq("doc_id"), "left_anti")
+    val docs = pin(gate(normalizedDocs(batch)))
+    val batchIds = broadcast(docs.select("doc_id"))
 
     // exact dedup, batch-internal (deterministic keeper) then vs index.
     // The index test is a PROBE, not an anti-join against the raw
@@ -297,15 +324,15 @@ object NearDupIngest {
     val keeper = Window.partitionBy("fp").orderBy("doc_id")
     val docsFp = docs.withColumn("fp", fp(col("text")))
       .withColumn("rn", row_number().over(keeper)).where(col("rn") === 1)
-    val hitRows = readIdx(spark, fpIdxDir(storeDir), fpSchema)
-      .join(docsFp.select("fp"), Seq("fp"), "left_semi")
-    val hitFps = hitRows.join(batchIds, Seq("doc_id"), "left_anti").select("fp")
+    val hitFps = readIdx(spark, fpIdxDir(storeDir), fpSchema)
+      .join(broadcast(docsFp.select("fp")), Seq("fp"), "left_semi")
+      .join(batchIds, Seq("doc_id"), "left_anti").select("fp")
+    // pinned: the exact-new docs carry their digests to every branch
+    // below and, as survivors, to the index appends
     val exactNew = pin(docsFp.join(hitFps, Seq("fp"), "left_anti")
-      .select("doc_id", "text", "fp"))
-
-    // near-dup vs index: x_dedup_incremental's shape with the batch as
-    // the delta side; only the delta derives digests from text.
-    val deltaPost = pin(shingleDigests(exactNew, shingleK))
+      .select(col("doc_id"), col("text"), col("fp"),
+        shingleDigestArray(col("text"), shingleK).as("shs")))
+    val deltaPost = exactNew.select(col("doc_id"), explode(col("shs")).as("sh"))
 
     // df cap over the COMBINED digests (delta + corpus), with the
     // corpus side read from the df-partials table: probe by the
@@ -313,38 +340,41 @@ object NearDupIngest {
     // partials — identical to counting over delta ∪ index, but the
     // aggregation input is delta-bounded.
     val deltaDf = deltaPost.groupBy("sh").agg(count(lit(1)).as("ddf"))
-    val dfParts = readIdx(spark, dfIdxDir(storeDir, shingleK), dfSchema)
+    val corpusDf = readIdx(spark, dfIdxDir(storeDir, shingleK), dfSchema)
       .where(col("batch_id") =!= lit(batchId)) // replay self-exclusion
-    val corpusDf = dfParts.join(deltaDf.select("sh"), Seq("sh"), "left_semi")
-      .groupBy("sh").agg(sum("df").as("cdf"))
-    val rare = deltaDf.join(corpusDf, Seq("sh"), "left")
-      .where(col("ddf") + coalesce(col("cdf"), lit(0L)) <= maxDf)
-      .select("sh")
+      .join(broadcast(deltaDf.select("sh")), Seq("sh"), "left_semi")
+      .select("sh", "df")
+    val rare = broadcast(deltaDf.join(corpusDf, Seq("sh"), "left")
+      .groupBy("sh", "ddf").agg(sum(coalesce(col("df"), lit(0L))).as("cdf"))
+      .where(col("ddf") + col("cdf") <= maxDf)
+      .select("sh"))
 
-    val deltaIds = exactNew.select(col("doc_id").as("doc_a"))
-    val deltaRare = deltaPost.join(deltaIds, col("doc_id") === col("doc_a"))
-      .join(rare, "sh").select(col("doc_a"), col("sh"))
-    val corpusPost = shIdx.select(col("doc_id").as("doc_b"), col("sh").as("sh_r"))
+    val shIdx = readIdx(spark, shIdxDir(storeDir, shingleK), shSchema)
+    val corpusRare = shIdx.join(rare, Seq("sh"), "left_semi")
+      .join(batchIds, Seq("doc_id"), "left_anti")
+      .select(col("doc_id").as("doc_b"), col("sh").as("sh_r"))
     // pinned: the candidate set feeds three branches (overlap pairs,
-    // the candidate-doc semi-joins for postings and counts)
-    val cand = pin(deltaRare.join(corpusPost, col("sh") === col("sh_r"))
-      .select("doc_a", "doc_b").distinct())
-    val candB = cand.select(col("doc_b")).distinct()
+    // the candidate-doc probes for postings and counts)
+    val cand = pin(deltaPost.join(rare, "sh")
+      .join(corpusRare, col("sh") === col("sh_r"))
+      .select(col("doc_id").as("doc_a"), col("doc_b")).distinct())
+    // candidate docs are corpus docs, never the batch's own ids
+    val candB = broadcast(cand.select("doc_b").distinct())
 
     // overlap counting probes the index for CANDIDATE docs only
-    val candPost = corpusPost.join(candB, Seq("doc_b"), "left_semi")
-    val overlap = cand
-      .join(deltaPost.select(col("doc_id").as("pa"), col("sh").as("sha")), col("doc_a") === col("pa"))
-      .join(candPost.select(col("doc_b").as("pb"), col("sh_r").as("shb")),
-        col("doc_b") === col("pb") && col("sha") === col("shb"))
+    val candPost = shIdx.select(col("doc_id").as("pb"), col("sh").as("shb"))
+      .join(candB, col("pb") === col("doc_b"), "left_semi")
+    val overlap = deltaPost.select(col("doc_id").as("doc_a"), col("sh").as("sha"))
+      .join(cand, "doc_a")
+      .join(candPost, col("doc_b") === col("pb") && col("sha") === col("shb"))
       .groupBy("doc_a", "doc_b").agg(count(lit(1)).as("ov"))
     val na = deltaPost.groupBy("doc_id").agg(count(lit(1)).as("n"))
     val nb = readIdx(spark, cntIdxDir(storeDir, shingleK), cntSchema)
-      .join(batchIds, Seq("doc_id"), "left_anti") // replay self-exclusion
-      .join(candB.withColumnRenamed("doc_b", "doc_id"), Seq("doc_id"), "left_semi")
+      .select(col("doc_id").as("doc_b"), col("n").as("nb"))
+      .join(candB, Seq("doc_b"), "left_semi")
     val nearDup = overlap
       .join(na.select(col("doc_id").as("doc_a"), col("n").as("na")), "doc_a")
-      .join(nb.select(col("doc_id").as("doc_b"), col("n").as("nb")), "doc_b")
+      .join(nb, "doc_b")
       .where(col("ov").cast("double") / (col("na") + col("nb") - col("ov")) >= jaccardMin)
       .select(col("doc_a").as("doc_id")).distinct()
     exactNew.join(nearDup, Seq("doc_id"), "left_anti")
@@ -355,6 +385,9 @@ object NearDupIngest {
     * batches). Returns the number of rows appended. Appends the
     * survivors to the store AND their digests to the fingerprint /
     * shingle indexes, all under the idempotent single-file protocol.
+    *
+    * The micro-batch is pinned once: admission and the funnel's n_in
+    * both read that pin, so a foreachBatch source is evaluated once.
     */
   def ingestBatch(spark: SparkSession, batch: DataFrame, storeDir: String,
       batchId: Long, jaccardMin: Double = 0.8, shingleK: Int = 3,
@@ -366,7 +399,8 @@ object NearDupIngest {
     // ids are always >= 0.
     require(batchId >= 0, s"batchId must be >= 0 (-1 is the bootstrap sentinel): $batchId")
     ensureDocIdx(spark, storeDir, shingleK)
-    val survivors = admitDocsFlow(spark, batch, storeDir, jaccardMin, shingleK,
+    val raw = batch.localCheckpoint(false)
+    val survivors = admitDocsFlow(spark, raw, storeDir, jaccardMin, shingleK,
       maxDf, batchId, pin = _.localCheckpoint(false), gate = gate).localCheckpoint(false)
     // store first (see scaladoc: no-replay skew must fail toward a
     // future sweepable dup, never toward dropping novel content).
@@ -378,14 +412,14 @@ object NearDupIngest {
     val n = rowsIn(spark,
       appendIdempotent(survivors.select("doc_id", "text"), storeDir, batchId))
     appendIdempotent(survivors.select("doc_id", "fp"), fpIdxDir(storeDir), batchId)
-    val shNew = shingleDigests(survivors, shingleK).localCheckpoint(false)
+    val shNew = survivors.select(col("doc_id"), explode(col("shs")).as("sh"))
     appendIdempotent(shNew, shIdxDir(storeDir, shingleK), batchId)
     appendIdempotent(
       shNew.groupBy("sh").agg(count(lit(1)).as("df")).withColumn("batch_id", lit(batchId)),
       dfIdxDir(storeDir, shingleK), batchId)
     appendIdempotent(shNew.groupBy("doc_id").agg(count(lit(1)).as("n")),
       cntIdxDir(storeDir, shingleK), batchId)
-    appendStats(spark, storeDir, batchId, batch.count(), n)
+    appendStats(spark, storeDir, batchId, raw.count(), n)
     n
   }
 
@@ -509,9 +543,15 @@ object NearDupIngest {
   private def appendIdempotent(rows: DataFrame, dir: String, batchId: Long): Option[Path] =
     UpsertSink.publishSingleFile(rows, Paths.get(dir), s"ingest-$batchId.parquet")
 
-  /** Rows a store append published (a footer read of its one file). */
+  /** Rows an append published: the row count in its one file's
+    * parquet footer (no Spark job).
+    */
   private def rowsIn(spark: SparkSession, published: Option[Path]): Long =
-    published.fold(0L)(p => spark.read.parquet(p.toString).count())
+    published.fold(0L) { p =>
+      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(
+        new HPath(p.toUri), spark.sparkContext.hadoopConfiguration))
+      try reader.getRecordCount finally reader.close()
+    }
 
   /** Single maintenance entry point: fold the store AND every sibling
     * index side table it has accreted (each gains one file per batch).
@@ -650,9 +690,6 @@ object NearDupIngest {
       storeDir: String, chunkTokens: Int,
       pin: DataFrame => DataFrame = identity): DataFrame = {
     val docs = normalizedDocs(batch)
-    val batchIds = docs.select("doc_id")
-    val pgIdx = readIdx(spark, pgIdxDir(storeDir, chunkTokens), pgSchema)
-      .join(batchIds, Seq("doc_id"), "left_anti")
     val ch = graft.llm.CurationQueries.chunkDf(docs, chunkTokens, overlap = 0)
       .select(col("doc_id"), col("chunk_id"), col("chunk_text"))
       .withColumn("pg", md5(col("chunk_text")))
@@ -669,7 +706,10 @@ object NearDupIngest {
     // right-side duplicates, and a distinct would be a full-index
     // aggregate — O(index), the cost class the side tables exist to
     // avoid.
-    val hitPgs = pgIdx.select("pg").join(keptInBatch.select("pg"), Seq("pg"), "left_semi")
+    val hitPgs = readIdx(spark, pgIdxDir(storeDir, chunkTokens), pgSchema)
+      .join(broadcast(keptInBatch.select("pg")), Seq("pg"), "left_semi")
+      .join(broadcast(docs.select("doc_id")), Seq("doc_id"), "left_anti")
+      .select("pg")
     keptInBatch.join(hitPgs, Seq("pg"), "left_anti")
       .select("doc_id", "chunk_id", "chunk_text", "pg")
   }
@@ -697,25 +737,25 @@ object NearDupIngest {
       batchId: Long, chunkTokens: Int = 16): Long = {
     require(batchId >= 0, s"batchId must be >= 0 (-1 is the bootstrap sentinel): $batchId")
     ensurePassageIdx(spark, storeDir, chunkTokens)
-    val novel = admitPassagesFlow(spark, batch, storeDir, chunkTokens,
-        pin = _.localCheckpoint(false))
-      .localCheckpoint(false)
+    val raw = batch.localCheckpoint(false)
+    val novel = admitPassagesFlow(spark, raw, storeDir, chunkTokens,
+        pin = _.localCheckpoint(false)).localCheckpoint(false)
     val rebuilt = novel.groupBy("doc_id").agg(
       array_join(transform(array_sort(collect_list(struct(col("chunk_id"), col("chunk_text")))),
         s => s.getField("chunk_text")), " ").as("text"))
     val n = rowsIn(spark,
       appendIdempotent(rebuilt.select("doc_id", "text"), storeDir, batchId))
-    appendIdempotent(novel.select("doc_id", "pg"),
-      pgIdxDir(storeDir, chunkTokens), batchId)
+    val nNovel = rowsIn(spark, appendIdempotent(novel.select("doc_id", "pg"),
+      pgIdxDir(storeDir, chunkTokens), batchId))
     // funnel at CHUNK granularity: the passage ingest reassembles one
     // store row per doc with any novel chunk, so a doc-level rate
     // would read 1.0 on a heavily-recycled batch and the stats table's
     // broken-index alarm could never fire; chunks-in vs novel-chunks
     // is the rate that means something here (one extra O(batch)
-    // chunking pass — the admitted cost class)
+    // chunking pass over the pinned batch — the admitted cost class)
     val nInChunks = graft.llm.CurationQueries
-      .chunkDf(normalizedDocs(batch), chunkTokens, overlap = 0).count()
-    appendStats(spark, storeDir, batchId, nInChunks, novel.count())
+      .chunkDf(normalizedDocs(raw), chunkTokens, overlap = 0).count()
+    appendStats(spark, storeDir, batchId, nInChunks, nNovel)
     n
   }
 

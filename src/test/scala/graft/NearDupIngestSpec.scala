@@ -397,6 +397,115 @@ class NearDupIngestSpec extends SparkSpec {
       "calculus failed to flag an index on an anti-join build side")
   }
 
+  /** Every physical plan `body` runs, as AQE plans it before any stage
+    * runs: each adaptive plan's input plan with the shuffles and
+    * broadcasts EnsureRequirements adds. (AQE's final plan depends on
+    * which stages finished first; its input plan does not.)
+    */
+  private def plansRunBy(body: => Unit): Seq[org.apache.spark.sql.execution.SparkPlan] = {
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.EnsureRequirements
+    val seen = scala.collection.mutable.ArrayBuffer.empty[QueryExecution]
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = seen.synchronized { seen += qe; () }
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try { body; org.apache.spark.graft.ListenerBusDrain(spark.sparkContext) }
+    finally spark.listenerManager.unregister(listener)
+    def planned(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => planned(EnsureRequirements().apply(a.inputPlan))
+      case other => other +: other.collect { case a: AdaptiveSparkPlanExec => a }.flatMap(planned)
+    }
+    seen.synchronized(seen.toList).flatMap(qe => planned(qe.executedPlan))
+  }
+
+  /** Index directories (`<store>.*idx*`) a plan's file scan reads. */
+  private def idxRoots(s: org.apache.spark.sql.execution.FileSourceScanExec,
+      storeDir: String): Seq[String] =
+    s.relation.location.rootPaths.map(_.toUri.getPath).toSeq
+      .filter(p => p.startsWith(storeDir + ".") && p.drop(storeDir.length).contains("idx"))
+
+  /** Delta-bounded index access on physical plans: rows of an index
+    * scan may leave their scan's stage only after a broadcast probe
+    * filtered them, i.e. as the streamed side of a broadcast semi/inner
+    * join against delta- or candidate-bounded keys. A violation is an
+    * exchange (shuffle or broadcast) whose stage reads an index scan
+    * that no such probe filtered: the index itself is hash-shuffled or
+    * shipped to every task — O(index) per batch.
+    */
+  private def indexExchangeViolations(plans: Seq[org.apache.spark.sql.execution.SparkPlan],
+      storeDir: String): Seq[String] = {
+    import org.apache.spark.sql.catalyst.plans.{Inner, LeftSemi}
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, Exchange,
+      ReusedExchangeExec, ShuffleExchangeLike}
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    // index scans in `p`'s stage that no broadcast probe filtered
+    def unprobed(p: SparkPlan): Seq[String] = p match {
+      case _: Exchange | _: ReusedExchangeExec => Nil
+      case s: FileSourceScanExec => idxRoots(s, storeDir)
+      // the streamed side's rows leave as probe hits; the build side is
+      // a broadcast, its own stage
+      case j: BroadcastHashJoinExec if j.joinType == LeftSemi || j.joinType == Inner => Nil
+      case other => other.children.flatMap(unprobed)
+    }
+    plans.flatMap(_.collect {
+      case e: ShuffleExchangeLike => unprobed(e.child).map(dir => s"index shuffled: $dir\n$e")
+      case e: BroadcastExchangeLike => unprobed(e.child).map(dir => s"index broadcast: $dir\n$e")
+    }.flatten).distinct
+  }
+
+  /** Runs `body` with size-based broadcasting off: a broadcast must
+    * come from the code's hints, as it must at scale.
+    */
+  private def withoutAutoBroadcast[T](body: => T): T = {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prior = spark.conf.getOption(key)
+    spark.conf.set(key, "-1")
+    try body finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  test("a real ingestBatch never shuffles an index: every index scan streams under a broadcast probe") {
+    val dir = java.nio.file.Files.createTempDirectory("graftndguard").resolve("t").toString
+    Seq((1L, t1), (2L, t2), (3L, t3)).toDF("doc_id", "text").write.mode("overwrite").parquet(dir)
+    NearDupIngest.ingestBatch(spark, Seq(Doc(10, ts(0), tNovel)).toDF(), dir, batchId = 0)
+    // a steady-state batch: novel, exact repeat, near-dup of a seed doc
+    // and of the previous batch's doc, so every admission branch runs
+    val batch = Seq(Doc(20, ts(5), tNovel2), Doc(21, ts(6), t1), Doc(22, ts(7), t2near),
+      Doc(23, ts(8), tNovelNear)).toDF()
+    val plans = withoutAutoBroadcast(plansRunBy {
+      assert(NearDupIngest.ingestBatch(spark, batch, dir, batchId = 1) == 1L)
+    })
+    val read = plans.flatMap(_.collect {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec => idxRoots(s, dir)
+    }.flatten).toSet
+    for (idx <- Seq(NearDupIngest.fpIdxDir(dir), NearDupIngest.shIdxDir(dir, 3),
+        NearDupIngest.dfIdxDir(dir, 3), NearDupIngest.cntIdxDir(dir, 3)))
+      assert(read.exists(_.startsWith(idx)), s"no captured plan reads $idx: $read")
+    val bad = indexExchangeViolations(plans, dir)
+    assert(bad.isEmpty, s"index rows cross an exchange:\n${bad.mkString("\n")}")
+    assert(storeIds(dir) == Set(1L, 2L, 3L, 10L, 20L))
+  }
+
+  test("a real ingestPassageBatch never shuffles the passage index") {
+    val dir = java.nio.file.Files.createTempDirectory("graftpgguard").resolve("t").toString
+    Seq((1L, s"$pA $pB")).toDF("doc_id", "text").write.mode("overwrite").parquet(dir)
+    NearDupIngest.ingestPassageBatch(spark, Seq((10L, s"$pA $pC")).toDF("doc_id", "text"), dir, 0)
+    val batch = Seq((20L, s"$pC $pD"), (21L, s"$pB $pE")).toDF("doc_id", "text")
+    val plans = withoutAutoBroadcast(plansRunBy {
+      assert(NearDupIngest.ingestPassageBatch(spark, batch, dir, batchId = 1) == 2L)
+    })
+    val read = plans.flatMap(_.collect {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec => idxRoots(s, dir)
+    }.flatten).toSet
+    assert(read.exists(_.startsWith(NearDupIngest.pgIdxDir(dir, 16))), s"passage index unread: $read")
+    val bad = indexExchangeViolations(plans, dir)
+    assert(bad.isEmpty, s"index rows cross an exchange:\n${bad.mkString("\n")}")
+    assert(storeTexts(dir) == Map(1L -> s"$pA $pB", 10L -> pC, 20L -> pD, 21L -> pE))
+  }
+
   /** The pre-index formulation (full store-text rescan per batch),
     * kept as the equivalence oracle: the incremental-index ingest must
     * admit EXACTLY the docs this admits.
