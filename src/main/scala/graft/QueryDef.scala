@@ -15,7 +15,4 @@ final case class QueryDef(
 object QueryDef {
   def sql(name: String, oracle: String)(run: (SparkSession, String) => DataFrame): QueryDef =
     QueryDef(name, run, Some(oracle.stripMargin.trim))
-
-  def rowsOnly(name: String)(run: (SparkSession, String) => DataFrame): QueryDef =
-    QueryDef(name, run, None)
 }

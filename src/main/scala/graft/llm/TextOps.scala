@@ -146,10 +146,4 @@ object TextOps {
     */
   def qdot(a: Column, b: Column): Column =
     org.apache.spark.sql.graft.QuantizedDot(a, b)
-
-  /** Cosine similarity from quantized vectors (single double division
-    * over exact ints — bitwise identical in any engine).
-    */
-  def qcosine(a: Column, b: Column): Column =
-    qdot(a, b) / (sqrt(qdot(a, a).cast("double")) * sqrt(qdot(b, b).cast("double")))
 }

@@ -29,10 +29,6 @@ object Relational {
   def eavGet(m: Column, key: String): Column =
     coalesce(try_element_at(m, lit(key)), lit(""))
 
-  /** eavGet with a non-empty fallback chain (P2, quote.py:212). */
-  def eavGetOr(m: Column, key: String, fallback: Column): Column =
-    coalesce(try_element_at(m, lit(key)), fallback, lit(""))
-
   // ---------------------------------------------------------------- A1
   /** Conditional count over an array of typed links
     * (organisation.py:124) — `size(filter(...))`, no shuffle at all.

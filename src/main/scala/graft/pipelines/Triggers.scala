@@ -42,9 +42,4 @@ object Triggers {
     */
   def trigger5(s: SparkSession, dir: String): Map[String, DataFrame] = Map(
     "Opportunity_Stage_Report" -> EntityPipelines.stageReport.run(s, dir))
-
-  /** Every export the reference can produce, by report name. */
-  def allReports(s: SparkSession, dir: String): Map[String, DataFrame] =
-    trigger1(s, dir) ++ trigger2(s, dir) ++ trigger3(s, dir) ++
-      trigger4(s, dir) ++ trigger5(s, dir)
 }

@@ -37,7 +37,6 @@ import graft.operators.Compaction
   *
   *   - `<store>.fpidx`          — (doc_id, fp): exact-dup fingerprints
   *   - `<store>.shidx-k<k>`     — (doc_id, sh): md5 shingle digests
-  *   - `<store>.pgidx-c<c>`     — (doc_id, pg): md5 passage digests
   *   - `<store>.dfidx-k<k>`     — (sh, df, batch_id): PARTIAL
   *     document-frequency counts, one row per (shingle, batch);
   *     a digest's corpus df is the SUM of its matching partials
@@ -46,10 +45,9 @@ import graft.operators.Compaction
   *     per-batch admission funnel (operational observability)
   *
   * Every join in the admission dataflow tests only digest EQUALITY
-  * (df cap, candidate generation, overlap counting, passage anti-
-  * join), so md5 digests are drop-in for the raw strings — smaller
-  * rows, same result modulo md5 collision. The parameter (k / c) is
-  * part of the directory name, so an index can never silently serve a
+  * (df cap, candidate generation, overlap counting), so md5 digests
+  * are drop-in for the raw strings — smaller rows, same result modulo
+  * md5 collision. The parameter k is part of the directory name, so an index can never silently serve a
   * differently-configured ingest. Indexes are bootstrapped ONCE from
   * the store's text if absent (derive → write to `.tmp` → atomic
   * directory rename, so a torn bootstrap is invisible), then
@@ -72,7 +70,7 @@ import graft.operators.Compaction
   * aggregated row carries no doc_id to anti-join on, so a replayed
   * batch excludes its own prior partials by id instead (bootstrap rows
   * carry batch_id = -1, never a real foreachBatch id — guarded by a
-  * require in both ingest entry points). One consequence: an id
+  * require in the ingest entry point). One consequence: an id
   * re-delivered under a DIFFERENT batchId (out of contract — see
   * normalizedDocs) is excluded from the fp/sh/cnt reads by doc_id but
   * its old df partials still count, so shared shingles' df can be
@@ -147,14 +145,12 @@ object NearDupIngest {
 
   private[graft] def fpIdxDir(storeDir: String): String = storeDir + ".fpidx"
   private[graft] def shIdxDir(storeDir: String, k: Int): String = s"$storeDir.shidx-k$k"
-  private[graft] def pgIdxDir(storeDir: String, c: Int): String = s"$storeDir.pgidx-c$c"
   private[graft] def dfIdxDir(storeDir: String, k: Int): String = s"$storeDir.dfidx-k$k"
   private[graft] def cntIdxDir(storeDir: String, k: Int): String = s"$storeDir.cntidx-k$k"
   private[graft] def statsDir(storeDir: String): String = storeDir + ".stats"
 
   private val fpSchema = StructType.fromDDL("doc_id BIGINT, fp STRING")
   private val shSchema = StructType.fromDDL("doc_id BIGINT, sh STRING")
-  private val pgSchema = StructType.fromDDL("doc_id BIGINT, pg STRING")
   private val dfSchema = StructType.fromDDL("sh STRING, df BIGINT, batch_id BIGINT")
   private val cntSchema = StructType.fromDDL("doc_id BIGINT, n BIGINT")
 
@@ -169,11 +165,6 @@ object NearDupIngest {
   /** (doc_id, sh) shingle-digest rows of `docs`. */
   private def shingleDigests(docs: DataFrame, k: Int): DataFrame =
     docs.select(col("doc_id"), explode(shingleDigestArray(col("text"), k)).as("sh"))
-
-  /** Delta-side passage digests at fixed non-overlapping windows. */
-  private def passageDigests(docs: DataFrame, c: Int): DataFrame =
-    graft.llm.CurationQueries.chunkDf(docs, c, overlap = 0)
-      .select(col("doc_id"), md5(col("chunk_text")).as("pg"))
 
   /** Manifest-aware index read with an explicit schema (a bootstrapped
     * index over an all-short-docs store can be legitimately empty).
@@ -241,19 +232,14 @@ object NearDupIngest {
     }
   }
 
-  private[graft] def ensurePassageIdx(spark: SparkSession, storeDir: String, c: Int): Unit =
-    ensureIdx(pgIdxDir(storeDir, c)) { passageDigests(storeText(spark, storeDir), c) }
-
-  /** Batch normalization shared by both ingest forms. `doc_id` is the
+  /** Batch normalization ahead of admission. `doc_id` is the
     * STABLE document identity: re-delivery of an id is treated as a
     * replay of the same content (the idempotence design hinges on it —
     * the corpus read self-excludes the batch's ids), so an upstream
     * that re-sends an id with DIFFERENT text violates the contract;
     * the nearest safe behavior is keep-one-deterministically, never
     * two rows under one id. Within a batch, duplicate ids collapse to
-    * the lexicographically-least text (replay-stable), which also
-    * prevents the passage reassembly from interleaving two documents'
-    * chunks under one id.
+    * the lexicographically-least text (replay-stable).
     */
   private def normalizedDocs(batch: DataFrame): DataFrame =
     batch.select(col("doc_id").cast("long").as("doc_id"),
@@ -430,13 +416,10 @@ object NearDupIngest {
     * written by the same idempotent rename-replace as every other
     * side table, so replays overwrite their own record rather than
     * double-count, and the `.stats` directory folds under
-    * [[compactStoreAndIndexes]]. Granularity follows the ingest's
-    * dedup unit: the doc ingest records RAW rows in vs docs admitted
-    * (so n_in - n_admitted is everything removed, whatever the
-    * reason); the passage ingest records chunks in vs novel chunks
-    * (its store rows are reassembled docs, whose count says nothing
-    * about recycling). Counting n_in is one extra O(batch) pass over
-    * the micro-batch input — the admitted cost class.
+    * [[compactStoreAndIndexes]]. It records RAW rows in vs docs
+    * admitted, so n_in - n_admitted is everything removed, whatever
+    * the reason. Counting n_in is one extra O(batch) pass over the
+    * micro-batch input — the admitted cost class.
     */
   private def appendStats(spark: SparkSession, storeDir: String, batchId: Long,
       nIn: Long, nAdmitted: Long): Unit = {
@@ -556,8 +539,8 @@ object NearDupIngest {
   /** Single maintenance entry point: fold the store AND every sibling
     * index side table it has accreted (each gains one file per batch).
     * Discovery is by the directory-name contract (`<store>.fpidx`,
-    * `.shidx-k*`, `.pgidx-c*`, `.dfidx-k*`, `.cntidx-k*`), so a
-    * maintenance job needs no knowledge of which k/c configs ran.
+    * `.shidx-k*`, `.dfidx-k*`, `.cntidx-k*`), so a maintenance job
+    * needs no knowledge of which k configs ran.
     * Safe concurrently with the stream: each directory's compaction is
     * independently atomic under the manifest+lease protocol, the
     * admission reads each dir through [[readIdx]] (manifest-aware),
@@ -575,10 +558,11 @@ object NearDupIngest {
     // whole sweep when compactParquet rejects the subdirectory — and
     // an unluckily-named sibling store (`t.fpidxfoo`) must never be
     // swept by `t`'s maintenance. A prefix-partitioned
-    // `<store>.fpidx-p<h>` left by an older engine is skipped too: no
-    // read path uses it, and its subdirectories would abort the sweep.
+    // `<store>.fpidx-p<h>` or a passage-digest index left by an older
+    // engine is skipped too: no read path uses either, and the former's
+    // subdirectories would abort the sweep.
     val exact = Set(".fpidx", ".stats", ".alarms").map(name + _)
-    val parameterized = Seq(".shidx-k", ".pgidx-c", ".dfidx-k", ".cntidx-k").map(name + _)
+    val parameterized = Seq(".shidx-k", ".dfidx-k", ".cntidx-k").map(name + _)
     def ours(n: String): Boolean =
       exact(n) || parameterized.exists(p =>
         n.length > p.length && n.startsWith(p) && n.drop(p.length).forall(_.isDigit))
@@ -653,139 +637,6 @@ object NearDupIngest {
     exact.unionByName(near)
   }
 
-  /** [[storeSweep]]'s passage-granular sibling for stores built by
-    * [[startPassage]]: re-chunk the store's text at the ingest's
-    * window width and report every chunk occurrence that is not the
-    * corpus-wide FIRST holder of its digest (first = min (doc_id,
-    * chunk_id), the admission's own keep-first rule). A clean passage
-    * ingest admits each passage exactly once — rebuilding documents
-    * from surviving full-width chunks re-chunks to exactly the
-    * admitted set — so anything the sweep finds is a crash-window
-    * admission (store append landed, passage-index append lost, a
-    * later batch re-admitted the passage under another doc).
-    *
-    * One text scan, then a digest-keyed window over the chunk rows —
-    * the same O(corpus) maintenance floor as the doc-level sweep.
-    */
-  def passageSweep(spark: SparkSession, storeDir: String,
-      chunkTokens: Int = 16): DataFrame = {
-    val ch = graft.llm.CurationQueries
-      .chunkDf(storeText(spark, storeDir), chunkTokens, overlap = 0)
-      .select(col("doc_id"), col("chunk_id"), md5(col("chunk_text")).as("pg"))
-    ch.withColumn("rn", row_number().over(
-        Window.partitionBy("pg").orderBy("doc_id", "chunk_id")))
-      .where(col("rn") > 1)
-      .select(col("doc_id"), col("chunk_id"), col("pg"),
-        lit("dup_passage").as("reason"))
-  }
-
-  /** The lazy passage-admission dataflow (see [[admitDocsFlow]] for
-    * the pin/plan-test contract): batch chunks at fixed windows,
-    * keep-first within the batch by (doc_id, chunk_id) over the
-    * passage digest, then the anti-join against the passage-digest
-    * index. Returns surviving novel chunks
-    * (doc_id, chunk_id, chunk_text, pg).
-    */
-  private[graft] def admitPassagesFlow(spark: SparkSession, batch: DataFrame,
-      storeDir: String, chunkTokens: Int,
-      pin: DataFrame => DataFrame = identity): DataFrame = {
-    val docs = normalizedDocs(batch)
-    val ch = graft.llm.CurationQueries.chunkDf(docs, chunkTokens, overlap = 0)
-      .select(col("doc_id"), col("chunk_id"), col("chunk_text"))
-      .withColumn("pg", md5(col("chunk_text")))
-    // pinned: the kept set feeds both the probe keys and the anti-join
-    val keptInBatch = pin(ch.withColumn("rn", row_number().over(
-        Window.partitionBy("pg").orderBy("doc_id", "chunk_id")))
-      .where(col("rn") === 1))
-    // PROBE the passage index by the batch's digests (semi-join — the
-    // index streams under a broadcast of the delta keys, never
-    // shuffles), then anti-join against the delta-bounded hit set; an
-    // anti-join straight against the raw index would shuffle the
-    // whole index per batch (LeftAnti can only broadcast its right
-    // side). No distinct anywhere: anti-join semantics ignore
-    // right-side duplicates, and a distinct would be a full-index
-    // aggregate — O(index), the cost class the side tables exist to
-    // avoid.
-    val hitPgs = readIdx(spark, pgIdxDir(storeDir, chunkTokens), pgSchema)
-      .join(broadcast(keptInBatch.select("pg")), Seq("pg"), "left_semi")
-      .join(broadcast(docs.select("doc_id")), Seq("doc_id"), "left_anti")
-      .select("pg")
-    keptInBatch.join(hitPgs, Seq("pg"), "left_anti")
-      .select("doc_id", "chunk_id", "chunk_text", "pg")
-  }
-
-  /** PASSAGE-granular dedup-at-ingest — the streaming form of
-    * x_passage_dedup: each micro-batch's documents are chunked into
-    * fixed non-overlapping token windows, passages already present in
-    * the passage-digest index (or claimed by an earlier doc of the
-    * same batch — keep-first by (doc_id, chunk_id)) are dropped, and
-    * each surviving document is REBUILT from its novel passages before
-    * the idempotent append. A document whose every passage is recycled
-    * contributes nothing and is not stored (unlike the batch query,
-    * which keeps an empty audit row — ingest stores text, not audits).
-    *
-    * The store's passage set is EXACTLY the set of chunks ever
-    * admitted (every admitted chunk is full-width except possibly a
-    * doc's original last chunk, so re-chunking a rebuilt text yields
-    * its surviving chunks back) — which is what makes the digest
-    * index's incremental maintenance exact, not an approximation.
-    *
-    * Replay-idempotent like ingestBatch: both the index read and the
-    * appends self-exclude/overwrite by the batch's own ids.
-    */
-  def ingestPassageBatch(spark: SparkSession, batch: DataFrame, storeDir: String,
-      batchId: Long, chunkTokens: Int = 16): Long = {
-    require(batchId >= 0, s"batchId must be >= 0 (-1 is the bootstrap sentinel): $batchId")
-    ensurePassageIdx(spark, storeDir, chunkTokens)
-    val raw = batch.localCheckpoint(false)
-    val novel = admitPassagesFlow(spark, raw, storeDir, chunkTokens,
-        pin = _.localCheckpoint(false)).localCheckpoint(false)
-    val rebuilt = novel.groupBy("doc_id").agg(
-      array_join(transform(array_sort(collect_list(struct(col("chunk_id"), col("chunk_text")))),
-        s => s.getField("chunk_text")), " ").as("text"))
-    val n = rowsIn(spark,
-      appendIdempotent(rebuilt.select("doc_id", "text"), storeDir, batchId))
-    val nNovel = rowsIn(spark, appendIdempotent(novel.select("doc_id", "pg"),
-      pgIdxDir(storeDir, chunkTokens), batchId))
-    // funnel at CHUNK granularity: the passage ingest reassembles one
-    // store row per doc with any novel chunk, so a doc-level rate
-    // would read 1.0 on a heavily-recycled batch and the stats table's
-    // broken-index alarm could never fire; chunks-in vs novel-chunks
-    // is the rate that means something here (one extra O(batch)
-    // chunking pass over the pinned batch — the admitted cost class)
-    val nInChunks = graft.llm.CurationQueries
-      .chunkDf(normalizedDocs(raw), chunkTokens, overlap = 0).count()
-    appendStats(spark, storeDir, batchId, nInChunks, nNovel)
-    n
-  }
-
-  /** Shared flow skeleton over a streaming (doc_id, ts, text) frame:
-    * watermark-bounded exact dedup at the stream edge, then the
-    * supplied per-batch ingest — ONE builder, so a sink-protocol
-    * change (checkpointing, edge-dedup tuning) cannot drift between
-    * the two ingest forms.
-    */
-  private def startWith(docs: DataFrame, dupWindow: String)(
-      perBatch: (DataFrame, Long) => Unit): StreamingQuery =
-    StreamingIngest.dedupWithinWatermark(
-        docs.withColumn("fp", fp(col("text"))), Seq("fp"), "ts", dupWindow)
-      .writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        perBatch(batch.drop("fp"), batchId)
-      }
-      .start()
-
-  /** The passage-dedup ingest as a continuous flow: stream-edge exact
-    * dedup, then the per-batch passage cut into `storeDir`.
-    */
-  def startPassage(spark: SparkSession, docs: DataFrame, storeDir: String,
-      dupWindow: String = "1 hour", chunkTokens: Int = 16): StreamingQuery =
-    startWith(docs, dupWindow) { (batch, batchId) =>
-      ingestPassageBatch(spark, batch, storeDir, batchId, chunkTokens)
-      ()
-    }
-
   /** Start the composed flow: watermark-bounded exact dedup at the
     * edge, then the per-batch near-dup ingest into `storeDir`.
     *
@@ -802,8 +653,13 @@ object NearDupIngest {
   def start(spark: SparkSession, docs: DataFrame, storeDir: String,
       dupWindow: String = "1 hour", jaccardMin: Double = 0.8,
       gate: DataFrame => DataFrame = identity): StreamingQuery =
-    startWith(docs, dupWindow) { (batch, batchId) =>
-      ingestBatch(spark, batch, storeDir, batchId, jaccardMin, gate = gate)
-      ()
-    }
+    StreamingIngest.dedupWithinWatermark(
+        docs.withColumn("fp", fp(col("text"))), Seq("fp"), "ts", dupWindow)
+      .writeStream
+      .outputMode("append")
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        ingestBatch(spark, batch.drop("fp"), storeDir, batchId, jaccardMin, gate = gate)
+        ()
+      }
+      .start()
 }

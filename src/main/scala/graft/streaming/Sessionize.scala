@@ -29,11 +29,6 @@ object Sessionize {
   final case class Session(user_id: Long, session_start: Timestamp,
       session_end: Timestamp, n_events: Int)
 
-  /** Batch gaps-and-islands: session index = running count of
-    * gap-exceeding boundaries; one aggregate per (user, session).
-    * The inactivity gap is a parameter (default 30 min) — shorter
-    * gaps split the same event stream into more, tighter sessions.
-    */
   /** Event-level session assignment: the input events plus a
     * `session_idx` column (per-user running count of gap-exceeding
     * boundaries). The shared front half of the session aggregate and
@@ -57,6 +52,11 @@ object Sessionize {
       .drop("prev_ts", "new_session")
   }
 
+  /** Batch gaps-and-islands: session index = running count of
+    * gap-exceeding boundaries; one aggregate per (user, session).
+    * The inactivity gap is a parameter (default 30 min) — shorter
+    * gaps split the same event stream into more, tighter sessions.
+    */
   def sessionizeBatch(events: DataFrame, gapMs: Long = GapMs): DataFrame =
     sessionIndexed(events, gapMs)
       .groupBy(col("user_id"), col("session_idx"))
@@ -69,7 +69,8 @@ object Sessionize {
   /** Streaming sessionization over a typed event stream. Emits a
     * session when the inactivity gap elapses (event-time timeout via
     * watermark) or, within a micro-batch, when a later event breaches
-    * the gap.
+    * the gap. No main runs it: it is the independent reference that
+    * SessionizeSpec's property tests hold the batch path against.
     */
   def sessionizeStream(spark: SparkSession, events: Dataset[Event],
       gapMs: Long = GapMs): Dataset[Session] = {

@@ -14,8 +14,8 @@ import org.apache.spark.sql.types._
   *
   * Shape: readStream over the events directory → watermarked sliding-
   * window aggregation → sink. With a file/Kafka source this runs
-  * continuously; tests drive it with the memory sink +
-  * processAllAvailable for synchronous verification.
+  * continuously; [[startUpsertReportSink]] is the shipped sink, and
+  * [[NearDupIngest.start]] builds on [[dedupWithinWatermark]].
   */
 object StreamingIngest {
 
@@ -65,17 +65,6 @@ object StreamingIngest {
         col("window.start").as("window_start"),
         col("event_type"), col("n_events"), col("total_value"))
 
-  /** Start the pipeline into an in-memory sink (complete mode — the
-    * windowed totals table). Used by tests and local smoke.
-    */
-  def startMemorySink(spark: SparkSession, dir: String, name: String): StreamingQuery =
-    windowedCounts(readEvents(spark, dir))
-      .writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .start()
-
   /** Dedup-at-ingest: drop records whose key columns repeat within the
     * watermark horizon. This is the streaming counterpart of the batch
     * exact-dedup family (x_dedup_exact) — dedup WHERE the data lands,
@@ -93,40 +82,6 @@ object StreamingIngest {
       events: DataFrame, keys: Seq[String], tsCol: String,
       delay: String): DataFrame =
     events.withWatermark(tsCol, delay).dropDuplicatesWithinWatermark(keys)
-
-  /** Stream-static enrichment: the streaming counterpart of the batch
-    * broadcast lookup joins (J1–J12) — each micro-batch probes the
-    * broadcast dimension, no stream-side state at all. The dim is
-    * re-resolvable per batch, so a slowly-changing dimension picks up
-    * updates without restarting the query.
-    */
-  def enrichWithDim(stream: DataFrame, dim: DataFrame, key: String): DataFrame =
-    stream.join(broadcast(dim), Seq(key), "left")
-
-  /** Stream-stream interval join — the streaming counterpart of the
-    * batch banded range join (operators.RangeJoin): left and right
-    * event streams pair when they share `lKey`/`rKey` and their event
-    * times are within `withinSec` of each other.
-    *
-    * Both sides carry a watermark, and the join condition bounds
-    * right-time relative to left-time in BOTH directions — that pair
-    * of facts is what lets Spark evict matched state: each side's
-    * buffer holds only `delay` + `withinSec` of events, so state is
-    * bounded by arrival rate × horizon, not by stream length. Without
-    * the two-sided time bound the state store grows forever — the
-    * streaming analog of the batch cartesian.
-    *
-    * Column contract: the two sides must have disjoint column names
-    * (rename before calling), including the key.
-    */
-  def intervalJoinStreams(left: DataFrame, right: DataFrame,
-      lKey: String, rKey: String, lts: String, rts: String,
-      withinSec: Long, delay: String): DataFrame =
-    left.withWatermark(lts, delay).join(
-      right.withWatermark(rts, delay),
-      col(lKey) === col(rKey) &&
-        col(rts) >= col(lts) - expr(s"INTERVAL $withinSec SECOND") &&
-        col(rts) <= col(lts) + expr(s"INTERVAL $withinSec SECOND"))
 
   /** foreachBatch sink through the FULL K2 upsert protocol
     * ([[UpsertSink]]): each micro-batch is rendered as a single-file

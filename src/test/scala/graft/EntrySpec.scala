@@ -40,7 +40,9 @@ class EntrySpec extends SparkSpec {
   }
 
   test("all five reference trigger compositions produce non-empty reports") {
-    val reports = pipelines.Triggers.allReports(spark, sf)
+    import pipelines.Triggers._
+    val reports = trigger1(spark, sf) ++ trigger2(spark, sf) ++ trigger3(spark, sf) ++
+      trigger4(spark, sf) ++ trigger5(spark, sf)
     assert(reports.size == 8)
     val empty = reports.collect { case (n, df) if df.isEmpty => n }
     assert(empty.isEmpty, s"empty reports: $empty")

@@ -95,17 +95,6 @@ class LlmOpsSpec extends SparkSpec {
     assert(shinglePostings(docs, 3).count() == 0)
   }
 
-  test("quantized cosine: identical vectors -> 1.0, orthogonal -> 0.0") {
-    val df = Seq(
-      (Seq(1.0f, 2.0f, 3.0f), Seq(1.0f, 2.0f, 3.0f)),
-      (Seq(1.0f, 0.0f, 0.0f), Seq(0.0f, 1.0f, 0.0f))
-    ).toDF("a", "b")
-    val sims = df.select(qcosine(quantize($"a"), quantize($"b")).as("s"))
-      .as[Double].collect()
-    assert(math.abs(sims(0) - 1.0) < 1e-12)
-    assert(sims(1) == 0.0)
-  }
-
   test("qdot is an exact integer dot product") {
     val df = Seq((Seq(1.0f, -2.0f), Seq(3.0f, 4.0f))).toDF("a", "b")
     val d = df.select(qdot(quantize($"a"), quantize($"b")).as("d")).as[Long].head()
@@ -1059,10 +1048,9 @@ class LlmOpsSpec extends SparkSpec {
     }
     // the strict config through the parameterized builder (the
     // x_source_funnel_strict registry twin was folded into spec pins)
-    val strict = byStage(QueryDef.rowsOnly("strict_funnel") { (s, dd) =>
+    val strict = byStage(QueryDef("strict_funnel", (s, dd) =>
       llm.CurationQueries.sourceFunnelDf(s, dd, minWords = 30, maxWords = 100000,
-        minDistinct = 0.40, maxTop2 = 0.08)
-    })
+        minDistinct = 0.40, maxTop2 = 0.08), None))
     assert(strict("quality").values.map(_._1).sum <= f("quality").values.map(_._1).sum)
     // raw is filter-independent
     assert(strict("raw") == f("raw"))

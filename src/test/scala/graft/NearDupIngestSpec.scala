@@ -146,18 +146,6 @@ class NearDupIngestSpec extends SparkSpec {
     assert(storeIds(dir) == Set(1L))
   }
 
-  // 16-token passages with disjoint vocabularies per passage
-  private def passage(tag: String) = (1 to 16).map(i => s"$tag$i").mkString(" ")
-  private val pA = passage("pa")
-  private val pB = passage("pb")
-  private val pC = passage("pc")
-  private val pD = passage("pd")
-  private val pE = passage("pe")
-
-  private def storeTexts(dir: String): Map[Long, String] =
-    Compaction.readCompacted(spark, dir).select("doc_id", "text")
-      .as[(Long, String)].collect().toMap
-
   test("ingest into a store on another filesystem than java.io.tmpdir") {
     import java.nio.file.{Files, Paths}
     val shm = Paths.get("/dev/shm")
@@ -172,62 +160,20 @@ class NearDupIngestSpec extends SparkSpec {
       val batch = Seq(Doc(10, ts(0), tNovel), Doc(11, ts(1), t1), Doc(12, ts(2), t2near)).toDF()
       assert(NearDupIngest.ingestBatch(spark, batch, dir, batchId = 0) == 1L)
       assert(storeIds(dir) == Set(1L, 2L, 10L))
-
-      val pdir = root.resolve("p").toString
-      Seq((1L, s"$pA $pB")).toDF("doc_id", "text").write.mode("overwrite").parquet(pdir)
-      assert(NearDupIngest.ingestPassageBatch(spark,
-        Seq((10L, s"$pA $pC")).toDF("doc_id", "text"), pdir, batchId = 0) == 1L)
-      assert(storeTexts(pdir) == Map(1L -> s"$pA $pB", 10L -> pC))
     } finally UpsertSink.rmTree(root)
   }
 
-  test("passage ingest cuts store-recycled and batch-claimed passages, drops empty docs") {
-    val dir = java.nio.file.Files.createTempDirectory("graftpassage").resolve("t").toString
-    // store doc 1 carries passages A and B
-    Seq((1L, s"$pA $pB")).toDF("doc_id", "text").write.mode("overwrite").parquet(dir)
-    Compaction.compactParquet(spark, dir)
-
-    val input = MemoryStream[Doc](spark)
-    val q = NearDupIngest.startPassage(spark, input.toDF(), dir)
-    try {
-      // doc 10: recycled A + novel C  -> stored as just C
-      // doc 11: novel D + C again     -> C is claimed by doc 10
-      //                                  (lower doc_id) -> stored as D
-      // doc 12: A + B only            -> fully recycled -> not stored
-      input.addData(
-        Doc(10, ts(0), s"$pA $pC"),
-        Doc(11, ts(1), s"$pD $pC"),
-        Doc(12, ts(2), s"$pA $pB"))
-      q.processAllAvailable()
-      assert(storeTexts(dir) == Map(1L -> s"$pA $pB", 10L -> pC, 11L -> pD),
-        s"batch 1 store mismatch: ${storeTexts(dir)}")
-
-      // batch 2: C entered the store via batch 1 -> doc 20 keeps only E
-      input.addData(Doc(20, ts(10), s"$pC $pE"))
-      q.processAllAvailable()
-      assert(storeTexts(dir)(20L) == pE)
-      assert(storeTexts(dir).keySet == Set(1L, 10L, 11L, 20L))
-    } finally q.stop()
-  }
-
   test("duplicate doc_ids within a batch collapse to one deterministic row, never interleave") {
-    val dir = java.nio.file.Files.createTempDirectory("graftdupid").resolve("t").toString
-    Seq((1L, s"$pA $pB")).toDF("doc_id", "text").write.mode("overwrite").parquet(dir)
     // two DIFFERENT texts under one id (upstream contract violation):
     // keep-one (lexicographically-least text) — the store must never
-    // hold two rows for one id or a text interleaving both documents
-    val batch = Seq(Doc(5, ts(0), s"$pC $pD"), Doc(5, ts(1), s"$pE $pC")).toDF()
-    NearDupIngest.ingestPassageBatch(spark, batch, dir, batchId = 0)
-    val got = storeTexts(dir)
-    assert(got.keySet == Set(1L, 5L) && got(5L) == s"$pC $pD",
-      s"expected the least text kept whole, got $got")
-    // same collapse on the near-dup ingest path
-    val dir2 = java.nio.file.Files.createTempDirectory("graftdupid2").resolve("t").toString
-    Seq((1L, t1)).toDF("doc_id", "text").write.mode("overwrite").parquet(dir2)
+    // hold two rows for one id
+    val dir = java.nio.file.Files.createTempDirectory("graftdupid").resolve("t").toString
+    Seq((1L, t1)).toDF("doc_id", "text").write.mode("overwrite").parquet(dir)
     NearDupIngest.ingestBatch(spark, Seq(Doc(5, ts(0), tNovel), Doc(5, ts(1), tNovel2)).toDF(),
-      dir2, batchId = 0)
-    val ids2 = Compaction.readCompacted(spark, dir2).select("doc_id").as[Long].collect()
-    assert(ids2.count(_ == 5L) == 1, s"one row per id, got ${ids2.toSeq}")
+      dir, batchId = 0)
+    val got = Compaction.readCompacted(spark, dir).select("doc_id", "text")
+      .as[(Long, String)].collect().filter(_._1 == 5L).map(_._2).toSeq
+    assert(got == Seq(tNovel), s"expected one row holding the least text, got $got")
   }
 
   test("ingest alarms classify re-crawl and broken-index batches, never small ones") {
@@ -343,7 +289,6 @@ class NearDupIngestSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graftndplan").resolve("t").toString
     Seq((1L, t1), (2L, t2)).toDF("doc_id", "text").write.mode("overwrite").parquet(dir)
     NearDupIngest.ensureDocIdx(spark, dir, 3)
-    NearDupIngest.ensurePassageIdx(spark, dir, 16)
     val batch = Seq(Doc(10, ts(0), tNovel)).toDF()
 
     val docFlow = NearDupIngest.admitDocsFlow(spark, batch, dir,
@@ -355,32 +300,20 @@ class NearDupIngestSpec extends SparkSpec {
     assert(docRoots.exists(_.startsWith(NearDupIngest.cntIdxDir(dir, 3))), s"cnt index unread: $docRoots")
     assert(!docRoots.exists(p => p == dir || p.startsWith(dir + "/")),
       s"per-batch admission must not rescan the store (O(corpus) per batch at 100 TB): $docRoots")
-
-    val pgFlow = NearDupIngest.admitPassagesFlow(spark, batch, dir, chunkTokens = 16)
-    val pgRoots = scannedRoots(pgFlow)
-    assert(pgRoots.exists(_.startsWith(NearDupIngest.pgIdxDir(dir, 16))), s"passage index unread: $pgRoots")
-    assert(!pgRoots.exists(p => p == dir || p.startsWith(dir + "/")),
-      s"passage admission must not rescan the store: $pgRoots")
   }
 
   test("admission aggregates are delta/candidate-bounded — no full-index Aggregate") {
     val dir = java.nio.file.Files.createTempDirectory("graftndagg").resolve("t").toString
     Seq((1L, t1), (2L, t2)).toDF("doc_id", "text").write.mode("overwrite").parquet(dir)
     NearDupIngest.ensureDocIdx(spark, dir, 3)
-    NearDupIngest.ensurePassageIdx(spark, dir, 16)
     val idxDirs = Seq(NearDupIngest.fpIdxDir(dir), NearDupIngest.shIdxDir(dir, 3),
-      NearDupIngest.dfIdxDir(dir, 3), NearDupIngest.cntIdxDir(dir, 3),
-      NearDupIngest.pgIdxDir(dir, 16))
+      NearDupIngest.dfIdxDir(dir, 3), NearDupIngest.cntIdxDir(dir, 3))
     val batch = Seq(Doc(10, ts(0), tNovel), Doc(11, ts(1), t1)).toDF()
 
     val docFlow = NearDupIngest.admitDocsFlow(spark, batch, dir,
       jaccardMin = 0.8, shingleK = 3, maxDf = 8, batchId = 0, pin = identity)
     assert(fullIndexAggregates(docFlow, idxDirs).isEmpty,
       s"doc admission re-aggregates the full index per batch: ${fullIndexAggregates(docFlow, idxDirs)}")
-
-    val pgFlow = NearDupIngest.admitPassagesFlow(spark, batch, dir, chunkTokens = 16)
-    assert(fullIndexAggregates(pgFlow, idxDirs).isEmpty,
-      s"passage admission re-aggregates the full index per batch: ${fullIndexAggregates(pgFlow, idxDirs)}")
 
     // the calculus itself must still flag both bad shapes: a groupBy
     // straight over the shingle index (the r10 aggregate
@@ -487,23 +420,6 @@ class NearDupIngestSpec extends SparkSpec {
     val bad = indexExchangeViolations(plans, dir)
     assert(bad.isEmpty, s"index rows cross an exchange:\n${bad.mkString("\n")}")
     assert(storeIds(dir) == Set(1L, 2L, 3L, 10L, 20L))
-  }
-
-  test("a real ingestPassageBatch never shuffles the passage index") {
-    val dir = java.nio.file.Files.createTempDirectory("graftpgguard").resolve("t").toString
-    Seq((1L, s"$pA $pB")).toDF("doc_id", "text").write.mode("overwrite").parquet(dir)
-    NearDupIngest.ingestPassageBatch(spark, Seq((10L, s"$pA $pC")).toDF("doc_id", "text"), dir, 0)
-    val batch = Seq((20L, s"$pC $pD"), (21L, s"$pB $pE")).toDF("doc_id", "text")
-    val plans = withoutAutoBroadcast(plansRunBy {
-      assert(NearDupIngest.ingestPassageBatch(spark, batch, dir, batchId = 1) == 2L)
-    })
-    val read = plans.flatMap(_.collect {
-      case s: org.apache.spark.sql.execution.FileSourceScanExec => idxRoots(s, dir)
-    }.flatten).toSet
-    assert(read.exists(_.startsWith(NearDupIngest.pgIdxDir(dir, 16))), s"passage index unread: $read")
-    val bad = indexExchangeViolations(plans, dir)
-    assert(bad.isEmpty, s"index rows cross an exchange:\n${bad.mkString("\n")}")
-    assert(storeTexts(dir) == Map(1L -> s"$pA $pB", 10L -> pC, 20L -> pD, 21L -> pE))
   }
 
   /** The pre-index formulation (full store-text rescan per batch),
@@ -628,17 +544,26 @@ class NearDupIngestSpec extends SparkSpec {
       .select(col("doc_id"), md5(trim(regexp_replace(lower(col("text")), "\\s+", " "))).as("fp"))
       .withColumn("pfx", substring(col("fp"), 1, 1))
       .write.partitionBy("pfx").parquet(legacy.toString)
-    def snapshot: Seq[(String, Long, Long)] = {
-      val w = Files.walk(legacy)
-      try w.iterator().asScala.toSeq.map((p: Path) => (legacy.relativize(p).toString,
+    // and a passage-digest index, which no engine reads any more, as
+    // two parquet files
+    val passage = Paths.get(dir + ".pgidx-c16")
+    Seq((1L, "pg1")).toDF("doc_id", "pg").write.parquet(passage.toString)
+    Seq((2L, "pg2")).toDF("doc_id", "pg").write.mode("append").parquet(passage.toString)
+    def snapshot(root: Path): Seq[(String, Long, Long)] = {
+      val w = Files.walk(root)
+      try w.iterator().asScala.toSeq.map((p: Path) => (root.relativize(p).toString,
         Files.size(p), Files.getLastModifiedTime(p).toMillis)).sorted
       finally w.close()
     }
-    val before = snapshot
+    val before = snapshot(legacy)
     assert(before.exists(_._1.startsWith("pfx=")), s"fixture has no pfx= leaves: $before")
+    val passageBefore = snapshot(passage)
+    assert(passageBefore.count(_._1.endsWith(".parquet")) >= 2,
+      s"fixture has fewer than two passage files: $passageBefore")
 
     NearDupIngest.compactStoreAndIndexes(spark, dir)
-    assert(snapshot == before, "maintenance touched the legacy fp index")
+    assert(snapshot(legacy) == before, "maintenance touched the legacy fp index")
+    assert(snapshot(passage) == passageBefore, "maintenance touched the legacy passage index")
     assert(Files.exists(Paths.get(NearDupIngest.shIdxDir(dir, 3), Compaction.ManifestName)))
 
     // 20 repeats store doc 1 exactly; 21 is novel
@@ -646,7 +571,8 @@ class NearDupIngestSpec extends SparkSpec {
     assert(NearDupIngest.ingestBatch(spark, batch, dir, batchId = 1) == 1L)
     assert(Files.isDirectory(Paths.get(NearDupIngest.fpIdxDir(dir))), "flat fp index not bootstrapped")
     assert(storeIds(dir) == Set(1L, 2L, 10L, 21L))
-    assert(snapshot == before, "ingest touched the legacy fp index")
+    assert(snapshot(legacy) == before, "ingest touched the legacy fp index")
+    assert(snapshot(passage) == passageBefore, "ingest touched the legacy passage index")
   }
 
   test("deleting an index directory triggers an exact rebuild from the store") {
@@ -660,78 +586,6 @@ class NearDupIngestSpec extends SparkSpec {
       UpsertSink.rmTree(java.nio.file.Paths.get(idx))
     assert(NearDupIngest.ingestBatch(spark, Seq(Doc(20, ts(5), t1), Doc(21, ts(6), tNovelNear)).toDF(), dir, 1) == 0L)
     assert(storeIds(dir) == Set(1L, 10L))
-  }
-
-  /** Pre-index passage formulation (re-chunk the store's text per
-    * batch) — the equivalence oracle for the probe-shaped index path:
-    * batch chunks, keep-first within batch by (doc_id, chunk_id) per
-    * digest, drop chunks present anywhere in the store's re-chunking
-    * (excluding the batch's own ids).
-    */
-  private def rescanNovelChunks(batch: org.apache.spark.sql.DataFrame, dir: String,
-      chunkTokens: Int = 16): Set[(Long, Long, String)] = {
-    import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.expressions.Window
-    val docs = batch.select(col("doc_id").cast("long").as("doc_id"),
-        col("text").cast("string").as("text"))
-      .withColumn("__rn", row_number().over(Window.partitionBy("doc_id").orderBy("text")))
-      .where(col("__rn") === 1).drop("__rn")
-    val corpus = Compaction.readCompacted(spark, dir)
-      .select(col("doc_id").cast("long").as("doc_id"), col("text").cast("string").as("text"))
-      .join(docs.select("doc_id"), Seq("doc_id"), "left_anti")
-    val ch = graft.llm.CurationQueries.chunkDf(docs, chunkTokens, overlap = 0)
-      .select(col("doc_id"), col("chunk_id"), col("chunk_text"))
-      .withColumn("pg", md5(col("chunk_text")))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy("pg").orderBy("doc_id", "chunk_id")))
-      .where(col("rn") === 1)
-    val stored = graft.llm.CurationQueries.chunkDf(corpus, chunkTokens, overlap = 0)
-      .select(md5(col("chunk_text")).as("pg"))
-    ch.join(stored, Seq("pg"), "left_anti")
-      .select("doc_id", "chunk_id", "chunk_text")
-      .as[(Long, Long, String)].collect().toSet
-  }
-
-  test("probe-shaped passage admission matches the full-rescan formulation") {
-    val dir = java.nio.file.Files.createTempDirectory("graftpgequiv").resolve("t").toString
-    Seq((1L, s"$pA $pB")).toDF("doc_id", "text").write.mode("overwrite").parquet(dir)
-    Compaction.compactParquet(spark, dir)
-    val b1 = Seq(Doc(10, ts(0), s"$pA $pC"), Doc(11, ts(1), s"$pD $pC"),
-      Doc(12, ts(2), s"$pB")).toDF()
-    val want1 = rescanNovelChunks(b1, dir)
-    NearDupIngest.ensurePassageIdx(spark, dir, 16)
-    val got1 = NearDupIngest.admitPassagesFlow(spark, b1, dir, chunkTokens = 16)
-      .select("doc_id", "chunk_id", "chunk_text")
-      .as[(Long, Long, String)].collect().toSet
-    assert(got1 == want1, s"batch 1: index path $got1 vs rescan $want1")
-    // grow the store through the real ingest, then re-adjudicate a
-    // second batch against the rescan of the GROWN store
-    NearDupIngest.ingestPassageBatch(spark, b1, dir, batchId = 0)
-    val b2 = Seq(Doc(20, ts(10), s"$pC $pE")).toDF()
-    val want2 = rescanNovelChunks(b2, dir)
-    val got2 = NearDupIngest.admitPassagesFlow(spark, b2, dir, chunkTokens = 16)
-      .select("doc_id", "chunk_id", "chunk_text")
-      .as[(Long, Long, String)].collect().toSet
-    assert(got2 == want2, s"batch 2: index path $got2 vs rescan $want2")
-  }
-
-  test("ingestPassageBatch replay (same input, same batchId) is idempotent") {
-    val dir = java.nio.file.Files.createTempDirectory("graftpassagereplay").resolve("t").toString
-    Seq((1L, s"$pA $pB")).toDF("doc_id", "text").write.mode("overwrite").parquet(dir)
-    val batch = Seq(Doc(10, ts(0), s"$pA $pC"), Doc(12, ts(2), s"$pB")).toDF()
-    val first = NearDupIngest.ingestPassageBatch(spark, batch, dir, batchId = 0)
-    assert(first == 1, s"only doc 10's C passage is novel, got $first")
-    assert(storeTexts(dir) == Map(1L -> s"$pA $pB", 10L -> pC))
-    // crash-replay: the prior append self-excludes from the corpus by
-    // doc_id, recomputes the same cut, and replaces the same file
-    val second = NearDupIngest.ingestPassageBatch(spark, batch, dir, batchId = 0)
-    assert(second == 1 && storeTexts(dir) == Map(1L -> s"$pA $pB", 10L -> pC))
-    // passage-mode funnel is CHUNK-granular: 3 chunks in (pA,pC | pB),
-    // 1 novel — a doc-level rate would read 1.0 here and the stats
-    // table's broken-index alarm could never fire
-    val st = NearDupIngest.ingestStats(spark, dir)
-      .as[(Long, Long, Long)].collect().toSet
-    assert(st == Set((0L, 3L, 1L)), s"chunk-granular funnel expected (0,3,1), got $st")
   }
 
   test("quality gate rejects junk before the index; the same doc admits ungated later") {
@@ -839,35 +693,6 @@ class NearDupIngestSpec extends SparkSpec {
     // and the swept DOCS are exactly the rows the funnel cannot account for
     assert(storeIds(dir).size - 2 - admittedTotal == swept.map(_._1).size,
       "sweep must explain exactly the store rows the funnel did not admit")
-  }
-
-  test("passage sweep: empty over a clean passage store; catches a crash-window re-admission") {
-    val dir = java.nio.file.Files.createTempDirectory("graftndpsweep").resolve("t").toString
-    Seq((1L, s"$pA $pB")).toDF("doc_id", "text").write.mode("overwrite").parquet(dir)
-    Compaction.compactParquet(spark, dir)
-    // batch 0: doc 10 arrives as pA+pC — pA is recycled, only pC is
-    // admitted and doc 10 is REBUILT as just pC
-    assert(NearDupIngest.ingestPassageBatch(spark,
-      Seq((10L, s"$pA $pC")).toDF("doc_id", "text"), dir, batchId = 0) == 1L)
-    assert(storeTexts(dir) == Map(1L -> s"$pA $pB", 10L -> pC))
-
-    // a clean ingest admitted each passage exactly once
-    assert(NearDupIngest.passageSweep(spark, dir).count() == 0L,
-      "sweep over a cleanly-ingested passage store must be empty")
-    // one text scan, structurally (the manifest read lists its live
-    // files as multiple roots of that ONE scan)
-    val sweepScans = storeScanNodes(NearDupIngest.passageSweep(spark, dir), dir)
-    assert(sweepScans == 1, s"passage sweep must scan the store once, got $sweepScans")
-
-    // crash window: doc 30's store append landed carrying pA again,
-    // but the passage-index append was lost — the next sweep finds the
-    // re-admitted passage (doc 1 chunk 0 is the first holder)
-    UpsertSink.publishSingleFile(Seq((30L, s"$pA $pE")).toDF("doc_id", "text"),
-      java.nio.file.Paths.get(dir), "ingest-99.parquet")
-    val swept = NearDupIngest.passageSweep(spark, dir)
-      .select("doc_id", "chunk_id", "reason")
-      .as[(Long, Long, String)].collect().toSet
-    assert(swept == Set((30L, 0L, "dup_passage")), s"passage sweep found: $swept")
   }
 
   test("alarm monitor tails the funnel and materializes flagged batches into a queryable log") {

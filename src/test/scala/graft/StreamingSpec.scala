@@ -10,7 +10,9 @@ class StreamingSpec extends SparkSpec {
 
   test("streaming windowed counts equal the batch equivalent") {
     val dir = "/root/testdata/sf0.001"
-    val q = StreamingIngest.startMemorySink(spark, dir, "stream_out")
+    val q = StreamingIngest.windowedCounts(StreamingIngest.readEvents(spark, dir))
+      .writeStream.outputMode("complete")
+      .format("memory").queryName("stream_out").start()
     try q.processAllAvailable() finally q.stop()
     val streamed = spark.table("stream_out")
 
@@ -87,50 +89,5 @@ class StreamingSpec extends SparkSpec {
     runOnce() // the reference re-publishes the same report every run
     assert(folder.toFile.listFiles.map(_.getName).toSeq == Seq("events_report.parquet"))
     assert(spark.read.parquet(report).count() == n)
-  }
-
-  test("stream-static enrichment: each micro-batch probes the broadcast dim") {
-    import java.sql.Timestamp
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import spark.implicits._
-    val input = MemoryStream[(Long, Long)](spark)
-    val dim = Seq((7L, "gold"), (8L, "silver")).toDF("user_id", "tier")
-    val enriched = StreamingIngest.enrichWithDim(
-      input.toDF().toDF("event_id", "user_id"), dim, "user_id")
-    val q = enriched.writeStream.outputMode("append")
-      .format("memory").queryName("enrich_out").start()
-    try {
-      input.addData((1L, 7L), (2L, 9L))
-      q.processAllAvailable()
-    } finally q.stop()
-    val got = spark.table("enrich_out")
-      .collect().map(r => (r.getLong(1), Option(r.getString(2)))).toSet
-    assert(got == Set((1L, Some("gold")), (2L, None)))
-  }
-
-  test("stream-stream interval join pairs events within the horizon, and only those") {
-    import java.sql.Timestamp
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import spark.implicits._
-    def ts(min: Long) = new Timestamp(1700000000000L + min * 60000)
-    val clicks = MemoryStream[(Long, Long, Timestamp)](spark)
-    val purchases = MemoryStream[(Long, Long, Timestamp)](spark)
-    val joined = StreamingIngest.intervalJoinStreams(
-      clicks.toDF().toDF("click_id", "c_user", "c_ts"),
-      purchases.toDF().toDF("purchase_id", "p_user", "p_ts"),
-      lKey = "c_user", rKey = "p_user", lts = "c_ts", rts = "p_ts",
-      withinSec = 600L, delay = "30 minutes")
-    val q = joined.writeStream.outputMode("append")
-      .format("memory").queryName("interval_out").start()
-    try {
-      // user 7: purchase 5 min after the click (match) and one 20 min
-      // after (out of the ±10 min horizon); user 8: wrong-user purchase
-      clicks.addData((1L, 7L, ts(0)), (2L, 8L, ts(0)))
-      purchases.addData((10L, 7L, ts(5)), (11L, 7L, ts(20)), (12L, 9L, ts(1)))
-      q.processAllAvailable()
-    } finally q.stop()
-    val got = spark.table("interval_out")
-      .collect().map(r => (r.getLong(0), r.getLong(3))).toSet
-    assert(got == Set((1L, 10L)))
   }
 }
