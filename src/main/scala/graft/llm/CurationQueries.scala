@@ -180,7 +180,7 @@ object CurationQueries {
     val stop = Seq("the", "a")
     val t = Tables.documents(s, d).select(
       col("doc_id"), col("lang"),
-      trim(regexp_replace(lower(col("text")), "\\s+", " ")).as("norm"),
+      normText(col("text")).as("norm"),
       tokens(col("text")).as("toks"))
     val q = t.select(
         col("doc_id"), col("lang"), col("norm"),
@@ -968,7 +968,7 @@ object CurationQueries {
       .where(col("kept") === 1).select("doc_id")
     val first = docs.join(kept, "doc_id")
       .select(col("doc_id"),
-        trim(regexp_replace(lower(col("text")), "\\s+", " ")).as("norm"))
+        normText(col("text")).as("norm"))
       .withColumn("rn",
         row_number().over(Window.partitionBy(md5(col("norm"))).orderBy("doc_id")))
       .where(col("rn") === 1)
@@ -1523,7 +1523,7 @@ object CurationQueries {
     val docs = Tables.documents(s, d)
     val tok = docs.select(col("doc_id"), col("source"),
       size(tokens(col("text"))).cast("long").as("n"),
-      trim(regexp_replace(lower(col("text")), "\\s+", " ")).as("norm"))
+      normText(col("text")).as("norm"))
     val kept = gopherFilterDf(docs, minWords, maxWords, minDistinct, maxTop2)
       .where(col("kept") === 1).select("doc_id")
     val qd = tok.join(kept, "doc_id")

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{QueryDef, Tables}
-import graft.llm.TextOps.tokens
+import graft.llm.TextOps.{exactFp, normText, tokens}
 
 /** Deduplication operators for LLM training-data pipelines: exact
   * (hash-group), n-gram Jaccard (inverted-index join), MinHash+LSH
@@ -76,9 +76,7 @@ object DedupQueries {
       |       CASE WHEN doc_id != min(doc_id) OVER (PARTITION BY fp)
       |            THEN 'TRUE' ELSE 'FALSE' END AS is_duplicate
       |FROM f""") { (s, d) =>
-    val f = Tables.documents(s, d).select(
-      col("doc_id"),
-      md5(trim(regexp_replace(lower(col("text")), "\\s+", " "))).as("fp"))
+    val f = Tables.documents(s, d).select(col("doc_id"), exactFp(col("text")).as("fp"))
     val w = Window.partitionBy("fp")
     f.select(
       col("doc_id"), col("fp"),
@@ -93,15 +91,18 @@ object DedupQueries {
   // dataflow in every near-dup query; only the candidate policy varies.
   // ----------------------------------------------------------------
 
-  /** Candidate pairs that share a RARE shingle (document frequency ≤ 8
-    * — prunes the df² blowup that common shingles cause in a naive
-    * postings self-join). Candidate volume is bounded by Σ df² over
-    * rare shingles only; near-dup pairs (sharing ~all shingles)
+  /** Largest document frequency of a RARE shingle (the oracle SQL's `<= 8`). */
+  private[graft] val RareDfCap = 8
+
+  /** Candidate pairs that share a RARE shingle (document frequency ≤
+    * [[RareDfCap]] — prunes the df² blowup that common shingles cause
+    * in a naive postings self-join). Candidate volume is bounded by Σ
+    * df² over rare shingles only; near-dup pairs (sharing ~all shingles)
     * virtually always share a rare one, so recall is preserved.
     */
   private[graft] def rareShingleCandidates(post: DataFrame): DataFrame = {
     val rare = post.groupBy("sid").agg(count(lit(1)).as("df"))
-      .where(col("df") <= 8).select("sid")
+      .where(col("df") <= RareDfCap).select("sid")
     val a = post.join(rare, "sid").select(col("doc_id").as("doc_a"), col("sid"))
     val b = post.select(col("doc_id").as("doc_b"), col("sid").as("sid_r"))
     a.join(b, col("sid") === col("sid_r") && col("doc_a") < col("doc_b"))
@@ -846,8 +847,7 @@ object DedupQueries {
        |  AND d.doc_id NOT IN (SELECT doc_id FROM near_drop)""".stripMargin) { (s, d) =>
     val docs = Tables.documents(s, d)
     // (a) exact-dup members that are not the group keeper
-    val f = docs.select(col("doc_id"),
-      md5(trim(regexp_replace(lower(col("text")), "\\s+", " "))).as("fp"))
+    val f = docs.select(col("doc_id"), exactFp(col("text")).as("fp"))
     val exactDrop = f
       .withColumn("keeper", min("doc_id").over(Window.partitionBy("fp")))
       .where(col("doc_id") =!= col("keeper"))
@@ -899,7 +899,7 @@ object DedupQueries {
        |WHERE 5 * v.overlap >= 4 * (ca.n + cb.n - v.overlap)""".stripMargin) { (s, d) =>
     val post = SharedIndex.sidPostings(s, d)
     val rare = post.groupBy("sid").agg(count(lit(1)).as("df"))
-      .where(col("df") <= 8).select("sid")
+      .where(col("df") <= RareDfCap).select("sid")
     val delta = post.where(col("doc_id") % 10 === 0)
       .join(rare, "sid").select(col("doc_id").as("doc_a"), col("sid"))
     val corpus = post.where(col("doc_id") % 10 =!= 0)
@@ -1237,7 +1237,7 @@ object DedupQueries {
     val post = SharedIndex.sidPostings(s, d)
     val cand = bandCandidates(post, perms = 8, bands = 4)
     val norm = Tables.documents(s, d).select(col("doc_id"),
-        trim(regexp_replace(lower(col("text")), "\\s+", " ")).as("norm_text"))
+        normText(col("text")).as("norm_text"))
       .withColumn("len", length(col("norm_text")).cast("long"))
     cand
       .join(norm.select(col("doc_id").as("na_id"), col("norm_text").as("norm_a"),
@@ -1449,9 +1449,7 @@ object DedupQueries {
   }
 
   private[graft] def mirrorDocsOf(docs: DataFrame, normalize: Boolean): DataFrame = {
-    val key =
-      if (normalize) trim(regexp_replace(lower(col("text")), "\\s+", " "))
-      else col("text")
+    val key = if (normalize) normText(col("text")) else col("text")
     docs
       .select(md5(key).as("content_id"), col("doc_id"), col("source"))
       .groupBy("content_id")

@@ -18,6 +18,15 @@ object TextOps {
   def tokens(text: Column): Column =
     regexp_extract_all(lower(text), lit("[a-z0-9]+"), lit(0))
 
+  /** Whitespace-normalized text: lowercase, every whitespace run one
+    * space, trimmed (DuckDB `trim(regexp_replace(lower(text), '\s+', ' ', 'g'))`).
+    */
+  def normText(text: Column): Column =
+    trim(regexp_replace(lower(text), "\\s+", " "))
+
+  /** Exact-dedup fingerprint: md5 of [[normText]] (x_dedup_exact's). */
+  def exactFp(text: Column): Column = md5(normText(text))
+
   /** (doc_id, shingle) postings — the inverted-index representation all
     * set-similarity ops run on: one row per distinct (doc, word
     * k-shingle).

@@ -201,7 +201,7 @@ object TextQueries {
       |FROM n""") { (s, d) =>
     val n = Tables.documents(s, d).select(
       col("doc_id"),
-      trim(regexp_replace(lower(col("text")), "\\s+", " ")).as("norm"))
+      normText(col("text")).as("norm"))
     n.select(
       col("doc_id"),
       md5(col("norm")).as("fp_md5"),
@@ -395,7 +395,7 @@ object TextQueries {
     * fingerprints, i.e. substring-level near-duplicates (each shared
     * fingerprint witnesses a shared ≥ w+g−1-token run — partial
     * overlap that whole-document Jaccard/MinHash can dilute away).
-    * Stop-fingerprints (document frequency > `maxDf` — boilerplate
+    * Stop-fingerprints (document frequency > 10 — boilerplate
     * runs appearing corpus-wide) are pruned before pairing, exactly
     * the rare-posting discipline of x_dedup_ngram: the only join key
     * is a fingerprint with bounded df, so pair fan-out is

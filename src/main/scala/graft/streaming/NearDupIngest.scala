@@ -12,6 +12,8 @@ import org.apache.spark.sql.graft.StringShingles
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
 
+import graft.llm.DedupQueries.{jaccardVerified, pairOverlaps, rareShingleCandidates, RareDfCap}
+import graft.llm.TextOps.{exactFp, tokens}
 import graft.operators.Compaction
 
 /** Streaming near-dup ingest — the composition of three shipped
@@ -40,17 +42,17 @@ import graft.operators.Compaction
   *   - `<store>.dfidx-k<k>`     — (sh, df, batch_id): PARTIAL
   *     document-frequency counts, one row per (shingle, batch);
   *     a digest's corpus df is the SUM of its matching partials
-  *   - `<store>.cntidx-k<c>`    — (doc_id, n): per-doc shingle count
   *   - `<store>.stats`          — (batch_id, n_in, n_admitted): the
   *     per-batch admission funnel (operational observability)
   *
   * Every join in the admission dataflow tests only digest EQUALITY
   * (df cap, candidate generation, overlap counting), so md5 digests
   * are drop-in for the raw strings — smaller rows, same result modulo
-  * md5 collision. The parameter k is part of the directory name, so an index can never silently serve a
-  * differently-configured ingest. Indexes are bootstrapped ONCE from
-  * the store's text if absent (derive → write to `.tmp` → atomic
-  * directory rename, so a torn bootstrap is invisible), then
+  * md5 collision. The shingle size k is part of the directory name,
+  * so an index can never silently serve a differently-configured
+  * ingest. Indexes are bootstrapped ONCE from the store's text if
+  * absent (derive → write to `.tmp` → atomic directory rename, so a
+  * torn bootstrap is invisible), then
   * maintained by the same idempotent single-file-per-batch append as
   * the store itself. Like the store, an index directory accretes one
   * file per batch and can be folded by [[Compaction.compactParquet]];
@@ -72,7 +74,7 @@ import graft.operators.Compaction
   * carry batch_id = -1, never a real foreachBatch id — guarded by a
   * require in the ingest entry point). One consequence: an id
   * re-delivered under a DIFFERENT batchId (out of contract — see
-  * normalizedDocs) is excluded from the fp/sh/cnt reads by doc_id but
+  * normalizedDocs) is excluded from the fp/sh reads by doc_id but
   * its old df partials still count, so shared shingles' df can be
   * overcounted by one — fewer candidates, worst case an admitted
   * near-dup (the documented safe skew direction), never dropped novel
@@ -112,8 +114,8 @@ import graft.operators.Compaction
   *     probe join the delta side however the planner sizes them;
   *   - the store's text is never read, and every aggregation input is
   *     delta- or candidate-bounded (df from partial-count sums after
-  *     the delta probe, per-doc counts from the cnt table after the
-  *     candidate probe).
+  *     the delta probe, corpus-side per-doc counts from the candidate
+  *     docs' postings after the candidate probe).
   * The delta side is an ordinary parallel plan; what the hints bound
   * by the micro-batch is each broadcast key set, the largest being the
   * batch's distinct shingle digests (~B × shingles-per-doc md5s).
@@ -135,9 +137,8 @@ import graft.operators.Compaction
   */
 object NearDupIngest {
 
-  /** Exact-dedup fingerprint, same normalization as x_dedup_exact. */
-  private def fp(text: org.apache.spark.sql.Column) =
-    md5(trim(regexp_replace(lower(text), "\\s+", " ")))
+  /** Word-shingle size of the near-dup digests (the batch family's). */
+  private val ShingleK = 3
 
   // ---------------------------------------------------------------
   // Index side tables
@@ -146,25 +147,20 @@ object NearDupIngest {
   private[graft] def fpIdxDir(storeDir: String): String = storeDir + ".fpidx"
   private[graft] def shIdxDir(storeDir: String, k: Int): String = s"$storeDir.shidx-k$k"
   private[graft] def dfIdxDir(storeDir: String, k: Int): String = s"$storeDir.dfidx-k$k"
-  private[graft] def cntIdxDir(storeDir: String, k: Int): String = s"$storeDir.cntidx-k$k"
   private[graft] def statsDir(storeDir: String): String = storeDir + ".stats"
 
   private val fpSchema = StructType.fromDDL("doc_id BIGINT, fp STRING")
   private val shSchema = StructType.fromDDL("doc_id BIGINT, sh STRING")
   private val dfSchema = StructType.fromDDL("sh STRING, df BIGINT, batch_id BIGINT")
-  private val cntSchema = StructType.fromDDL("doc_id BIGINT, n BIGINT")
+  private val statsSchema = StructType.fromDDL("batch_id BIGINT, n_in BIGINT, n_admitted BIGINT")
 
   /** Per-doc shingle digests as one array: the doc's distinct k-token
     * shingles (the batch dedup family's), md5'd — every downstream
     * operation is an equality test, so the digest is a drop-in for the
     * raw shingle.
     */
-  private def shingleDigestArray(text: Column, k: Int): Column =
-    transform(array_distinct(StringShingles(graft.llm.TextOps.tokens(text), k)), s => md5(s))
-
-  /** (doc_id, sh) shingle-digest rows of `docs`. */
-  private def shingleDigests(docs: DataFrame, k: Int): DataFrame =
-    docs.select(col("doc_id"), explode(shingleDigestArray(col("text"), k)).as("sh"))
+  private def shingleDigestArray(text: Column, k: Int = ShingleK): Column =
+    transform(array_distinct(StringShingles(tokens(text), k)), s => md5(s))
 
   /** Manifest-aware index read with an explicit schema (a bootstrapped
     * index over an all-short-docs store can be legitimately empty).
@@ -173,6 +169,13 @@ object NearDupIngest {
     if (Files.exists(Paths.get(dir, Compaction.ManifestName)))
       Compaction.readCompacted(spark, dir).select(schema.fieldNames.map(col): _*)
     else spark.read.schema(schema).parquet(dir)
+
+  /** [[readIdx]], or empty before the first append: for `.stats` and
+    * `.alarms` only, never an admission index, which must exist.
+    */
+  private def readIdxOrEmpty(spark: SparkSession, dir: String, schema: StructType): DataFrame =
+    if (Files.exists(Paths.get(dir))) readIdx(spark, dir, schema)
+    else spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
 
   /** One-time bootstrap: derive the index from the store's text and
     * publish it with an atomic directory rename (derive → `.tmp` →
@@ -207,10 +210,13 @@ object NearDupIngest {
 
   private[graft] def ensureDocIdx(spark: SparkSession, storeDir: String, k: Int): Unit = {
     ensureIdx(fpIdxDir(storeDir)) {
-      storeText(spark, storeDir).select(col("doc_id"), fp(col("text")).as("fp"))
+      storeText(spark, storeDir).select(col("doc_id"), exactFp(col("text")).as("fp"))
     }
-    ensureIdx(shIdxDir(storeDir, k)) { shingleDigests(storeText(spark, storeDir), k).distinct() }
-    // Count side tables bootstrap from the shingle index (a ONE-TIME
+    ensureIdx(shIdxDir(storeDir, k)) {
+      storeText(spark, storeDir)
+        .select(col("doc_id"), explode(shingleDigestArray(col("text"), k)).as("sh")).distinct()
+    }
+    // The df side table bootstraps from the shingle index (a ONE-TIME
     // full-index aggregate; thereafter maintained by per-batch delta
     // appends). The shingle index is ensured above, so a repair-path
     // rebuild of any subset of index dirs converges on the same store
@@ -225,10 +231,6 @@ object NearDupIngest {
     ensureIdx(dfIdxDir(storeDir, k)) {
       readIdx(spark, shIdxDir(storeDir, k), shSchema)
         .groupBy("sh").agg(count(lit(1)).as("df")).withColumn("batch_id", lit(-1L))
-    }
-    ensureIdx(cntIdxDir(storeDir, k)) {
-      readIdx(spark, shIdxDir(storeDir, k), shSchema)
-        .groupBy("doc_id").agg(count(lit(1)).as("n"))
     }
   }
 
@@ -258,11 +260,12 @@ object NearDupIngest {
     * Steps: exact dedup within the batch (min doc_id wins — ties are
     * replay-deterministic), exact dedup vs the fingerprint index
     * (anti-join), near-dup vs the shingle-digest index (rare-digest
-    * candidates + exact Jaccard ≥ `jaccardMin`). Returns survivors as
+    * candidates + the batch family's exact-Jaccard cut,
+    * [[graft.llm.DedupQueries.jaccardVerified]]). Returns survivors as
     * (doc_id, text, fp, shs), `shs` the doc's shingle digests; replay
     * self-exclusion is applied to EVERY index read — by the batch's
-    * doc_ids where the index carries one (fp/sh; the cnt read is
-    * keyed by candidate docs, which already exclude them), by
+    * doc_ids where the index carries one (fp/sh; the candidate-posting
+    * read is keyed by candidate docs, which already exclude them), by
     * `batchId` for the df partials — mirroring the corpus
     * self-exclusion of the pre-index formulation.
     *
@@ -278,20 +281,19 @@ object NearDupIngest {
     *     digests and summed after the probe — the full (sh, df) table
     *     is probed, never re-aggregated);
     *   - candidates come from the shingle index probed by the RARE
-    *     delta digests (≤ maxDf corpus rows each);
-    *   - per-doc shingle counts come from the delta digests for the
-    *     delta side and from the cnt index — probed by candidate docs
-    *     — for the corpus side;
+    *     delta digests (combined df ≤ [[graft.llm.DedupQueries.RareDfCap]]);
     *   - overlap counting joins delta digests against only the
-    *     CANDIDATE docs' index postings.
+    *     CANDIDATE docs' index postings;
+    *   - per-doc shingle counts come from the delta digests for the
+    *     delta side and, for the corpus side, from counting those same
+    *     candidate postings (as `pairOverlaps` counts n_b).
     * `NearDupIngestSpec` machine-checks this on the physical plans a
     * real ingest runs (index rows cross an exchange only as probe
     * hits), and on the logical plan ("no full-index aggregate",
     * store's text never scanned).
     */
   private[graft] def admitDocsFlow(spark: SparkSession, batch: DataFrame,
-      storeDir: String, jaccardMin: Double, shingleK: Int, maxDf: Int,
-      batchId: Long, pin: DataFrame => DataFrame,
+      storeDir: String, batchId: Long, pin: DataFrame => DataFrame,
       gate: DataFrame => DataFrame = identity): DataFrame = {
     val docs = pin(gate(normalizedDocs(batch)))
     val batchIds = broadcast(docs.select("doc_id"))
@@ -308,7 +310,7 @@ object NearDupIngest {
     // replay self-exclusion by doc_id runs on the hit rows (semi and
     // anti are both row filters on the index, so they commute).
     val keeper = Window.partitionBy("fp").orderBy("doc_id")
-    val docsFp = docs.withColumn("fp", fp(col("text")))
+    val docsFp = docs.withColumn("fp", exactFp(col("text")))
       .withColumn("rn", row_number().over(keeper)).where(col("rn") === 1)
     val hitFps = readIdx(spark, fpIdxDir(storeDir), fpSchema)
       .join(broadcast(docsFp.select("fp")), Seq("fp"), "left_semi")
@@ -317,7 +319,7 @@ object NearDupIngest {
     // below and, as survivors, to the index appends
     val exactNew = pin(docsFp.join(hitFps, Seq("fp"), "left_anti")
       .select(col("doc_id"), col("text"), col("fp"),
-        shingleDigestArray(col("text"), shingleK).as("shs")))
+        shingleDigestArray(col("text")).as("shs")))
     val deltaPost = exactNew.select(col("doc_id"), explode(col("shs")).as("sh"))
 
     // df cap over the COMBINED digests (delta + corpus), with the
@@ -326,42 +328,38 @@ object NearDupIngest {
     // partials — identical to counting over delta ∪ index, but the
     // aggregation input is delta-bounded.
     val deltaDf = deltaPost.groupBy("sh").agg(count(lit(1)).as("ddf"))
-    val corpusDf = readIdx(spark, dfIdxDir(storeDir, shingleK), dfSchema)
+    val corpusDf = readIdx(spark, dfIdxDir(storeDir, ShingleK), dfSchema)
       .where(col("batch_id") =!= lit(batchId)) // replay self-exclusion
       .join(broadcast(deltaDf.select("sh")), Seq("sh"), "left_semi")
       .select("sh", "df")
     val rare = broadcast(deltaDf.join(corpusDf, Seq("sh"), "left")
       .groupBy("sh", "ddf").agg(sum(coalesce(col("df"), lit(0L))).as("cdf"))
-      .where(col("ddf") + col("cdf") <= maxDf)
+      .where(col("ddf") + col("cdf") <= RareDfCap)
       .select("sh"))
 
-    val shIdx = readIdx(spark, shIdxDir(storeDir, shingleK), shSchema)
+    val shIdx = readIdx(spark, shIdxDir(storeDir, ShingleK), shSchema)
     val corpusRare = shIdx.join(rare, Seq("sh"), "left_semi")
       .join(batchIds, Seq("doc_id"), "left_anti")
       .select(col("doc_id").as("doc_b"), col("sh").as("sh_r"))
-    // pinned: the candidate set feeds three branches (overlap pairs,
-    // the candidate-doc probes for postings and counts)
+    // pinned: the candidate set feeds two branches (overlap pairs and
+    // the candidate-doc probe for postings)
     val cand = pin(deltaPost.join(rare, "sh")
       .join(corpusRare, col("sh") === col("sh_r"))
       .select(col("doc_id").as("doc_a"), col("doc_b")).distinct())
     // candidate docs are corpus docs, never the batch's own ids
     val candB = broadcast(cand.select("doc_b").distinct())
 
-    // overlap counting probes the index for CANDIDATE docs only
+    // overlap counting probes the index for CANDIDATE docs only; those
+    // rows are every posting of every candidate doc, so they count n_b
     val candPost = shIdx.select(col("doc_id").as("pb"), col("sh").as("shb"))
       .join(candB, col("pb") === col("doc_b"), "left_semi")
     val overlap = deltaPost.select(col("doc_id").as("doc_a"), col("sh").as("sha"))
       .join(cand, "doc_a")
       .join(candPost, col("doc_b") === col("pb") && col("sha") === col("shb"))
-      .groupBy("doc_a", "doc_b").agg(count(lit(1)).as("ov"))
-    val na = deltaPost.groupBy("doc_id").agg(count(lit(1)).as("n"))
-    val nb = readIdx(spark, cntIdxDir(storeDir, shingleK), cntSchema)
-      .select(col("doc_id").as("doc_b"), col("n").as("nb"))
-      .join(candB, Seq("doc_b"), "left_semi")
-    val nearDup = overlap
-      .join(na.select(col("doc_id").as("doc_a"), col("n").as("na")), "doc_a")
-      .join(nb, "doc_b")
-      .where(col("ov").cast("double") / (col("na") + col("nb") - col("ov")) >= jaccardMin)
+      .groupBy("doc_a", "doc_b").agg(count(lit(1)).as("overlap"))
+    val na = deltaPost.groupBy(col("doc_id").as("doc_a")).agg(count(lit(1)).as("n_a"))
+    val nb = candPost.groupBy(col("pb").as("doc_b")).agg(count(lit(1)).as("n_b"))
+    val nearDup = jaccardVerified(overlap.join(na, "doc_a").join(nb, "doc_b"))
       .select(col("doc_a").as("doc_id")).distinct()
     exactNew.join(nearDup, Seq("doc_id"), "left_anti")
   }
@@ -376,35 +374,30 @@ object NearDupIngest {
     * both read that pin, so a foreachBatch source is evaluated once.
     */
   def ingestBatch(spark: SparkSession, batch: DataFrame, storeDir: String,
-      batchId: Long, jaccardMin: Double = 0.8, shingleK: Int = 3,
-      maxDf: Int = 8, gate: DataFrame => DataFrame = identity): Long = {
+      batchId: Long, gate: DataFrame => DataFrame = identity): Long = {
     // -1 is the bootstrap sentinel in the df-partials table; a batch
     // claiming it would silently exclude the ENTIRE bootstrap from
     // the df probe (admission then over-drops) and corrupt future
     // replay exclusion with its own -1-tagged partial. foreachBatch
     // ids are always >= 0.
     require(batchId >= 0, s"batchId must be >= 0 (-1 is the bootstrap sentinel): $batchId")
-    ensureDocIdx(spark, storeDir, shingleK)
+    ensureDocIdx(spark, storeDir, ShingleK)
     val raw = batch.localCheckpoint(false)
-    val survivors = admitDocsFlow(spark, raw, storeDir, jaccardMin, shingleK,
-      maxDf, batchId, pin = _.localCheckpoint(false), gate = gate).localCheckpoint(false)
+    val survivors = admitDocsFlow(spark, raw, storeDir, batchId,
+      pin = _.localCheckpoint(false), gate = gate).localCheckpoint(false)
     // store first (see scaladoc: no-replay skew must fail toward a
     // future sweepable dup, never toward dropping novel content).
-    // The count tables go LAST for the same reason: a crash between
-    // appends can only leave df undercounted (more candidates, exact
-    // verify unaffected) or a candidate doc without a cnt row (its
-    // pair drops — dup admitted, swept later), never a dropped novel
-    // doc.
+    // The df partials go LAST for the same reason: a crash before
+    // their append can only leave df undercounted (more candidates,
+    // exact verify unaffected), never a dropped novel doc.
     val n = rowsIn(spark,
       appendIdempotent(survivors.select("doc_id", "text"), storeDir, batchId))
     appendIdempotent(survivors.select("doc_id", "fp"), fpIdxDir(storeDir), batchId)
     val shNew = survivors.select(col("doc_id"), explode(col("shs")).as("sh"))
-    appendIdempotent(shNew, shIdxDir(storeDir, shingleK), batchId)
+    appendIdempotent(shNew, shIdxDir(storeDir, ShingleK), batchId)
     appendIdempotent(
       shNew.groupBy("sh").agg(count(lit(1)).as("df")).withColumn("batch_id", lit(batchId)),
-      dfIdxDir(storeDir, shingleK), batchId)
-    appendIdempotent(shNew.groupBy("doc_id").agg(count(lit(1)).as("n")),
-      cntIdxDir(storeDir, shingleK), batchId)
+      dfIdxDir(storeDir, ShingleK), batchId)
     appendStats(spark, storeDir, batchId, raw.count(), n)
     n
   }
@@ -433,11 +426,8 @@ object NearDupIngest {
   /** Manifest-aware read of the admission-funnel records (empty, not
     * an error, before the first batch lands).
     */
-  def ingestStats(spark: SparkSession, storeDir: String): DataFrame = {
-    val schema = StructType.fromDDL("batch_id BIGINT, n_in BIGINT, n_admitted BIGINT")
-    if (Files.exists(Paths.get(statsDir(storeDir)))) readIdx(spark, statsDir(storeDir), schema)
-    else spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-  }
+  def ingestStats(spark: SparkSession, storeDir: String): DataFrame =
+    readIdxOrEmpty(spark, statsDir(storeDir), statsSchema)
 
   /** The alarm the funnel table exists to feed: per batch, the
     * admission rate plus a classified `alarm` column —
@@ -465,10 +455,6 @@ object NearDupIngest {
             col("n_admitted") * maxRateDen >= col("n_in") * maxRateNum, "full_admission"))
   }
 
-  /** Directory-flavored [[ingestAlarms]] over a store's own funnel. */
-  def ingestAlarms(spark: SparkSession, storeDir: String): DataFrame =
-    ingestAlarms(ingestStats(spark, storeDir))
-
   private[graft] def alarmsDir(storeDir: String): String = storeDir + ".alarms"
 
   /** The scheduled consumer [[ingestAlarms]] exists to feed: a
@@ -493,8 +479,7 @@ object NearDupIngest {
       minRateNum: Int = 1, minRateDen: Int = 20,
       maxRateNum: Int = 1, maxRateDen: Int = 1,
       minIn: Long = 100L): StreamingQuery = {
-    val schema = StructType.fromDDL("batch_id BIGINT, n_in BIGINT, n_admitted BIGINT")
-    val stats = spark.readStream.schema(schema).parquet(statsDir(storeDir))
+    val stats = spark.readStream.schema(statsSchema).parquet(statsDir(storeDir))
     ingestAlarms(stats, minRateNum, minRateDen, maxRateNum, maxRateDen, minIn)
       .where(col("alarm").isNotNull)
       .writeStream
@@ -509,12 +494,9 @@ object NearDupIngest {
   /** The queryable alarm table the monitor maintains — empty (with
     * the right schema) when no alarm has ever fired.
     */
-  def alarmLog(spark: SparkSession, storeDir: String): DataFrame = {
-    val schema = StructType.fromDDL(
-      "batch_id BIGINT, n_in BIGINT, n_admitted BIGINT, rate DOUBLE, alarm STRING")
-    if (Files.exists(Paths.get(alarmsDir(storeDir)))) readIdx(spark, alarmsDir(storeDir), schema)
-    else spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-  }
+  def alarmLog(spark: SparkSession, storeDir: String): DataFrame =
+    readIdxOrEmpty(spark, alarmsDir(storeDir),
+      statsSchema.add("rate", "double").add("alarm", "string"))
 
   /** Idempotent single-file append into `dir`, shared by the store and
     * every side table: the batch lands as ONE `ingest-<id>.parquet` via
@@ -539,8 +521,8 @@ object NearDupIngest {
   /** Single maintenance entry point: fold the store AND every sibling
     * index side table it has accreted (each gains one file per batch).
     * Discovery is by the directory-name contract (`<store>.fpidx`,
-    * `.shidx-k*`, `.dfidx-k*`, `.cntidx-k*`), so a maintenance job
-    * needs no knowledge of which k configs ran.
+    * `.shidx-k*`, `.dfidx-k*`, `.stats`, `.alarms`), so a maintenance
+    * job needs no knowledge of which k configs ran.
     * Safe concurrently with the stream: each directory's compaction is
     * independently atomic under the manifest+lease protocol, the
     * admission reads each dir through [[readIdx]] (manifest-aware),
@@ -558,11 +540,12 @@ object NearDupIngest {
     // whole sweep when compactParquet rejects the subdirectory — and
     // an unluckily-named sibling store (`t.fpidxfoo`) must never be
     // swept by `t`'s maintenance. A prefix-partitioned
-    // `<store>.fpidx-p<h>` or a passage-digest index left by an older
-    // engine is skipped too: no read path uses either, and the former's
-    // subdirectories would abort the sweep.
+    // `<store>.fpidx-p<h>`, a passage-digest index or a per-doc count
+    // index `<store>.cntidx-k<k>` left by an older engine is neither
+    // read nor compacted: no read path uses any of them, and the
+    // first's subdirectories would abort the sweep.
     val exact = Set(".fpidx", ".stats", ".alarms").map(name + _)
-    val parameterized = Seq(".shidx-k", ".dfidx-k", ".cntidx-k").map(name + _)
+    val parameterized = Seq(".shidx-k", ".dfidx-k").map(name + _)
     def ours(n: String): Boolean =
       exact(n) || parameterized.exists(p =>
         n.length > p.length && n.startsWith(p) && n.drop(p.length).forall(_.isDigit))
@@ -577,26 +560,19 @@ object NearDupIngest {
   // ---------------------------------------------------------------
 
   /** One-scan digest derivation for [[storeSweep]]: `(doc_id, fp, sid)`
-    * rows — the exact-dedup fingerprint carried THROUGH the shingle
-    * explode, so both digest families come out of a single pass over
-    * the store's text. Docs shorter than `k` tokens keep one
-    * null-`sid` row (they participate in exact dedup, and are out of
-    * near-dup candidate scope exactly like the batch family). Exposed
-    * separately so the spec can assert the plan scans the store
-    * exactly once.
+    * rows — the exact-dedup fingerprint carried THROUGH the explode of
+    * admission's shingle digests, so both digest families come out of
+    * a single pass over the store's text. Docs shorter than the
+    * shingle size keep one null-`sid` row (they participate in exact
+    * dedup, and are out of near-dup candidate scope exactly like the
+    * batch family). Exposed separately so the spec can assert the plan
+    * scans the store exactly once.
     */
-  private[graft] def sweepDigests(spark: SparkSession, storeDir: String,
-      k: Int): DataFrame = {
-    val toks = storeText(spark, storeDir).select(col("doc_id"),
-      fp(col("text")).as("fp"),
-      posexplode_outer(graft.llm.TextOps.tokens(col("text"))).as(Seq("pos", "tok")))
-    val w = Window.partitionBy("doc_id").orderBy("pos")
-    val parts = col("tok") +: (1 until k).map(o => lead("tok", o).over(w))
-    toks.select(col("doc_id"), col("fp"),
-        when(lead("tok", k - 1).over(w).isNotNull,
-          md5(concat_ws(" ", parts: _*))).as("sid"))
+  private[graft] def sweepDigests(spark: SparkSession, storeDir: String): DataFrame =
+    storeText(spark, storeDir)
+      .select(col("doc_id"), exactFp(col("text")).as("fp"),
+        explode_outer(shingleDigestArray(col("text"))).as("sid"))
       .distinct()
-  }
 
   /** Audit sweep over the store itself — the batch-tier x_dedup_corpus
     * decision run on the streaming store's compacted output, trusting
@@ -607,7 +583,7 @@ object NearDupIngest {
     *   - `exact_dup`: same normalized fingerprint as a lower-id doc;
     *   - `near_dup`: verified rare-shingle Jaccard ≥ 0.8 against a
     *     lower-id doc (the family's 5·overlap ≥ 4·union integer test,
-    *     df ≤ 8 candidates).
+    *     df ≤ [[graft.llm.DedupQueries.RareDfCap]] candidates).
     * On a store built by a clean (no-crash) ingest run the sweep
     * returns EMPTY — admission already made these decisions per batch;
     * anything it finds is a documented safe-skew admission.
@@ -620,25 +596,23 @@ object NearDupIngest {
     * verify for near). `NearDupIngestSpec` machine-asserts both halves
     * (one store scan in the digest plan; zero in the sweep plan).
     */
-  def storeSweep(spark: SparkSession, storeDir: String,
-      shingleK: Int = 3): DataFrame = {
-    val dg = sweepDigests(spark, storeDir, shingleK).localCheckpoint(false)
+  def storeSweep(spark: SparkSession, storeDir: String): DataFrame = {
+    val dg = sweepDigests(spark, storeDir).localCheckpoint(false)
     val fpTab = dg.groupBy("doc_id").agg(first("fp").as("fp"))
     val exact = fpTab
       .withColumn("keeper", min("doc_id").over(Window.partitionBy("fp")))
       .where(col("doc_id") =!= col("keeper"))
       .select(col("doc_id"), lit("exact_dup").as("reason"))
     val posts = dg.where(col("sid").isNotNull).select("doc_id", "sid")
-    val near = graft.llm.DedupQueries.jaccardVerified(
-        graft.llm.DedupQueries.pairOverlaps(posts,
-          graft.llm.DedupQueries.rareShingleCandidates(posts)))
+    val near = jaccardVerified(pairOverlaps(posts, rareShingleCandidates(posts)))
       .select(col("doc_b").as("doc_id"), lit("near_dup").as("reason"))
       .distinct()
     exact.unionByName(near)
   }
 
   /** Start the composed flow: watermark-bounded exact dedup at the
-    * edge, then the per-batch near-dup ingest into `storeDir`.
+    * edge (a one-hour event-time horizon), then the per-batch near-dup
+    * ingest into `storeDir`.
     *
     * `gate` is the admission quality gate — a filter over the
     * normalized (doc_id, text) batch that runs BEFORE any index work,
@@ -651,14 +625,13 @@ object NearDupIngest {
     * other removal, so [[ingestAlarms]] sees quality collapses too.
     */
   def start(spark: SparkSession, docs: DataFrame, storeDir: String,
-      dupWindow: String = "1 hour", jaccardMin: Double = 0.8,
       gate: DataFrame => DataFrame = identity): StreamingQuery =
     StreamingIngest.dedupWithinWatermark(
-        docs.withColumn("fp", fp(col("text"))), Seq("fp"), "ts", dupWindow)
+        docs.withColumn("fp", exactFp(col("text"))), Seq("fp"), "ts", "1 hour")
       .writeStream
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        ingestBatch(spark, batch.drop("fp"), storeDir, batchId, jaccardMin, gate = gate)
+        ingestBatch(spark, batch.drop("fp"), storeDir, batchId, gate = gate)
         ()
       }
       .start()

@@ -291,13 +291,11 @@ class NearDupIngestSpec extends SparkSpec {
     NearDupIngest.ensureDocIdx(spark, dir, 3)
     val batch = Seq(Doc(10, ts(0), tNovel)).toDF()
 
-    val docFlow = NearDupIngest.admitDocsFlow(spark, batch, dir,
-      jaccardMin = 0.8, shingleK = 3, maxDf = 8, batchId = 0, pin = identity)
+    val docFlow = NearDupIngest.admitDocsFlow(spark, batch, dir, batchId = 0, pin = identity)
     val docRoots = scannedRoots(docFlow)
     assert(docRoots.exists(_.startsWith(NearDupIngest.fpIdxDir(dir))), s"fp index unread: $docRoots")
     assert(docRoots.exists(_.startsWith(NearDupIngest.shIdxDir(dir, 3))), s"shingle index unread: $docRoots")
     assert(docRoots.exists(_.startsWith(NearDupIngest.dfIdxDir(dir, 3))), s"df index unread: $docRoots")
-    assert(docRoots.exists(_.startsWith(NearDupIngest.cntIdxDir(dir, 3))), s"cnt index unread: $docRoots")
     assert(!docRoots.exists(p => p == dir || p.startsWith(dir + "/")),
       s"per-batch admission must not rescan the store (O(corpus) per batch at 100 TB): $docRoots")
   }
@@ -307,11 +305,10 @@ class NearDupIngestSpec extends SparkSpec {
     Seq((1L, t1), (2L, t2)).toDF("doc_id", "text").write.mode("overwrite").parquet(dir)
     NearDupIngest.ensureDocIdx(spark, dir, 3)
     val idxDirs = Seq(NearDupIngest.fpIdxDir(dir), NearDupIngest.shIdxDir(dir, 3),
-      NearDupIngest.dfIdxDir(dir, 3), NearDupIngest.cntIdxDir(dir, 3))
+      NearDupIngest.dfIdxDir(dir, 3))
     val batch = Seq(Doc(10, ts(0), tNovel), Doc(11, ts(1), t1)).toDF()
 
-    val docFlow = NearDupIngest.admitDocsFlow(spark, batch, dir,
-      jaccardMin = 0.8, shingleK = 3, maxDf = 8, batchId = 0, pin = identity)
+    val docFlow = NearDupIngest.admitDocsFlow(spark, batch, dir, batchId = 0, pin = identity)
     assert(fullIndexAggregates(docFlow, idxDirs).isEmpty,
       s"doc admission re-aggregates the full index per batch: ${fullIndexAggregates(docFlow, idxDirs)}")
 
@@ -415,7 +412,7 @@ class NearDupIngestSpec extends SparkSpec {
       case s: org.apache.spark.sql.execution.FileSourceScanExec => idxRoots(s, dir)
     }.flatten).toSet
     for (idx <- Seq(NearDupIngest.fpIdxDir(dir), NearDupIngest.shIdxDir(dir, 3),
-        NearDupIngest.dfIdxDir(dir, 3), NearDupIngest.cntIdxDir(dir, 3)))
+        NearDupIngest.dfIdxDir(dir, 3)))
       assert(read.exists(_.startsWith(idx)), s"no captured plan reads $idx: $read")
     val bad = indexExchangeViolations(plans, dir)
     assert(bad.isEmpty, s"index rows cross an exchange:\n${bad.mkString("\n")}")
@@ -476,10 +473,16 @@ class NearDupIngestSpec extends SparkSpec {
       .write.mode("overwrite").parquet(dir)
     Compaction.compactParquet(spark, dir)
 
+    // the Jaccard boundary against seed 3: its 19th token replaced
+    // leaves 16 of 20 union shingles shared (exactly 4/5, a near-dup);
+    // its 10th replaced leaves 15 of 21 (5/7, novel)
+    def t3with(pos: Int) = text((1 to 20).map(i => if (i == pos) "carolX" else s"carol$i"): _*)
     val b1 = Seq(
       Doc(10, ts(0), tNovel), Doc(11, ts(1), t1), Doc(12, ts(2), t2near),
-      Doc(13, ts(3), tNovel2), Doc(14, ts(4), tNovel2)).toDF()
+      Doc(13, ts(3), tNovel2), Doc(14, ts(4), tNovel2),
+      Doc(15, ts(5), t3with(19)), Doc(16, ts(6), t3with(10))).toDF()
     val want1 = rescanSurvivorIds(b1, dir)
+    assert(!want1(15L) && want1(16L), s"boundary docs: 4/5 rejected, 15/21 admitted ($want1)")
     NearDupIngest.ingestBatch(spark, b1, dir, batchId = 0)
     assert(storeIds(dir) == Set(1L, 2L, 3L) ++ want1,
       s"batch 1: incremental admission must equal the rescan oracle ($want1)")
@@ -500,14 +503,14 @@ class NearDupIngestSpec extends SparkSpec {
     Seq((1L, t1)).toDF("doc_id", "text").write.mode("overwrite").parquet(dir)
     NearDupIngest.ingestBatch(spark, Seq(Doc(10, ts(0), tNovel)).toDF(), dir, batchId = 0)
     // ONE maintenance entry point folds seed + ingest-0 AND every
-    // index side table the ingest accreted (fp, shingle, df-partials,
-    // cnt): the manifest-aware readIdx must keep admission exact
+    // index side table the ingest accreted (fp, shingle, df-partials):
+    // the manifest-aware readIdx must keep admission exact
     // across all of them — for the df partials that additionally pins
     // that compaction preserves the partial-row multiset (df is
     // derived by summation)
     NearDupIngest.compactStoreAndIndexes(spark, dir)
     for (idx <- Seq(NearDupIngest.fpIdxDir(dir), NearDupIngest.shIdxDir(dir, 3),
-        NearDupIngest.dfIdxDir(dir, 3), NearDupIngest.cntIdxDir(dir, 3)))
+        NearDupIngest.dfIdxDir(dir, 3)))
       assert(java.nio.file.Files.exists(java.nio.file.Paths.get(idx, Compaction.ManifestName)),
         s"maintenance entry point skipped $idx")
     // near-dup of the pre-compaction append must still be caught, and
@@ -549,6 +552,11 @@ class NearDupIngestSpec extends SparkSpec {
     val passage = Paths.get(dir + ".pgidx-c16")
     Seq((1L, "pg1")).toDF("doc_id", "pg").write.parquet(passage.toString)
     Seq((2L, "pg2")).toDF("doc_id", "pg").write.mode("append").parquet(passage.toString)
+    // and a per-doc shingle-count index, which no engine reads any
+    // more either, as two parquet files
+    val counts = Paths.get(dir + ".cntidx-k3")
+    Seq((1L, 18L)).toDF("doc_id", "n").write.mode("overwrite").parquet(counts.toString)
+    Seq((2L, 18L)).toDF("doc_id", "n").write.mode("append").parquet(counts.toString)
     def snapshot(root: Path): Seq[(String, Long, Long)] = {
       val w = Files.walk(root)
       try w.iterator().asScala.toSeq.map((p: Path) => (root.relativize(p).toString,
@@ -560,10 +568,14 @@ class NearDupIngestSpec extends SparkSpec {
     val passageBefore = snapshot(passage)
     assert(passageBefore.count(_._1.endsWith(".parquet")) >= 2,
       s"fixture has fewer than two passage files: $passageBefore")
+    val countsBefore = snapshot(counts)
+    assert(countsBefore.count(_._1.endsWith(".parquet")) >= 2,
+      s"fixture has fewer than two count files: $countsBefore")
 
     NearDupIngest.compactStoreAndIndexes(spark, dir)
     assert(snapshot(legacy) == before, "maintenance touched the legacy fp index")
     assert(snapshot(passage) == passageBefore, "maintenance touched the legacy passage index")
+    assert(snapshot(counts) == countsBefore, "maintenance touched the legacy count index")
     assert(Files.exists(Paths.get(NearDupIngest.shIdxDir(dir, 3), Compaction.ManifestName)))
 
     // 20 repeats store doc 1 exactly; 21 is novel
@@ -573,6 +585,7 @@ class NearDupIngestSpec extends SparkSpec {
     assert(storeIds(dir) == Set(1L, 2L, 10L, 21L))
     assert(snapshot(legacy) == before, "ingest touched the legacy fp index")
     assert(snapshot(passage) == passageBefore, "ingest touched the legacy passage index")
+    assert(snapshot(counts) == countsBefore, "ingest touched the legacy count index")
   }
 
   test("deleting an index directory triggers an exact rebuild from the store") {
@@ -582,7 +595,7 @@ class NearDupIngestSpec extends SparkSpec {
     // repair path: lose the indexes; the next batch bootstraps them
     // from the CURRENT store (seed + batch 0) and still catches dups
     for (idx <- Seq(NearDupIngest.fpIdxDir(dir), NearDupIngest.shIdxDir(dir, 3),
-        NearDupIngest.dfIdxDir(dir, 3), NearDupIngest.cntIdxDir(dir, 3)))
+        NearDupIngest.dfIdxDir(dir, 3)))
       UpsertSink.rmTree(java.nio.file.Paths.get(idx))
     assert(NearDupIngest.ingestBatch(spark, Seq(Doc(20, ts(5), t1), Doc(21, ts(6), tNovelNear)).toDF(), dir, 1) == 0L)
     assert(storeIds(dir) == Set(1L, 10L))
@@ -667,7 +680,7 @@ class NearDupIngestSpec extends SparkSpec {
     // the sweep's one-scan contract, machine-checked on both halves:
     // the digest derivation scans the store exactly once, and the
     // sweep dataflow reads only the pinned digest frame
-    val digestStoreScans = storeScanNodes(NearDupIngest.sweepDigests(spark, dir, 3), dir)
+    val digestStoreScans = storeScanNodes(NearDupIngest.sweepDigests(spark, dir), dir)
     assert(digestStoreScans == 1,
       s"digest derivation must scan the store exactly once, got $digestStoreScans")
     val sweepStoreScans = storeScanNodes(NearDupIngest.storeSweep(spark, dir), dir)

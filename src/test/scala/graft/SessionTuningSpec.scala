@@ -114,4 +114,10 @@ class SessionTuningSpec extends AnyFunSuite {
     assert(offenders.isEmpty,
       s"publish one-file parquet through UpsertSink.publishSingleFile, not in: $offenders")
   }
+
+  test("one text normalization: the whitespace collapse only in TextOps.scala") {
+    val offenders = mainSourcesWith("\"\\\\s+\", \" \")", "TextOps.scala")
+    assert(offenders.isEmpty,
+      s"normalize through TextOps.normText / exactFp, not a spelled-out copy in: $offenders")
+  }
 }
