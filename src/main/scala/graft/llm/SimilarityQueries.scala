@@ -26,32 +26,30 @@ object SimilarityQueries {
       |    (sqrt(CAST(list_sum(list_transform(generate_series(1, len(a.qe)), i -> a.qe[i] * a.qe[i])) AS DOUBLE)) *
       |     sqrt(CAST(list_sum(list_transform(generate_series(1, len(b.qe)), i -> b.qe[i] * b.qe[i])) AS DOUBLE)))""".stripMargin
 
-  /** Brute-force cosine top-k: every 50th vector is a query; corpus is
-    * scanned once per query via broadcast; top-5 by (sim desc, id).
+  /** Exact brute-force cosine top-`topK` `(query_id, neighbor_id, sim)`
+    * over a quantized-vector frame: every `every`-th vector is a query,
+    * the corpus is scanned once via a broadcast of the query set, ties
+    * by (sim desc, id). Norms are computed once per VECTOR (not per
+    * pair) — at N×M pair volume this is the difference between 1 and 3
+    * dot products each.
     */
-  /** Exact brute-force top-`topK` per query (every `every`-th vector):
-    * the ground-truth formulation both x_ann_topk and the recall audit
-    * share. Norms are computed once per VECTOR (not per pair) — at N×M
-    * pair volume this is the difference between 1 and 3 dot products
-    * each.
-    */
-  private def bruteTopKDf(s: org.apache.spark.sql.SparkSession, d: String,
+  private def bruteTopKOf(e: org.apache.spark.sql.DataFrame,
       every: Int, topK: Int): org.apache.spark.sql.DataFrame = {
-    val e = Tables.embeddings(s, d)
-      .select(col("vec_id"), quantize(col("embedding")).as("qe"))
-      .withColumn("nrm", sqrt(qdot(col("qe"), col("qe")).cast("double")))
     val q = e.where(col("vec_id") % every === 0)
       .select(col("vec_id").as("query_id"), col("qe").as("q_qe"), col("nrm").as("q_nrm"))
-    val scored = e
-      .select(col("vec_id").as("neighbor_id"), col("qe").as("c_qe"), col("nrm").as("c_nrm"))
+    e.select(col("vec_id").as("neighbor_id"), col("qe").as("c_qe"), col("nrm").as("c_nrm"))
       .join(broadcast(q), col("query_id") =!= col("neighbor_id"))
       .select(col("query_id"), col("neighbor_id"),
-        (qdot(col("q_qe"), col("c_qe")) / (col("q_nrm") * col("c_nrm"))).as("sim"))
-    scored
+        qcos(col("q_qe"), col("q_nrm"), col("c_qe"), col("c_nrm")).as("sim"))
       .withColumn("rn", row_number().over(
         Window.partitionBy("query_id").orderBy(col("sim").desc, col("neighbor_id"))))
       .where(col("rn") <= topK).drop("rn")
   }
+
+  /** The ×1000 ground truth both x_ann_topk and the recall audit share. */
+  private def bruteTopKDf(s: org.apache.spark.sql.SparkSession, d: String,
+      every: Int, topK: Int): org.apache.spark.sql.DataFrame =
+    bruteTopKOf(quantizedVecs(Tables.embeddings(s, d)), every, topK)
 
   val annTopK: QueryDef = QueryDef.sql(
     "x_ann_topk",
@@ -65,14 +63,11 @@ object SimilarityQueries {
     bruteTopKDf(s, d, every = 50, topK = 5)
   }
 
-  /** Embedding near-dup pairs: label column as blocking key (the
-    * standard blocking technique — pairs only form inside a block),
-    * cosine ≥ 0.4.
-    */
   /** The embedding near-dup pair set in CTE form, ending in
-    * `esp(vec_a, vec_b, label, sim)` — label-blocked same-label pairs
-    * at cosine ≥ 0.4, composable next to DedupQueries' lexical pair
-    * chains (the cross-tier agreement audit overlays the two).
+    * `esp(vec_a, vec_b, label, sim)`: the label column is the blocking
+    * key (the standard blocking technique — pairs only form inside a
+    * block), cosine ≥ 0.4. Composable next to DedupQueries' lexical
+    * pair chains (the cross-tier agreement audit overlays the two).
     */
   private[llm] val embedPairCtes: String =
     s"""eq AS (
@@ -88,16 +83,14 @@ object SimilarityQueries {
   /** DF twin of [[embedPairCtes]]. */
   private[llm] def embedPairsDf(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame = {
-    val e = Tables.embeddings(s, d)
-      .select(col("vec_id"), col("label"), quantize(col("embedding")).as("qe"))
-      .withColumn("nrm", sqrt(qdot(col("qe"), col("qe")).cast("double")))
+    val e = quantizedVecs(Tables.embeddings(s, d), "label")
     val a = e.select(col("vec_id").as("vec_a"), col("label"),
       col("qe").as("qe_a"), col("nrm").as("nrm_a"))
     val b = e.select(col("vec_id").as("vec_b"), col("label").as("label_b"),
       col("qe").as("qe_b"), col("nrm").as("nrm_b"))
     a.join(b, col("label") === col("label_b") && col("vec_a") < col("vec_b"))
       .select(col("vec_a"), col("vec_b"), col("label"),
-        (qdot(col("qe_a"), col("qe_b")) / (col("nrm_a") * col("nrm_b"))).as("sim"))
+        qcos(col("qe_a"), col("nrm_a"), col("qe_b"), col("nrm_b")).as("sim"))
       .where(col("sim") >= 0.4)
   }
 
@@ -119,21 +112,41 @@ object SimilarityQueries {
   // can't drift.
   // ----------------------------------------------------------------
 
+  /** A quantized vector's single-band bucket at `planes` planes: the
+    * whole sign-bit signature in one codegen'd expression — the
+    * previous explode(planes) + interpreted zip_with/aggregate HOF
+    * dots + groupBy(vec_id) re-assembly paid a planes× row
+    * amplification and a shuffle for arithmetic a tight loop does
+    * in-place. Bucket values are bit-identical (PlaneBucketsSpec pins
+    * parity against the HOF formulation).
+    */
+  private def planeBucket(planes: Int): org.apache.spark.sql.Column =
+    org.apache.spark.sql.graft.PlaneBuckets(col("qe"), planes, planes).getItem(0)
+
   /** vec → bucket index at a given plane count (Spark side). */
   private[graft] def lshBuckets(s: org.apache.spark.sql.SparkSession, d: String,
       planes: Int): org.apache.spark.sql.DataFrame = {
     require(planes > 0 && planes <= 62, s"unsupported plane count: $planes")
-    val e = Tables.embeddings(s, d).select(col("vec_id"), quantize(col("embedding")).as("qe"))
-    // single-band native sketch (optimization round): the whole
-    // sign-bit signature in one codegen'd expression — the previous
-    // explode(planes) + interpreted zip_with/aggregate HOF dots +
-    // groupBy(vec_id) re-assembly paid a planes× row amplification and
-    // a shuffle for arithmetic a tight loop does in-place. Bucket
-    // values are bit-identical (PlaneBucketsSpec pins parity against
-    // the HOF formulation).
-    e.select(col("vec_id"),
-      org.apache.spark.sql.graft.PlaneBuckets(col("qe"), planes, planes)
-        .getItem(0).as("bucket"))
+    quantizedVecs(Tables.embeddings(s, d)).select(col("vec_id"), planeBucket(planes).as("bucket"))
+  }
+
+  /** Same-bucket candidate pairs `(vec_a, vec_b, sim)`, vec_a < vec_b,
+    * exact cosine on candidates only — the single-band join both the
+    * LSH pairs and the embedding clusters run. The bucket is computed
+    * in place: joining against [[lshBuckets]] would re-derive the same
+    * quantized vectors and pay a vec_id equi-join for a pure function
+    * of qe.
+    */
+  private def lshBucketPairs(e: org.apache.spark.sql.DataFrame,
+      planes: Int): org.apache.spark.sql.DataFrame = {
+    val withB = e.withColumn("bucket", planeBucket(planes))
+    val a = withB.select(col("vec_id").as("vec_a"), col("qe").as("qe_a"),
+      col("nrm").as("nrm_a"), col("bucket"))
+    val b = withB.select(col("vec_id").as("vec_b"), col("qe").as("qe_b"),
+      col("nrm").as("nrm_b"), col("bucket").as("bucket_b"))
+    a.join(b, col("bucket") === col("bucket_b") && col("vec_a") < col("vec_b"))
+      .select(col("vec_a"), col("vec_b"),
+        qcos(col("qe_a"), col("nrm_a"), col("qe_b"), col("nrm_b")).as("sim"))
   }
 
   /** The q + dots + bkt CTE chain at a given plane count (oracle side). */
@@ -169,27 +182,11 @@ object SimilarityQueries {
     * Sub-quadratic — the join key is the bucket, never vec × vec.
     */
   private def lshPairsDf(s: org.apache.spark.sql.SparkSession, d: String,
-      planes: Int, topK: Int): org.apache.spark.sql.DataFrame = {
-    val e = Tables.embeddings(s, d)
-      .select(col("vec_id"), quantize(col("embedding")).as("qe"))
-      .withColumn("nrm", sqrt(qdot(col("qe"), col("qe")).cast("double")))
-    // bucket computed in place (optimization round): joining e against
-    // lshBuckets(s, d, planes) re-derived the same quantized vectors
-    // and paid a vec_id equi-join for a value that is a pure function
-    // of qe — identical rows, one join and its exchanges fewer.
-    val withB = e.withColumn("bucket",
-      org.apache.spark.sql.graft.PlaneBuckets(col("qe"), planes, planes).getItem(0))
-    val a = withB.select(col("vec_id").as("vec_a"), col("qe").as("qe_a"),
-      col("nrm").as("nrm_a"), col("bucket"))
-    val b = withB.select(col("vec_id").as("vec_b"), col("qe").as("qe_b"),
-      col("nrm").as("nrm_b"), col("bucket").as("bucket_b"))
-    a.join(b, col("bucket") === col("bucket_b") && col("vec_a") < col("vec_b"))
-      .select(col("vec_a"), col("vec_b"),
-        (qdot(col("qe_a"), col("qe_b")) / (col("nrm_a") * col("nrm_b"))).as("sim"))
+      planes: Int, topK: Int): org.apache.spark.sql.DataFrame =
+    lshBucketPairs(quantizedVecs(Tables.embeddings(s, d)), planes)
       .withColumn("rn", row_number().over(
         Window.partitionBy("vec_a").orderBy(col("sim").desc, col("vec_b"))))
       .where(col("rn") <= topK).drop("rn")
-  }
 
   /** LSH bucket index (scale path for ANN), default 16 planes. Output
     * is the index itself (vec → bucket) — candidate generation is then
@@ -231,7 +228,9 @@ object SimilarityQueries {
     * the (tiny) centroid set. Every step is deterministic (quantized
     * integer dots, fixed tie-breaks), so the whole index → assign →
     * probe → search path is oracle-checked end to end; recall vs
-    * brute force is additionally asserted in LlmOpsSpec.
+    * brute force is additionally asserted in LlmOpsSpec. The Spark side
+    * is the trained-IVF dataflow at zero Lloyd iterations; the oracle
+    * stays its own independent formulation.
     */
   val annIvf: QueryDef = QueryDef.sql(
     "x_ann_ivf",
@@ -263,58 +262,24 @@ object SimilarityQueries {
       |  FROM assigned a JOIN probes p ON a.cell = p.probe_cell AND p.query_id != a.vec_id)
       |SELECT query_id, neighbor_id, sim FROM scored
       |QUALIFY row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) <= 5""".stripMargin) { (s, d) =>
-    val e = Tables.embeddings(s, d)
-      .select(col("vec_id"), quantize(col("embedding")).as("qe"))
-      .withColumn("nrm", sqrt(qdot(col("qe"), col("qe")).cast("double")))
-    val centroids = e.where(col("vec_id") % 100 === 0)
-      .select(col("vec_id").as("cent_id"), col("qe").as("cent_qe"), col("nrm").as("cent_nrm"))
-
-    // assignment: nearest centroid per vector (rank 1 of cosine)
-    val scoredCent = e.crossJoin(broadcast(centroids))
-      .select(col("vec_id"), col("qe"), col("nrm"), col("cent_id"),
-        (qdot(col("qe"), col("cent_qe")) / (col("nrm") * col("cent_nrm"))).as("csim"))
-    val wAssign = Window.partitionBy("vec_id").orderBy(col("csim").desc, col("cent_id"))
-    val assigned = scoredCent
-      .withColumn("rn", row_number().over(wAssign)).where(col("rn") === 1)
-      .select(col("vec_id"), col("qe"), col("nrm"), col("cent_id").as("cell"))
-
-    // queries probe their 2 nearest cells
-    val probes = scoredCent.where(col("vec_id") % 50 === 0)
-      .withColumn("rn", row_number().over(wAssign)).where(col("rn") <= 2)
-      .select(col("vec_id").as("query_id"), col("qe").as("q_qe"),
-        col("nrm").as("q_nrm"), col("cent_id").as("probe_cell"))
-
-    // scan only the probed cells
-    val scored = assigned.join(broadcast(probes),
-        col("cell") === col("probe_cell") && col("query_id") =!= col("vec_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        (qdot(col("q_qe"), col("qe")) / (col("q_nrm") * col("nrm"))).as("sim"))
-    scored
-      .withColumn("rn", row_number().over(
-        Window.partitionBy("query_id").orderBy(col("sim").desc, col("neighbor_id"))))
-      .where(col("rn") <= 5).drop("rn")
+    ivfTrainedDf(s, d, iters = 0)
   }
 
-  /** IVF with a TRAINED coarse quantizer: one deterministic Lloyd
-    * iteration over the fixed seeds (every 100th vector), i.e. the
-    * k-means step real IVF training runs — assign every vector to its
-    * nearest seed, then move each centroid to the re-quantized mean of
-    * its members — followed by the same index → probe → search path as
-    * x_ann_ivf. Every step stays exact-integer/deterministic-double
-    * (member means are re-quantized to longs), so the whole TRAINED
-    * pipeline is oracle-checked end to end, and LlmOpsSpec asserts its
-    * recall is at least the fixed-grid variant's.
+  /** Trained-IVF oracle at `iters` Lloyd iterations over the fixed
+    * seeds (every 100th vector) — the k-means step real IVF training
+    * runs: assign every vector to its nearest seed, then move each
+    * centroid to the re-quantized mean of its members. The base CTEs,
+    * `iters` copies of that assign→re-mean step chained through
+    * `tn{k}`, then the x_ann_ivf index → probe → search tail against
+    * the last centroid table (the seeds themselves when iters = 0).
+    * Every step stays exact-integer/deterministic-double, so the whole
+    * TRAINED pipeline is oracle-checked end to end, and LlmOpsSpec
+    * asserts its recall is at least the fixed-grid variant's.
     *
-    * Scale shape: the training pass adds one component-unpivot
+    * Scale shape: each training pass adds one component-unpivot
     * aggregation (a bounded 64× fan-out, shuffled by (cell, pos)) and
     * re-broadcasts the tiny centroid table; everything else is the
-    * x_ann_ivf plan. More Lloyd iterations = repeat the same two
-    * steps; one iteration already separates trained from grid.
-    */
-  /** Trained-IVF oracle at a given Lloyd iteration count: the base
-    * CTEs, `iters` copies of the assign→re-mean step chained through
-    * `tn{k}`, then the shared index → probe → search tail against the
-    * last centroid table (the seeds themselves when iters = 0).
+    * x_ann_ivf plan.
     */
   private def ivfTrainedSql(iters: Int): String = {
     val base =
@@ -429,16 +394,38 @@ object SimilarityQueries {
   }
 
   /** Nearest-current-centroid ranking (broadcast of the tiny centroid
-    * table) — the assign step shared by training, probing, and the
-    * balance audit.
+    * table) — the assign step shared by training, probing, the balance
+    * audit and the semantic-dedup cells.
     */
   private def ivfNearest(e: org.apache.spark.sql.DataFrame,
       cents: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
     e.crossJoin(broadcast(cents))
       .select(col("vec_id"), col("qe"), col("nrm"), col("cent_id"),
-        (qdot(col("qe"), col("cent_qe")) / (col("nrm") * col("cent_nrm"))).as("csim"))
+        qcos(col("qe"), col("nrm"), col("cent_qe"), col("cent_nrm")).as("csim"))
       .withColumn("rn", row_number().over(
         Window.partitionBy("vec_id").orderBy(col("csim").desc, col("cent_id"))))
+
+  /** The seed centroids `(cent_id, cent_qe, cent_nrm)`: the vectors
+    * with vec_id % 100 == `seedRem`.
+    */
+  private def centroidSeeds(e: org.apache.spark.sql.DataFrame,
+      seedRem: Int): org.apache.spark.sql.DataFrame =
+    e.where(col("vec_id") % 100 === seedRem)
+      .select(col("vec_id").as("cent_id"), col("qe").as("cent_qe"), col("nrm").as("cent_nrm"))
+
+  /** Re-quantized component mean `(key, cent_qe, cent_nrm)` of the
+    * member vectors `qe` per `key` — exact longs in, exact longs out,
+    * so every centroid is engine-reproducible. Scale shape: one bounded
+    * 64× unpivot shuffled by (key, pos); the output has one row per key.
+    */
+  private def requantizedMean(members: org.apache.spark.sql.DataFrame,
+      key: String): org.apache.spark.sql.DataFrame =
+    members.select(col(key), posexplode(col("qe")).as(Seq("pos", "x")))
+      .groupBy(key, "pos").agg(round(avg(col("x"))).cast("long").as("v"))
+      .groupBy(key)
+      .agg(transform(array_sort(collect_list(struct(col("pos"), col("v")))),
+        t => t.getField("v")).as("cent_qe"))
+      .withColumn("cent_nrm", qnorm(col("cent_qe")))
 
   /** The quantized-embedding frame plus the centroid table after
     * `iters` Lloyd iterations — the shared head of the trained-probe
@@ -447,26 +434,15 @@ object SimilarityQueries {
   private def ivfTrainedCents(s: org.apache.spark.sql.SparkSession, d: String,
       iters: Int): (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
     require(iters >= 0, s"negative Lloyd iteration count: $iters")
-    val e = Tables.embeddings(s, d)
-      .select(col("vec_id"), quantize(col("embedding")).as("qe"))
-      .withColumn("nrm", sqrt(qdot(col("qe"), col("qe")).cast("double")))
-    val seeds = e.where(col("vec_id") % 100 === 0)
-      .select(col("vec_id").as("cent_id"), col("qe").as("cent_qe"), col("nrm").as("cent_nrm"))
-
+    val e = quantizedVecs(Tables.embeddings(s, d))
     // Lloyd steps: assign to the current centroids, then centroid :=
-    // re-quantized component mean of its members (exact longs in,
-    // exact longs out — each iterate is engine-reproducible)
-    var cents = seeds
+    // re-quantized component mean of its members
+    var cents = centroidSeeds(e, seedRem = 0)
     for (_ <- 1 to iters) {
       val assigned = ivfNearest(e, cents).where(col("rn") === 1)
         .select(col("vec_id"), col("qe"), col("cent_id").as("cell"))
-      val cmean = assigned.select(col("cell"), posexplode(col("qe")).as(Seq("pos", "x")))
-        .groupBy("cell", "pos").agg(round(avg(col("x"))).cast("long").as("v"))
-      cents = cmean.groupBy("cell")
-        .agg(transform(array_sort(collect_list(struct(col("pos"), col("v")))),
-          t => t.getField("v")).as("cent_qe"))
-        .select(col("cell").as("cent_id"), col("cent_qe"))
-        .withColumn("cent_nrm", sqrt(qdot(col("cent_qe"), col("cent_qe")).cast("double")))
+      cents = requantizedMean(assigned, "cell")
+        .select(col("cell").as("cent_id"), col("cent_qe"), col("cent_nrm"))
         // pinned per iteration (lazy localCheckpoint of the ≤|seeds|-row
         // centroid table — cluster-config bounded, never data): bounds
         // the lineage at one Lloyd step the same way the BPE loop pins
@@ -506,7 +482,7 @@ object SimilarityQueries {
     assigned.join(broadcast(probes),
         col("cell") === col("probe_cell") && col("query_id") =!= col("vec_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        (qdot(col("q_qe"), col("qe")) / (col("q_nrm") * col("nrm"))).as("sim"))
+        qcos(col("q_qe"), col("q_nrm"), col("qe"), col("nrm")).as("sim"))
       .withColumn("rn", row_number().over(
         Window.partitionBy("query_id").orderBy(col("sim").desc, col("neighbor_id"))))
       .where(col("rn") <= 5).drop("rn")
@@ -549,22 +525,8 @@ object SimilarityQueries {
     */
   private def embedClustersDf(s: org.apache.spark.sql.SparkSession, d: String,
       planes: Int, simThreshold: Double): org.apache.spark.sql.DataFrame = {
-    val e = Tables.embeddings(s, d)
-      .select(col("vec_id"), quantize(col("embedding")).as("qe"))
-      .withColumn("nrm", sqrt(qdot(col("qe"), col("qe")).cast("double")))
-    // bucket computed in place (optimization round): joining e against
-    // lshBuckets(s, d, planes) re-derived the same quantized vectors
-    // and paid a vec_id equi-join for a value that is a pure function
-    // of qe — identical rows, one join and its exchanges fewer.
-    val withB = e.withColumn("bucket",
-      org.apache.spark.sql.graft.PlaneBuckets(col("qe"), planes, planes).getItem(0))
-    val a = withB.select(col("vec_id").as("vec_a"), col("qe").as("qe_a"),
-      col("nrm").as("nrm_a"), col("bucket"))
-    val b = withB.select(col("vec_id").as("vec_b"), col("qe").as("qe_b"),
-      col("nrm").as("nrm_b"), col("bucket").as("bucket_b"))
-    val pairs = a.join(b, col("bucket") === col("bucket_b") && col("vec_a") < col("vec_b"))
-      .select(col("vec_a"), col("vec_b"),
-        (qdot(col("qe_a"), col("qe_b")) / (col("nrm_a") * col("nrm_b"))).as("sim"))
+    val e = quantizedVecs(Tables.embeddings(s, d))
+    val pairs = lshBucketPairs(e, planes)
       .where(col("sim") >= simThreshold)
       .select(col("vec_a").as("doc_a"), col("vec_b").as("doc_b"))
     graft.operators.ConnectedComponents
@@ -610,33 +572,6 @@ object SimilarityQueries {
     embedClustersDf(s, d, planes = 24, simThreshold = 0.6)
   }
 
-  /** SemDeDup-style semantic dedup: partition the corpus into
-    * centroid cells (the x_ann_ivf coarse quantizer — fixed seeds,
-    * nearest-by-cosine assignment), then within each cell drop every
-    * vector that is ≥ `tau`-similar to a LOWER-id vector of the same
-    * cell. Keep-lowest-id is the deterministic stand-in for
-    * keep-one-representative; the cell blocking is what makes the
-    * quadratic term local (pairs only ever form inside a cell, never
-    * across the corpus — the published method's exact shape).
-    *
-    * Output: one row per vector with its cell and kept ∈ {0,1}, so
-    * the caller can both filter (kept=1) and audit what was dropped.
-    *
-    * Scale shape: centroid table is a broadcast (k ≪ N); assignment is
-    * an embarrassingly-parallel scored scan + per-vector top-1
-    * (WindowGroupLimit); the within-cell pair join is an equi-join on
-    * cell whose fan-out is bounded by cell occupancy — the knob (more
-    * centroids) you raise with corpus size, exactly like LSH planes.
-    */
-  /** Shared centroid-cell assignment for the semantic-dedup family:
-    * seeds = vec_id % 100 == seedRem, nearest-by-cosine top-1 per
-    * vector. Pinned once (lazy localCheckpoint): the scored centroid
-    * scan feeds THREE consumers in each caller — without the pin the
-    * whole assignment subtree would compute 3×. Fails fast on an
-    * empty seed set: with zero centroids the crossJoin would yield
-    * zero assigned rows and a caller filtering kept=1 would silently
-    * drop the whole corpus.
-    */
   /** Once-per-(session, corpus-plan, seed) memo for assignCells' seed
     * probe — an entry exists only after the probe PASSED (a thrown
     * require caches nothing and re-probes next call).
@@ -644,19 +579,23 @@ object SimilarityQueries {
   private val seedProbeMemo =
     new java.util.concurrent.ConcurrentHashMap[(Int, Int, Int), java.lang.Boolean]()
 
+  /** Shared centroid-cell assignment for the semantic-dedup family:
+    * seeds = vec_id % 100 == seedRem, nearest-by-cosine top-1 per
+    * vector ([[ivfNearest]] at rank 1). Pinned once (lazy
+    * localCheckpoint): the scored centroid scan feeds THREE consumers
+    * in each caller — without the pin the whole assignment subtree
+    * would compute 3×. Fails fast only on the dangerous case: vectors
+    * exist but no seed matches (the crossJoin would yield zero
+    * assigned rows and a kept=1 filter downstream would silently drop
+    * the whole corpus). A genuinely EMPTY input stays a lazy empty
+    * result. Cost: two limit-1 probes at construction — memoized per
+    * (session, corpus plan, seed) like SharedIndex, so repeated
+    * construction of the same query (e.g. Bench's per-sample rebuild)
+    * probes once, not per sample.
+    */
   private def assignCells(emb: org.apache.spark.sql.DataFrame, seedRem: Int): org.apache.spark.sql.DataFrame = {
-    val e = emb.select(col("vec_id"), quantize(col("embedding")).as("qe"))
-      .withColumn("nrm", sqrt(qdot(col("qe"), col("qe")).cast("double")))
-    val cent = e.where(col("vec_id") % 100 === seedRem)
-      .select(col("vec_id").as("cent_id"), col("qe").as("cent_qe"), col("nrm").as("cent_nrm"))
-    // Fail fast only on the dangerous case: vectors exist but no seed
-    // matches (the crossJoin would yield zero assigned rows and a
-    // kept=1 filter downstream would silently drop the whole corpus).
-    // A genuinely EMPTY input stays a lazy empty result. Cost: two
-    // limit-1 probes at construction — memoized per (session, corpus
-    // plan, seed) like SharedIndex, so repeated construction of the
-    // same query (e.g. Bench's per-sample rebuild) probes once, not
-    // per sample.
+    val e = quantizedVecs(emb)
+    val cent = centroidSeeds(e, seedRem)
     val probeKey = (System.identityHashCode(emb.sparkSession),
       emb.queryExecution.analyzed.semanticHash(), seedRem)
     seedProbeMemo.computeIfAbsent(probeKey, { _ =>
@@ -665,12 +604,7 @@ object SimilarityQueries {
           s"(no vec_id % 100 == $seedRem) — every vector would be silently dropped")
       java.lang.Boolean.TRUE
     })
-    e.crossJoin(broadcast(cent))
-      .select(col("vec_id"), col("qe"), col("nrm"), col("cent_id"),
-        (qdot(col("qe"), col("cent_qe")) / (col("nrm") * col("cent_nrm"))).as("csim"))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy("vec_id").orderBy(col("csim").desc, col("cent_id"))))
-      .where(col("rn") === 1)
+    ivfNearest(e, cent).where(col("rn") === 1)
       .select(col("vec_id"), col("qe"), col("nrm"), col("cent_id").as("cell"))
       .localCheckpoint(eager = false)
   }
@@ -698,6 +632,24 @@ object SimilarityQueries {
        |    FROM e CROSS JOIN cent c)
        |  WHERE rn = 1)""".stripMargin
 
+  /** SemDeDup-style semantic dedup: partition the corpus into
+    * centroid cells (the x_ann_ivf coarse quantizer — fixed seeds,
+    * nearest-by-cosine assignment), then within each cell drop every
+    * vector that is ≥ `tau`-similar to a LOWER-id vector of the same
+    * cell. Keep-lowest-id is the deterministic stand-in for
+    * keep-one-representative; the cell blocking is what makes the
+    * quadratic term local (pairs only ever form inside a cell, never
+    * across the corpus — the published method's exact shape).
+    *
+    * Output: one row per vector with its cell and kept ∈ {0,1}, so
+    * the caller can both filter (kept=1) and audit what was dropped.
+    *
+    * Scale shape: centroid table is a broadcast (k ≪ N); assignment is
+    * an embarrassingly-parallel scored scan + per-vector top-1
+    * (WindowGroupLimit); the within-cell pair join is an equi-join on
+    * cell whose fan-out is bounded by cell occupancy — the knob (more
+    * centroids) you raise with corpus size, exactly like LSH planes.
+    */
   def semDedupOf(emb: org.apache.spark.sql.DataFrame, tau: Double): org.apache.spark.sql.DataFrame = {
     val assigned = assignCells(emb, seedRem = 0)
     val lo = assigned.select(col("vec_id").as("va"), col("cell").as("cell_a"),
@@ -705,7 +657,7 @@ object SimilarityQueries {
     val hi = assigned.select(col("vec_id").as("vb"), col("cell"),
       col("qe").as("qe_b"), col("nrm").as("nrm_b"))
     val dropped = lo.join(hi, col("cell_a") === col("cell") && col("va") < col("vb"))
-      .where(qdot(col("qe_a"), col("qe_b")) / (col("nrm_a") * col("nrm_b")) >= tau)
+      .where(qcos(col("qe_a"), col("nrm_a"), col("qe_b"), col("nrm_b")) >= tau)
       .select(col("vb").as("vec_id")).distinct()
     assigned.select(col("vec_id"), col("cell"))
       .join(dropped.withColumn("is_dup", lit(1L)), Seq("vec_id"), "left")
@@ -753,8 +705,7 @@ object SimilarityQueries {
     */
   def hardNegativesOf(emb: org.apache.spark.sql.DataFrame, k: Int): org.apache.spark.sql.DataFrame = {
     require(k >= 1, s"degenerate hard-negative config (k=$k)")
-    val e = emb.select(col("vec_id"), col("label"), quantize(col("embedding")).as("qe"))
-      .withColumn("nrm", sqrt(qdot(col("qe"), col("qe")).cast("double")))
+    val e = quantizedVecs(emb, "label")
     val q = e.where(col("vec_id") % 50 === 0)
       .select(col("vec_id").as("query_id"), col("label").as("q_label"),
         col("qe").as("q_qe"), col("nrm").as("q_nrm"))
@@ -762,7 +713,7 @@ object SimilarityQueries {
         col("qe").as("c_qe"), col("nrm").as("c_nrm"))
       .join(broadcast(q), col("q_label") =!= col("n_label"))
       .select(col("query_id"), col("neighbor_id"), col("q_label"), col("n_label"),
-        (qdot(col("q_qe"), col("c_qe")) / (col("q_nrm") * col("c_nrm"))).as("sim"))
+        qcos(col("q_qe"), col("q_nrm"), col("c_qe"), col("c_nrm")).as("sim"))
       .withColumn("rnk", row_number().over(
         Window.partitionBy("query_id").orderBy(col("sim").desc, col("neighbor_id"))).cast("long"))
       .where(col("rnk") <= k)
@@ -815,7 +766,7 @@ object SimilarityQueries {
     val corpus = assigned.where(col("vec_id") % 10 =!= 0)
       .select(col("cell").as("cell_c"), col("qe").as("qe_c"), col("nrm").as("nrm_c"))
     val dropped = delta.join(corpus, col("cell") === col("cell_c"))
-      .where(qdot(col("qe"), col("qe_c")) / (col("nrm") * col("nrm_c")) >= tau)
+      .where(qcos(col("qe"), col("nrm"), col("qe_c"), col("nrm_c")) >= tau)
       .select("vec_id").distinct()
     delta.select(col("vec_id"), col("cell"))
       .join(dropped.withColumn("is_dup", lit(1L)), Seq("vec_id"), "left")
@@ -840,21 +791,17 @@ object SimilarityQueries {
     semDedupIncrOf(Tables.embeddings(s, d), tau = 0.4)
   }
 
-  // ----------------------------------------------------------------
-  // Approximate kNN graph via BANDED hyperplane LSH — OR-amplification:
-  // `bands` independent r-plane sketches; two vectors are candidates
-  // when ANY band's r sign bits agree. Single-band LSH at 16 planes
-  // leaves most of this corpus isolated (buckets too narrow); banding
-  // trades a bounded candidate-volume increase for the recall a kNN
-  // GRAPH needs (every node should find neighbors, not only the
-  // near-dup ones). Plane weights reuse the single-band formula with
-  // plane index band*r + bit, so determinism and the oracle pairing
-  // carry over unchanged.
-  // ----------------------------------------------------------------
-
-  /** (vec_id, band, bucket) banded sketch rows — `bands` rows per
-    * vector; candidate generation is then an equi-join on
-    * (band, bucket), never vec × vec.
+  /** (vec_id, band, bucket) banded sketch rows for the approximate
+    * kNN graph — BANDED hyperplane LSH, i.e. OR-amplification: `bands`
+    * independent r-plane sketches, `bands` rows per vector; two vectors
+    * are candidates when ANY band's r sign bits agree, so candidate
+    * generation is an equi-join on (band, bucket), never vec × vec.
+    * Single-band LSH at 16 planes leaves most of this corpus isolated
+    * (buckets too narrow); banding trades a bounded candidate-volume
+    * increase for the recall a kNN GRAPH needs (every node should find
+    * neighbors, not only the near-dup ones). Plane weights reuse the
+    * single-band formula with plane index band*r + bit, so determinism
+    * and the oracle pairing carry over unchanged.
     */
   private[graft] def bandedBuckets(e: org.apache.spark.sql.DataFrame,
       bands: Int, r: Int): org.apache.spark.sql.DataFrame = {
@@ -878,23 +825,6 @@ object SimilarityQueries {
       .select(col("vec_id"), col("band").cast("long").as("band"), col("bucket"))
   }
 
-  /** Directed approximate-kNN edges: banded-LSH candidates, exact
-    * quantized cosine on candidates only, top-`k` per source node by
-    * (sim desc, vec_b). Pinned (lazy localCheckpoint): the mutual
-    * graph reads the edge set from two plan branches, and the pin
-    * bounds the materialized intermediate at ≤ N·k narrow rows even
-    * for single-consumer callers (density).
-    */
-  /** The directed kNN edge set `(vec_a, vec_b, sim)` as a shared
-    * materialized artifact ([[SharedIndex.materialized]], keyed by
-    * (sf-dir, bands, r, k)). SEVEN queries per config family consume
-    * the same edges (graph ×2, density, diverse ×2, triangles ×2) —
-    * an ANN index is an artifact a production pipeline builds once
-    * and probes everywhere, not a plan fragment re-derived per query.
-    * The edge set is ≤ N·k rows (narrow), so the parquet is small;
-    * Bench builds both configs explicitly as `knn_build_*` metric
-    * lines so per-query numbers are warm-artifact.
-    */
   /** The quantized-vector table `(vec_id, qe, nrm)` as a shared
     * materialized artifact — the common scoring input of BOTH kNN
     * edge configs (and the widest column the family carries), built
@@ -902,11 +832,7 @@ object SimilarityQueries {
     */
   private[graft] def quantVecs(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame =
-    SharedIndex.materialized(s, d, "knn_quant") {
-      Tables.embeddings(s, d)
-        .select(col("vec_id"), quantize(col("embedding")).as("qe"))
-        .withColumn("nrm", sqrt(qdot(col("qe"), col("qe")).cast("double")))
-    }
+    SharedIndex.materialized(s, d, "knn_quant")(quantizedVecs(Tables.embeddings(s, d)))
 
   /** Every registry config derives its sketch from one pooled build at
     * this band count: plane weights depend only on the absolute plane
@@ -935,6 +861,18 @@ object SimilarityQueries {
       d: String): org.apache.spark.sql.DataFrame =
     sketchPool(s, d, r = 8)
 
+  /** The directed approximate-kNN edge set `(vec_a, vec_b, sim)`:
+    * banded-LSH candidates, exact quantized cosine on candidates only,
+    * top-`k` per source node by (sim desc, vec_b) — as a shared
+    * materialized artifact ([[SharedIndex.materialized]], keyed by
+    * (sf-dir, bands, r, k)). SEVEN queries per config family consume
+    * the same edges (graph ×2, density, diverse ×2, triangles ×2) —
+    * an ANN index is an artifact a production pipeline builds once
+    * and probes everywhere, not a plan fragment re-derived per query.
+    * The edge set is ≤ N·k rows (narrow), so the parquet is small;
+    * Bench builds both configs explicitly as `knn_build_*` metric
+    * lines so per-query numbers are warm-artifact.
+    */
   private[graft] def knnEdgesDf(s: org.apache.spark.sql.SparkSession, d: String,
       bands: Int, r: Int, k: Int): org.apache.spark.sql.DataFrame =
     SharedIndex.materialized(s, d, s"knn_edges_b${bands}_r${r}_k$k") {
@@ -969,7 +907,7 @@ object SimilarityQueries {
     val b = e.select(col("vec_id").as("vec_b"), col("qe").as("qe_b"), col("nrm").as("nrm_b"))
     cand.join(a, "vec_a").join(b, "vec_b")
       .select(col("vec_a"), col("vec_b"),
-        (qdot(col("qe_a"), col("qe_b")) / (col("nrm_a") * col("nrm_b"))).as("sim"))
+        qcos(col("qe_a"), col("nrm_a"), col("qe_b"), col("nrm_b")).as("sim"))
       .withColumn("rn", row_number().over(
         Window.partitionBy("vec_a").orderBy(col("sim").desc, col("vec_b"))))
       .where(col("rn") <= k).drop("rn")
@@ -1306,18 +1244,10 @@ object SimilarityQueries {
 
   private[graft] def labelOutliersOf(emb: org.apache.spark.sql.DataFrame,
       k: Int): org.apache.spark.sql.DataFrame = {
-    val e = emb
-      .select(col("vec_id"), col("label"), quantize(col("embedding")).as("qe"))
-      .withColumn("nrm", sqrt(qdot(col("qe"), col("qe")).cast("double")))
-    val cmean = e.select(col("label"), posexplode(col("qe")).as(Seq("pos", "x")))
-      .groupBy("label", "pos").agg(round(avg(col("x"))).cast("long").as("v"))
-    val cents = cmean.groupBy("label")
-      .agg(transform(array_sort(collect_list(struct(col("pos"), col("v")))),
-        t => t.getField("v")).as("cent_qe"))
-      .withColumn("cent_nrm", sqrt(qdot(col("cent_qe"), col("cent_qe")).cast("double")))
-    e.join(broadcast(cents), "label")
+    val e = quantizedVecs(emb, "label")
+    e.join(broadcast(requantizedMean(e, "label")), "label")
       .select(col("label"), col("vec_id"),
-        (qdot(col("qe"), col("cent_qe")) / (col("nrm") * col("cent_nrm"))).as("centroid_sim"))
+        qcos(col("qe"), col("nrm"), col("cent_qe"), col("cent_nrm")).as("centroid_sim"))
       .withColumn("rk", row_number().over(
         Window.partitionBy("label").orderBy(col("centroid_sim").asc, col("vec_id"))).cast("long"))
       .where(col("rk") <= k)
@@ -1393,9 +1323,7 @@ object SimilarityQueries {
 
   private[graft] def labelPropOf(emb: org.apache.spark.sql.DataFrame,
       bands: Int, r: Int, k: Int): org.apache.spark.sql.DataFrame = {
-    val e = emb
-      .select(col("vec_id"), col("label"), quantize(col("embedding")).as("qe"))
-      .withColumn("nrm", sqrt(qdot(col("qe"), col("qe")).cast("double")))
+    val e = quantizedVecs(emb, "label")
     val bkt = bandedBuckets(e, bands, r)
     val qb = bkt.where(col("vec_id") % 5 === 0)
       .select(col("vec_id").as("vec_a"), col("band"), col("bucket"))
@@ -1411,7 +1339,7 @@ object SimilarityQueries {
       col("nrm").as("nrm_b"), col("label").as("nb_label"))
     val topk = cand.join(a, "vec_a").join(b, "vec_b")
       .select(col("vec_a"), col("vec_b"), col("true_label"), col("nb_label"),
-        (qdot(col("qe_a"), col("qe_b")) / (col("nrm_a") * col("nrm_b"))).as("sim"))
+        qcos(col("qe_a"), col("nrm_a"), col("qe_b"), col("nrm_b")).as("sim"))
       .withColumn("rn", row_number().over(
         Window.partitionBy("vec_a").orderBy(col("sim").desc, col("vec_b"))))
       .where(col("rn") <= k)
@@ -1477,15 +1405,14 @@ object SimilarityQueries {
 
   private[graft] def semanticDeconOf(emb: org.apache.spark.sql.DataFrame,
       tau: Double): org.apache.spark.sql.DataFrame = {
-    val e = emb.select(col("vec_id"), quantize(col("embedding")).as("qe"))
-      .withColumn("nrm", sqrt(qdot(col("qe"), col("qe")).cast("double")))
+    val e = quantizedVecs(emb)
     val train = e.where(col("vec_id") % 25 =!= 0)
       .select(col("vec_id"), col("qe").as("qe_a"), col("nrm").as("nrm_a"))
     val bench = e.where(col("vec_id") % 25 === 0)
       .select(col("vec_id").as("vec_b"), col("qe").as("qe_b"), col("nrm").as("nrm_b"))
     train.join(broadcast(bench))
       .select(col("vec_id"),
-        (qdot(col("qe_a"), col("qe_b")) / (col("nrm_a") * col("nrm_b"))).as("sim"))
+        qcos(col("qe_a"), col("nrm_a"), col("qe_b"), col("nrm_b")).as("sim"))
       .where(col("sim") >= tau)
       .groupBy("vec_id")
       .agg(count(lit(1)).as("n_bench_hits"), max(col("sim")).as("max_sim"))
@@ -1612,28 +1539,17 @@ object SimilarityQueries {
        |FROM (SELECT DISTINCT query_id FROM tf) q
        |LEFT JOIN h ON q.query_id = h.query_id""".stripMargin
 
-  /** Brute top-k at an arbitrary quantization scale, zero-norm
-    * vectors excluded — [[bruteTopKDf]]'s formulation with the scale
-    * as a parameter (×1000 reproduces its ranking on any vector the
-    * coarse filter keeps).
+  /** Brute top-k `(query_id, neighbor_id)` at an arbitrary
+    * quantization scale, zero-norm vectors excluded (×1000 reproduces
+    * [[bruteTopKDf]]'s ranking on any vector the coarse filter keeps).
     */
   private[graft] def bruteTopKAtScale(s: org.apache.spark.sql.SparkSession, d: String,
       every: Int, topK: Int, scale: Int): org.apache.spark.sql.DataFrame = {
     val e = Tables.embeddings(s, d)
-      .select(col("vec_id"),
-        transform(col("embedding"), x => round(x.cast("double") * scale).cast("long")).as("qe"))
-      .where(qdot(col("qe"), col("qe")) > 0)
-      .withColumn("nrm", sqrt(qdot(col("qe"), col("qe")).cast("double")))
-    val q = e.where(col("vec_id") % every === 0)
-      .select(col("vec_id").as("query_id"), col("qe").as("q_qe"), col("nrm").as("q_nrm"))
-    e.select(col("vec_id").as("neighbor_id"), col("qe").as("c_qe"), col("nrm").as("c_nrm"))
-      .join(broadcast(q), col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        (qdot(col("q_qe"), col("c_qe")) / (col("q_nrm") * col("c_nrm"))).as("sim"))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy("query_id").orderBy(col("sim").desc, col("neighbor_id"))))
-      .where(col("rn") <= topK)
-      .select("query_id", "neighbor_id")
+      .select(col("vec_id"), quantize(col("embedding"), scale).as("qe"))
+      .withColumn("nrm", qnorm(col("qe")))
+      .where(col("nrm") > 0)
+    bruteTopKOf(e, every, topK).select("query_id", "neighbor_id")
   }
 
   private[graft] def quantRecallOf(s: org.apache.spark.sql.SparkSession, d: String,
@@ -1797,8 +1713,7 @@ object SimilarityQueries {
     // countDistinct — identical value by construction). The corpus
     // centroid `g` still aggregates the unkeyed component explode of
     // ALL vectors, exactly as declared.
-    val e = Tables.embeddings(s, d)
-      .select(col("vec_id"), col("label"), quantize(col("embedding")).as("qe"))
+    val e = quantizedVecs(Tables.embeddings(s, d), "label")
     val keyedVecs =
       if (bySource)
         e.join(Tables.documents(s, d).select(col("doc_id"), col("source").as("grp")),
@@ -1946,8 +1861,7 @@ object SimilarityQueries {
 
   private def semanticSimDf(s: org.apache.spark.sql.SparkSession, d: String,
       bySource: Boolean): org.apache.spark.sql.DataFrame = {
-    val e = Tables.embeddings(s, d)
-      .select(col("vec_id"), col("label"), quantize(col("embedding")).as("qe"))
+    val e = quantizedVecs(Tables.embeddings(s, d), "label")
     val comp = e.select(col("vec_id"), col("label"),
       posexplode(col("qe")).as(Seq("i", "x")))
     val keyed =

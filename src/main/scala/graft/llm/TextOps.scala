@@ -141,12 +141,13 @@ object TextOps {
         coalesce(col("clean_text"), lit("")).as("clean_text"))
   }
 
-  /** Quantize a float embedding to exact longs (×1000) — integer dot
-    * products are order-insensitive and engine-reproducible, unlike
-    * float sums.
+  /** Quantize a float embedding to exact longs (×`scale`, the
+    * production ×1000 unless a recall audit asks for a coarser grid) —
+    * integer dot products are order-insensitive and engine-reproducible,
+    * unlike float sums.
     */
-  def quantize(embedding: Column): Column =
-    transform(embedding, x => round(x.cast("double") * 1000).cast("long"))
+  def quantize(embedding: Column, scale: Int = 1000): Column =
+    transform(embedding, x => round(x.cast("double") * scale).cast("long"))
 
   /** Exact integer dot product of two quantized vectors — native
     * codegen'd expression; the equivalent HOF
@@ -155,4 +156,24 @@ object TextOps {
     */
   def qdot(a: Column, b: Column): Column =
     org.apache.spark.sql.graft.QuantizedDot(a, b)
+
+  /** Norm of a quantized vector: the square root of its exact integer
+    * self-dot, computed once per vector and carried next to it.
+    */
+  def qnorm(qe: Column): Column = sqrt(qdot(qe, qe).cast("double"))
+
+  /** Quantized cosine — the embedding family's whole reproducibility
+    * contract: an exact integer dot and ONE double division by the
+    * carried norms, so every engine and partitioning gets the same
+    * IEEE double.
+    */
+  def qcos(qa: Column, na: Column, qb: Column, nb: Column): Column =
+    qdot(qa, qb) / (na * nb)
+
+  /** The quantized-vector frame `(vec_id, carry…, qe, nrm)` of an
+    * embeddings table — the scoring input of every similarity query.
+    */
+  def quantizedVecs(emb: DataFrame, carry: String*): DataFrame =
+    emb.select((col("vec_id") +: carry.map(col)) :+ quantize(col("embedding")).as("qe"): _*)
+      .withColumn("nrm", qnorm(col("qe")))
 }

@@ -84,6 +84,12 @@ object Compaction {
     */
   val LeaseName = "_maintainer.lock"
 
+  /** Size a compacted file aims at. */
+  val TargetFileBytes: Long = 128L * 1024 * 1024
+
+  /** Age past which a maintainer lease is presumed crashed. */
+  val LeaseStaleMs: Long = 15L * 60 * 1000
+
   /** Acquire the single-maintainer lease for `root`, or fail fast.
     *
     * The snapshot/retention protocol assumes ONE maintenance run at a
@@ -92,10 +98,11 @@ object Compaction {
     * That precondition used to live only in the scaladoc; this makes
     * it machine-checked: a create-exclusive lock file taken before any
     * destructive sweep, released on completion. A lease older than
-    * `staleMs` is presumed crashed and may be taken over — takeover is
-    * raced through an atomic rename so exactly one contender wins.
+    * [[LeaseStaleMs]] is presumed crashed and may be taken over —
+    * takeover is raced through an atomic rename so exactly one
+    * contender wins.
     */
-  private def acquireLease(root: Path, staleMs: Long): Path = {
+  private def acquireLease(root: Path): Path = {
     val lock = root.resolve(LeaseName)
     def tryCreate(): Boolean =
       try {
@@ -107,7 +114,7 @@ object Compaction {
     def claimStale(): Boolean =
       try {
         val age = System.currentTimeMillis() - Files.getLastModifiedTime(lock).toMillis
-        if (age < staleMs) false
+        if (age < LeaseStaleMs) false
         else {
           // Move the stale lease aside atomically: of N contenders,
           // only the one whose rename succeeds proceeds to re-create.
@@ -261,13 +268,10 @@ object Compaction {
   }
 
   /** Compact the flat parquet dataset at `dir` toward
-    * `targetFileBytes` per file. Returns (filesBefore, filesAfter);
+    * [[TargetFileBytes]] per file. Returns (filesBefore, filesAfter);
     * (0, 0) when the directory holds no live parquet files.
     */
-  def compactParquet(spark: SparkSession, dir: String,
-      targetFileBytes: Long = 128L * 1024 * 1024,
-      leaseStaleMs: Long = 15L * 60 * 1000): (Int, Int) = {
-    require(targetFileBytes > 0, s"targetFileBytes must be positive: $targetFileBytes")
+  def compactParquet(spark: SparkSession, dir: String): (Int, Int) = {
     val root = Paths.get(dir).toAbsolutePath.normalize
 
     val subdirs = list(root).filter(Files.isDirectory(_))
@@ -276,17 +280,16 @@ object Compaction {
         s"directory instead; compacting the root would corrupt partition discovery: " +
         subdirs.map(_.getFileName).mkString(", "))
 
-    val lease = acquireLease(root, leaseStaleMs)
+    val lease = acquireLease(root)
     try {
-      compactLocked(spark, dir, root, targetFileBytes)
+      compactLocked(spark, dir, root)
     } finally {
       Files.deleteIfExists(lease)
       ()
     }
   }
 
-  private def compactLocked(spark: SparkSession, dir: String, root: Path,
-      targetFileBytes: Long): (Int, Int) = {
+  private def compactLocked(spark: SparkSession, dir: String, root: Path): (Int, Int) = {
 
     // Recovery + retention sweep. (1) staging dirs of THIS dataset
     // orphaned by a hard crash (scoped by a name hash — never another
@@ -330,7 +333,7 @@ object Compaction {
       writeManifest(root, Manifest(live.map(_.getFileName.toString), Nil))
 
     val totalBytes = live.map(Files.size).sum
-    val targetFiles = math.max(1, math.ceil(totalBytes.toDouble / targetFileBytes).toInt)
+    val targetFiles = math.max(1, math.ceil(totalBytes.toDouble / TargetFileBytes).toInt)
 
     val runId = java.util.UUID.randomUUID().toString.take(8)
     val staging = Files.createTempDirectory(root.getParent, stagingPrefix(root))

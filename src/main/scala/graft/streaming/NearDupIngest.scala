@@ -429,10 +429,18 @@ object NearDupIngest {
   def ingestStats(spark: SparkSession, storeDir: String): DataFrame =
     readIdxOrEmpty(spark, statsDir(storeDir), statsSchema)
 
+  /** [[ingestAlarms]]' rate thresholds as exact fractions: at most
+    * 1/20 admitted is `low_admission`, all admitted `full_admission`.
+    */
+  private val MinRateNum = 1
+  private val MinRateDen = 20
+  private val MaxRateNum = 1
+  private val MaxRateDen = 1
+
   /** The alarm the funnel table exists to feed: per batch, the
     * admission rate plus a classified `alarm` column —
-    * `low_admission` (rate ≤ `minRate`: the batch is a re-crawl or an
-    * upstream replay storm), `full_admission` (rate ≥ `maxRate`: the
+    * `low_admission` (rate ≤ 1/20: the batch is a re-crawl or an
+    * upstream replay storm), `full_admission` (rate ≥ 1/1: the
     * dedup index stopped rejecting anything, i.e. it broke or was
     * deleted without a rebuild), null otherwise. Batches with fewer
     * than `minIn` units are never flagged — small batches legitimately
@@ -441,18 +449,16 @@ object NearDupIngest {
     * one evidence division. Pure per-row arithmetic over the
     * |batches|-row stats table — monitoring-cost, not corpus-cost.
     */
-  def ingestAlarms(stats: DataFrame, minRateNum: Int = 1, minRateDen: Int = 20,
-      maxRateNum: Int = 1, maxRateDen: Int = 1, minIn: Long = 100L): DataFrame = {
-    require(minRateDen > 0 && maxRateDen > 0 && minIn >= 0,
-      s"bad alarm thresholds: $minRateNum/$minRateDen, $maxRateNum/$maxRateDen, $minIn")
+  def ingestAlarms(stats: DataFrame, minIn: Long = 100L): DataFrame = {
+    require(minIn >= 0, s"bad alarm threshold: minIn = $minIn")
     stats.select(col("batch_id"), col("n_in"), col("n_admitted"))
       .withColumn("rate",
         col("n_admitted").cast("double") / nullif(col("n_in"), lit(0L)))
       .withColumn("alarm",
         when(col("n_in") >= minIn &&
-            col("n_admitted") * minRateDen <= col("n_in") * minRateNum, "low_admission")
+            col("n_admitted") * MinRateDen <= col("n_in") * MinRateNum, "low_admission")
           .when(col("n_in") >= minIn &&
-            col("n_admitted") * maxRateDen >= col("n_in") * maxRateNum, "full_admission"))
+            col("n_admitted") * MaxRateDen >= col("n_in") * MaxRateNum, "full_admission"))
   }
 
   private[graft] def alarmsDir(storeDir: String): String = storeDir + ".alarms"
@@ -476,11 +482,9 @@ object NearDupIngest {
     * resolves its path eagerly.
     */
   def startAlarmMonitor(spark: SparkSession, storeDir: String,
-      minRateNum: Int = 1, minRateDen: Int = 20,
-      maxRateNum: Int = 1, maxRateDen: Int = 1,
       minIn: Long = 100L): StreamingQuery = {
     val stats = spark.readStream.schema(statsSchema).parquet(statsDir(storeDir))
-    ingestAlarms(stats, minRateNum, minRateDen, maxRateNum, maxRateDen, minIn)
+    ingestAlarms(stats, minIn)
       .where(col("alarm").isNotNull)
       .writeStream
       .outputMode("append")

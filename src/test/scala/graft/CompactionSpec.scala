@@ -90,17 +90,13 @@ class CompactionSpec extends SparkSpec {
     assert(nAfter == 1 && spark.read.parquet(leaf).count() == n)
   }
 
-  test("empty directory and non-positive target size are rejected cleanly") {
+  test("empty directory is a clean no-op") {
     val dir = java.nio.file.Files.createTempDirectory("graftcompactempty").resolve("t")
     Files.createDirectories(dir)
     // zero parquet files: a no-op result, no staging dir leaked, no
     // schema-inference crash
     assert(Compaction.compactParquet(spark, dir.toString) == ((0, 0)))
     assert(stagingDirs(dir.toString).isEmpty)
-    val e = intercept[IllegalArgumentException] {
-      Compaction.compactParquet(spark, dir.toString, targetFileBytes = 0L)
-    }
-    assert(e.getMessage.contains("targetFileBytes"))
   }
 
   test("a crashed swap never bakes duplicates: un-committed generation files are GC'd") {

@@ -120,4 +120,11 @@ class SessionTuningSpec extends AnyFunSuite {
     assert(offenders.isEmpty,
       s"normalize through TextOps.normText / exactFp, not a spelled-out copy in: $offenders")
   }
+
+  test("one quantized-cosine kernel: qdot and the ×1000 quantization only in TextOps.scala") {
+    val offenders = Seq("qdot(", "quantize(col(\"embedding\"))")
+      .flatMap(mainSourcesWith(_, "TextOps.scala")).distinct
+    assert(offenders.isEmpty,
+      s"score through TextOps.quantizedVecs / qnorm / qcos, not a spelled-out copy in: $offenders")
+  }
 }
