@@ -3,8 +3,10 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.StringShingles
 import graft.{QueryDef, Tables}
 import graft.llm.TextOps._
+import graft.operators.Relational.packCumSum
 
 /** Corpus-curation operators for LLM training-data pipelines:
   * deterministic stratified sampling, token-budget shard packing, and
@@ -21,8 +23,9 @@ import graft.llm.TextOps._
   *     would funnel the entire corpus through one task. It is computed
   *     as the standard two-phase distributed prefix sum instead:
   *     range-partition by doc_id, running-sum locally per partition
-  *     (parallel), then add broadcast per-partition offsets — the same
-  *     shape as [[graft.operators.Relational.rangeRank]]'s distributed rank.
+  *     (parallel), then add broadcast per-partition offsets
+  *     ([[graft.operators.Relational.packCumSum]], whose offsets step
+  *     is the distributed rank's).
   */
 object CurationQueries {
 
@@ -80,44 +83,6 @@ object CurationQueries {
     * table has one row per partition (bounded by cluster config, not
     * data) so it broadcasts.
     */
-  /** The two-phase distributed prefix sum over `tokenCol` in
-    * `orderCols` order, generalized so both document-level packing
-    * (x_token_pack) and chunk-level packing (x_pipeline_e2e) share
-    * it. Adds `cum_tokens` = inclusive running sum; keeps the input
-    * columns.
-    *
-    * A LAZY localCheckpoint pins one pid assignment: the plan fans
-    * out into the window branch and the per-pid totals below, and
-    * without pinning, the branches agree only while exchange reuse
-    * dedupes the identical range shuffle (same hazard as
-    * Relational.rangeRank, same fix; regression-pinned with exchange
-    * reuse off in CurationSpec). Lazy (not eager) so that PLANNING
-    * the query stays free — blocks materialize once at the first
-    * action and every branch reads that snapshot. Unlike .cache(),
-    * the blocks are not registered in the session's CacheManager —
-    * the ContextCleaner releases them once the frame is unreferenced,
-    * so repeated calls in a long-lived session don't leak pinned
-    * storage.
-    */
-  private def packCumSum(df: DataFrame, orderCols: Seq[String],
-      tokenCol: String): DataFrame = {
-    val parted = df.repartitionByRange(orderCols.map(col): _*)
-      .withColumn("pid", spark_partition_id())
-      .localCheckpoint(eager = false)
-    val local = parted.withColumn("run",
-      sum(tokenCol).over(Window.partitionBy("pid").orderBy(orderCols.map(col): _*)))
-    val counts = local.groupBy("pid").agg(max("run").as("cnt"))
-    // running-sum offsets over the per-partition totals (one row per
-    // partition — bounded by cluster config; see Relational.rangeRank)
-    val offsets = counts.withColumn("off",
-      coalesce(sum("cnt").over(Window.orderBy("pid")
-        .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select("pid", "off")
-    local.join(broadcast(offsets), "pid")
-      .withColumn("cum_tokens", col("off") + col("run"))
-      .drop("pid", "run", "off")
-  }
-
   def tokenPackDf(s: SparkSession, d: String, budget: Long): DataFrame = {
     val toks = Tables.documents(s, d).select(
       col("doc_id"), size(tokens(col("text"))).cast("long").as("n_tokens"))
@@ -179,18 +144,16 @@ object CurationQueries {
   private def curatedDf(s: SparkSession, d: String): DataFrame = {
     val stop = Seq("the", "a")
     val t = Tables.documents(s, d).select(
-      col("doc_id"), col("lang"),
-      normText(col("text")).as("norm"),
-      tokens(col("text")).as("toks"))
+      col("doc_id"), col("lang"), col("text"), tokens(col("text")).as("toks"))
     val q = t.select(
-        col("doc_id"), col("lang"), col("norm"),
+        col("doc_id"), col("lang"), col("text"),
         size(col("toks")).cast("long").as("n_tokens"),
         ((size(array_distinct(col("toks"))).cast("double") / nullif(size(col("toks")), lit(0))) *
           (lit(1) - size(filter(col("toks"), x => x.isin(stop: _*))).cast("double") /
             nullif(size(col("toks")), lit(0)))).as("quality"))
       .where(col("n_tokens") >= 5 && col("quality") >= 0.3)
     val keep = q.withColumn("rn",
-        row_number().over(Window.partitionBy(md5(col("norm"))).orderBy("doc_id")))
+        row_number().over(Window.partitionBy(exactFp(col("text"))).orderBy("doc_id")))
       .where(col("rn") === 1)
     keep
       .select(col("doc_id"), col("lang"), col("n_tokens"), col("quality"),
@@ -369,6 +332,22 @@ object CurationQueries {
       .groupBy("doc_id").agg(count(lit(1)).as("n_contaminated_ngrams"))
   }
 
+  /** Hit starts shared by the span report and the cut: 1-based
+    * positions in TRAIN docs where a benchmark `gram`-gram begins —
+    * `posexplode` of the doc's [[StringShingles]], whose 0-based index
+    * is the gram's start token. The positional gram stream is pinned
+    * once (lazy localCheckpoint) and read by both the bench derivation
+    * and the probe side; building it is per-row, with no exchange.
+    */
+  private def deconHitStarts(docs: DataFrame, isBench: Column, gram: Int): DataFrame = {
+    val grams = docs
+      .select(col("doc_id"), posexplode(StringShingles(tokens(col("text")), gram)).as(Seq("i", "ng")))
+      .select(col("doc_id"), (col("i") + 1).cast("long").as("pos"), col("ng"))
+      .localCheckpoint(eager = false)
+    val bench = grams.where(isBench).select(col("ng")).distinct()
+    grams.where(!isBench).join(bench, "ng").select("doc_id", "pos")
+  }
+
   /** Span-level decontamination — WHERE the benchmark leaks into each
     * training document: every maximal token range covered by
     * benchmark-matching `gram`-gram occurrences, as (span_start,
@@ -392,26 +371,8 @@ object CurationQueries {
     * pinned once (lazy localCheckpoint) and read by both the bench
     * derivation and the probe; the merge is one shuffle by doc_id.
     */
-  /** Hit starts shared by the span report and the cut: 1-based
-    * positions in TRAIN docs where a benchmark `gram`-gram begins.
-    * The positional gram stream is pinned once (lazy localCheckpoint)
-    * and read by both the bench derivation and the probe side.
-    */
-  private def deconHitStarts(frame: DataFrame, isBench: Column, gram: Int): DataFrame = {
-    val w = Window.partitionBy("doc_id").orderBy("pos")
-    val parts = col("tok") +: (1 until gram).map(o => lead("tok", o).over(w))
-    val grams = frame
-      .withColumn("ng", concat_ws(" ", parts: _*))
-      .withColumn("gram_complete", lead("tok", gram - 1).over(w).isNotNull)
-      .where(col("gram_complete"))
-      .select(col("doc_id"), (col("pos") + 1).cast("long").as("pos"), col("ng"))
-      .localCheckpoint(eager = false)
-    val bench = grams.where(isBench).select(col("ng")).distinct()
-    grams.where(!isBench).join(bench, "ng").select("doc_id", "pos")
-  }
-
-  def deconSpansFrom(frame: DataFrame, isBench: Column, gram: Int): DataFrame = {
-    val hot = deconHitStarts(frame, isBench, gram)
+  def deconSpansDf(docs: DataFrame, isBench: Column, gram: Int): DataFrame = {
+    val hot = deconHitStarts(docs, isBench, gram)
     val byDoc = Window.partitionBy("doc_id").orderBy("pos")
     // covered frontier BEFORE this start; a start past frontier+1 opens
     // a new span (overlap-or-touch merges, strictly-past splits)
@@ -429,12 +390,6 @@ object CurationQueries {
         (col("span_end") - col("span_start") + 1).as("span_tokens"),
         col("n_grams"))
   }
-
-  /** [[deconSpansFrom]] over ad-hoc docs (tests); the registry entry
-    * reads the shared materialized token frame instead.
-    */
-  def deconSpansDf(docs: DataFrame, isBench: Column, gram: Int): DataFrame =
-    deconSpansFrom(TextOps.tokenHashFrame(docs), isBench, gram)
 
   val deconSpans: QueryDef = QueryDef.sql(
     "x_decon_spans",
@@ -466,7 +421,7 @@ object CurationQueries {
       |       max(pos) + 7 - min(pos) + 1 AS span_tokens,
       |       CAST(count(*) AS BIGINT) AS n_grams
       |FROM i GROUP BY doc_id, island""".stripMargin) { (s, d) =>
-    deconSpansFrom(TextQueries.tokFrame(s, d), col("doc_id") % 25 === 0, gram = 8)
+    deconSpansDf(Tables.documents(s, d), col("doc_id") % 25 === 0, gram = 8)
   }
 
   /** Surgical decontamination CUT — the output stage the span report
@@ -482,7 +437,7 @@ object CurationQueries {
     */
   def deconCutFrom(docs: DataFrame, frame: DataFrame, isBench: Column,
       gram: Int): DataFrame = {
-    val covered = deconHitStarts(frame, isBench, gram)
+    val covered = deconHitStarts(docs, isBench, gram)
       .select(col("doc_id"), explode(sequence(col("pos"), col("pos") + (gram - 1))).as("p"))
       .distinct()
     TextOps.cutCoveredPositions(docs.where(!isBench), frame.where(!isBench), covered)
@@ -833,7 +788,7 @@ object CurationQueries {
     // see TextOps.shinglePostings)
     val grams = docs
       .select(col("doc_id"),
-        explode(org.apache.spark.sql.graft.StringShingles(tokens(col("text")), 2))
+        explode(StringShingles(tokens(col("text")), 2))
           .as("gram"))
     // top-1 selection as an ARGMIN aggregate over struct(-cnt, gram)
     // rather than a row_number window: the rank formulation needed the
@@ -967,10 +922,8 @@ object CurationQueries {
         minWords = 20, maxWords = 100000, minDistinct = 0.30, maxTop2 = 0.10)
       .where(col("kept") === 1).select("doc_id")
     val first = docs.join(kept, "doc_id")
-      .select(col("doc_id"),
-        normText(col("text")).as("norm"))
       .withColumn("rn",
-        row_number().over(Window.partitionBy(md5(col("norm"))).orderBy("doc_id")))
+        row_number().over(Window.partitionBy(exactFp(col("text"))).orderBy("doc_id")))
       .where(col("rn") === 1)
       .select("doc_id")
     val chunks = chunkDf(docs.join(first, "doc_id"))
@@ -1521,14 +1474,13 @@ object CurationQueries {
   private[graft] def sourceFunnelDf(s: SparkSession, d: String, minWords: Int,
       maxWords: Int, minDistinct: Double, maxTop2: Double): DataFrame = {
     val docs = Tables.documents(s, d)
-    val tok = docs.select(col("doc_id"), col("source"),
-      size(tokens(col("text"))).cast("long").as("n"),
-      normText(col("text")).as("norm"))
+    val tok = docs.select(col("doc_id"), col("source"), col("text"),
+      size(tokens(col("text"))).cast("long").as("n"))
     val kept = gopherFilterDf(docs, minWords, maxWords, minDistinct, maxTop2)
       .where(col("kept") === 1).select("doc_id")
     val qd = tok.join(kept, "doc_id")
     val dd = qd.withColumn("rn",
-        row_number().over(Window.partitionBy(md5(col("norm"))).orderBy("doc_id")))
+        row_number().over(Window.partitionBy(exactFp(col("text"))).orderBy("doc_id")))
       .where(col("rn") === 1)
     def stage(df: DataFrame, name: String): DataFrame =
       df.groupBy("source").agg(count(lit(1)).as("n_docs"), sum("n").as("n_tokens"))

@@ -1,6 +1,7 @@
 package graft.llm
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 
 /** Shared text/embedding column helpers for the LLM-pipeline operators.
@@ -29,18 +30,9 @@ object TextOps {
 
   /** (doc_id, shingle) postings — the inverted-index representation all
     * set-similarity ops run on: one row per distinct (doc, word
-    * k-shingle).
-    *
-    * Built with the native [[org.apache.spark.sql.graft.StringShingles]]
-    * expression (optimization round): the previous posexplode + window
-    * `lead` shape was codegen'd but its Window.partitionBy(doc_id)
-    * forced a hashpartitioning exchange + per-doc sort of the whole
-    * token stream that had just been produced per row; array
-    * higher-order functions would avoid the exchange but run
-    * interpreted (measured ~20× slower — the reason the window shape
-    * existed). The native expression is per-row, codegen'd, and
-    * exchange-free; identical shingle strings (StringShinglesSpec pins
-    * parity against the window formulation).
+    * k-shingle), the shingles from
+    * [[org.apache.spark.sql.graft.StringShingles]] (per-row, no
+    * exchange).
     */
   def shinglePostings(docs: DataFrame, k: Int): DataFrame =
     docs.select(col("doc_id"),
@@ -72,7 +64,7 @@ object TextOps {
     * `(th, tp)` is the composable hash state of the polynomial fold:
     * for strings s, t — `f(s ++ t) = (f(s)·31^|t| + f(t)) mod P` — so
     * any k-token gram's hash can be rebuilt from per-token states with
-    * pure modular arithmetic (see [[gramHash]]), bit-identical to
+    * pure modular arithmetic (see [[gramHashes]]), bit-identical to
     * folding the gram's characters directly. The char-level fold (the
     * one interpreted HOF in the family) then runs ONCE per token,
     * instead of once per (gram config × window position × gram width)
@@ -100,15 +92,30 @@ object TextOps {
     * `concat_ws(" ", tok₀ … tok₉)`. All intermediate products stay
     * below 2⁶³: `(acc·31+32) < 3.2e10` is reduced mod P (< 1.001e9)
     * before multiplying by `tp < P`, so the product is < 1.1e18.
-    * Rows without `gram` complete tokens yield garbage here — callers
-    * must filter on `lead(th, gram-1) IS NOT NULL` (a complete-window
-    * guard), as the char-fold formulation did via concat_ws nulls.
+    * Rows without `gram` complete tokens yield garbage here, so the
+    * only caller, [[gramHashes]], keeps complete windows alone.
     */
-  def gramHash(byDoc: org.apache.spark.sql.expressions.WindowSpec, gram: Int): Column =
+  private def gramHash(byDoc: WindowSpec, gram: Int): Column =
     (1 until gram).foldLeft(col("th")) { (acc, i) =>
       (((acc * 31 + 32) % HashMod) * lead("tp", i).over(byDoc) % HashMod
         + lead("th", i).over(byDoc)) % HashMod
     }
+
+  /** `(doc_id, pos, h)`: the hash of every COMPLETE `gram`-token window
+    * of a [[tokenHashFrame]], `pos` its 0-based start — the one gram
+    * hash of the winnowing / repeated-span / cut family. Keeps position
+    * and duplicates (winnowing needs the stream); a window is complete
+    * where `lead(th, gram-1)` exists, as the char-fold formulation's
+    * `concat_ws` nulls made it. One shuffle by doc_id.
+    */
+  def gramHashes(frame: DataFrame, gram: Int): DataFrame = {
+    val byDoc = Window.partitionBy("doc_id").orderBy("pos")
+    frame
+      .withColumn("h", gramHash(byDoc, gram))
+      .withColumn("gram_complete", lead("th", gram - 1).over(byDoc).isNotNull)
+      .where(col("gram_complete"))
+      .select(col("doc_id"), col("pos"), col("h"))
+  }
 
   /** Drop `covered` (doc_id, p) token positions from a token frame and
     * rebuild the surviving stream per document — the shared back half

@@ -3,6 +3,7 @@ package graft.llm
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.StringShingles
 import graft.{QueryDef, Tables}
 import graft.llm.TextOps._
 
@@ -217,9 +218,8 @@ object TextQueries {
     * family beyond x_text_stats's token ratios: duplicate-3-gram
     * ratio (boilerplate/repetition detector), bullet-line fraction
     * and longest line (format signals for list/table-heavy pages).
-    * Purely per-row (3-grams built by slicing the token array in
-    * place, lines by splitting on newline): zero shuffle, fan-out
-    * bounded by document length.
+    * Purely per-row (3-grams by [[StringShingles]], lines by splitting
+    * on newline): zero shuffle, fan-out bounded by document length.
     */
   val qualitySignals: QueryDef = QueryDef.sql(
     "x_quality_signals",
@@ -245,13 +245,7 @@ object TextQueries {
     val t = Tables.documents(s, d).select(
       col("doc_id"), tokens(col("text")).as("toks"),
       split(col("text"), "\n").as("lines"))
-    // DuckDB's generate_series(1, n) is empty for n < 1; Spark's
-    // sequence would count DOWN, so guard the short-document case.
-    val g = t.select(col("doc_id"), col("lines"),
-      when(size(col("toks")) >= 3,
-        transform(sequence(lit(1), size(col("toks")) - 2),
-          i => array_join(slice(col("toks"), i, lit(3)), " ")))
-        .otherwise(array().cast("array<string>")).as("grams"))
+    val g = t.select(col("doc_id"), col("lines"), StringShingles(col("toks"), 3).as("grams"))
     g.select(
       col("doc_id"),
       size(col("grams")).cast("long").as("n_3grams"),
@@ -264,26 +258,6 @@ object TextQueries {
       array_max(transform(col("lines"), l => length(l))).cast("long").as("max_line_len"))
   }
 
-  /** Winnowing fingerprints (Schleimer/Wilkerson/Aiken's MOSS
-    * scheme): hash every token 3-gram, slide a 4-hash window, keep
-    * each window's minimum — the guarantee is that any shared
-    * substring of ≥ window+gram tokens contributes at least one
-    * COMMON selected fingerprint, which makes this the robust
-    * substring-level dedup/plagiarism primitive (full-document
-    * fingerprints miss partial overlap; winnowing bounds the
-    * fingerprint density at ~2/(window+1) per token instead of
-    * keeping every gram). Ties select the same VALUE under any
-    * tie-break rule, so emitting the distinct selected-value set is
-    * engine-independent.
-    *
-    * The Spark side is the posexplode + window formulation (grams via
-    * `lead` like [[TextOps.shinglePostings]], window minima via a
-    * 4-row frame) — array HOFs nested three deep (transform of
-    * aggregate of split) run interpreted and measured minutes at
-    * sf0.1, while this shape keeps everything but the single per-gram
-    * char fold in codegen/WindowExec. One shuffle by doc_id; window
-    * state is 4 rows.
-    */
   /** Winnowing oracle CTE chain at a given (window, gram) — shared by
     * the fingerprint queries and the pairs query, so the
     * parameterization cannot drift between engine and oracle. Ends
@@ -317,20 +291,17 @@ object TextQueries {
     s"""WITH ${winnowCtes(win, gram)}
        |SELECT doc_id, fingerprint FROM wfp""".stripMargin
 
-  /** Shared token-hash frame for the winnowing / repeated-span / cut /
-    * decon family: `(doc_id, pos, tok, th, tp)` per
+  /** Shared token-hash frame for the winnowing / repeated-span / cut
+    * family: `(doc_id, pos, tok, th, tp)` per
     * [[TextOps.tokenHashFrame]], materialized once per (JVM, sf-dir).
-    * Consumers come in two kinds: the HASH consumers (winnow w4g3 ×2,
-    * w5g4; repeated-spans and exact-substring cut at g6/g8) rebuild
-    * their gram hashes from the per-token states with pure codegen'd
-    * modular arithmetic ([[TextOps.gramHash]]) — bit-identical to
-    * char-folding each gram string, which is what their DuckDB oracles
-    * still do, so those oracle twins pin the composition — while the
-    * STRING consumers (`x_decon_spans`/`x_decon_cut` via
-    * `CurationQueries.deconHitStarts`) rebuild gram *strings* with
-    * `concat_ws` over the `tok` column and join the eval suite's gram
-    * set on the strings themselves (a contamination hit must match the
-    * eval text, not a hash). Bench builds the frame as the `tok_build`
+    * The winnow (w4g3 ×2, w5g4), repeated-span and exact-substring cut
+    * (g6/g8) queries take their gram hashes from it through
+    * [[TextOps.gramHashes]] — bit-identical to char-folding each gram
+    * string, which is what their DuckDB oracles still do, so those
+    * oracle twins pin the composition. The cuts (`x_exact_substr_cut*`,
+    * `x_decon_cut`) also rebuild their cleaned streams from its `tok`
+    * column. No consumer builds a gram STRING from it: those come from
+    * [[StringShingles]]. Bench builds the frame as the `tok_build`
     * line.
     */
   private[graft] def tokFrame(s: org.apache.spark.sql.SparkSession,
@@ -338,19 +309,30 @@ object TextQueries {
     SharedIndex.materialized(s, d, "tokhash")(
       TextOps.tokenHashFrame(Tables.documents(s, d)))
 
-  /** The winnowing dataflow at (window, gram) over a token-hash frame. */
+  /** Winnowing fingerprints (Schleimer/Wilkerson/Aiken's MOSS
+    * scheme): hash every token `gram`-gram, slide a `win`-hash
+    * window, keep each window's minimum — the guarantee is that any shared
+    * substring of ≥ window+gram tokens contributes at least one
+    * COMMON selected fingerprint, which makes this the robust
+    * substring-level dedup/plagiarism primitive (full-document
+    * fingerprints miss partial overlap; winnowing bounds the
+    * fingerprint density at ~2/(window+1) per token instead of
+    * keeping every gram). Ties select the same VALUE under any
+    * tie-break rule, so emitting the distinct selected-value set is
+    * engine-independent.
+    *
+    * The Spark side is the gram-hash stream of [[TextOps.gramHashes]]
+    * with window minima over a `win`-row frame — array HOFs nested
+    * three deep (transform of aggregate of split) run interpreted and
+    * measured minutes at sf0.1, while this shape stays in
+    * codegen/WindowExec. One shuffle by doc_id; window state is `win`
+    * rows.
+    */
   private def winnowFrom(frame: org.apache.spark.sql.DataFrame,
       win: Int, gram: Int): org.apache.spark.sql.DataFrame = {
     require(win >= 2 && gram >= 2, s"degenerate winnowing config ($win, $gram)")
-    import org.apache.spark.sql.expressions.Window
     val byDoc = Window.partitionBy("doc_id").orderBy("pos")
-    // (doc, pos, gram-hash) rows composed from per-token hash state —
-    // keeping position and duplicates (winnowing needs the stream)
-    val hashes = frame
-      .withColumn("h", TextOps.gramHash(byDoc, gram))
-      .withColumn("gram_complete", lead("th", gram - 1).over(byDoc).isNotNull)
-      .where(col("gram_complete"))
-      .select(col("doc_id"), col("pos"), col("h"))
+    val hashes = gramHashes(frame, gram)
     // full `win`-hash windows: min over [current, current+win-1], valid
     // only where the window is complete
     val wins = hashes
@@ -444,14 +426,9 @@ object TextQueries {
     */
   def ngramTopkOf(docs: org.apache.spark.sql.DataFrame, n: Int, k: Int): org.apache.spark.sql.DataFrame = {
     require(n >= 2 && k >= 1, s"degenerate ngram-topk config ($n, $k)")
-    import org.apache.spark.sql.expressions.Window
     val g = docs
       .select(col("lang"), tokens(col("text")).as("toks"))
-      .select(col("lang"),
-        explode(when(size(col("toks")) >= n,
-          transform(sequence(lit(1), size(col("toks")) - (n - 1)),
-            i => array_join(slice(col("toks"), i, lit(n)), " ")))
-          .otherwise(array().cast("array<string>"))).as("gram"))
+      .select(col("lang"), explode(StringShingles(col("toks"), n)).as("gram"))
     val c = g.groupBy("lang", "gram").agg(count(lit(1)).as("cnt"))
     // filter on the raw row_number BEFORE any cast so the rank-limit
     // pattern stays recognizable to the WindowGroupLimit rewrite
@@ -488,6 +465,24 @@ object TextQueries {
     ngramTopkOf(Tables.documents(s, d), n = 3, k = 5)
   }
 
+  /** The shared front half of exact-substring dedup: (doc_id, pos)
+    * start positions of every `gram`-token window whose total corpus
+    * occurrence count is ≥ `minOcc`. Postings are pinned once via lazy
+    * localCheckpoint and read by both the count and the join back;
+    * the count side contributes ONE row per hash, so occurrence rows
+    * fan out 1:1 regardless of how common a gram is.
+    */
+  private def repeatedStartsFrom(frame: org.apache.spark.sql.DataFrame, gram: Int, minOcc: Int): org.apache.spark.sql.DataFrame = {
+    require(gram >= 2 && minOcc >= 2, s"degenerate repeated-span config ($gram, $minOcc)")
+    val occ = gramHashes(frame, gram)
+      // 1-based token positions, matching the oracle's generate_series
+      .select(col("doc_id"), (col("pos") + 1).cast("long").as("pos"), col("h"))
+      .localCheckpoint(eager = false)
+    val rep = occ.groupBy("h").agg(count(lit(1)).as("n_occ"))
+      .where(col("n_occ") >= minOcc).select("h")
+    occ.join(rep, "h").select("doc_id", "pos")
+  }
+
   /** Repeated-span mining — the exact-substring dedup primitive
     * (find every maximal token run that occurs more than once
     * anywhere in the corpus, including twice within one document;
@@ -503,40 +498,11 @@ object TextQueries {
     * count side, so occurrence rows fan out 1:1 — no pair blowup no
     * matter how common a gram is (contrast doc×doc). The islands pass
     * is one shuffle by doc_id + a rank window, the sessionize shape.
-    * Postings are pinned once via lazy localCheckpoint and read by
-    * both the count and the join.
     */
-  /** The shared front half of exact-substring dedup: (doc_id, pos)
-    * start positions of every `gram`-token window whose total corpus
-    * occurrence count is ≥ `minOcc`. Postings are pinned once via lazy
-    * localCheckpoint and read by both the count and the join back;
-    * the count side contributes ONE row per hash, so occurrence rows
-    * fan out 1:1 regardless of how common a gram is.
-    */
-  private def repeatedStartsFrom(frame: org.apache.spark.sql.DataFrame, gram: Int, minOcc: Int): org.apache.spark.sql.DataFrame = {
-    require(gram >= 2 && minOcc >= 2, s"degenerate repeated-span config ($gram, $minOcc)")
-    import org.apache.spark.sql.expressions.Window
-    val byDoc = Window.partitionBy("doc_id").orderBy("pos")
-    val occ = frame
-      .withColumn("h", TextOps.gramHash(byDoc, gram))
-      .withColumn("gram_complete", lead("th", gram - 1).over(byDoc).isNotNull)
-      .where(col("gram_complete"))
-      // 1-based token positions, matching the oracle's generate_series
-      .select(col("doc_id"), (col("pos") + 1).cast("long").as("pos"), col("h"))
-      .localCheckpoint(eager = false)
-    val rep = occ.groupBy("h").agg(count(lit(1)).as("n_occ"))
-      .where(col("n_occ") >= minOcc).select("h")
-    occ.join(rep, "h").select("doc_id", "pos")
-  }
-
-  private def repeatedStarts(docs: org.apache.spark.sql.DataFrame, gram: Int, minOcc: Int): org.apache.spark.sql.DataFrame =
-    repeatedStartsFrom(TextOps.tokenHashFrame(docs), gram, minOcc)
-
   def repeatedSpansOf(docs: org.apache.spark.sql.DataFrame, gram: Int, minOcc: Int): org.apache.spark.sql.DataFrame =
     repeatedSpansFrom(TextOps.tokenHashFrame(docs), gram, minOcc)
 
   private def repeatedSpansFrom(frame: org.apache.spark.sql.DataFrame, gram: Int, minOcc: Int): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val hot = repeatedStartsFrom(frame, gram, minOcc)
     val isl = hot.withColumn("island",
       col("pos") - row_number().over(Window.partitionBy("doc_id").orderBy("pos")))
@@ -551,7 +517,7 @@ object TextQueries {
 
   /** Oracle CTE chain shared by the span and cut queries, ending at
     * `r` = the repeated (doc_id, pos) start set — the SQL twin of
-    * [[repeatedStarts]], parameterized identically so engine and
+    * [[repeatedStartsFrom]], parameterized identically so engine and
     * oracle cannot drift.
     */
   private def repeatedCtes(gram: Int, minOcc: Int): String =
@@ -602,7 +568,7 @@ object TextQueries {
     * (doc_id, n_tokens, n_kept, clean_text) for every document;
     * fully-duplicated documents keep 0 tokens and an empty string.
     *
-    * Scale shape on top of [[repeatedStarts]]: coverage explodes each
+    * Scale shape on top of [[repeatedStartsFrom]]: coverage explodes each
     * repeated start into its `gram` covered positions (constant
     * fan-out, then distinct), the kept set is one anti-join on
     * (doc_id, pos), and reconstruction is a per-doc sort+join of the
@@ -673,7 +639,6 @@ object TextQueries {
     */
   def tfidfTopkOf(docs: org.apache.spark.sql.DataFrame, k: Int): org.apache.spark.sql.DataFrame = {
     require(k >= 1, s"degenerate tfidf config (k=$k)")
-    import org.apache.spark.sql.expressions.Window
     val tf = docs
       .select(col("doc_id"), explode(tokens(col("text"))).as("term"))
       .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
@@ -736,7 +701,6 @@ object TextQueries {
     */
   def skipgramTopkOf(docs: org.apache.spark.sql.DataFrame, w: Int, k: Int): org.apache.spark.sql.DataFrame = {
     require(w >= 1 && k >= 1, s"degenerate skipgram config (w=$w, k=$k)")
-    import org.apache.spark.sql.expressions.Window
     val pairs = docs.select(tokens(col("text")).as("toks"))
       .select(posexplode(col("toks")).as(Seq("pos0", "tok_a")), col("toks"))
       .select(col("tok_a"),
@@ -1068,11 +1032,7 @@ object TextQueries {
     val toks = docs.select(col("lang"), tokens(col("text")).as("toks"))
     val uni = toks.select(col("lang"), explode(col("toks")).as("tok"))
       .groupBy("lang", "tok").agg(count(lit(1)).as("cf"))
-    val grams = toks.select(col("lang"),
-      explode(when(size(col("toks")) >= 2,
-        transform(sequence(lit(1), size(col("toks")) - 1),
-          i => concat_ws(" ", element_at(col("toks"), i), element_at(col("toks"), i + 1))))
-        .otherwise(array().cast("array<string>"))).as("gram"))
+    val grams = toks.select(col("lang"), explode(StringShingles(col("toks"), 2)).as("gram"))
     val c = grams.groupBy("lang", "gram").agg(count(lit(1)).as("n_pair"))
     // B counts ALL bigram positions, so it aggregates c before the floor
     val btot = c.groupBy("lang").agg(sum("n_pair").as("n_bigrams"))

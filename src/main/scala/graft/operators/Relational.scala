@@ -157,16 +157,48 @@ object Relational {
     val local = parted.sortWithinPartitions(key)
       .withColumn("lr",
         (monotonically_increasing_id().bitwiseAND(lit((1L << 33) - 1)) + 1L).as("lr"))
-    val counts = local.groupBy("pid").agg(max("lr").as("cnt")) // cnt = max lr
-    // offset(p) = Σ cnt over pid < p: one running-sum window over the
-    // one-row-per-partition counts, a constant-size single task (a
-    // triangular self-join cost three extra codegen units and a
-    // broadcast job for the same arithmetic).
+    val (withOff, counts) = withPartitionOffsets(local, "lr")
+    (withOff.select(col(key), (col("off") + col("lr")).as(rankCol)), counts)
+  }
+
+  /** The two-phase distributed prefix sum over `tokenCol` in
+    * `orderCols` order (document-level packing in x_token_pack,
+    * chunk-level packing in x_pipeline_e2e). Adds `cum_tokens` = the
+    * inclusive running sum and keeps the input columns. Same shape as
+    * [[rangeRank]]: range-partition, run locally per partition, add
+    * the broadcast per-partition offsets.
+    *
+    * The lazy localCheckpoint pins one pid assignment, for the same
+    * reason as in [[rangeRank]] (regression-pinned with exchange reuse
+    * off in CurationSpec). The local step keeps its window: the
+    * running sum needs the rows in order and a window per partition.
+    */
+  def packCumSum(df: DataFrame, orderCols: Seq[String], tokenCol: String): DataFrame = {
+    val parted = df.repartitionByRange(orderCols.map(col): _*)
+      .withColumn("pid", spark_partition_id())
+      .localCheckpoint(eager = false)
+    val local = parted.withColumn("run",
+      sum(tokenCol).over(Window.partitionBy("pid").orderBy(orderCols.map(col): _*)))
+    withPartitionOffsets(local, "run")._1
+      .withColumn("cum_tokens", col("off") + col("run"))
+      .drop("pid", "run", "off")
+  }
+
+  /** The offsets step of both range scans: per-partition totals
+    * `(pid, cnt = max(run))` and `local` joined to the broadcast
+    * offset `off` = Σ cnt over pid < p — one running-sum window over
+    * the one-row-per-partition counts, a constant-size single task (a
+    * triangular self-join cost three extra codegen units and a
+    * broadcast job for the same arithmetic).
+    *
+    * @return (local with `off`; counts)
+    */
+  private def withPartitionOffsets(local: DataFrame, run: String): (DataFrame, DataFrame) = {
+    val counts = local.groupBy("pid").agg(max(run).as("cnt"))
     val offsets = counts.withColumn("off",
       coalesce(sum("cnt").over(Window.orderBy("pid")
         .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
       .select("pid", "off")
-    (local.join(broadcast(offsets), "pid")
-      .select(col(key), (col("off") + col("lr")).as(rankCol)), counts)
+    (local.join(broadcast(offsets), "pid"), counts)
   }
 }

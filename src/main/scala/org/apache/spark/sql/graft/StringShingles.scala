@@ -15,23 +15,19 @@ import org.apache.spark.unsafe.types.UTF8String
   * `concat_ws(" ", toks[i], …, toks[i+k-1])`; an array with fewer than
   * `k` tokens yields an empty result.
   *
-  * Rationale (optimization round): every gram-construction site
-  * previously posexploded the token array and re-assembled windows
-  * with `lead(tok, o).over(Window.partitionBy(doc_id).orderBy(pos))` —
-  * correct and codegen'd, but the window forces a
-  * hashpartitioning(doc_id) EXCHANGE plus a per-doc sort of the whole
-  * token stream even though the tokens were just produced per row.
-  * (Array higher-order functions would avoid the exchange but run
-  * interpreted — the measured ~20× regression that motivated the
-  * window shape originally.) This expression is the third option:
-  * per-row, whole-stage-codegen'd, no exchange and no lambda
-  * interpretation.
+  * The one place a word-gram string is built: shingle postings,
+  * decontamination's positional grams, the quality signals, the n-gram
+  * and PMI top-k, the Gopher top-2-gram and the near-dup ingest all
+  * call it. It is per-row and whole-stage-codegen'd: a `lead(tok, o)`
+  * window over posexploded tokens would force a hashpartitioning(doc_id)
+  * exchange plus a per-doc sort of the whole token stream, and array
+  * higher-order functions run interpreted (measured ~20× slower).
   *
-  * Semantics match the window formulation exactly: the same strings in
-  * the same per-document order (callers explode + distinct or
-  * aggregate, so intra-doc order is immaterial anyway), incomplete
-  * trailing windows dropped — and match `concat_ws`'s null handling
-  * (null elements are skipped; the tokenizer never produces one).
+  * Element `i` is the window that starts at token `i`, so `posexplode`
+  * yields each gram with its 0-based start; incomplete trailing
+  * windows are dropped (StringShinglesSpec pins (doc_id, pos, shingle)
+  * against the window formulation). Null elements are skipped, as in
+  * `concat_ws`; the tokenizer never produces one.
   * A null array yields null.
   */
 case class StringShingles(child: Expression, k: Int)

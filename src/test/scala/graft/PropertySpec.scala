@@ -139,12 +139,12 @@ class PropertySpec extends SparkSpec {
   }
 
   test("composed gram hash equals the direct char fold over the gram string") {
-    // The winnow/span family now rebuilds k-gram hashes from per-token
-    // (th, tp) states (TextOps.gramHash); this pins the algebraic
+    // The winnow/span family rebuilds k-gram hashes from per-token
+    // (th, tp) states (TextOps.gramHashes); this pins the algebraic
     // identity f(s ++ " " ++ t) = ((f(s)·31+32)·31^|t| + f(t)) mod P
     // against the character-level fold the DuckDB oracles still use —
-    // including long tokens (overflow headroom) and digit runs.
-    import org.apache.spark.sql.expressions.Window
+    // including long tokens (overflow headroom) and digit runs — and
+    // that exactly the complete windows come back.
     val genTok = Gen.choose(1, 24).flatMap(n =>
       Gen.listOfN(n, Gen.oneOf(('a' to 'z') ++ ('0' to '9'))).map(_.mkString))
     val genDoc = Gen.choose(2, 10).flatMap(n => Gen.listOfN(n, genTok))
@@ -152,12 +152,8 @@ class PropertySpec extends SparkSpec {
       Prop(docsToks.forall(_.size >= gram)) ==> Prop {
         val docs = docsToks.zipWithIndex.map { case (ts, i) =>
           (i.toLong + 1, "en", ts.mkString(" ")) }.toDF("doc_id", "lang", "text")
-        val byDoc = Window.partitionBy("doc_id").orderBy("pos")
-        val composed = graft.llm.TextOps.tokenHashFrame(docs)
-          .withColumn("h", graft.llm.TextOps.gramHash(byDoc, gram))
-          .withColumn("ok", lead("th", gram - 1).over(byDoc).isNotNull)
-          .where(col("ok"))
-          .select("doc_id", "pos", "h")
+        val composed = graft.llm.TextOps
+          .gramHashes(graft.llm.TextOps.tokenHashFrame(docs), gram)
           .collect().map(r => (r.getLong(0), r.getInt(1)) -> r.getLong(2)).toMap
         val P = graft.llm.TextOps.HashMod
         val ref = docsToks.zipWithIndex.flatMap { case (ts, d) =>

@@ -91,7 +91,9 @@ class SessionTuningSpec extends AnyFunSuite {
     assert(master(Map.empty, Map.empty) === s"local[$nproc]")
   }
 
-  /** Main sources (relative paths) other than `owner` that contain `needle`. */
+  /** Main sources (relative paths) other than `owner` that contain `needle`
+    * (`owner = ""` exempts none).
+    */
   private def mainSourcesWith(needle: String, owner: String): List[String] = {
     val root = Paths.get("src/main/scala")
     assert(Files.isDirectory(root), s"${root.toAbsolutePath} missing — the guard would be vacuous")
@@ -119,6 +121,15 @@ class SessionTuningSpec extends AnyFunSuite {
     val offenders = mainSourcesWith("\"\\\\s+\", \" \")", "TextOps.scala")
     assert(offenders.isEmpty,
       s"normalize through TextOps.normText / exactFp, not a spelled-out copy in: $offenders")
+  }
+
+  test("one word-gram kernel and one exact-dup key: StringShingles, gramHashes, exactFp") {
+    val nowhere = Seq("lead(\"tok\"", "sequence(lit(1), size(col(\"toks\"))", "partitionBy(md5(")
+      .flatMap(n => mainSourcesWith(n, owner = "").map(f => s"$f: $n"))
+    val hashes = mainSourcesWith("gramHash(", "TextOps.scala").map(f => s"$f: gramHash(")
+    assert(nowhere.isEmpty && hashes.isEmpty,
+      "build gram strings with StringShingles, gram hashes with TextOps.gramHashes and " +
+        s"exact-dup partitions with TextOps.exactFp, not in: ${nowhere ++ hashes}")
   }
 
   test("one quantized-cosine kernel: qdot and the ×1000 quantization only in TextOps.scala") {

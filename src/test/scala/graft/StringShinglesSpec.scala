@@ -3,16 +3,17 @@ package graft
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** The native StringShingles (optimization round: replaces the
-  * posexplode + window-lead gram construction and its per-doc
-  * exchange) must emit the identical (doc_id, shingle) multiset as
-  * the window formulation, for every registered width.
+/** The native StringShingles (replaces the posexplode + window-lead
+  * gram construction and its per-doc exchange) must emit the identical
+  * (doc_id, pos, shingle) rows as the window formulation, for every
+  * registered width: decontamination reads the positions of its
+  * `posexplode`.
   */
 class StringShinglesSpec extends SparkSpec {
   import spark.implicits._
 
-  /** The pre-optimization formulation, verbatim (minus the final
-    * distinct, so multiset parity is pinned, not just set parity).
+  /** The window formulation, keeping each gram's 0-based start
+    * token `pos` (and no distinct, so every occurrence is pinned).
     */
   private def windowShingles(docs: org.apache.spark.sql.DataFrame,
       k: Int): org.apache.spark.sql.DataFrame = {
@@ -20,18 +21,18 @@ class StringShinglesSpec extends SparkSpec {
       posexplode(llm.TextOps.tokens(col("text"))).as(Seq("pos", "tok")))
     val w = Window.partitionBy("doc_id").orderBy("pos")
     val parts = col("tok") +: (1 until k).map(o => lead("tok", o).over(w))
-    toks.select(col("doc_id"),
+    toks.select(col("doc_id"), col("pos"),
         concat_ws(" ", parts: _*).as("shingle"),
         lead("tok", k - 1).over(w).isNotNull.as("complete"))
       .where(col("complete"))
-      .select("doc_id", "shingle")
+      .select("doc_id", "pos", "shingle")
   }
 
   private def nativeShingles(docs: org.apache.spark.sql.DataFrame,
       k: Int): org.apache.spark.sql.DataFrame =
     docs.select(col("doc_id"),
-      explode(org.apache.spark.sql.graft.StringShingles(
-        llm.TextOps.tokens(col("text")), k)).as("shingle"))
+      posexplode(org.apache.spark.sql.graft.StringShingles(
+        llm.TextOps.tokens(col("text")), k)).as(Seq("pos", "shingle")))
 
   private val docs = Seq(
     (1L, "the quick brown fox jumps over the lazy dog"),
@@ -41,20 +42,18 @@ class StringShinglesSpec extends SparkSpec {
     (5L, "x y z x y z x y z"),          // repeats: multiset counts matter
     (6L, "Tabs\tand,punct!!separate2tokens")).toDF("doc_id", "text")
 
-  test("native shingles equal the window formulation (multiset) at k = 1, 2, 3, 8") {
+  test("positioned shingles equal the window formulation at k = 1, 2, 3, 8") {
     for (k <- Seq(1, 2, 3, 8)) {
-      val exp = windowShingles(docs, k).groupBy("doc_id", "shingle").count()
-        .orderBy("doc_id", "shingle").collect()
-      val got = nativeShingles(docs, k).groupBy("doc_id", "shingle").count()
-        .orderBy("doc_id", "shingle").collect()
-      assert(got.toSeq == exp.toSeq, s"k=$k")
+      val exp = windowShingles(docs, k).orderBy("doc_id", "pos").collect()
+      val got = nativeShingles(docs, k).orderBy("doc_id", "pos").collect()
+      assert(exp.nonEmpty && got.toSeq == exp.toSeq, s"k=$k")
     }
   }
 
   test("matches on real testdata documents at k = 3") {
     val real = Tables.documents(spark, "/root/testdata/sf0.001")
-    val exp = windowShingles(real, 3).groupBy("doc_id", "shingle").count()
-    val got = nativeShingles(real, 3).groupBy("doc_id", "shingle").count()
+    val exp = windowShingles(real, 3)
+    val got = nativeShingles(real, 3)
     assert(exp.count() > 0 && got.unionAll(exp).distinct().count() == exp.count())
     assert(got.except(exp).isEmpty && exp.except(got).isEmpty)
   }
