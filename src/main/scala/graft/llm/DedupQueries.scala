@@ -25,14 +25,8 @@ import graft.llm.TextOps.{exactFp, normText, tokens}
   * The default-config queries use 8 perms / 4 bands and 60 bits / 4
   * chunks; `x_dedup_simhash_b48` and `x_minhash_estimate_p16` run the
   * same builders at non-default configs, oracle-checked, to pin that
-  * the parameterization is real. (The 16-perm LSH-PAIRS twins were
-  * folded in round 14: their verified output is value-identical to
-  * the default config at sf0.01, sf0.1 AND sf1 — verification
-  * collapses the band-config difference — so the cross-config recall
-  * identity is pinned tighter in LlmOpsSpec, and the 16-perm
-  * signature arithmetic keeps its own oracle via
-  * `x_minhash_estimate_p16` / `x_source_sketch_sim_p16`, whose
-  * outputs DO diverge.)
+  * the parameterization is real. The 16-perm cross-config identity
+  * and the 7/10 containment tier are pinned in LlmOpsSpec.
   *
   * All shingle-based queries run on [[SharedIndex.sidPostings]] — the
   * `(doc_id, sid)` inverted index materialized once per (JVM, sf-dir)
@@ -94,6 +88,11 @@ object DedupQueries {
   /** Largest document frequency of a RARE shingle (the oracle SQL's `<= 8`). */
   private[graft] val RareDfCap = 8
 
+  /** The RARE shingles of a postings table: document frequency ≤ [[RareDfCap]]. */
+  private[graft] def rareSids(post: DataFrame): DataFrame =
+    post.groupBy("sid").agg(count(lit(1)).as("df"))
+      .where(col("df") <= RareDfCap).select("sid")
+
   /** Candidate pairs that share a RARE shingle (document frequency ≤
     * [[RareDfCap]] — prunes the df² blowup that common shingles cause
     * in a naive postings self-join). Candidate volume is bounded by Σ
@@ -101,29 +100,34 @@ object DedupQueries {
     * virtually always share a rare one, so recall is preserved.
     */
   private[graft] def rareShingleCandidates(post: DataFrame): DataFrame = {
-    val rare = post.groupBy("sid").agg(count(lit(1)).as("df"))
-      .where(col("df") <= RareDfCap).select("sid")
-    val a = post.join(rare, "sid").select(col("doc_id").as("doc_a"), col("sid"))
+    val a = post.join(rareSids(post), "sid").select(col("doc_id").as("doc_a"), col("sid"))
     val b = post.select(col("doc_id").as("doc_b"), col("sid").as("sid_r"))
     a.join(b, col("sid") === col("sid_r") && col("doc_a") < col("doc_b"))
       .select("doc_a", "doc_b").distinct()
   }
 
-  /** `perms`-permutation MinHash signature per doc (columns h0..h_{n-1}). */
-  private def minhashSig(post: DataFrame, perms: Int): DataFrame = {
-    val ab = A.zip(B).take(perms)
+  /** `perms`-permutation MinHash signature per `key` value (columns
+    * h0..h_{n-1}) over `(key, sid)` postings — per doc or per source.
+    */
+  private def minhashSig(post: DataFrame, key: String, perms: Int): DataFrame = {
+    require(perms <= A.size, s"perm pool exhausted: $perms")
     // sid is reduced mod P BEFORE the multiply: a·(sid % P) < P² < 2⁶³
     // for every possible sid, so the permutation never overflows int64
     // (ANSI mode would throw) even when sids are themselves 2⁵⁰-scale
     // hashes rather than dense dictionary ids. For dictionary sids
     // (< P) the reduction is the identity — results are unchanged.
     val sidr = col("sid") % P
-    post.groupBy("doc_id").agg(
-      min((sidr * ab.head._1 + ab.head._2) % P).as("h0"),
-      ab.zipWithIndex.tail.map { case ((a, b), i) =>
-        min((sidr * a + b) % P).as(s"h$i")
-      }: _*)
+    val hs = A.zip(B).take(perms).zipWithIndex.map { case ((a, b), i) =>
+      min((sidr * a + b) % P).as(s"h$i") }
+    post.groupBy(key).agg(hs.head, hs.tail: _*)
   }
+
+  /** Number of matching signature components `h_i` between the
+    * signature frames aliased `a` and `b`.
+    */
+  private def sigAgreement(a: String, b: String, perms: Int): org.apache.spark.sql.Column =
+    (0 until perms).map(i => when(col(s"$a.h$i") === col(s"$b.h$i"), 1L).otherwise(0L))
+      .reduce(_ + _)
 
   /** Candidate pairs that share a MinHash band bucket (`bands` bands ×
     * perms/bands rows). The signature is unpivoted into (band, key)
@@ -133,10 +137,10 @@ object DedupQueries {
     * to 2 rows per band.
     */
   private[graft] def bandCandidates(post: DataFrame, perms: Int = 8, bands: Int = 4): DataFrame = {
-    require(perms % bands == 0 && perms / bands <= 2 && perms <= A.size,
+    require(perms % bands == 0 && perms / bands <= 2,
       s"unsupported band layout: $perms perms / $bands bands")
     val rpb = perms / bands
-    val sig = minhashSig(post, perms)
+    val sig = minhashSig(post, "doc_id", perms)
     val banded = sig.select(col("doc_id"), explode(array(
       (0 until bands).map(bnd =>
         struct(lit(bnd).as("band"),
@@ -150,29 +154,35 @@ object DedupQueries {
       .distinct()
   }
 
-  /** UNTHRESHOLDED exact overlap evidence for candidate pairs against
-    * the full postings: `(doc_a, doc_b, overlap, n_a, n_b)` via a
-    * two-sided postings join. Cost is candidates × doc-size, never
-    * corpus². Kept threshold-free so ONE materialization serves every
-    * downstream cut — symmetric Jaccard (≥ 0.8) and both directed
-    * containment tiers read the same table.
+  /** UNTHRESHOLDED exact overlap evidence for candidate pairs:
+    * `(doc_a, doc_b, overlap, n_a, n_b)`, where `pa` and `pb` are the
+    * `(doc_id, sid)` postings of the a side and the b side. `overlap`
+    * comes from `cand ⋈ pa ⋈ pb` on (doc, sid); `n_a` is a doc's row
+    * count in `pa`, `n_b` its row count in `pb`. Cost is candidates ×
+    * doc-size, never corpus². Kept threshold-free so ONE
+    * materialization serves every downstream cut — symmetric Jaccard
+    * (≥ 0.8) and both directed containment tiers read the same table.
+    * This is the one overlap join of the dedup family and the
+    * streaming near-dup ingest.
     */
-  private[graft] def pairOverlaps(post: DataFrame, cand: DataFrame): DataFrame = {
-    // pinned (lazy localCheckpoint): both the n_a and the n_b attach
-    // read this per-doc size table, and without the pin the plan
-    // derives the postings scan + count aggregation twice (the two
-    // branches' broadcast exchanges do not canonicalize to one —
-    // observed in the executed plan as two separate build chains)
-    val cnt = post.groupBy("doc_id").agg(count(lit(1)).as("n"))
-      .localCheckpoint(false)
-    val pa = post.select(col("doc_id").as("da2"), col("sid").as("sid_a"))
-    val pb = post.select(col("doc_id").as("db2"), col("sid").as("sid_b"))
+  private[graft] def pairOverlaps(cand: DataFrame, pa: DataFrame, pb: DataFrame): DataFrame = {
+    def counts(p: DataFrame) = p.groupBy("doc_id").agg(count(lit(1)).as("n"))
+    // one side's postings serving both: its count table is pinned (lazy
+    // localCheckpoint), because both the n_a and the n_b attach read it,
+    // and without the pin the plan derives the postings scan + count
+    // aggregation twice (the two branches' broadcast exchanges do not
+    // canonicalize to one — observed in the executed plan as two
+    // separate build chains)
+    val (ca, cb) =
+      if (pa eq pb) { val c = counts(pa).localCheckpoint(false); (c, c) }
+      else (counts(pa), counts(pb))
     cand
-      .join(pa, col("doc_a") === col("da2"))
-      .join(pb, col("doc_b") === col("db2") && col("sid_a") === col("sid_b"))
+      .join(pa.select(col("doc_id").as("da2"), col("sid").as("sid_a")), col("doc_a") === col("da2"))
+      .join(pb.select(col("doc_id").as("db2"), col("sid").as("sid_b")),
+        col("doc_b") === col("db2") && col("sid_a") === col("sid_b"))
       .groupBy("doc_a", "doc_b").agg(count(lit(1)).as("overlap"))
-      .join(cnt.select(col("doc_id").as("ca"), col("n").as("n_a")), col("doc_a") === col("ca"))
-      .join(cnt.select(col("doc_id").as("cb"), col("n").as("n_b")), col("doc_b") === col("cb"))
+      .join(ca.select(col("doc_id").as("ca"), col("n").as("n_a")), col("doc_a") === col("ca"))
+      .join(cb.select(col("doc_id").as("cb"), col("n").as("n_b")), col("doc_b") === col("cb"))
       .select(col("doc_a"), col("doc_b"), col("overlap"), col("n_a"), col("n_b"))
   }
 
@@ -190,7 +200,7 @@ object DedupQueries {
     * policies (MinHash bands, incremental delta probes).
     */
   private[graft] def verifiedPairs(post: DataFrame, cand: DataFrame): DataFrame =
-    jaccardVerified(pairOverlaps(post, cand))
+    jaccardVerified(pairOverlaps(cand, post, post))
 
   /** The rare-shingle overlap-evidence table as a shared materialized
     * artifact ([[SharedIndex.materialized]], tag `rare_overlaps`):
@@ -214,7 +224,7 @@ object DedupQueries {
       d: String): DataFrame =
     SharedIndex.materialized(s, d, "rare_overlaps") {
       val post = SharedIndex.sidPostings(s, d)
-      pairOverlaps(post, rareShingleCandidates(post))
+      pairOverlaps(rareShingleCandidates(post), post, post)
     }
 
   /** SimHash near-dup pairs at a given signature width: `bits`-bit
@@ -749,7 +759,7 @@ object DedupQueries {
        |SELECT doc_id,
        |${minhashSigSqlCols(8, "      ")}
        |FROM post GROUP BY doc_id""".stripMargin) { (s, d) =>
-    minhashSig(SharedIndex.sidPostings(s, d), 8)
+    minhashSig(SharedIndex.sidPostings(s, d), "doc_id", 8)
   }
 
   /** MinHash+LSH near-dup pairs, default config: 4 bands × 2 rows;
@@ -764,17 +774,6 @@ object DedupQueries {
     verifiedPairs(post, bandCandidates(post, perms = 8, bands = 4))
       .select("doc_a", "doc_b", "jaccard")
   }
-
-  // The 16-perm / 8-band LSH-pairs twin was FOLDED (round 14): its
-  // verified output is value-identical to the default config at every
-  // tested scale (sf0.01, sf0.1, sf1 — exact-Jaccard verification
-  // collapses the candidate-set difference because both band layouts
-  // reach full recall on the j ≥ 0.8 pair set). The cross-config
-  // identity — equal verified pairs from UNEQUAL candidate sets — is
-  // pinned in LlmOpsSpec, which is strictly tighter than two oracles
-  // that each matched independently; the 16-perm signature arithmetic
-  // itself stays externally oracle-checked where it visibly diverges
-  // (x_minhash_estimate_p16, x_source_sketch_sim_p16).
 
   /** SimHash, default config: 60-bit signature, 15-bit chunk banding
     * (4 chunks), hamming ≤ 10 (bit_count of xor — exact ints).
@@ -898,39 +897,18 @@ object DedupQueries {
        |JOIN cnt cb ON v.doc_b = cb.doc_id
        |WHERE 5 * v.overlap >= 4 * (ca.n + cb.n - v.overlap)""".stripMargin) { (s, d) =>
     val post = SharedIndex.sidPostings(s, d)
-    val rare = post.groupBy("sid").agg(count(lit(1)).as("df"))
-      .where(col("df") <= RareDfCap).select("sid")
+    // postings PRE-SPLIT by the delta predicate, so fewer bytes
+    // shuffle: every candidate's doc_a is a delta doc and every
+    // doc_b a corpus doc, so the overlap join probes only the delta
+    // slice on the a side and the corpus slice on the b side, and a
+    // doc's count over its own slice equals its count over the corpus
     val delta = post.where(col("doc_id") % 10 === 0)
-      .join(rare, "sid").select(col("doc_id").as("doc_a"), col("sid"))
     val corpus = post.where(col("doc_id") % 10 =!= 0)
-      .select(col("doc_id").as("doc_b"), col("sid").as("sid_r"))
-    val cand = delta.join(corpus, col("sid") === col("sid_r"))
+    val cand = delta.join(rareSids(post), "sid").select(col("doc_id").as("doc_a"), col("sid"))
+      .join(corpus.select(col("doc_id").as("doc_b"), col("sid").as("sid_r")),
+        col("sid") === col("sid_r"))
       .select("doc_a", "doc_b").distinct()
-    // Verification with the postings PRE-SPLIT by the delta predicate
-    // (guide §2.3 — shuffle fewer bytes): every candidate's doc_a is a
-    // delta doc and every doc_b a corpus doc by construction, so the
-    // doc_a-side join probes only the delta slice of the postings and
-    // the doc_b side only the corpus slice — at scale the delta side
-    // carries |delta|·df rows instead of the whole corpus index. The
-    // per-doc counts split the same way (a doc's posting count is
-    // unchanged by filtering on OTHER docs), so the full-postings
-    // count pass disappears too.
-    val pa = post.where(col("doc_id") % 10 === 0)
-      .select(col("doc_id").as("da2"), col("sid").as("sid_a"))
-    val pb = post.where(col("doc_id") % 10 =!= 0)
-      .select(col("doc_id").as("db2"), col("sid").as("sid_b"))
-    val cntA = post.where(col("doc_id") % 10 === 0)
-      .groupBy("doc_id").agg(count(lit(1)).as("n"))
-    val cntB = post.where(col("doc_id") % 10 =!= 0)
-      .groupBy("doc_id").agg(count(lit(1)).as("n"))
-    val ov = cand
-      .join(pa, col("doc_a") === col("da2"))
-      .join(pb, col("doc_b") === col("db2") && col("sid_a") === col("sid_b"))
-      .groupBy("doc_a", "doc_b").agg(count(lit(1)).as("overlap"))
-      .join(cntA.select(col("doc_id").as("ca"), col("n").as("n_a")), col("doc_a") === col("ca"))
-      .join(cntB.select(col("doc_id").as("cb"), col("n").as("n_b")), col("doc_b") === col("cb"))
-      .select(col("doc_a"), col("doc_b"), col("overlap"), col("n_a"), col("n_b"))
-    jaccardVerified(ov)
+    jaccardVerified(pairOverlaps(cand, delta, corpus))
       .select(col("doc_a").as("doc_new"), col("doc_b").as("doc_old"), col("jaccard"))
   }
 
@@ -1139,26 +1117,17 @@ object DedupQueries {
   /** ASYMMETRIC containment detection — the quote-expansion case
     * symmetric Jaccard structurally misses: a short document wholly
     * quoted inside a much longer one has Jaccard ≈ |A|/|B| (tiny) but
-    * containment |A∩B|/|A| = 1. Directed pairs
-    * (doc_inner contained-in doc_outer) are emitted when
-    * den·overlap ≥ num·n_inner (the threshold is compared as
-    * cross-multiplied exact integers; the containment column is the
-    * one evidence division). Same candidate discipline as
-    * x_dedup_ngram — rare-shingle (df ≤ 8) candidate pairs, exact
-    * distinct-shingle overlap on candidates only — so the recall
-    * contract is the family's: a pair sharing ONLY ubiquitous
-    * shingles is out of candidate scope on both engines.
+    * containment |A∩B|/|A| = 1. The directed cut over an
+    * overlap-evidence table: both directions of each unordered
+    * candidate pair (doc_inner contained-in doc_outer), kept when
+    * den·overlap ≥ num·n_inner (cross-multiplied exact integers; the
+    * containment column is the one evidence division). Registry
+    * carriers read the shared [[rareOverlaps]] artifact — the
+    * family's rare-shingle (df ≤ 8) candidate discipline, so a pair
+    * sharing ONLY ubiquitous shingles is out of candidate scope on
+    * both engines — and the threshold is the only per-query work.
     */
-  private[graft] def containmentPairs(post: DataFrame, num: Int, den: Int): DataFrame =
-    containmentFromOverlaps(pairOverlaps(post, rareShingleCandidates(post)), num, den)
-
-  /** The directed containment cut over an overlap-evidence table:
-    * both directions of each unordered candidate pair, kept when
-    * den·overlap ≥ num·n_inner (cross-multiplied exact integers).
-    * Registry carriers read the shared [[rareOverlaps]] artifact —
-    * the threshold is the only per-query work.
-    */
-  private def containmentFromOverlaps(ov: DataFrame, num: Int, den: Int): DataFrame = {
+  private[graft] def containmentFromOverlaps(ov: DataFrame, num: Int, den: Int): DataFrame = {
     require(num > 0 && den > 0 && num <= den, s"containment threshold must be in (0, 1]: $num/$den")
     val ab = ov.select(col("doc_a").as("doc_inner"), col("doc_b").as("doc_outer"),
       col("overlap"), col("n_a").as("n_inner"), col("n_b").as("n_outer"))
@@ -1191,14 +1160,6 @@ object DedupQueries {
     "x_containment", containmentSql(num = 9, den = 10)) { (s, d) =>
     containmentFromOverlaps(rareOverlaps(s, d), num = 9, den = 10)
   }
-
-  // The 0.7-threshold second config (x_containment_t7) was FOLDED in
-  // round 12 (registry hygiene): both threshold tiers — including the
-  // partial-quotation reverse tier only 0.7 surfaces — are pinned by
-  // LlmOpsSpec's containment test at 9/10 AND 7/10 on constructed
-  // nested docs, which pins the cross-multiplied cut as a real
-  // parameter equally well at a fraction of the gate/bench cost.
-  // containmentPairs keeps its (num, den) parameters.
 
   // ----------------------------------------------------------------
   // Edit-distance fuzzy dedup: LSH candidates → exact Levenshtein
@@ -1313,23 +1274,31 @@ object DedupQueries {
   val dedupAgreement: QueryDef = QueryDef.sql(
     "x_dedup_agreement", agreementSql) { (s, d) =>
     val post = SharedIndex.sidPostings(s, d)
-    val mh = verifiedPairs(post, bandCandidates(post, perms = 8, bands = 4))
-      .select(col("doc_a"), col("doc_b"))
-    val sh = simhashPairs(post, bits = 60, chunks = 4, hammingMax = 10)
-      .select(col("doc_a").as("s_a"), col("doc_b").as("s_b"))
+    pairSetOverlay(
+      verifiedPairs(post, bandCandidates(post, perms = 8, bands = 4)),
+      simhashPairs(post, bits = 60, chunks = 4, hammingMax = 10),
+      onlyA = "minhash_only", onlyB = "simhash_only")
+  }
+
+  /** Confusion summary of two `(doc_a, doc_b)` pair sets as
+    * `(method, n_pairs, n_docs)`: pairs in both, `onlyA` pairs, `onlyB`
+    * pairs, and the distinct documents each class touches — one
+    * full-outer equi-join on the pair key.
+    */
+  private def pairSetOverlay(a: DataFrame, b: DataFrame, onlyA: String, onlyB: String): DataFrame = {
     // pinned (lazy localCheckpoint): the n_pairs and n_docs branches
     // both read `merged`, and without the pin each branch re-derives
-    // BOTH full pair chains (MinHash band+verify AND the SimHash
-    // vote+band join) from the postings — the audit's entire cost,
-    // twice (OPTIMIZATION_r17.md §3: mh 0.66 s + sh 1.10 s, full query
-    // 2.21 s). The pinned frame is ≤ |pairs| narrow rows; the
-    // declared oracle SQL is unchanged.
-    val merged = mh.join(sh,
+    // BOTH full pair chains from the postings — the audit's entire
+    // cost, twice (OPTIMIZATION_r17.md §3: MinHash 0.66 s + SimHash
+    // 1.10 s, full x_dedup_agreement 2.21 s). The pinned frame is
+    // ≤ |pairs| narrow rows.
+    val merged = a.select("doc_a", "doc_b")
+      .join(b.select(col("doc_a").as("s_a"), col("doc_b").as("s_b")),
         col("doc_a") === col("s_a") && col("doc_b") === col("s_b"), "full_outer")
       .select(
         when(col("doc_a").isNotNull && col("s_a").isNotNull, "both")
-          .when(col("doc_a").isNotNull, "minhash_only")
-          .otherwise("simhash_only").as("method"),
+          .when(col("doc_a").isNotNull, onlyA)
+          .otherwise(onlyB).as("method"),
         coalesce(col("doc_a"), col("s_a")).as("da"),
         coalesce(col("doc_b"), col("s_b")).as("db"))
       .localCheckpoint(false)
@@ -1662,29 +1631,14 @@ object DedupQueries {
       perms: Int, bands: Int): DataFrame = {
     val post = SharedIndex.sidPostings(s, d)
     val cand = bandCandidates(post, perms, bands)
-    val sig = minhashSig(post, perms)
-    val sa = sig.select(col("doc_id").as("da") +:
-      (0 until perms).map(i => col(s"h$i").as(s"ha$i")): _*)
-    val sb = sig.select(col("doc_id").as("db") +:
-      (0 until perms).map(i => col(s"h$i").as(s"hb$i")): _*)
-    val withM = cand
-      .join(sa, col("doc_a") === col("da"))
-      .join(sb, col("doc_b") === col("db"))
-      .select(col("doc_a"), col("doc_b"),
-        (0 until perms).map(i => when(col(s"ha$i") === col(s"hb$i"), 1L).otherwise(0L))
-          .reduce(_ + _).as("m"))
-    val cnt = post.groupBy("doc_id").agg(count(lit(1)).as("n"))
-    val ov = cand
-      .join(post.select(col("doc_id").as("da2"), col("sid").as("sid_a")), col("doc_a") === col("da2"))
-      .join(post.select(col("doc_id").as("db2"), col("sid").as("sid_b")),
-        col("doc_b") === col("db2") && col("sid_a") === col("sid_b"))
-      .groupBy("doc_a", "doc_b").agg(count(lit(1)).as("overlap"))
-    withM
-      .join(ov, Seq("doc_a", "doc_b"), "left")
-      .join(cnt.select(col("doc_id").as("ca"), col("n").as("n_a")), col("doc_a") === col("ca"))
-      .join(cnt.select(col("doc_id").as("cb"), col("n").as("n_b")), col("doc_b") === col("cb"))
+    val sig = minhashSig(post, "doc_id", perms)
+    cand
+      .join(sig.as("a"), col("doc_a") === col("a.doc_id"))
+      .join(sig.as("b"), col("doc_b") === col("b.doc_id"))
+      .select(col("doc_a"), col("doc_b"), sigAgreement("a", "b", perms).as("m"))
+      .join(pairOverlaps(cand, post, post), Seq("doc_a", "doc_b"), "left")
       .select(col("m"),
-        expr("coalesce(overlap, 0) * 1000000 div (n_a + n_b - coalesce(overlap, 0))").as("j_q"))
+        expr("coalesce(overlap * 1000000 div (n_a + n_b - overlap), 0)").as("j_q"))
       .groupBy("m").agg(
         count(lit(1)).as("n_pairs"),
         expr("sum(j_q) div count(*)").as("mean_j_q"),
@@ -1832,39 +1786,14 @@ object DedupQueries {
       .join(vecIds.select(col("vec_id").as("va")), col("doc_a") === col("va")).drop("va")
       .join(vecIds.select(col("vec_id").as("vb")), col("doc_b") === col("vb")).drop("vb")
     val sem = SimilarityQueries.embedPairsDf(s, d)
-      .select(col("vec_a").as("s_a"), col("vec_b").as("s_b"))
-    // pinned (lazy localCheckpoint): the n_pairs and n_docs branches
-    // both read `merged` — same double-derivation as x_dedup_agreement
-    // (each branch re-ran BOTH the lexical band+verify chain and the
-    // embedding pair chain without it); ≤ |pairs| narrow rows
-    val merged = lex.join(sem,
-        col("doc_a") === col("s_a") && col("doc_b") === col("s_b"), "full_outer")
-      .select(
-        when(col("doc_a").isNotNull && col("s_a").isNotNull, "both")
-          .when(col("doc_a").isNotNull, "lexical_only")
-          .otherwise("semantic_only").as("method"),
-        coalesce(col("doc_a"), col("s_a")).as("da"),
-        coalesce(col("doc_b"), col("s_b")).as("db"))
-      .localCheckpoint(false)
-    val pairs = merged.groupBy("method").agg(count(lit(1)).as("n_pairs"))
-    val docs = merged.select(col("method"), col("da").as("doc"))
-      .unionAll(merged.select(col("method"), col("db").as("doc")))
-      .groupBy("method").agg(countDistinct("doc").as("n_docs"))
-    pairs.join(docs, "method")
+      .select(col("vec_a").as("doc_a"), col("vec_b").as("doc_b"))
+    pairSetOverlay(lex, sem, onlyA = "lexical_only", onlyB = "semantic_only")
   }
 
   val lexsemAgreement: QueryDef = QueryDef.sql(
     "x_lexsem_agreement", lexsemAgreementSql(perms = 8, bands = 4)) { (s, d) =>
     lexsemAgreementDf(s, d, perms = 8, bands = 4)
   }
-
-  // The 16-perm agreement twin was FOLDED (round 14) with the LSH-
-  // pairs twin it depended on: since the verified lexical pair set is
-  // value-identical across band configs at every tested scale, the
-  // overlay was too (1/1 output rows equal at sf0.01, sf0.1, sf1).
-  // LlmOpsSpec pins the cross-config identity through this builder's
-  // public shape; see the fold note at the former
-  // x_minhash_lsh_pairs_p16 site.
 
   /** Source-level MinHash sketch similarity: each SOURCE gets one
     * `perms`-component MinHash signature over the union of its
@@ -1890,28 +1819,19 @@ object DedupQueries {
     */
   private def sourceSketchDf(s: org.apache.spark.sql.SparkSession, d: String,
       perms: Int): DataFrame = {
-    require(perms <= A.size, s"perm pool exhausted: $perms")
     val sp = SharedIndex.sidPostings(s, d)
       .join(Tables.documents(s, d).select("doc_id", "source"), "doc_id")
       .select("source", "sid").distinct()
-    val ab = A.zip(B).take(perms)
-    val sidr = col("sid") % P
-    val sig = sp.groupBy("source").agg(
-      min((sidr * ab.head._1 + ab.head._2) % P).as("h0"),
-      ab.zipWithIndex.tail.map { case ((a, b), i) =>
-        min((sidr * a + b) % P).as(s"h$i")
-      }: _*)
+    val sig = minhashSig(sp, "source", perms)
     val n = sp.groupBy("source").agg(count(lit(1)).as("n_sh"))
     val inter = sp.join(sp.select(col("source").as("source_b"), col("sid")), Seq("sid"))
       .where(col("source") < col("source_b"))
       .groupBy(col("source").as("source_a"), col("source_b"))
       .agg(count(lit(1)).as("n_inter"))
-    val agree = (0 until perms).map(i =>
-      when(col(s"a.h$i") === col(s"b.h$i"), 1L).otherwise(0L)).reduce(_ + _)
     val pairs = sig.as("a")
       .join(broadcast(sig.as("b")), col("a.source") < col("b.source"))
       .select(col("a.source").as("source_a"), col("b.source").as("source_b"),
-        agree.as("m_agree"))
+        sigAgreement("a", "b", perms).as("m_agree"))
     pairs
       .join(n.select(col("source").as("source_a"), col("n_sh").as("n_a")), "source_a")
       .join(n.select(col("source").as("source_b"), col("n_sh").as("n_b")), "source_b")

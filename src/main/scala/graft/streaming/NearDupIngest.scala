@@ -282,11 +282,11 @@ object NearDupIngest {
     *     is probed, never re-aggregated);
     *   - candidates come from the shingle index probed by the RARE
     *     delta digests (combined df ≤ [[graft.llm.DedupQueries.RareDfCap]]);
-    *   - overlap counting joins delta digests against only the
-    *     CANDIDATE docs' index postings;
-    *   - per-doc shingle counts come from the delta digests for the
-    *     delta side and, for the corpus side, from counting those same
-    *     candidate postings (as `pairOverlaps` counts n_b).
+    *   - the overlap evidence is the batch family's
+    *     [[graft.llm.DedupQueries.pairOverlaps]] with the delta digests
+    *     as the a side and only the CANDIDATE docs' index postings as
+    *     the b side, so n_a counts the delta digests and n_b those
+    *     same candidate postings.
     * `NearDupIngestSpec` machine-checks this on the physical plans a
     * real ingest runs (index rows cross an exchange only as probe
     * hits), and on the logical plan ("no full-index aggregate",
@@ -349,17 +349,12 @@ object NearDupIngest {
     // candidate docs are corpus docs, never the batch's own ids
     val candB = broadcast(cand.select("doc_b").distinct())
 
-    // overlap counting probes the index for CANDIDATE docs only; those
-    // rows are every posting of every candidate doc, so they count n_b
-    val candPost = shIdx.select(col("doc_id").as("pb"), col("sh").as("shb"))
-      .join(candB, col("pb") === col("doc_b"), "left_semi")
-    val overlap = deltaPost.select(col("doc_id").as("doc_a"), col("sh").as("sha"))
-      .join(cand, "doc_a")
-      .join(candPost, col("doc_b") === col("pb") && col("sha") === col("shb"))
-      .groupBy("doc_a", "doc_b").agg(count(lit(1)).as("overlap"))
-    val na = deltaPost.groupBy(col("doc_id").as("doc_a")).agg(count(lit(1)).as("n_a"))
-    val nb = candPost.groupBy(col("pb").as("doc_b")).agg(count(lit(1)).as("n_b"))
-    val nearDup = jaccardVerified(overlap.join(na, "doc_a").join(nb, "doc_b"))
+    // the b side probes the index for CANDIDATE docs only; those rows
+    // are every posting of every candidate doc, so they count n_b
+    val candPost = shIdx.select(col("doc_id"), col("sh").as("sid"))
+      .join(candB, col("doc_id") === col("doc_b"), "left_semi")
+    val nearDup = jaccardVerified(pairOverlaps(cand,
+        deltaPost.select(col("doc_id"), col("sh").as("sid")), candPost))
       .select(col("doc_a").as("doc_id")).distinct()
     exactNew.join(nearDup, Seq("doc_id"), "left_anti")
   }
@@ -608,7 +603,7 @@ object NearDupIngest {
       .where(col("doc_id") =!= col("keeper"))
       .select(col("doc_id"), lit("exact_dup").as("reason"))
     val posts = dg.where(col("sid").isNotNull).select("doc_id", "sid")
-    val near = jaccardVerified(pairOverlaps(posts, rareShingleCandidates(posts)))
+    val near = jaccardVerified(pairOverlaps(rareShingleCandidates(posts), posts, posts))
       .select(col("doc_b").as("doc_id"), lit("near_dup").as("reason"))
       .distinct()
     exact.unionByName(near)

@@ -828,7 +828,8 @@ class LlmOpsSpec extends SparkSpec {
     val docs = Seq(doc(1, 10), doc(2, 15), doc(3, 20)).toDF("doc_id", "text")
     val post = shinglePostings(docs, 3).withColumnRenamed("shingle", "sid")
     def pairs(num: Int, den: Int) =
-      llm.DedupQueries.containmentPairs(post, num, den)
+      llm.DedupQueries.containmentFromOverlaps(llm.DedupQueries.pairOverlaps(
+          llm.DedupQueries.rareShingleCandidates(post), post, post), num, den)
         .select("doc_inner", "doc_outer").as[(Long, Long)].collect().toSet
     assert(pairs(9, 10) == Set((1L, 2L), (1L, 3L), (2L, 3L)))
     assert(pairs(7, 10) == Set((1L, 2L), (1L, 3L), (2L, 3L), (3L, 2L)))

@@ -172,6 +172,7 @@ class PropertySpec extends SparkSpec {
     // df-capped common shingles all occur; the reference mirrors the
     // family's candidate contract exactly (a pair sharing ONLY
     // df > 8 shingles is out of scope on both sides)
+    import graft.llm.DedupQueries
     val genDoc = Gen.choose(3, 9).flatMap(n =>
       Gen.listOfN(n, Gen.oneOf("a", "b", "c")).map(_.mkString(" ")))
     check(Prop.forAll(Gen.listOfN(12, genDoc)) { texts =>
@@ -179,12 +180,20 @@ class PropertySpec extends SparkSpec {
         .toDF("doc_id", "text")
       val post = graft.llm.TextOps.shinglePostings(docs, 3)
         .withColumnRenamed("shingle", "sid")
-      val got = graft.llm.DedupQueries.jaccardVerified(
-          graft.llm.DedupQueries.pairOverlaps(post,
-            graft.llm.DedupQueries.rareShingleCandidates(post)))
-        .collect()
+      def evidence(ov: org.apache.spark.sql.DataFrame) = ov.collect()
         .map(r => (r.getLong(0), r.getLong(1)) -> ((r.getLong(2), r.getLong(3), r.getLong(4))))
         .toMap
+      val got = evidence(DedupQueries.jaccardVerified(
+        DedupQueries.pairOverlaps(DedupQueries.rareShingleCandidates(post), post, post)))
+      // the two-sided kernel: odd docs are the a side, even docs the b
+      // side, candidates the odd docs' rare shingles probed into the
+      // even slice — n_a and n_b must count each doc over its own side
+      val odd = post.where(col("doc_id") % 2 === 1)
+      val even = post.where(col("doc_id") % 2 === 0)
+      val cand = odd.join(DedupQueries.rareSids(post), "sid").select(col("doc_id").as("doc_a"), col("sid"))
+        .join(even.select(col("doc_id").as("doc_b"), col("sid").as("sid_r")), col("sid") === col("sid_r"))
+        .select("doc_a", "doc_b").distinct()
+      val twoSided = evidence(DedupQueries.pairOverlaps(cand, odd, even))
       // reference: distinct trigram sets, df over docs, rare-candidate
       // scope, exact overlap/union threshold 5·ov >= 4·union
       val sh: Map[Long, Set[String]] = texts.zipWithIndex.map { case (t, i) =>
@@ -193,15 +202,15 @@ class PropertySpec extends SparkSpec {
       }.toMap
       val df = sh.values.flatten.groupBy(identity).view.mapValues(_.size).toMap
       val ids = sh.keys.toSeq.sorted
-      val ref = (for {
-        a <- ids; b <- ids if a < b
+      val evidenceRef = (for {
+        a <- ids; b <- ids if a != b
         shared = sh(a) intersect sh(b)
         if shared.exists(s => df(s) <= 8)
-        ov = shared.size.toLong
-        na = sh(a).size.toLong; nb = sh(b).size.toLong
-        if 5 * ov >= 4 * (na + nb - ov)
-      } yield (a, b) -> ((ov, na, nb))).toMap
-      got == ref
+      } yield (a, b) -> ((shared.size.toLong, sh(a).size.toLong, sh(b).size.toLong))).toMap
+      val ref = evidenceRef.filter { case ((a, b), (ov, na, nb)) =>
+        a < b && 5 * ov >= 4 * (na + nb - ov) }
+      val twoSidedRef = evidenceRef.filter { case ((a, b), _) => a % 2 == 1 && b % 2 == 0 }
+      got == ref && twoSided == twoSidedRef
     }, n = 8)
   }
 

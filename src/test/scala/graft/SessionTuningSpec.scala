@@ -105,6 +105,13 @@ class SessionTuningSpec extends AnyFunSuite {
     finally w.close()
   }
 
+  /** `file:line` of every main-source line that contains `needle`. */
+  private def mainLinesWith(needle: String): List[String] =
+    mainSourcesWith(needle, owner = "").flatMap { f =>
+      Files.readAllLines(Paths.get("src/main/scala", f)).asScala.zipWithIndex
+        .collect { case (l, i) if l.contains(needle) => s"$f:${i + 1}" }
+    }
+
   test("one session builder: SparkSession.builder only in SessionTuning.scala") {
     val offenders = mainSourcesWith("SparkSession.builder", "SessionTuning.scala")
     assert(offenders.isEmpty,
@@ -130,6 +137,18 @@ class SessionTuningSpec extends AnyFunSuite {
     assert(nowhere.isEmpty && hashes.isEmpty,
       "build gram strings with StringShingles, gram hashes with TextOps.gramHashes and " +
         s"exact-dup partitions with TextOps.exactFp, not in: ${nowhere ++ hashes}")
+  }
+
+  test("one pair-evidence kernel: one overlap join, one MinHash signature, one method overlay") {
+    val dedup = "graft/llm/DedupQueries.scala"
+    val overlap = mainLinesWith(".as(\"overlap\")")
+    val zips = mainLinesWith("A.zip(B)")
+    val outer = mainLinesWith("\"full_outer\"").filter(_.startsWith(dedup + ":"))
+    assert(overlap.size == 1 && overlap.forall(_.startsWith(dedup + ":")) &&
+        zips.size == 2 && outer.size == 1,
+      "join overlap evidence through DedupQueries.pairOverlaps, build signatures with " +
+        "minhashSig (and its SQL twin minhashSigSqlCols), overlay pair sets with " +
+        s"pairSetOverlay; found overlap $overlap, A.zip(B) $zips, full_outer $outer")
   }
 
   test("one quantized-cosine kernel: qdot and the ×1000 quantization only in TextOps.scala") {
