@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.StringShingles
 import graft.{QueryDef, Tables}
 import graft.llm.TextOps._
-import graft.operators.Relational.packCumSum
+import graft.operators.Relational.{packCumSum, packCumSumSql, shardIdSql}
 
 /** Corpus-curation operators for LLM training-data pipelines:
   * deterministic stratified sampling, token-budget shard packing, and
@@ -86,24 +86,21 @@ object CurationQueries {
   def tokenPackDf(s: SparkSession, d: String, budget: Long): DataFrame = {
     val toks = Tables.documents(s, d).select(
       col("doc_id"), size(tokens(col("text"))).cast("long").as("n_tokens"))
-    packCumSum(toks, Seq("doc_id"), "n_tokens")
-      .select(col("doc_id"), col("n_tokens"), col("cum_tokens"))
-      .withColumn("shard_id", expr(s"(cum_tokens - n_tokens) div $budget"))
+    packCumSum(toks, Seq("doc_id"), "n_tokens", budget)
   }
 
   val tokenPack: QueryDef = QueryDef.sql(
     "x_token_pack",
-    """WITH t AS (
-      |  SELECT doc_id,
-      |         CAST(len(regexp_extract_all(lower(text), '[a-z0-9]+')) AS BIGINT) AS n_tokens
-      |  FROM documents),
-      |c AS (
-      |  SELECT doc_id, n_tokens,
-      |         CAST(sum(n_tokens) OVER (ORDER BY doc_id
-      |           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum_tokens
-      |  FROM t)
-      |SELECT doc_id, n_tokens, cum_tokens, (cum_tokens - n_tokens) // 2000 AS shard_id
-      |FROM c""".stripMargin) { (s, d) => tokenPackDf(s, d, budget = 2000L) }
+    s"""WITH t AS (
+       |  SELECT doc_id,
+       |         CAST(len(regexp_extract_all(lower(text), '[a-z0-9]+')) AS BIGINT) AS n_tokens
+       |  FROM documents),
+       |c AS (
+       |  SELECT doc_id, n_tokens,
+       |         ${packCumSumSql(Seq("doc_id"), "n_tokens")}
+       |  FROM t)
+       |SELECT doc_id, n_tokens, cum_tokens, ${shardIdSql("n_tokens", 2000L)}
+       |FROM c""".stripMargin) { (s, d) => tokenPackDf(s, d, budget = 2000L) }
 
   /** End-to-end corpus curation: quality floor (x_text_stats's
     * uniq-ratio × (1 − stop-ratio) score) → exact dedup keeper
@@ -152,10 +149,7 @@ object CurationQueries {
           (lit(1) - size(filter(col("toks"), x => x.isin(stop: _*))).cast("double") /
             nullif(size(col("toks")), lit(0)))).as("quality"))
       .where(col("n_tokens") >= 5 && col("quality") >= 0.3)
-    val keep = q.withColumn("rn",
-        row_number().over(Window.partitionBy(exactFp(col("text"))).orderBy("doc_id")))
-      .where(col("rn") === 1)
-    keep
+    exactKeepers(q)
       .select(col("doc_id"), col("lang"), col("n_tokens"), col("quality"),
         hashBucket(col("doc_id")).as("bucket"))
       .where(col("bucket") < 500)
@@ -184,19 +178,16 @@ object CurationQueries {
       .where(col("rn") <= 10).drop("rn")
   }
 
-  /** Context-window chunking: split each document into 40-token
-    * chunks with an 8-token overlap (stride 32) — the standard LLM
-    * preprocessing step between curation and tokenization. Chunk k
-    * covers tokens [32k+1, 32k+40]; documents of ≤ 40 tokens yield
-    * one chunk. Purely per-row (tokenize → explode chunk indices →
-    * slice): zero shuffle, scales linearly, and the fan-out is
-    * bounded by document length / stride.
-    */
-  /** The chunking dataflow on any (doc_id, text) frame — exposed so
-    * tests pin the PRODUCTION expressions on synthetic docs instead
-    * of a re-implementation. Parameterized by (chunkTokens, overlap);
+  /** Context-window chunking on any (doc_id, text) frame: split each
+    * document into `chunkTokens`-token chunks overlapping by `overlap`
+    * tokens (x_doc_chunks: 40 and 8, stride 32) — the standard LLM
+    * preprocessing step between curation and tokenization. With
     * stride = chunkTokens − overlap, chunk k covers tokens
-    * [k·stride+1, k·stride+chunkTokens].
+    * [k·stride+1, k·stride+chunkTokens]; documents of ≤ chunkTokens
+    * tokens yield one chunk. Purely per-row (tokenize → explode chunk
+    * indices → slice): zero shuffle, scales linearly, and the fan-out
+    * is bounded by document length / stride. Public so tests pin the
+    * production expressions on synthetic docs.
     */
   def chunkDf(docs: DataFrame, chunkTokens: Int = 40, overlap: Int = 8): DataFrame = {
     require(chunkTokens > overlap && overlap >= 0,
@@ -254,18 +245,16 @@ object CurationQueries {
     chunkDf(Tables.documents(s, d), chunkTokens = 64, overlap = 16)
   }
 
-  /** PII-style redaction: scrub email addresses and URLs from the
-    * text (the sanitization pass of training-data prep), with per-doc
-    * redaction counts for audit. Pure per-row regex work — zero
-    * shuffle, fully codegen'd; patterns are kept to the regex subset
-    * where Java regex (Spark) and RE2 (DuckDB) agree.
-    */
   private val emailRe = "[a-z0-9._%+-]+@[a-z0-9.-]+\\.[a-z]{2,}"
   private val urlRe = "https?://[^ ]+"
 
-  /** The redaction dataflow on any (doc_id, text) frame — exposed so
-    * tests pin the PRODUCTION expressions on synthetic docs (the
-    * driver corpus contains no emails/URLs).
+  /** PII-style redaction on any (doc_id, text) frame: scrub email
+    * addresses and URLs from the text (the sanitization pass of
+    * training-data prep), with per-doc redaction counts for audit.
+    * Pure per-row regex work — zero shuffle, fully codegen'd; patterns
+    * are kept to the regex subset where Java regex (Spark) and RE2
+    * (DuckDB) agree. Public so tests pin the production expressions on
+    * synthetic docs (the test corpus contains no emails or URLs).
     */
   def redactDf(docs: DataFrame): DataFrame = {
     val t = lower(col("text"))
@@ -316,20 +305,30 @@ object CurationQueries {
     decontaminateDf(Tables.documents(s, d), col("doc_id") % 25 === 0)
   }
 
-  /** The decontamination dataflow on any (doc_id, text) frame with a
-    * caller-supplied benchmark-membership predicate. No broadcast
-    * hint: a REAL eval set is tiny and AQE auto-broadcasts it; a
-    * large `isBench` selection (like the demo's every-25th-doc)
-    * degrades gracefully to a shuffled equi-join instead of
-    * collecting terabytes to the driver.
+  /** The bench-gram kernel of the decontamination family, on any
+    * (doc_id, text) frame with a caller-supplied benchmark-membership
+    * predicate: the train docs' distinct 8-gram postings
+    * (doc_id, shingle) and the DISTINCT benchmark gram set `ng`.
     */
-  def decontaminateDf(docs: DataFrame, isBench: Column): DataFrame = {
+  private def benchGrams(docs: DataFrame, isBench: Column): (DataFrame, DataFrame) = {
     val grams = shinglePostings(docs, 8)
-    val bench = grams.where(isBench)
-      .select(col("shingle").as("ng")).distinct()
-    grams.where(!isBench)
-      .join(bench, col("shingle") === col("ng"))
+    (grams.where(!isBench), grams.where(isBench).select(col("shingle").as("ng")).distinct())
+  }
+
+  /** Per train doc, how many of its `train` grams are in `bench`. No
+    * broadcast hint: a REAL eval set is tiny and AQE auto-broadcasts
+    * it; a large `isBench` selection (like the demo's every-25th-doc)
+    * degrades gracefully to a shuffled equi-join instead of collecting
+    * terabytes to the driver.
+    */
+  private def benchHits(train: DataFrame, bench: DataFrame): DataFrame =
+    train.join(bench, col("shingle") === col("ng"))
       .groupBy("doc_id").agg(count(lit(1)).as("n_contaminated_ngrams"))
+
+  /** x_decontaminate's dataflow on any (doc_id, text) frame. */
+  def decontaminateDf(docs: DataFrame, isBench: Column): DataFrame = {
+    val (train, bench) = benchGrams(docs, isBench)
+    benchHits(train, bench)
   }
 
   /** Hit starts shared by the span report and the cut: 1-based
@@ -347,6 +346,22 @@ object CurationQueries {
     val bench = grams.where(isBench).select(col("ng")).distinct()
     grams.where(!isBench).join(bench, "ng").select("doc_id", "pos")
   }
+
+  /** The oracle of [[deconHitStarts]]: `r(doc_id, pos)`, after the
+    * tokenized `toks` and the positional gram CTE `g`.
+    */
+  private val deconHitStartsSql: String =
+    """WITH toks AS (
+      |  SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS tok FROM documents),
+      |g AS (
+      |  SELECT doc_id, CAST(i AS BIGINT) AS pos,
+      |         array_to_string(list_slice(tok, i, i + 7), ' ') AS ng
+      |  FROM (SELECT doc_id, tok, generate_subscripts(tok, 1) AS i FROM toks)
+      |  WHERE i + 7 <= len(tok)),
+      |bench AS (SELECT DISTINCT ng FROM g WHERE doc_id % 25 = 0),
+      |r AS (
+      |  SELECT g.doc_id, g.pos FROM g JOIN bench USING (ng)
+      |  WHERE g.doc_id % 25 != 0),""".stripMargin
 
   /** Span-level decontamination — WHERE the benchmark leaks into each
     * training document: every maximal token range covered by
@@ -393,34 +408,24 @@ object CurationQueries {
 
   val deconSpans: QueryDef = QueryDef.sql(
     "x_decon_spans",
-    """WITH toks AS (
-      |  SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS tok FROM documents),
-      |g AS (
-      |  SELECT doc_id, CAST(i AS BIGINT) AS pos,
-      |         array_to_string(list_slice(tok, i, i + 7), ' ') AS ng
-      |  FROM (SELECT doc_id, tok, generate_subscripts(tok, 1) AS i FROM toks)
-      |  WHERE i + 7 <= len(tok)),
-      |bench AS (SELECT DISTINCT ng FROM g WHERE doc_id % 25 = 0),
-      |r AS (
-      |  SELECT g.doc_id, g.pos FROM g JOIN bench USING (ng)
-      |  WHERE g.doc_id % 25 != 0),
-      |m AS (
-      |  SELECT doc_id, pos,
-      |         CASE WHEN pos <= coalesce(max(pos + 7) OVER (
-      |                PARTITION BY doc_id ORDER BY pos
-      |                ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), -1) + 1
-      |              THEN 0 ELSE 1 END AS brk
-      |  FROM r),
-      |i AS (
-      |  SELECT doc_id, pos,
-      |         sum(brk) OVER (PARTITION BY doc_id ORDER BY pos) AS island
-      |  FROM m)
-      |SELECT doc_id,
-      |       min(pos) AS span_start,
-      |       max(pos) + 7 AS span_end,
-      |       max(pos) + 7 - min(pos) + 1 AS span_tokens,
-      |       CAST(count(*) AS BIGINT) AS n_grams
-      |FROM i GROUP BY doc_id, island""".stripMargin) { (s, d) =>
+    s"""$deconHitStartsSql
+       |m AS (
+       |  SELECT doc_id, pos,
+       |         CASE WHEN pos <= coalesce(max(pos + 7) OVER (
+       |                PARTITION BY doc_id ORDER BY pos
+       |                ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), -1) + 1
+       |              THEN 0 ELSE 1 END AS brk
+       |  FROM r),
+       |i AS (
+       |  SELECT doc_id, pos,
+       |         sum(brk) OVER (PARTITION BY doc_id ORDER BY pos) AS island
+       |  FROM m)
+       |SELECT doc_id,
+       |       min(pos) AS span_start,
+       |       max(pos) + 7 AS span_end,
+       |       max(pos) + 7 - min(pos) + 1 AS span_tokens,
+       |       CAST(count(*) AS BIGINT) AS n_grams
+       |FROM i GROUP BY doc_id, island""".stripMargin) { (s, d) =>
     deconSpansDf(Tables.documents(s, d), col("doc_id") % 25 === 0, gram = 8)
   }
 
@@ -449,37 +454,27 @@ object CurationQueries {
 
   val deconCut: QueryDef = QueryDef.sql(
     "x_decon_cut",
-    """WITH toks AS (
-      |  SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS tok FROM documents),
-      |g AS (
-      |  SELECT doc_id, CAST(i AS BIGINT) AS pos,
-      |         array_to_string(list_slice(tok, i, i + 7), ' ') AS ng
-      |  FROM (SELECT doc_id, tok, generate_subscripts(tok, 1) AS i FROM toks)
-      |  WHERE i + 7 <= len(tok)),
-      |bench AS (SELECT DISTINCT ng FROM g WHERE doc_id % 25 = 0),
-      |r AS (
-      |  SELECT g.doc_id, g.pos FROM g JOIN bench USING (ng)
-      |  WHERE g.doc_id % 25 != 0),
-      |cov AS (SELECT DISTINCT doc_id, p FROM
-      |  (SELECT doc_id, unnest(generate_series(pos, pos + 7)) AS p FROM r)),
-      |tok AS (
-      |  SELECT doc_id, unnest(list_transform(generate_series(1, len(toks.tok)),
-      |    i -> struct_pack(p := CAST(i AS BIGINT), tok := toks.tok[i]))) AS pt
-      |  FROM toks WHERE doc_id % 25 != 0),
-      |k AS (
-      |  SELECT tok.doc_id, tok.pt.p AS p, tok.pt.tok AS tok
-      |  FROM tok LEFT JOIN cov ON tok.doc_id = cov.doc_id AND tok.pt.p = cov.p
-      |  WHERE cov.p IS NULL),
-      |agg AS (
-      |  SELECT doc_id, CAST(count(*) AS BIGINT) AS n_kept,
-      |         string_agg(tok, ' ' ORDER BY p) AS clean_text
-      |  FROM k GROUP BY 1),
-      |n AS (SELECT doc_id, CAST(len(tok) AS BIGINT) AS n_tokens
-      |      FROM toks WHERE doc_id % 25 != 0)
-      |SELECT doc_id, n_tokens,
-      |       coalesce(n_kept, 0) AS n_kept,
-      |       coalesce(clean_text, '') AS clean_text
-      |FROM n LEFT JOIN agg USING (doc_id)""".stripMargin) { (s, d) =>
+    s"""$deconHitStartsSql
+       |cov AS (SELECT DISTINCT doc_id, p FROM
+       |  (SELECT doc_id, unnest(generate_series(pos, pos + 7)) AS p FROM r)),
+       |tok AS (
+       |  SELECT doc_id, unnest(list_transform(generate_series(1, len(toks.tok)),
+       |    i -> struct_pack(p := CAST(i AS BIGINT), tok := toks.tok[i]))) AS pt
+       |  FROM toks WHERE doc_id % 25 != 0),
+       |k AS (
+       |  SELECT tok.doc_id, tok.pt.p AS p, tok.pt.tok AS tok
+       |  FROM tok LEFT JOIN cov ON tok.doc_id = cov.doc_id AND tok.pt.p = cov.p
+       |  WHERE cov.p IS NULL),
+       |agg AS (
+       |  SELECT doc_id, CAST(count(*) AS BIGINT) AS n_kept,
+       |         string_agg(tok, ' ' ORDER BY p) AS clean_text
+       |  FROM k GROUP BY 1),
+       |n AS (SELECT doc_id, CAST(len(tok) AS BIGINT) AS n_tokens
+       |      FROM toks WHERE doc_id % 25 != 0)
+       |SELECT doc_id, n_tokens,
+       |       coalesce(n_kept, 0) AS n_kept,
+       |       coalesce(clean_text, '') AS clean_text
+       |FROM n LEFT JOIN agg USING (doc_id)""".stripMargin) { (s, d) =>
     deconCutFrom(Tables.documents(s, d), TextQueries.tokFrame(s, d),
       col("doc_id") % 25 === 0, gram = 8)
   }
@@ -499,21 +494,14 @@ object CurationQueries {
     * join keyed by doc_id — no new join class.
     */
   def decontaminateFracDf(docs: DataFrame, isBench: Column): DataFrame = {
-    val grams = shinglePostings(docs, 8)
-    val bench = grams.where(isBench)
-      .select(col("shingle").as("ng")).distinct()
-    val train = grams.where(!isBench)
+    val (train, bench) = benchGrams(docs, isBench)
     val counts = train.groupBy("doc_id").agg(count(lit(1)).as("n_ngrams"))
-    val hits = train.join(bench, col("shingle") === col("ng"))
-      .groupBy("doc_id").agg(count(lit(1)).as("n_hits"))
-    counts.join(hits, Seq("doc_id"), "left")
+    val hits = coalesce(col("n_contaminated_ngrams"), lit(0L))
+    counts.join(benchHits(train, bench), Seq("doc_id"), "left")
       .select(
-        col("doc_id"), col("n_ngrams"),
-        coalesce(col("n_hits"), lit(0L)).as("n_contaminated_ngrams"),
-        (coalesce(col("n_hits"), lit(0L)).cast("double") / col("n_ngrams"))
-          .as("contamination_frac"),
-        when(coalesce(col("n_hits"), lit(0L)) * 20 >= col("n_ngrams"), 1L)
-          .otherwise(0L).as("flagged"))
+        col("doc_id"), col("n_ngrams"), hits.as("n_contaminated_ngrams"),
+        (hits.cast("double") / col("n_ngrams")).as("contamination_frac"),
+        when(hits * 20 >= col("n_ngrams"), 1L).otherwise(0L).as("flagged"))
   }
 
   val decontaminateFrac: QueryDef = QueryDef.sql(
@@ -560,20 +548,14 @@ object CurationQueries {
     * joins, applied where the optimizer cannot see the selectivity.
     */
   def decontaminateBloomDf(docs: DataFrame, isBench: Column): DataFrame = {
-    val grams = shinglePostings(docs, 8)
-    val bench = grams.where(isBench)
-      .select(col("shingle").as("ng")).distinct()
+    val (train, bench) = benchGrams(docs, isBench)
     // the sketch rides as a SCALAR SUBQUERY (might_contain's analysis
     // contract): one tiny aggregate result injected into the scan's
     // filter — no join in the pre-filter at all
     val bloom = bench.agg(
       org.apache.spark.sql.graft.BloomFilterAgg(xxhash64(col("ng"))).as("bf"))
-    val pre = grams.where(!isBench)
-      .where(org.apache.spark.sql.graft.BloomMightContain(
-        bloom.scalar(), xxhash64(col("shingle"))))
-      .select("doc_id", "shingle")
-    pre.join(bench, col("shingle") === col("ng"))
-      .groupBy("doc_id").agg(count(lit(1)).as("n_contaminated_ngrams"))
+    benchHits(train.where(org.apache.spark.sql.graft.BloomMightContain(
+      bloom.scalar(), xxhash64(col("shingle")))), bench)
   }
 
   val decontaminateBloom: QueryDef = QueryDef.sql(
@@ -673,6 +655,38 @@ object CurationQueries {
         nullif(col("n_tokens").cast("double") / sum("n_tokens").over(all), lit(0.0))).as("weight"))
   }
 
+  /** The composed pipelines' shared tail: chunk the `surv` docs into
+    * x_doc_chunks' windows and pack the chunks into ~2000-token
+    * training shards via the distributed prefix sum.
+    */
+  private def chunkPackDf(docs: DataFrame, surv: DataFrame): DataFrame =
+    packCumSum(chunkDf(docs.join(surv, "doc_id"))
+      .select(col("doc_id"), col("chunk_id"), col("n_chunk_tokens")),
+      Seq("doc_id", "chunk_id"), "n_chunk_tokens", 2000L)
+
+  /** [[chunkPackDf]]'s oracle CTEs over a `surv(doc_id)` CTE. */
+  private val chunkPackSql: String =
+    s"""ct AS (
+       |  SELECT d.doc_id,
+       |         CAST(len(regexp_extract_all(lower(d.text), '[a-z0-9]+')) AS BIGINT) AS n
+       |  FROM documents d JOIN surv USING (doc_id)),
+       |ck AS (
+       |  SELECT doc_id, n, CASE WHEN n <= 40 THEN 0 ELSE (n - 40 + 31) // 32 END AS max_k
+       |  FROM ct),
+       |cks AS (
+       |  SELECT doc_id, n, unnest(generate_series(0, max_k)) AS k FROM ck),
+       |chunks AS (
+       |  SELECT doc_id, CAST(k AS BIGINT) AS chunk_id,
+       |         CAST(least(40, n - k * 32) AS BIGINT) AS n_chunk_tokens
+       |  FROM cks),
+       |packed AS (
+       |  SELECT doc_id, chunk_id, n_chunk_tokens,
+       |         ${packCumSumSql(Seq("doc_id", "chunk_id"), "n_chunk_tokens")}
+       |  FROM chunks)
+       |SELECT doc_id, chunk_id, n_chunk_tokens, cum_tokens,
+       |       ${shardIdSql("n_chunk_tokens", 2000L)}
+       |FROM packed""".stripMargin
+
   /** The full training-data preprocessing DAG as ONE query:
     * curate (quality floor → exact-dedup keeper → deterministic
     * sample) → drop benchmark docs and anything decontamination flags
@@ -719,63 +733,48 @@ object CurationQueries {
        |surv AS (
        |  SELECT doc_id FROM cur
        |  WHERE doc_id % 25 != 0 AND doc_id NOT IN (SELECT doc_id FROM contam)),
-       |ct AS (
-       |  SELECT d.doc_id,
-       |         CAST(len(regexp_extract_all(lower(d.text), '[a-z0-9]+')) AS BIGINT) AS n
-       |  FROM documents d JOIN surv USING (doc_id)),
-       |ck AS (
-       |  SELECT doc_id, n, CASE WHEN n <= 40 THEN 0 ELSE (n - 40 + 31) // 32 END AS max_k
-       |  FROM ct),
-       |cks AS (
-       |  SELECT doc_id, n, unnest(generate_series(0, max_k)) AS k FROM ck),
-       |chunks AS (
-       |  SELECT doc_id, CAST(k AS BIGINT) AS chunk_id,
-       |         CAST(least(40, n - k * 32) AS BIGINT) AS n_chunk_tokens
-       |  FROM cks),
-       |packed AS (
-       |  SELECT doc_id, chunk_id, n_chunk_tokens,
-       |         CAST(sum(n_chunk_tokens) OVER (ORDER BY doc_id, chunk_id
-       |           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum_tokens
-       |  FROM chunks)
-       |SELECT doc_id, chunk_id, n_chunk_tokens, cum_tokens,
-       |       (cum_tokens - n_chunk_tokens) // 2000 AS shard_id
-       |FROM packed""".stripMargin) { (s, d) =>
+       |$chunkPackSql""".stripMargin) { (s, d) =>
     val docs = Tables.documents(s, d)
-    val curated = curatedDf(s, d).select("doc_id")
     val contaminated = decontaminateDf(docs, col("doc_id") % 25 === 0).select("doc_id")
-    val surv = curated.where(col("doc_id") % 25 =!= 0)
-      .join(contaminated, Seq("doc_id"), "left_anti")
-    val chunks = chunkDf(docs.join(surv, "doc_id"))
-      .select(col("doc_id"), col("chunk_id"), col("n_chunk_tokens"))
-    packCumSum(chunks, Seq("doc_id", "chunk_id"), "n_chunk_tokens")
-      .withColumn("shard_id", expr("(cum_tokens - n_chunk_tokens) div 2000"))
-      .select("doc_id", "chunk_id", "n_chunk_tokens", "cum_tokens", "shard_id")
+    chunkPackDf(docs, curatedDf(s, d).select("doc_id").where(col("doc_id") % 25 =!= 0)
+      .join(contaminated, Seq("doc_id"), "left_anti"))
   }
 
-  // ----------------------------------------------------------------
-  // Gopher-style rule filter (Rae et al. 2021 §A1.1 repetition/quality
-  // rules, adapted to this corpus's signals): a document keeps iff
-  //   - word count within [minWords, maxWords]
-  //   - mean word length within [3, 10]
-  //   - distinct-word ratio ≥ minDistinct (the word-level repetition
-  //     rule — low ratio = the doc is the same words over and over)
-  //   - fraction of characters in the most frequent word 2-gram
-  //     ≤ maxTop2 (the "top n-gram character fraction" rule)
-  // Emits the evidence columns alongside kept ∈ {0,1} so threshold
-  // choices are auditable downstream, and so the filter composes with
-  // the curation pipeline (filter kept=1) without recomputation.
-  //
-  // Scale shape: word stats are per-row array ops (no shuffle); the
-  // top-2-gram needs one doc-keyed shuffle (posexplode+lead grams →
-  // (doc, gram) partial-agg count → per-doc top-1 via the
-  // WindowGroupLimit rank) and a 1:1 join back — all keyed by doc_id,
-  // embarrassingly parallel at any corpus size. All ratios are single
-  // divisions of exact integers, so the output is bit-identical
-  // across engines and partitionings (no float summation anywhere).
-  // ----------------------------------------------------------------
+  /** A Gopher rule-filter config: the word-count floor, the
+    * distinct-word-ratio floor and the top-2-gram character-fraction
+    * cap (the word-count cap is the fixed [[WordCap]]).
+    */
+  final case class GopherRule(minWords: Int, minDistinct: Double, maxTop2: Double)
 
-  def gopherFilterDf(docs: DataFrame, minWords: Int, maxWords: Int,
-      minDistinct: Double, maxTop2: Double): DataFrame = {
+  object GopherRule {
+    /** x_gopher_filter's config, the quality gate of every composed query. */
+    val Default: GopherRule = GopherRule(20, 0.30, 0.10)
+    /** Tighter repetition bounds — the setting a high-quality-subset pass would use. */
+    val Strict: GopherRule = GopherRule(30, 0.40, 0.08)
+  }
+
+  private final val WordCap = 100000
+
+  /** Gopher-style rule filter (Rae et al. 2021 §A1.1 repetition/quality
+    * rules, adapted to this corpus's signals): a document keeps iff
+    *   - word count within [minWords, [[WordCap]]]
+    *   - mean word length within [3, 10]
+    *   - distinct-word ratio ≥ minDistinct (the word-level repetition
+    *     rule — low ratio = the doc is the same words over and over)
+    *   - fraction of characters in the most frequent word 2-gram
+    *     ≤ maxTop2 (the "top n-gram character fraction" rule)
+    * Emits the evidence columns alongside kept ∈ {0,1} so threshold
+    * choices are auditable downstream, and so the filter composes with
+    * the curation pipeline (filter kept=1) without recomputation.
+    *
+    * Scale shape: word stats are per-row array ops (no shuffle); the
+    * top 2-gram is one (doc, gram) partial-aggregated count, a per-doc
+    * argmin aggregate and a 1:1 join back — all keyed by doc_id,
+    * embarrassingly parallel at any corpus size. All ratios are single
+    * divisions of exact integers, so the output is bit-identical
+    * across engines and partitionings (no float summation anywhere).
+    */
+  def gopherFilterDf(docs: DataFrame, rule: GopherRule): DataFrame = {
     val stats = docs.select(col("doc_id"), tokens(col("text")).as("toks"))
       .select(
         col("doc_id"),
@@ -783,20 +782,14 @@ object CurationQueries {
         aggregate(col("toks"), lit(0L), (acc, w) => acc + length(w).cast("long"))
           .as("sum_chars"),
         size(array_distinct(col("toks"))).cast("long").as("n_distinct"))
-    // top word-2-gram via the native StringShingles expression
-    // (optimization round — no posexplode, no per-doc window exchange;
-    // see TextOps.shinglePostings)
     val grams = docs
-      .select(col("doc_id"),
-        explode(StringShingles(tokens(col("text")), 2))
-          .as("gram"))
+      .select(col("doc_id"), explode(StringShingles(tokens(col("text")), 2)).as("gram"))
     // top-1 selection as an ARGMIN aggregate over struct(-cnt, gram)
-    // rather than a row_number window: the rank formulation needed the
-    // rows clustered by doc_id (an exchange the old posexplode+lead
-    // window happened to provide for free); as an aggregate both
-    // phases combine map-side, so the only full-width shuffle left is
-    // the partial-aggregated (doc_id, gram) counts. Identical row
-    // selected: lexicographic struct min = cnt desc, gram asc.
+    // rather than a row_number window, which would need the rows
+    // clustered by doc_id: as an aggregate both phases combine
+    // map-side, so the only full-width shuffle is the partial-aggregated
+    // (doc_id, gram) counts. Same row as the oracle's rank:
+    // lexicographic struct min = cnt desc, gram asc.
     val top = grams.groupBy("doc_id", "gram").agg(count(lit(1)).as("cnt"))
       .groupBy("doc_id")
       .agg(min(struct((-col("cnt")).as("neg_cnt"), col("gram").as("gram"),
@@ -819,14 +812,13 @@ object CurationQueries {
         least(coalesce(col("top2_chars").cast("double") / nullif(col("sum_chars"), lit(0L)),
           lit(0.0)), lit(1.0)).as("top_2gram_char_frac"))
     scored.withColumn("kept",
-      when(col("n_words").between(minWords, maxWords) &&
+      when(col("n_words").between(rule.minWords, WordCap) &&
         col("mean_word_len").between(3.0, 10.0) &&
-        col("distinct_word_ratio") >= minDistinct &&
-        col("top_2gram_char_frac") <= maxTop2, 1L).otherwise(0L))
+        col("distinct_word_ratio") >= rule.minDistinct &&
+        col("top_2gram_char_frac") <= rule.maxTop2, 1L).otherwise(0L))
   }
 
-  private def gopherFilterSql(minWords: Int, maxWords: Int,
-      minDistinct: Double, maxTop2: Double): String =
+  private def gopherFilterSql(rule: GopherRule): String =
     s"""WITH t AS (
        |  SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS toks FROM documents),
        |stats AS (
@@ -851,29 +843,22 @@ object CurationQueries {
        |               1.0) AS top_2gram_char_frac
        |  FROM stats s LEFT JOIN top ON s.doc_id = top.doc_id)
        |SELECT doc_id, n_words, mean_word_len, distinct_word_ratio, top_2gram_char_frac,
-       |       CAST(CASE WHEN n_words BETWEEN $minWords AND $maxWords
+       |       CAST(CASE WHEN n_words BETWEEN ${rule.minWords} AND $WordCap
        |                  AND mean_word_len BETWEEN 3.0 AND 10.0
-       |                  AND distinct_word_ratio >= $minDistinct
-       |                  AND top_2gram_char_frac <= $maxTop2
+       |                  AND distinct_word_ratio >= ${rule.minDistinct}
+       |                  AND top_2gram_char_frac <= ${rule.maxTop2}
        |            THEN 1 ELSE 0 END AS BIGINT) AS kept
        |FROM scored""".stripMargin
 
   val gopherFilter: QueryDef = QueryDef.sql(
-    "x_gopher_filter",
-    gopherFilterSql(minWords = 20, maxWords = 100000, minDistinct = 0.30, maxTop2 = 0.10)) { (s, d) =>
-    gopherFilterDf(Tables.documents(s, d),
-      minWords = 20, maxWords = 100000, minDistinct = 0.30, maxTop2 = 0.10)
+    "x_gopher_filter", gopherFilterSql(GopherRule.Default)) { (s, d) =>
+    gopherFilterDf(Tables.documents(s, d), GopherRule.Default)
   }
 
-  /** The aggressive config — tighter repetition bounds, the setting a
-    * high-quality-subset pass would use; same parameterized builder
-    * and oracle on both sides.
-    */
+  /** The strict config; same builder and oracle on both sides. */
   val gopherFilterStrict: QueryDef = QueryDef.sql(
-    "x_gopher_filter_strict",
-    gopherFilterSql(minWords = 30, maxWords = 100000, minDistinct = 0.40, maxTop2 = 0.08)) { (s, d) =>
-    gopherFilterDf(Tables.documents(s, d),
-      minWords = 30, maxWords = 100000, minDistinct = 0.40, maxTop2 = 0.08)
+    "x_gopher_filter_strict", gopherFilterSql(GopherRule.Strict)) { (s, d) =>
+    gopherFilterDf(Tables.documents(s, d), GopherRule.Strict)
   }
 
   /** Gopher-gated preprocessing pipeline: rule filter (kept=1) →
@@ -886,7 +871,7 @@ object CurationQueries {
   val pipelineGopher: QueryDef = QueryDef.sql(
     "x_pipeline_gopher",
     s"""WITH gf AS (
-       |${gopherFilterSql(minWords = 20, maxWords = 100000, minDistinct = 0.30, maxTop2 = 0.10)}),
+       |${gopherFilterSql(GopherRule.Default)}),
        |kd AS (
        |  SELECT d.doc_id, d.text FROM documents d
        |  JOIN gf ON d.doc_id = gf.doc_id AND gf.kept = 1),
@@ -896,58 +881,25 @@ object CurationQueries {
        |  SELECT doc_id, row_number() OVER (PARTITION BY md5(norm) ORDER BY doc_id) AS rn
        |  FROM nrm),
        |surv AS (SELECT doc_id FROM keep WHERE rn = 1),
-       |ct AS (
-       |  SELECT d.doc_id,
-       |         CAST(len(regexp_extract_all(lower(d.text), '[a-z0-9]+')) AS BIGINT) AS n
-       |  FROM documents d JOIN surv USING (doc_id)),
-       |ck AS (
-       |  SELECT doc_id, n, CASE WHEN n <= 40 THEN 0 ELSE (n - 40 + 31) // 32 END AS max_k
-       |  FROM ct),
-       |cks AS (
-       |  SELECT doc_id, n, unnest(generate_series(0, max_k)) AS k FROM ck),
-       |chunks AS (
-       |  SELECT doc_id, CAST(k AS BIGINT) AS chunk_id,
-       |         CAST(least(40, n - k * 32) AS BIGINT) AS n_chunk_tokens
-       |  FROM cks),
-       |packed AS (
-       |  SELECT doc_id, chunk_id, n_chunk_tokens,
-       |         CAST(sum(n_chunk_tokens) OVER (ORDER BY doc_id, chunk_id
-       |           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum_tokens
-       |  FROM chunks)
-       |SELECT doc_id, chunk_id, n_chunk_tokens, cum_tokens,
-       |       (cum_tokens - n_chunk_tokens) // 2000 AS shard_id
-       |FROM packed""".stripMargin) { (s, d) =>
+       |$chunkPackSql""".stripMargin) { (s, d) =>
     val docs = Tables.documents(s, d)
-    val kept = gopherFilterDf(docs,
-        minWords = 20, maxWords = 100000, minDistinct = 0.30, maxTop2 = 0.10)
-      .where(col("kept") === 1).select("doc_id")
-    val first = docs.join(kept, "doc_id")
-      .withColumn("rn",
-        row_number().over(Window.partitionBy(exactFp(col("text"))).orderBy("doc_id")))
-      .where(col("rn") === 1)
-      .select("doc_id")
-    val chunks = chunkDf(docs.join(first, "doc_id"))
-      .select(col("doc_id"), col("chunk_id"), col("n_chunk_tokens"))
-    packCumSum(chunks, Seq("doc_id", "chunk_id"), "n_chunk_tokens")
-      .withColumn("shard_id", expr("(cum_tokens - n_chunk_tokens) div 2000"))
-      .select("doc_id", "chunk_id", "n_chunk_tokens", "cum_tokens", "shard_id")
+    val kept = gopherFilterDf(docs, GopherRule.Default).where(col("kept") === 1).select("doc_id")
+    chunkPackDf(docs, exactKeepers(docs.join(kept, "doc_id")).select("doc_id"))
   }
 
-  // ----------------------------------------------------------------
-  // Second Gopher evidence rule (Rae et al. 2021 §A1.1 formatting
-  // signals): symbol-to-word ratio and bullet-line fraction. A doc
-  // keeps iff
-  //   - (count of '#' + non-overlapping '...' occurrences) / words
-  //     ≤ symNum/symDen
-  //   - (lines starting with a bullet marker) / lines ≤ bulNum/bulDen
-  // Thresholds are RATIONALS compared as cross-multiplied exact
-  // integers (n_symbols * symDen <= symNum * n_words), so `kept` never
-  // touches a float; the double ratio columns are evidence only, each
-  // a single division of exact integers — the same bit-stable pattern
-  // as gopherFilterDf. Scale shape: per-row string/array ops, zero
-  // shuffle, embarrassingly parallel at any corpus size.
-  // ----------------------------------------------------------------
-
+  /** Second Gopher evidence rule (Rae et al. 2021 §A1.1 formatting
+    * signals): symbol-to-word ratio and bullet-line fraction. A doc
+    * keeps iff
+    *   - (count of '#' + non-overlapping '...' occurrences) / words
+    *     ≤ symNum/symDen
+    *   - (lines starting with a bullet marker) / lines ≤ bulNum/bulDen
+    * Thresholds are RATIONALS compared as cross-multiplied exact
+    * integers (n_symbols * symDen <= symNum * n_words), so `kept` never
+    * touches a float; the double ratio columns are evidence only, each
+    * a single division of exact integers — the same bit-stable pattern
+    * as gopherFilterDf. Scale shape: per-row string/array ops, zero
+    * shuffle, embarrassingly parallel at any corpus size.
+    */
   def gopherSymbolsDf(docs: DataFrame, symNum: Int, symDen: Int,
       bulNum: Int, bulDen: Int): DataFrame = {
     val counted = docs.select(
@@ -1197,7 +1149,7 @@ object CurationQueries {
   val pipelineHybrid: QueryDef = QueryDef.sql(
     "x_pipeline_hybrid",
     s"""WITH gf AS (
-       |${gopherFilterSql(minWords = 20, maxWords = 100000, minDistinct = 0.30, maxTop2 = 0.10)}),
+       |${gopherFilterSql(GopherRule.Default)}),
        |kd AS (
        |${SimilarityQueries.knnDensitySql(bands = 4, r = 8, k = 5, tau = 0.25, minClose = 3)})
        |SELECT gf.doc_id, gf.n_words,
@@ -1206,8 +1158,7 @@ object CurationQueries {
        |       CAST(coalesce(kd.kept, 1) AS BIGINT) AS kept_embed,
        |       CAST(gf.kept * coalesce(kd.kept, 1) AS BIGINT) AS kept
        |FROM gf LEFT JOIN kd ON gf.doc_id = kd.vec_id""".stripMargin) { (s, d) =>
-    val text = gopherFilterDf(Tables.documents(s, d),
-        minWords = 20, maxWords = 100000, minDistinct = 0.30, maxTop2 = 0.10)
+    val text = gopherFilterDf(Tables.documents(s, d), GopherRule.Default)
       .select(col("doc_id"), col("n_words"), col("kept").as("kept_text"))
     val dens = SimilarityQueries
       .knnDensityDf(s, d, bands = 4, r = 8, k = 5, tau = 0.25, minClose = 3)
@@ -1267,10 +1218,6 @@ object CurationQueries {
     shardAssignOf(Tables.documents(s, d), nShards = 8)
   }
 
-  // ----------------------------------------------------------------
-  // Curriculum interleaving: the deterministic training-order schedule.
-  // ----------------------------------------------------------------
-
   /** Proportional-interleaving curriculum schedule: every document gets
     * its global training position under weighted round-robin across
     * sources — the deterministic data-order a trainer consumes.
@@ -1297,8 +1244,7 @@ object CurationQueries {
     * so the hash match PROVES the closed form equals the sort.
     */
   def curriculumOf(docs: DataFrame, w1: Int, w2: Int): DataFrame = {
-    require(w1 >= w2 && w2 >= 1, s"degenerate curriculum weights ($w1, $w2)")
-    val l = (1 to w1 * w2).find(x => x % w1 == 0 && x % w2 == 0).get
+    val l = curriculumLcm(w1, w2)
     val rs = docs.select(col("doc_id"), col("source"))
       .withColumn("rn", row_number().over(
         Window.partitionBy("source").orderBy("doc_id")).cast("long"))
@@ -1323,6 +1269,12 @@ object CurationQueries {
       .select(col("doc_id"), col("source"), col("rn"), col("sched_key"), col("pos"))
   }
 
+  /** L = lcm(w1, w2) of a valid weight profile (w1 ≥ w2 ≥ 1). */
+  private def curriculumLcm(w1: Int, w2: Int): Int = {
+    require(w1 >= w2 && w2 >= 1, s"degenerate curriculum weights ($w1, $w2)")
+    (1 to w1 * w2).find(x => x % w1 == 0 && x % w2 == 0).get
+  }
+
   /** The schedule CTE chain over an arbitrary (doc_id, source)
     * relation `rel`, ending in `ck(doc_id, source, rn, sched_key,
     * src_rank)` — composable after other CTE chains (c-prefixed names
@@ -1330,7 +1282,7 @@ object CurationQueries {
     * corpus (e.g. the leak-free train split).
     */
   private[llm] def curriculumCtes(w1: Int, w2: Int, rel: String): String = {
-    val l = (1 to w1 * w2).find(x => x % w1 == 0 && x % w2 == 0).get
+    val l = curriculumLcm(w1, w2)
     s"""crs AS (
        |  SELECT doc_id, source,
        |         CAST(row_number() OVER (PARTITION BY source ORDER BY doc_id) AS BIGINT) AS rn
@@ -1394,12 +1346,11 @@ object CurationQueries {
        |  FROM documents),
        |cp AS (
        |  SELECT doc_id, n_tokens,
-       |         CAST(sum(n_tokens) OVER (ORDER BY doc_id
-       |           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum_tokens
+       |         ${packCumSumSql(Seq("doc_id"), "n_tokens")}
        |  FROM tp),
        |pp AS (
        |  SELECT doc_id, n_tokens, cum_tokens,
-       |         (cum_tokens - n_tokens) // $budget AS shard_id
+       |         ${shardIdSql("n_tokens", budget)}
        |  FROM cp)
        |SELECT shard_id, CAST(count(*) AS BIGINT) AS n_docs,
        |       CAST(sum(n_tokens) AS BIGINT) AS shard_tokens,
@@ -1443,10 +1394,9 @@ object CurationQueries {
     * (the filter's per-doc stats, one md5 window among survivors),
     * output |stages|×|sources| rows. No new join class.
     */
-  private def sourceFunnelSql(minWords: Int, maxWords: Int,
-      minDistinct: Double, maxTop2: Double): String =
+  private def sourceFunnelSql(rule: GopherRule): String =
     s"""WITH gf AS (
-       |${gopherFilterSql(minWords, maxWords, minDistinct, maxTop2)}),
+       |${gopherFilterSql(rule)}),
        |tokf AS (
        |  SELECT doc_id, source,
        |         CAST(len(regexp_extract_all(lower(text), '[a-z0-9]+')) AS BIGINT) AS n,
@@ -1471,17 +1421,13 @@ object CurationQueries {
        |  SELECT 'dedup', source, CAST(count(*) AS BIGINT),
        |         CAST(sum(n) AS BIGINT) FROM dd GROUP BY source)""".stripMargin
 
-  private[graft] def sourceFunnelDf(s: SparkSession, d: String, minWords: Int,
-      maxWords: Int, minDistinct: Double, maxTop2: Double): DataFrame = {
+  private[graft] def sourceFunnelDf(s: SparkSession, d: String, rule: GopherRule): DataFrame = {
     val docs = Tables.documents(s, d)
     val tok = docs.select(col("doc_id"), col("source"), col("text"),
       size(tokens(col("text"))).cast("long").as("n"))
-    val kept = gopherFilterDf(docs, minWords, maxWords, minDistinct, maxTop2)
-      .where(col("kept") === 1).select("doc_id")
+    val kept = gopherFilterDf(docs, rule).where(col("kept") === 1).select("doc_id")
     val qd = tok.join(kept, "doc_id")
-    val dd = qd.withColumn("rn",
-        row_number().over(Window.partitionBy(exactFp(col("text"))).orderBy("doc_id")))
-      .where(col("rn") === 1)
+    val dd = exactKeepers(qd)
     def stage(df: DataFrame, name: String): DataFrame =
       df.groupBy("source").agg(count(lit(1)).as("n_docs"), sum("n").as("n_tokens"))
         .select(lit(name).as("stage"), col("source"), col("n_docs"), col("n_tokens"))
@@ -1489,9 +1435,8 @@ object CurationQueries {
   }
 
   val sourceFunnel: QueryDef = QueryDef.sql(
-    "x_source_funnel",
-    sourceFunnelSql(minWords = 20, maxWords = 100000, minDistinct = 0.30, maxTop2 = 0.10)) { (s, d) =>
-    sourceFunnelDf(s, d, minWords = 20, maxWords = 100000, minDistinct = 0.30, maxTop2 = 0.10)
+    "x_source_funnel", sourceFunnelSql(GopherRule.Default)) { (s, d) =>
+    sourceFunnelDf(s, d, GopherRule.Default)
   }
 
   /** Per-source corpus data card — the one-row-per-source datasheet a
@@ -1512,11 +1457,10 @@ object CurationQueries {
     * a |sources|-bounded dominance window. All shares are exact
     * quantized integer divisions.
     */
-  private def dataCardSql(minWords: Int, maxWords: Int,
-      minDistinct: Double, maxTop2: Double): String =
+  private def dataCardSql(rule: GopherRule): String =
     s"""WITH RECURSIVE ${graft.llm.DedupQueries.clusterCtes},
        |gf AS (
-       |${gopherFilterSql(minWords, maxWords, minDistinct, maxTop2)}),
+       |${gopherFilterSql(rule)}),
        |sz AS (
        |  SELECT doc, CAST(count(*) OVER (PARTITION BY cluster_id) AS BIGINT) AS cluster_size
        |  FROM lab),
@@ -1545,13 +1489,11 @@ object CurationQueries {
        |       p.eff_tokens_q
        |FROM per p JOIN dom ON p.source = dom.source""".stripMargin
 
-  private def dataCardDf(s: SparkSession, d: String, minWords: Int, maxWords: Int,
-      minDistinct: Double, maxTop2: Double): DataFrame = {
+  private def dataCardDf(s: SparkSession, d: String, rule: GopherRule): DataFrame = {
     val docs = Tables.documents(s, d)
     val dt = docs.select(col("doc_id"), col("source"), col("lang"),
       size(tokens(col("text"))).cast("long").as("n_toks"))
-    val kept = gopherFilterDf(docs, minWords, maxWords, minDistinct, maxTop2)
-      .select(col("doc_id"), col("kept"))
+    val kept = gopherFilterDf(docs, rule).select(col("doc_id"), col("kept"))
     val sz = graft.llm.DedupQueries.ccLabels(s, d)
       .withColumn("cluster_size",
         count(lit(1)).over(Window.partitionBy("cluster_id")).cast("long"))
@@ -1578,9 +1520,8 @@ object CurationQueries {
   }
 
   val dataCard: QueryDef = QueryDef.sql(
-    "x_data_card",
-    dataCardSql(minWords = 20, maxWords = 100000, minDistinct = 0.30, maxTop2 = 0.10)) { (s, d) =>
-    dataCardDf(s, d, minWords = 20, maxWords = 100000, minDistinct = 0.30, maxTop2 = 0.10)
+    "x_data_card", dataCardSql(GopherRule.Default)) { (s, d) =>
+    dataCardDf(s, d, GopherRule.Default)
   }
 
   /** The strict Gopher config rides through the card — pins the
@@ -1589,9 +1530,8 @@ object CurationQueries {
     * pins).
     */
   val dataCardStrict: QueryDef = QueryDef.sql(
-    "x_data_card_strict",
-    dataCardSql(minWords = 30, maxWords = 100000, minDistinct = 0.40, maxTop2 = 0.08)) { (s, d) =>
-    dataCardDf(s, d, minWords = 30, maxWords = 100000, minDistinct = 0.40, maxTop2 = 0.08)
+    "x_data_card_strict", dataCardSql(GopherRule.Strict)) { (s, d) =>
+    dataCardDf(s, d, GopherRule.Strict)
   }
 
   /** Budget-constrained source-mix solve — the DECISION the data card
@@ -1618,8 +1558,7 @@ object CurationQueries {
     // ranking branch and the budget scalar both read the card, and
     // without the pin each branch re-derives the ENTIRE data-card
     // chain (tokenize + gopher gate + cluster-size attach + two
-    // aggregations — the r17 before bench priced x_mix_solve at
-    // 1.77 s ≈ 2× x_data_card's 1.05 s for a 20-row overlay)
+    // aggregations) for a |sources|-row overlay
     val pinned = card.localCheckpoint(false)
     val ranked = pinned
       .withColumn("rk", row_number().over(
@@ -1638,10 +1577,9 @@ object CurationQueries {
           .as("take_frac_q"))
   }
 
-  private def mixSolveSql(minWords: Int, maxWords: Int,
-      minDistinct: Double, maxTop2: Double): String =
+  private def mixSolveSql(rule: GopherRule): String =
     s"""WITH card AS (
-       |${dataCardSql(minWords, maxWords, minDistinct, maxTop2)}),
+       |${dataCardSql(rule)}),
        |r AS (
        |  SELECT source, gopher_pass_q, eff_tokens_q,
        |         CAST(row_number() OVER (ORDER BY gopher_pass_q DESC, source) AS BIGINT) AS rk
@@ -1658,10 +1596,8 @@ object CurationQueries {
        |FROM c, b""".stripMargin
 
   val mixSolve: QueryDef = QueryDef.sql(
-    "x_mix_solve",
-    mixSolveSql(minWords = 20, maxWords = 100000, minDistinct = 0.30, maxTop2 = 0.10)) { (s, d) =>
-    mixAllocFrom(dataCardDf(s, d, minWords = 20, maxWords = 100000,
-      minDistinct = 0.30, maxTop2 = 0.10))
+    "x_mix_solve", mixSolveSql(GopherRule.Default)) { (s, d) =>
+    mixAllocFrom(dataCardDf(s, d, GopherRule.Default))
   }
 
   val all: Seq[QueryDef] =

@@ -28,6 +28,14 @@ object TextOps {
   /** Exact-dedup fingerprint: md5 of [[normText]] (x_dedup_exact's). */
   def exactFp(text: Column): Column = md5(normText(text))
 
+  /** Exact-dedup keeper: the rows of a (doc_id, text, …) frame whose
+    * doc_id is the least among the rows sharing its [[exactFp]]
+    * (x_dedup_exact's rule).
+    */
+  def exactKeepers(df: DataFrame): DataFrame =
+    df.withColumn("rn", row_number().over(Window.partitionBy(exactFp(col("text"))).orderBy("doc_id")))
+      .where(col("rn") === 1).drop("rn")
+
   /** (doc_id, shingle) postings — the inverted-index representation all
     * set-similarity ops run on: one row per distinct (doc, word
     * k-shingle), the shingles from

@@ -161,19 +161,21 @@ object Relational {
     (withOff.select(col(key), (col("off") + col("lr")).as(rankCol)), counts)
   }
 
-  /** The two-phase distributed prefix sum over `tokenCol` in
-    * `orderCols` order (document-level packing in x_token_pack,
-    * chunk-level packing in x_pipeline_e2e). Adds `cum_tokens` = the
-    * inclusive running sum and keeps the input columns. Same shape as
-    * [[rangeRank]]: range-partition, run locally per partition, add
-    * the broadcast per-partition offsets.
+  /** The token-budget shard packer: the two-phase distributed prefix
+    * sum over `tokenCol` in `orderCols` order (document-level packing
+    * in x_token_pack, chunk-level packing in x_pipeline_e2e). Adds
+    * `cum_tokens` = the inclusive running sum and `shard_id` = the
+    * exclusive running sum div `budget`, and keeps the input columns.
+    * Same shape as [[rangeRank]]: range-partition, run locally per
+    * partition, add the broadcast per-partition offsets.
     *
     * The lazy localCheckpoint pins one pid assignment, for the same
     * reason as in [[rangeRank]] (regression-pinned with exchange reuse
     * off in CurationSpec). The local step keeps its window: the
     * running sum needs the rows in order and a window per partition.
     */
-  def packCumSum(df: DataFrame, orderCols: Seq[String], tokenCol: String): DataFrame = {
+  def packCumSum(df: DataFrame, orderCols: Seq[String], tokenCol: String,
+      budget: Long): DataFrame = {
     val parted = df.repartitionByRange(orderCols.map(col): _*)
       .withColumn("pid", spark_partition_id())
       .localCheckpoint(eager = false)
@@ -181,8 +183,20 @@ object Relational {
       sum(tokenCol).over(Window.partitionBy("pid").orderBy(orderCols.map(col): _*)))
     withPartitionOffsets(local, "run")._1
       .withColumn("cum_tokens", col("off") + col("run"))
+      .withColumn("shard_id", expr(s"(cum_tokens - $tokenCol) div $budget"))
       .drop("pid", "run", "off")
   }
+
+  /** [[packCumSum]]'s columns in DuckDB SQL: `cum_tokens` as the
+    * single-window running sum the distributed one must equal, and the
+    * `shard_id` expression over it.
+    */
+  def packCumSumSql(orderCols: Seq[String], tokenCol: String): String =
+    s"""CAST(sum($tokenCol) OVER (ORDER BY ${orderCols.mkString(", ")}
+       |           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum_tokens""".stripMargin
+
+  def shardIdSql(tokenCol: String, budget: Long): String =
+    s"(cum_tokens - $tokenCol) // $budget AS shard_id"
 
   /** The offsets step of both range scans: per-partition totals
     * `(pid, cnt = max(run))` and `local` joined to the broadcast

@@ -32,7 +32,7 @@ class CurationSpec extends SparkSpec {
       // cum_tokens must EQUAL the single-window prefix sum — not merely
       // be monotone: a re-sampled pid assignment between the fan-out
       // branches would still be monotone but globally wrong. This is
-      // red if the pid-pinning snapshot in tokenPackDf is removed.
+      // red if the pid-pinning snapshot in Relational.packCumSum is removed.
       val got = df.select("doc_id", "cum_tokens").collect()
         .map(r => r.getLong(0) -> r.getLong(1)).toMap
       val ref = Tables.documents(spark, sf)
@@ -274,14 +274,14 @@ class CurationSpec extends SparkSpec {
       .map { case (id, t, l, src) => (id, t, l, src, t.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    def stages(minWords: Int, minDistinct: Double, maxTop2: Double) =
-      CurationQueries.sourceFunnelDf(spark, dir, minWords, 100000, minDistinct, maxTop2)
+    def stages(rule: CurationQueries.GopherRule) =
+      CurationQueries.sourceFunnelDf(spark, dir, rule)
         .select("stage", "source", "n_docs", "n_tokens")
         .as[(String, String, Long, Long)].collect().toSet
     val raw = Set(("raw", "s1", 2L, 65L), ("raw", "s2", 1L, 5L))
-    assert(stages(20, 0.30, 0.10) ==
+    assert(stages(CurationQueries.GopherRule(20, 0.30, 0.10)) ==
       raw + (("quality", "s1", 2L, 65L)) + (("dedup", "s1", 2L, 65L)))
-    assert(stages(30, 0.40, 0.08) ==
+    assert(stages(CurationQueries.GopherRule(30, 0.40, 0.08)) ==
       raw + (("quality", "s1", 1L, 40L)) + (("dedup", "s1", 1L, 40L)))
   }
 

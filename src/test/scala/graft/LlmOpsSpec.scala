@@ -761,15 +761,14 @@ class LlmOpsSpec extends SparkSpec {
       // mean word length 16 > 10
       (4L, Seq.fill(25)("extraordinarily").zipWithIndex.map { case (w, i) => w + i }.mkString(" "))
     ).toDF("doc_id", "text")
-    val got = llm.CurationQueries.gopherFilterDf(docs,
-        minWords = 20, maxWords = 100000, minDistinct = 0.30, maxTop2 = 0.10)
+    val got = llm.CurationQueries.gopherFilterDf(docs, llm.CurationQueries.GopherRule.Default)
       .select("doc_id", "kept").as[(Long, Long)].collect().toMap
     assert(got == Map(1L -> 1L, 2L -> 0L, 3L -> 0L, 4L -> 0L))
     // exact evidence on the repetitive doc: 30 words (105 chars of
     // word mass), 2 distinct; "spam ham" occurs 15 of 29 grams at 7
     // word chars each -> top frac = 15*7/105 = 1.0 (the whole word
     // mass is covered by one bigram)
-    val r2 = llm.CurationQueries.gopherFilterDf(docs, 20, 100000, 0.30, 0.10)
+    val r2 = llm.CurationQueries.gopherFilterDf(docs, llm.CurationQueries.GopherRule(20, 0.30, 0.10))
       .where($"doc_id" === 2).head()
     assert(r2.getAs[Long]("n_words") == 30L)
     assert(r2.getAs[Double]("distinct_word_ratio") == 2.0 / 30)
@@ -1074,8 +1073,7 @@ class LlmOpsSpec extends SparkSpec {
     // the strict config through the parameterized builder (the
     // x_source_funnel_strict registry twin was folded into spec pins)
     val strict = byStage(QueryDef("strict_funnel", (s, dd) =>
-      llm.CurationQueries.sourceFunnelDf(s, dd, minWords = 30, maxWords = 100000,
-        minDistinct = 0.40, maxTop2 = 0.08), None))
+      llm.CurationQueries.sourceFunnelDf(s, dd, llm.CurationQueries.GopherRule.Strict), None))
     assert(strict("quality").values.map(_._1).sum <= f("quality").values.map(_._1).sum)
     // raw is filter-independent
     assert(strict("raw") == f("raw"))

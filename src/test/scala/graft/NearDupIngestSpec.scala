@@ -609,8 +609,7 @@ class NearDupIngestSpec extends SparkSpec {
 
     // the batch tier's rule filter as the stream-edge admission gate
     val gate: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame = d =>
-      d.join(llm.CurationQueries.gopherFilterDf(d,
-          minWords = 5, maxWords = 100000, minDistinct = 0.30, maxTop2 = 0.5)
+      d.join(llm.CurationQueries.gopherFilterDf(d, llm.CurationQueries.GopherRule(5, 0.30, 0.5))
         .where(col("kept") === 1).select("doc_id"), "doc_id")
 
     // junk = 20x the same stopword: distinct-word ratio 0.05 fails the
@@ -640,8 +639,7 @@ class NearDupIngestSpec extends SparkSpec {
 
     // streaming tier: gopher gate at the edge, two micro-batches
     val gate: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame = d =>
-      d.join(llm.CurationQueries.gopherFilterDf(d,
-          minWords = 5, maxWords = 100000, minDistinct = 0.30, maxTop2 = 0.5)
+      d.join(llm.CurationQueries.gopherFilterDf(d, llm.CurationQueries.GopherRule(5, 0.30, 0.5))
         .where(col("kept") === 1).select("doc_id"), "doc_id")
     val junk = text((1 to 20).map(_ => "the"): _*)
     val input = MemoryStream[Doc](spark)

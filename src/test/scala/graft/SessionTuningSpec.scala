@@ -151,6 +151,18 @@ class SessionTuningSpec extends AnyFunSuite {
         s"pairSetOverlay; found overlap $overlap, A.zip(B) $zips, full_outer $outer")
   }
 
+  test("one curation kernel: one exact-dup keeper, one Gopher rule, one bench-gram set, one shard packer") {
+    val keepers = mainLinesWith("partitionBy(exactFp(")
+    val wordCaps = mainLinesWith("maxWords")
+    val benchSets = mainLinesWith(".as(\"ng\")).distinct()")
+    val shards = mainSourcesWith("cum_tokens - ", "Relational.scala")
+    assert(keepers.size == 1 && wordCaps.isEmpty && benchSets.size == 1 && shards.isEmpty,
+      "keep exact dups with TextOps.exactKeepers, gate with a CurationQueries.GopherRule, " +
+        "derive bench grams with CurationQueries.benchGrams and shards with " +
+        s"Relational.packCumSum; found keepers $keepers, maxWords $wordCaps, " +
+        s"bench-gram sets $benchSets, shard expressions in $shards")
+  }
+
   test("one quantized-cosine kernel: qdot and the ×1000 quantization only in TextOps.scala") {
     val offenders = Seq("qdot(", "quantize(col(\"embedding\"))")
       .flatMap(mainSourcesWith(_, "TextOps.scala")).distinct

@@ -13,7 +13,10 @@ names, and the group order of the distinct-aggregate rewrite's Expand):
     extract_plans.py --diff <dump_a.txt> <dump_b.txt>
 
 The diff prints one query name per line (queries present in only one
-dump are marked) and exits 1 if any query differs.
+dump are marked) and exits 1 if any query differs. On stderr it also
+names the unchanged queries whose plan reads a pinned frame: a
+localCheckpoint prints only as `Scan ExistingRDD`, so identical plans
+there say nothing about the pinned subtree.
 """
 import re
 import sys
@@ -23,6 +26,9 @@ import pathlib
 # formatted plan (scalar subqueries), not a query delimiter
 PLAN_RE = re.compile(
     r"===== (?!Subqueries)(\S+) =====\n(.*?)(?=\n===== (?!Subqueries)|\Z)", re.S)
+
+# how a pinned (localCheckpoint) frame prints: its subtree is not in the plan
+PIN_SCAN = "Scan ExistingRDD"
 
 # (pattern, replacement) applied in order to every plan
 MASKS = [
@@ -115,6 +121,13 @@ def diff(a_path, b_path):
     for q in changed:
         print(q)
     print(f"{len(changed)} of {len(set(a) | set(b))} queries differ", file=sys.stderr)
+    blind = [q for q in sorted(set(a) & set(b))
+             if q not in changed and PIN_SCAN in a[q] + b[q]]
+    if blind:
+        print(f"{len(blind)} unchanged queries read a pinned frame ({PIN_SCAN}), "
+              "unverified below the pin:", file=sys.stderr)
+        for q in blind:
+            print(f"  {q}", file=sys.stderr)
     return 1 if changed else 0
 
 
