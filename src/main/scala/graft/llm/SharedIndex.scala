@@ -45,6 +45,12 @@ object SharedIndex {
     dir
   }
 
+  /** A fresh directory named `prefix…` under the per-JVM root, for a
+    * query's fixture that must not outlive the run.
+    */
+  private[graft] def tempDir(prefix: String): java.nio.file.Path =
+    Files.createTempDirectory(root, prefix)
+
   private val builtPaths = mutable.HashMap.empty[String, String]
 
   /** Test-only accounting: how many times each artifact key's builder
@@ -92,7 +98,9 @@ object SharedIndex {
     * columnar scan. The whole check-and-build runs under one lock so
     * concurrent first callers can't race a rebuild of the same path;
     * the key is the normalized absolute path so spelling variants
-    * (trailing slash, relative) share one artifact. A labeling or index
+    * (trailing slash, relative) share one artifact, stored in the
+    * directory `<tag>-<digest of the key>` (a name Spark does not read
+    * as hidden, unique per key). A labeling or index
     * that an entire job family consumes is an artifact you compute
     * once, not a plan fragment each query re-derives. Used for the
     * shingle postings above and the near-dup CC labeling (nine queries
@@ -106,8 +114,7 @@ object SharedIndex {
     val path = builtPaths.synchronized {
       builtPaths.getOrElseUpdate(key, {
         countBuild(key)
-        val safe = key.replaceAll("[^A-Za-z0-9._-]", "_")
-        val p = root.resolve(safe).toString
+        val p = root.resolve(s"$tag-${graft.operators.Compaction.shortDigest(key)}").toString
         build.write.mode("overwrite").parquet(p)
         p
       })

@@ -373,10 +373,11 @@ object Compaction {
     * bytes (64 bits) push sibling-collision odds below any plausible
     * dataset count per parent directory.
     */
-  private[graft] def stagingPrefix(root: Path): String = {
-    val digest = java.security.MessageDigest.getInstance("MD5")
-      .digest(root.getFileName.toString.getBytes("UTF-8"))
+  private[graft] def stagingPrefix(root: Path): String =
+    s".compact-${shortDigest(root.getFileName.toString)}-"
+
+  /** A fixed-width (16 hex digit) MD5 digest of `s`, for file names. */
+  private[graft] def shortDigest(s: String): String =
+    java.security.MessageDigest.getInstance("MD5").digest(s.getBytes("UTF-8"))
       .take(8).map(b => f"$b%02x").mkString
-    s".compact-$digest-"
-  }
 }

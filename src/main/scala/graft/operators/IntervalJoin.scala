@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Banded interval-overlap join: pairs of intervals on an equi-key
@@ -23,70 +23,46 @@ import org.apache.spark.sql.functions._
   *
   * Bounds are integer micros columns (exact arithmetic end to end; no
   * double rounding can misplace a boundary) supplied by the caller.
-  *
-  * SET semantics over the carried columns: the closing distinct (which
-  * collapses multi-band meetings) also collapses pairs of fully
-  * identical input rows. Callers needing bag semantics — the naive
-  * theta-join's multiplicity on duplicate rows — must carry a unique
-  * id column per side (as x_interval_join does with event ids); with
-  * ids in hand, prefer [[intervalJoinById]], whose dedup exchange
-  * carries only the pair ids instead of every carried column.
-  *
-  * Inverted intervals (end < start) are ACCEPTED, not an error: the
-  * band explosion covers [bandOf(start)..bandOf(end)] via `sequence`,
-  * which steps −1 when end < start — the same band SET as the
-  * ascending range over [min, max] — and a pair passing the exact
-  * predicate always shares a point inside both sides' [min, max]
-  * spans, hence a band. Results therefore match the naive theta-join
-  * for any bound ordering by construction (pinned by PropertySpec's
-  * interval-join property, whose generator includes negative
-  * lengths), though the predicate's meaning for inverted bounds is
-  * the naive join's, not "overlap".
   */
 object IntervalJoin {
 
-  /** @param left     one interval per row; bounds in micros columns
+  /** The band of a micros expression `us` at band width `widthUs`:
+    * exact integer floor division (pmod keeps it correct for negative
+    * epochs), where a float `floor(us / w)` could misplace an exactly-
+    * on-boundary instant by one band via double rounding.
+    */
+  private[operators] def bandOf(us: String, widthUs: Long): Column =
+    expr(s"($us - pmod($us, ${widthUs}L)) div ${widthUs}L")
+
+  /** Interval-overlap join for inputs with a UNIQUE id per row per
+    * side. Pair DISCOVERY runs on narrow (key, id, bounds) projections,
+    * the multi-band dedup exchanges only (key, lId, rId), and payloads
+    * re-attach afterwards by id equi-joins — at 100 TB with wide
+    * carried rows, the dedup shuffle stays three columns wide, and the
+    * payload re-joins are plain key-partitioned equi-joins AQE handles.
+    *
+    * Inverted intervals (end < start) are ACCEPTED, not an error: the
+    * band explosion covers [bandOf(start)..bandOf(end)] via `sequence`,
+    * which steps −1 when end < start — the same band SET as the
+    * ascending range over [min, max] — and a pair passing the exact
+    * predicate always shares a point inside both sides' [min, max]
+    * spans, hence a band. Results therefore match the naive theta-join
+    * for any bound ordering by construction (pinned by PropertySpec's
+    * interval-join property, whose generator includes negative
+    * lengths), though the predicate's meaning for inverted bounds is
+    * the naive join's, not "overlap".
+    *
+    * @param left     one interval per row; bounds in micros columns
     * @param right    one interval per row; column names must not
     *                 collide with `left`'s except `key`
     * @param key      equi-join key present on both sides
+    * @param lId/rId  unique per input row on their side (violations
+    *                 make the id dedup collapse genuinely distinct
+    *                 pairs; the naive theta-join's bag semantics need
+    *                 the ids to tell duplicate rows apart)
     * @param lStartUs/lEndUs/rStartUs/rEndUs  inclusive bounds (µs, long)
     * @param bandSec  band width — set to the max expected interval
     *                 length so each side covers ≤ 2 bands
-    */
-  def intervalJoin(left: DataFrame, right: DataFrame, key: String,
-      lStartUs: String, lEndUs: String, rStartUs: String, rEndUs: String,
-      bandSec: Long): DataFrame = {
-    require(bandSec > 0, s"band width must be positive: $bandSec")
-    val clash = (left.columns ++ right.columns).filter(_ == "__band")
-    require(clash.isEmpty, "intervalJoin: input columns collide with internal __band")
-    val w = bandSec * 1000000L
-    // floor-division band of a bound (pmod keeps negative epochs exact)
-    def bandOf(c: String) = s"($c - pmod($c, ${w}L)) div ${w}L"
-    def explodeBands(s: String, e: String) =
-      explode(sequence(expr(bandOf(s)), expr(bandOf(e))))
-    val l = left.withColumn("__band", explodeBands(lStartUs, lEndUs))
-    val r = right.withColumn("__band", explodeBands(rStartUs, rEndUs))
-    l.join(r, Seq(key, "__band"))
-      .where(col(lStartUs) <= col(rEndUs) && col(rStartUs) <= col(lEndUs))
-      .drop("__band")
-      .distinct()
-  }
-
-  /** Interval-overlap join for inputs with a UNIQUE id per row per
-    * side — the scale-preferred form. [[intervalJoin]]'s closing
-    * distinct exchanges every carried column; here pair DISCOVERY runs
-    * on narrow (key, id, bounds) projections, the multi-band dedup
-    * exchanges only (key, lId, rId), and payloads re-attach afterwards
-    * by id equi-joins — at 100 TB with wide carried rows, the dedup
-    * shuffle shrinks from full-row width to three columns, and the
-    * payload re-joins are plain key-partitioned equi-joins AQE handles.
-    * With unique ids the result equals [[intervalJoin]] row for row
-    * (ids determine bounds, so distinct-on-ids = distinct-on-all).
-    *
-    * @param lId/rId  unique per input row on their side (violations
-    *                 make the id dedup collapse genuinely distinct
-    *                 pairs — the same contract x_interval_join's bag
-    *                 semantics already require)
     */
   def intervalJoinById(left: DataFrame, right: DataFrame, key: String,
       lId: String, rId: String,
@@ -96,9 +72,7 @@ object IntervalJoin {
     val clash = (left.columns ++ right.columns).filter(_ == "__band")
     require(clash.isEmpty, "intervalJoinById: input columns collide with internal __band")
     val w = bandSec * 1000000L
-    def bandOf(c: String) = s"($c - pmod($c, ${w}L)) div ${w}L"
-    def explodeBands(s: String, e: String) =
-      explode(sequence(expr(bandOf(s)), expr(bandOf(e))))
+    def explodeBands(s: String, e: String) = explode(sequence(bandOf(s, w), bandOf(e, w)))
     val l = left.select(col(key), col(lId), col(lStartUs), col(lEndUs))
       .withColumn("__band", explodeBands(lStartUs, lEndUs))
     val r = right.select(col(key), col(rId), col(rStartUs), col(rEndUs))

@@ -38,11 +38,7 @@ object RangeJoin {
     require(clash.isEmpty,
       s"rangeJoin: input columns collide with internal names: ${clash.distinct.mkString(", ")}")
     val tolUs = toleranceSec * 1000000L
-    // exact integer floor-division (pmod keeps it correct for negative
-    // epochs): a float `floor(us / tol)` could misplace an exactly-on-
-    // boundary timestamp by one band via double rounding.
-    def band(ts: String) =
-      expr(s"(unix_micros($ts) - pmod(unix_micros($ts), ${tolUs}L)) div ${tolUs}L")
+    def band(ts: String) = IntervalJoin.bandOf(s"unix_micros($ts)", tolUs)
     val l = left.withColumn("__lband", band(lts))
       .withColumn("__band",
         explode(array(col("__lband") - 1, col("__lband"), col("__lband") + 1)))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{QueryDef, Tables}
+import graft.streaming.{NearDupIngest, Sessionize}
 
 /** OLAP analytics surface beyond the reference: rollup, pivot, exact
   * quantiles, sketch-based profiling.
@@ -256,6 +257,36 @@ object AnalyticsQueries {
           .cast("long").as("p99_ok"))
   }
 
+  /** The as-of oracle: DuckDB's native ASOF LEFT JOIN of each click to
+    * its user's most recent prior-or-simultaneous purchase.
+    */
+  private val asofSql =
+    """WITH a AS (
+      |  SELECT event_id, user_id, ts FROM events WHERE event_type = 'click'),
+      |b AS (
+      |  SELECT user_id, ts, event_id, value FROM events WHERE event_type = 'purchase'
+      |  QUALIFY row_number() OVER (PARTITION BY user_id, ts ORDER BY event_id DESC) = 1)
+      |SELECT a.event_id, a.user_id, a.ts,
+      |       b.event_id AS prior_event_id, b.ts AS prior_ts, b.value AS prior_value
+      |FROM a ASOF LEFT JOIN b ON a.user_id = b.user_id AND a.ts >= b.ts"""
+
+  /** An as-of query: clicks and deduped purchases joined by `asof`,
+    * whose signature both as-of operators share, against [[asofSql]].
+    */
+  private def asofQuery(name: String)(asof: (DataFrame, DataFrame, String, String,
+      Seq[String]) => DataFrame): QueryDef = QueryDef.sql(name, asofSql) { (s, d) =>
+    val ev = Tables.events(s, d)
+    val clicks = ev.where(col("event_type") === "click")
+      .select("event_id", "user_id", "ts")
+    val purchases = ev.where(col("event_type") === "purchase")
+      .withColumn("rn", row_number().over(
+        Window.partitionBy("user_id", "ts").orderBy(col("event_id").desc)))
+      .where(col("rn") === 1)
+      .select("user_id", "ts", "event_id", "value")
+    asof(clicks, purchases, "user_id", "ts", Seq("event_id", "value"))
+      .select("event_id", "user_id", "ts", "prior_event_id", "prior_ts", "prior_value")
+  }
+
   /** As-of join: each click event enriched with the user's most
     * recent prior-or-simultaneous purchase (id/value), left-outer —
     * clicks with no prior purchase keep nulls. The Spark side is the
@@ -265,30 +296,7 @@ object AnalyticsQueries {
     * Purchases are pre-deduped to one row per (user, ts) (max
     * event_id wins) so the match is deterministic.
     */
-  val asofJoin: QueryDef = QueryDef.sql(
-    "x_asof_join",
-    """WITH a AS (
-      |  SELECT event_id, user_id, ts FROM events WHERE event_type = 'click'),
-      |b AS (
-      |  SELECT user_id, ts, event_id, value FROM events WHERE event_type = 'purchase'
-      |  QUALIFY row_number() OVER (PARTITION BY user_id, ts ORDER BY event_id DESC) = 1)
-      |SELECT a.event_id, a.user_id, a.ts,
-      |       b.event_id AS prior_event_id, b.ts AS prior_ts, b.value AS prior_value
-      |FROM a ASOF LEFT JOIN b ON a.user_id = b.user_id AND a.ts >= b.ts""") { (s, d) =>
-    val ev = Tables.events(s, d)
-    val clicks = ev.where(col("event_type") === "click")
-      .select("event_id", "user_id", "ts")
-    val purchases = ev.where(col("event_type") === "purchase")
-      .withColumn("rn", row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .partitionBy("user_id", "ts").orderBy(col("event_id").desc)))
-      .where(col("rn") === 1)
-      .select("user_id", "ts", "event_id", "value")
-    graft.operators.AsOfJoin.asofJoin(
-        clicks, purchases, key = "user_id", ts = "ts",
-        rightCols = Seq("event_id", "value"))
-      .select("event_id", "user_id", "ts", "prior_event_id", "prior_ts", "prior_value")
-  }
+  val asofJoin: QueryDef = asofQuery("x_asof_join")(graft.operators.AsOfJoin.asofJoin)
 
   /** Range join: same-user event pairs within 30 minutes of each
     * other (ordered by event_id so each unordered pair appears once),
@@ -323,30 +331,8 @@ object AnalyticsQueries {
     * operator itself to a reference engine, not merely to the
     * declarative formulation.
     */
-  val asofNative: QueryDef = QueryDef.sql(
-    "x_asof_native",
-    """WITH a AS (
-      |  SELECT event_id, user_id, ts FROM events WHERE event_type = 'click'),
-      |b AS (
-      |  SELECT user_id, ts, event_id, value FROM events WHERE event_type = 'purchase'
-      |  QUALIFY row_number() OVER (PARTITION BY user_id, ts ORDER BY event_id DESC) = 1)
-      |SELECT a.event_id, a.user_id, a.ts,
-      |       b.event_id AS prior_event_id, b.ts AS prior_ts, b.value AS prior_value
-      |FROM a ASOF LEFT JOIN b ON a.user_id = b.user_id AND a.ts >= b.ts""") { (s, d) =>
-    val ev = Tables.events(s, d)
-    val clicks = ev.where(col("event_type") === "click")
-      .select("event_id", "user_id", "ts")
-    val purchases = ev.where(col("event_type") === "purchase")
-      .withColumn("rn", row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .partitionBy("user_id", "ts").orderBy(col("event_id").desc)))
-      .where(col("rn") === 1)
-      .select("user_id", "ts", "event_id", "value")
-    org.apache.spark.sql.graft.AsOfJoinNative.asofJoinNative(
-        clicks, purchases, key = "user_id", ts = "ts",
-        rightCols = Seq("event_id", "value"))
-      .select("event_id", "user_id", "ts", "prior_event_id", "prior_ts", "prior_value")
-  }
+  val asofNative: QueryDef =
+    asofQuery("x_asof_native")(org.apache.spark.sql.graft.AsOfJoinNative.asofJoinNative)
 
   /** Interval-overlap join: each click event carries an activity
     * interval [ts, ts + min(value, 120)·60 s] and pairs with every
@@ -408,42 +394,32 @@ object AnalyticsQueries {
     intervalJoinDf(s, d, capMin = 60.0, bandSec = 3600L)
   }
 
+  /** The tighter inactivity gap (10 min) of the `_g10`/`_s2` configs. */
+  private val TightGapMs: Long = 10 * 60 * 1000L
+
   /** Batch sessionization: each user's events grouped into sessions
-    * separated by a 30-minute inactivity gap — the conversation/
-    * session-assembly operator of an event-stream training pipeline.
-    * The Spark side is [[graft.streaming.Sessionize.sessionizeBatch]]
-    * (gaps-and-islands: lag → boundary flag → running sum, one shuffle
-    * by user); the oracle is the same formulation in DuckDB SQL. Ties
-    * on (user, ts) are harmless: a tie group can only flag once, so
+    * separated by an inactivity gap — the conversation/session-assembly
+    * operator of an event-stream training pipeline. The Spark side is
+    * [[graft.streaming.Sessionize.sessionizeBatch]] (gaps-and-islands:
+    * lag → boundary flag → running sum, one shuffle by user); the
+    * oracle is the same formulation in DuckDB SQL,
+    * [[graft.streaming.Sessionize.sessionIndexedSql]], so the gap
+    * parameterization cannot drift between engine and oracle. Ties on
+    * (user, ts) are harmless: a tie group can only flag once, so
     * session membership is order-independent and the min/max/count
     * aggregates are deterministic.
     */
-  /** Sessionization oracle at a given inactivity gap — same SQL for
-    * every config, so the gap parameterization cannot drift between
-    * engine and oracle.
-    */
-  private def sessionizeSql(gapMs: Long): String =
-    s"""WITH g AS (
-       |  SELECT user_id, ts,
-       |         CASE WHEN lag(ts) OVER w IS NULL
-       |                OR date_diff('millisecond', lag(ts) OVER w, ts) > $gapMs
-       |              THEN 1 ELSE 0 END AS new_session
-       |  FROM events
-       |  WINDOW w AS (PARTITION BY user_id ORDER BY ts)),
-       |s AS (
-       |  SELECT user_id, ts,
-       |         sum(new_session) OVER (PARTITION BY user_id ORDER BY ts
-       |           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_idx
-       |  FROM g)
+  private def sessionizeQuery(name: String, gapMs: Long): QueryDef = QueryDef.sql(name,
+    s"""WITH ${Sessionize.sessionIndexedSql(gapMs)}
        |SELECT user_id, min(ts) AS session_start, max(ts) AS session_end,
        |       CAST(count(*) AS BIGINT) AS n_events
-       |FROM s GROUP BY user_id, session_idx""".stripMargin
-
-  val sessionize: QueryDef = QueryDef.sql(
-    "x_sessionize", sessionizeSql(gapMs = 1800000L)) { (s, d) =>
-    graft.streaming.Sessionize.sessionizeBatch(Tables.events(s, d))
+       |FROM sx GROUP BY user_id, session_idx""".stripMargin) { (s, d) =>
+    Sessionize.sessionizeBatch(Tables.events(s, d), gapMs)
       .withColumn("n_events", col("n_events").cast("long"))
   }
+
+  /** Sessions at the default 30-minute gap. */
+  val sessionize: QueryDef = sessionizeQuery("x_sessionize", Sessionize.GapMs)
 
   /** Sessionization at a 10-minute gap — the knob an engagement
     * analysis turns to split the same stream into tighter sessions.
@@ -451,11 +427,7 @@ object AnalyticsQueries {
     * both the Spark and SQL sides (the streaming path takes the same
     * parameter).
     */
-  val sessionizeG10: QueryDef = QueryDef.sql(
-    "x_sessionize_g10", sessionizeSql(gapMs = 600000L)) { (s, d) =>
-    graft.streaming.Sessionize.sessionizeBatch(Tables.events(s, d), gapMs = 600000L)
-      .withColumn("n_events", col("n_events").cast("long"))
-  }
+  val sessionizeG10: QueryDef = sessionizeQuery("x_sessionize_g10", TightGapMs)
 
   /** Session-scoped event-type transition matrix: corpus-wide counts
     * of (event_type → next event_type) WITHIN a session — transitions
@@ -475,18 +447,7 @@ object AnalyticsQueries {
     * event_id) so the matrix is deterministic on any input.
     */
   private def transitionMatrixSql(gapMs: Long): String =
-    s"""WITH g AS (
-       |  SELECT user_id, ts, event_id, event_type,
-       |         CASE WHEN lag(ts) OVER w IS NULL
-       |                OR date_diff('millisecond', lag(ts) OVER w, ts) > $gapMs
-       |              THEN 1 ELSE 0 END AS new_session
-       |  FROM events
-       |  WINDOW w AS (PARTITION BY user_id ORDER BY ts)),
-       |sx AS (
-       |  SELECT user_id, ts, event_id, event_type,
-       |         sum(new_session) OVER (PARTITION BY user_id ORDER BY ts
-       |           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_idx
-       |  FROM g),
+    s"""WITH ${Sessionize.sessionIndexedSql(gapMs, "event_id", "event_type")},
        |tr AS (
        |  SELECT event_type AS from_type,
        |         lead(event_type) OVER (PARTITION BY user_id, session_idx
@@ -500,7 +461,7 @@ object AnalyticsQueries {
        |FROM m""".stripMargin
 
   private def transitionMatrixDf(s: SparkSession, d: String, gapMs: Long): DataFrame = {
-    val seq = graft.streaming.Sessionize.sessionIndexed(Tables.events(s, d), gapMs)
+    val seq = Sessionize.sessionIndexed(Tables.events(s, d), gapMs)
     val bySess = Window.partitionBy("user_id", "session_idx").orderBy("ts", "event_id")
     val m = seq
       .withColumn("to_type", lead("event_type", 1).over(bySess))
@@ -514,8 +475,8 @@ object AnalyticsQueries {
   }
 
   val transitionMatrix: QueryDef = QueryDef.sql(
-    "x_transition_matrix", transitionMatrixSql(gapMs = 1800000L)) { (s, d) =>
-    transitionMatrixDf(s, d, gapMs = 1800000L)
+    "x_transition_matrix", transitionMatrixSql(Sessionize.GapMs)) { (s, d) =>
+    transitionMatrixDf(s, d, Sessionize.GapMs)
   }
 
   /** The 10-minute-gap config — tighter sessions cut more cross-gap
@@ -523,8 +484,8 @@ object AnalyticsQueries {
     * composition (same knob as x_sessionize_g10).
     */
   val transitionMatrixG10: QueryDef = QueryDef.sql(
-    "x_transition_matrix_g10", transitionMatrixSql(gapMs = 600000L)) { (s, d) =>
-    transitionMatrixDf(s, d, gapMs = 600000L)
+    "x_transition_matrix_g10", transitionMatrixSql(TightGapMs)) { (s, d) =>
+    transitionMatrixDf(s, d, TightGapMs)
   }
 
   /** Session conversion funnel: how many sessions contain the step
@@ -541,19 +502,6 @@ object AnalyticsQueries {
     * events, every join on the session key, output |steps| rows.
     */
   private def sessionFunnelSql(gapMs: Long, steps: Seq[String]): String = {
-    val gCtes =
-      s"""g AS (
-         |  SELECT user_id, ts, event_type,
-         |         CASE WHEN lag(ts) OVER w IS NULL
-         |                OR date_diff('millisecond', lag(ts) OVER w, ts) > $gapMs
-         |              THEN 1 ELSE 0 END AS new_session
-         |  FROM events
-         |  WINDOW w AS (PARTITION BY user_id ORDER BY ts)),
-         |sx AS (
-         |  SELECT user_id, ts, event_type,
-         |         sum(new_session) OVER (PARTITION BY user_id ORDER BY ts
-         |           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_idx
-         |  FROM g)""".stripMargin
     val stepCtes = steps.zipWithIndex.map { case (st, i) =>
       if (i == 0)
         s"""s1 AS (
@@ -569,7 +517,7 @@ object AnalyticsQueries {
     val unions = steps.zipWithIndex.map { case (st, i) =>
       s"SELECT ${i + 1} AS step, '$st' AS step_type, CAST((SELECT count(*) FROM s${i + 1}) AS BIGINT) AS n_sessions"
     }.mkString("\n  UNION ALL ")
-    s"""WITH $gCtes,
+    s"""WITH ${Sessionize.sessionIndexedSql(gapMs, "event_type")},
        |${stepCtes.mkString(",\n")},
        |tot AS (
        |  SELECT CAST(count(*) AS BIGINT) AS n FROM
@@ -591,7 +539,7 @@ object AnalyticsQueries {
     // sessionIndexed 0.39 s alone, the 2-step funnel 0.98 s ≈ 3
     // re-derivations) —
     // within-query pin, same pattern as pairOverlaps' cnt
-    val sx = graft.streaming.Sessionize.sessionIndexed(Tables.events(s, d), gapMs)
+    val sx = Sessionize.sessionIndexed(Tables.events(s, d), gapMs)
       .select("user_id", "session_idx", "ts", "event_type")
       .localCheckpoint(false)
     val keys = Seq("user_id", "session_idx")
@@ -626,8 +574,8 @@ object AnalyticsQueries {
 
   val sessionFunnel: QueryDef = QueryDef.sql(
     "x_session_funnel",
-    sessionFunnelSql(gapMs = 1800000L, Seq("view", "click", "purchase"))) { (s, d) =>
-    sessionFunnelDf(s, d, gapMs = 1800000L, Seq("view", "click", "purchase"))
+    sessionFunnelSql(Sessionize.GapMs, Seq("view", "click", "purchase"))) { (s, d) =>
+    sessionFunnelDf(s, d, Sessionize.GapMs, Seq("view", "click", "purchase"))
   }
 
   /** A different step sequence at the tighter gap — pins both the
@@ -635,8 +583,8 @@ object AnalyticsQueries {
     */
   val sessionFunnelS2: QueryDef = QueryDef.sql(
     "x_session_funnel_s2",
-    sessionFunnelSql(gapMs = 600000L, Seq("signup", "purchase"))) { (s, d) =>
-    sessionFunnelDf(s, d, gapMs = 600000L, Seq("signup", "purchase"))
+    sessionFunnelSql(TightGapMs, Seq("signup", "purchase"))) { (s, d) =>
+    sessionFunnelDf(s, d, TightGapMs, Seq("signup", "purchase"))
   }
 
   /** Cohort retention matrix over the event stream: users are
@@ -803,19 +751,6 @@ object AnalyticsQueries {
     gapHistogramOf(Tables.events(s, d), byType = true)
   }
 
-  /** The ingest-alarm classification ([[graft.streaming.NearDupIngest
-    * .ingestAlarms]]) as an oracle-checked carrier: a deterministic
-    * replay-storm funnel derived from `events` — batches of 500 by
-    * event_id, an event "admitted" when it is the global first
-    * occurrence of its (user_id, event_type) key — decays from
-    * rate≈0.7 at batch 0 to ≈0 as the simulated index saturates,
-    * which walks the classifier through both the null and the
-    * `low_admission` states (the exact scenario the alarm pages on: a
-    * re-crawl / replay storm). `full_admission` is pinned by the
-    * NearDupIngestSpec unit fixtures — no natural batch here admits
-    * 100%. Per-row arithmetic over |batches| rows; the funnel build
-    * is one window + one groupBy over events (monitoring-cost).
-    */
   /** The deterministic replay-storm funnel both alarm carriers share:
     * batches of 500 by event_id, an event "admitted" when it is the
     * global first occurrence of its (user_id, event_type) key — so the
@@ -831,9 +766,11 @@ object AnalyticsQueries {
       .agg(count(lit(1)).as("n_in"), count(when(col("adm"), 1)).as("n_admitted"))
   }
 
-  /** The matching oracle CTE pair (funnel → per-batch classification). */
+  /** The matching oracle CTE pair (funnel → per-batch classification),
+    * classified by the ingest's own alarm rule.
+    */
   private val replayStormAlarmSql =
-    """WITH f AS (
+    s"""WITH f AS (
       |  SELECT event_id // 500 AS batch_id,
       |         row_number() OVER (PARTITION BY user_id, event_type ORDER BY event_id) = 1 AS adm
       |  FROM events),
@@ -844,9 +781,7 @@ object AnalyticsQueries {
       |a AS (
       |  SELECT batch_id, n_in, n_admitted,
       |         CAST(n_admitted AS DOUBLE) / nullif(n_in, 0) AS rate,
-      |         CASE WHEN n_in >= 100 AND n_admitted * 20 <= n_in THEN 'low_admission'
-      |              WHEN n_in >= 100 AND n_admitted >= n_in THEN 'full_admission'
-      |              END AS alarm
+      |         ${NearDupIngest.alarmRuleSql(NearDupIngest.AlarmMinIn)} AS alarm
       |  FROM s)""".stripMargin
 
   /** The ingest-alarm classification ([[graft.streaming.NearDupIngest
@@ -862,7 +797,7 @@ object AnalyticsQueries {
     "x_ingest_alarms",
     s"""$replayStormAlarmSql
        |SELECT batch_id, n_in, n_admitted, rate, alarm FROM a""".stripMargin) { (s, d) =>
-    graft.streaming.NearDupIngest.ingestAlarms(replayStormStats(Tables.events(s, d)))
+    NearDupIngest.ingestAlarms(replayStormStats(Tables.events(s, d)))
   }
 
   /** The alarm MONITOR's materialized output, oracle-checked: the same
@@ -880,16 +815,15 @@ object AnalyticsQueries {
     * Scale shape: the monitored table is |batches| rows and the
     * monitor's state is the file-source seen-files log — monitoring-
     * cost, independent of corpus size. Each invocation uses a fresh
-    * temp store, so replays (bench samples) never see stale alarms.
+    * store under the per-JVM artifact root (removed at exit), so
+    * replays (bench samples) never see stale alarms.
     */
   val alarmStore: QueryDef = QueryDef.sql(
     "x_alarm_store",
     s"""$replayStormAlarmSql
        |SELECT batch_id, n_in, n_admitted, rate, alarm FROM a
        |WHERE alarm IS NOT NULL""".stripMargin) { (s, d) =>
-    import graft.streaming.NearDupIngest
-    val storeDir = java.nio.file.Files
-      .createTempDirectory("graft_alarm_store").resolve("store").toString
+    val storeDir = graft.llm.SharedIndex.tempDir("graft_alarm_store").resolve("store").toString
     replayStormStats(Tables.events(s, d))
       .write.mode("overwrite").parquet(NearDupIngest.statsDir(storeDir))
     val q = NearDupIngest.startAlarmMonitor(s, storeDir)

@@ -424,36 +424,40 @@ object NearDupIngest {
   def ingestStats(spark: SparkSession, storeDir: String): DataFrame =
     readIdxOrEmpty(spark, statsDir(storeDir), statsSchema)
 
-  /** [[ingestAlarms]]' rate thresholds as exact fractions: at most
-    * 1/20 admitted is `low_admission`, all admitted `full_admission`.
+  /** [[ingestAlarms]]' default volume floor: smaller batches are never flagged. */
+  val AlarmMinIn: Long = 100L
+
+  /** [[ingestAlarms]]' low-rate threshold: at most 1/20 admitted. */
+  private val LowRateDen = 20
+
+  /** The alarm rule of [[ingestAlarms]] as one SQL `CASE` over `n_in`
+    * and `n_admitted`, parsed by Spark here and by DuckDB in the
+    * oracles of x_ingest_alarms and x_alarm_store.
     */
-  private val MinRateNum = 1
-  private val MinRateDen = 20
-  private val MaxRateNum = 1
-  private val MaxRateDen = 1
+  private[graft] def alarmRuleSql(minIn: Long): String =
+    s"""CASE WHEN n_in >= $minIn AND n_admitted * $LowRateDen <= n_in THEN 'low_admission'
+       |              WHEN n_in >= $minIn AND n_admitted >= n_in THEN 'full_admission'
+       |              END""".stripMargin
 
   /** The alarm the funnel table exists to feed: per batch, the
     * admission rate plus a classified `alarm` column —
     * `low_admission` (rate ≤ 1/20: the batch is a re-crawl or an
-    * upstream replay storm), `full_admission` (rate ≥ 1/1: the
+    * upstream replay storm), `full_admission` (every unit admitted: the
     * dedup index stopped rejecting anything, i.e. it broke or was
     * deleted without a rebuild), null otherwise. Batches with fewer
     * than `minIn` units are never flagged — small batches legitimately
     * swing to 0/1 — and a zero-unit batch has a null rate. Thresholds
-    * are compared as cross-multiplied exact integers; `rate` is the
-    * one evidence division. Pure per-row arithmetic over the
-    * |batches|-row stats table — monitoring-cost, not corpus-cost.
+    * are compared as cross-multiplied exact integers
+    * ([[alarmRuleSql]]); `rate` is the one evidence division. Pure
+    * per-row arithmetic over the |batches|-row stats table —
+    * monitoring-cost, not corpus-cost.
     */
-  def ingestAlarms(stats: DataFrame, minIn: Long = 100L): DataFrame = {
+  def ingestAlarms(stats: DataFrame, minIn: Long = AlarmMinIn): DataFrame = {
     require(minIn >= 0, s"bad alarm threshold: minIn = $minIn")
     stats.select(col("batch_id"), col("n_in"), col("n_admitted"))
       .withColumn("rate",
         col("n_admitted").cast("double") / nullif(col("n_in"), lit(0L)))
-      .withColumn("alarm",
-        when(col("n_in") >= minIn &&
-            col("n_admitted") * MinRateDen <= col("n_in") * MinRateNum, "low_admission")
-          .when(col("n_in") >= minIn &&
-            col("n_admitted") * MaxRateDen >= col("n_in") * MaxRateNum, "full_admission"))
+      .withColumn("alarm", expr(alarmRuleSql(minIn)))
   }
 
   private[graft] def alarmsDir(storeDir: String): String = storeDir + ".alarms"
@@ -477,7 +481,7 @@ object NearDupIngest {
     * resolves its path eagerly.
     */
   def startAlarmMonitor(spark: SparkSession, storeDir: String,
-      minIn: Long = 100L): StreamingQuery = {
+      minIn: Long = AlarmMinIn): StreamingQuery = {
     val stats = spark.readStream.schema(statsSchema).parquet(statsDir(storeDir))
     ingestAlarms(stats, minIn)
       .where(col("alarm").isNotNull)

@@ -52,6 +52,28 @@ object Sessionize {
       .drop("prev_ts", "new_session")
   }
 
+  /** [[sessionIndexed]] in DuckDB SQL, for the oracles that build on the
+    * session index: the CTE pair `g` (boundary flag) and `sx` (events
+    * of `events` with `user_id`, `ts`, the `carry` columns and
+    * `session_idx`), to follow a `WITH`.
+    */
+  def sessionIndexedSql(gapMs: Long, carry: String*): String = {
+    require(gapMs > 0, s"non-positive session gap: $gapMs")
+    val cols = ("user_id" +: "ts" +: carry).mkString(", ")
+    s"""g AS (
+       |  SELECT $cols,
+       |         CASE WHEN lag(ts) OVER w IS NULL
+       |                OR date_diff('millisecond', lag(ts) OVER w, ts) > $gapMs
+       |              THEN 1 ELSE 0 END AS new_session
+       |  FROM events
+       |  WINDOW w AS (PARTITION BY user_id ORDER BY ts)),
+       |sx AS (
+       |  SELECT $cols,
+       |         sum(new_session) OVER (PARTITION BY user_id ORDER BY ts
+       |           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_idx
+       |  FROM g)""".stripMargin
+  }
+
   /** Batch gaps-and-islands: session index = running count of
     * gap-exceeding boundaries; one aggregate per (user, session).
     * The inactivity gap is a parameter (default 30 min) — shorter

@@ -1486,4 +1486,19 @@ class LlmOpsSpec extends SparkSpec {
     assert(planesFor(Long.MaxValue, rBase = 20, nBase = 1L) == 62) // cap: bucket bits must fit a long
     intercept[IllegalArgumentException](planesFor(0L))
   }
+
+  test("SharedIndex artifacts of dirs that differ only by / vs _ never share a directory") {
+    def build(dir: String, n: Long) =
+      llm.SharedIndex.materialized(spark, dir, "name_probe")(spark.range(n).toDF("id"))
+    val (slash, under) = ("/graft-name-probe/a/b", "/graft-name-probe/a_b")
+    assert(build(slash, 3).count() == 3)
+    assert(build(under, 5).count() == 5)
+    // the first key's artifact is a scan of what ITS build wrote
+    val first = build(slash, 0)
+    assert(first.count() == 3, "the a/b artifact reads the a_b build's rows")
+    // and its directory is not one Spark skips as hidden
+    val names = first.inputFiles.map(f => new org.apache.hadoop.fs.Path(f).getParent.getName)
+    assert(names.nonEmpty && names.forall(n => !n.startsWith("_") && !n.startsWith(".")),
+      s"hidden artifact directory names: ${names.distinct.mkString(", ")}")
+  }
 }

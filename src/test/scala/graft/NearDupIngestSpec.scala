@@ -749,4 +749,29 @@ class NearDupIngestSpec extends SparkSpec {
       .as[(Long, Long, Long, String)].collect().toSet
     assert(after == log, "compaction changed the alarm log")
   }
+
+  test("x_alarm_store keeps its fixture store under the per-JVM artifact root, not in tmpdir") {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val tmp = Paths.get(System.getProperty("java.io.tmpdir"))
+    def stores(): Set[String] = {
+      val ls = Files.list(tmp)
+      try ls.iterator().asScala.map(_.getFileName.toString)
+        .filter(_.startsWith("graft_alarm_store")).toSet
+      finally ls.close()
+    }
+    // a 1,000-event table whose batch 1 replays batch 0: one low_admission alarm
+    val d = Files.createTempDirectory("graftalarmq")
+    try {
+      (0L until 1000L).map(i => (i, i % 500 % 50, "click", new Timestamp(i * 1000L)))
+        .toDF("event_id", "user_id", "event_type", "ts")
+        .write.parquet(d.resolve("events.parquet").toString)
+      val before = stores()
+      val alarms = graft.pipelines.AnalyticsQueries.alarmStore.run(spark, d.toString)
+        .select("batch_id", "alarm").as[(Long, String)].collect().toSet
+      assert(alarms == Set((1L, "low_admission")), s"alarms: $alarms")
+      val leaked = stores() -- before
+      assert(leaked.isEmpty, s"x_alarm_store left fixture stores in $tmp: $leaked")
+    } finally UpsertSink.rmTree(d)
+  }
 }

@@ -163,6 +163,17 @@ class SessionTuningSpec extends AnyFunSuite {
         s"bench-gram sets $benchSets, shard expressions in $shards")
   }
 
+  test("one event-stream kernel: one session index, one time band, one as-of oracle") {
+    val sessionSql = mainSourcesWith("date_diff('millisecond', lag(ts)", "Sessionize.scala")
+    val bands = mainLinesWith("- pmod(")
+    val asof = mainLinesWith("FROM a ASOF LEFT JOIN")
+    val gaps = mainLinesWith("1800000L").filter(_.startsWith("graft/pipelines/AnalyticsQueries.scala:"))
+    assert(sessionSql.isEmpty && bands.size == 1 && asof.size == 1 && gaps.isEmpty,
+      "index sessions in SQL with Sessionize.sessionIndexedSql, band time with " +
+        "IntervalJoin.bandOf, share the as-of oracle and read gaps from Sessionize.GapMs; " +
+        s"found session CTEs in $sessionSql, bands $bands, as-of oracles $asof, gap literals $gaps")
+  }
+
   test("one quantized-cosine kernel: qdot and the ×1000 quantization only in TextOps.scala") {
     val offenders = Seq("qdot(", "quantize(col(\"embedding\"))")
       .flatMap(mainSourcesWith(_, "TextOps.scala")).distinct

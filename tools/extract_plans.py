@@ -38,8 +38,10 @@ MASKS = [
     (re.compile(r"plan_id=\d+"), "plan_id="),
     # pinned frames: MapPartitionsRDD[199] at localCheckpoint at X.scala:476
     (re.compile(r"\w*RDD\[\d+\] at (\w+) at [\w$.]+:\d+"), r"RDD at \1"),
-    # temp directories: /tmp/graft-sidindex-1192946408 or /tmp/graft_alarm_store123
-    (re.compile(r"/tmp/([A-Za-z_.-]*?)[-_]?\d+(?=[/\s,\]]|$)", re.M), r"/tmp/\1"),
+    # temp directories, at any depth below /tmp:
+    # /tmp/graft-sidindex-1192946408/graft_alarm_store123/store.alarms
+    (re.compile(r"/tmp/[^\s,\]]*"),
+     lambda m: re.sub(r"(?<=/)([A-Za-z_.-]*?)[-_]?\d+(?=/|$)", r"\1", m.group(0))),
     # higher-order-function variables, numbered JVM-wide: lambda x_102#
     (re.compile(r"(lambda \w+?)_\d+#"), r"\1_#"),
     # lambda classes: Foo$$$Lambda$6659/0x00007fa7997eb2c8@e0dbde5
