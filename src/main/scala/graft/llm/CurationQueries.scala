@@ -208,6 +208,14 @@ object CurationQueries {
           .as("n_chunk_tokens"))
   }
 
+  /** SQL twin of [[chunkDf]]'s last chunk index `max_k` over a token
+    * count column `n` — every chunking oracle's chunk count.
+    */
+  private[llm] def chunkCountSql(chunkTokens: Int, overlap: Int): String = {
+    val (c, st) = (chunkTokens, chunkTokens - overlap)
+    s"CASE WHEN n <= $c THEN 0 ELSE (n - $c + ${st - 1}) // $st END AS max_k"
+  }
+
   /** Chunking oracle at a given (chunkTokens, overlap) — same SQL for
     * every config, so the parameterization cannot drift.
     */
@@ -220,7 +228,7 @@ object CurationQueries {
        |  FROM documents),
        |k AS (
        |  SELECT doc_id, toks, n,
-       |         CASE WHEN n <= $c THEN 0 ELSE (n - $c + ${st - 1}) // $st END AS max_k
+       |         ${chunkCountSql(chunkTokens, overlap)}
        |  FROM t),
        |ks AS (
        |  SELECT doc_id, toks, n, unnest(generate_series(0, max_k)) AS k
@@ -671,7 +679,7 @@ object CurationQueries {
        |         CAST(len(regexp_extract_all(lower(d.text), '[a-z0-9]+')) AS BIGINT) AS n
        |  FROM documents d JOIN surv USING (doc_id)),
        |ck AS (
-       |  SELECT doc_id, n, CASE WHEN n <= 40 THEN 0 ELSE (n - 40 + 31) // 32 END AS max_k
+       |  SELECT doc_id, n, ${chunkCountSql(40, 8)}
        |  FROM ct),
        |cks AS (
        |  SELECT doc_id, n, unnest(generate_series(0, max_k)) AS k FROM ck),

@@ -955,7 +955,7 @@ object DedupQueries {
        |  FROM documents),
        |k AS (
        |  SELECT doc_id, toks, n,
-       |         CASE WHEN n <= $c THEN 0 ELSE (n - $c + ${c - 1}) // $c END AS max_k
+       |         ${CurationQueries.chunkCountSql(c, overlap = 0)}
        |  FROM t),
        |ch AS (
        |  SELECT doc_id, CAST(k AS BIGINT) AS chunk_id,
@@ -1090,7 +1090,7 @@ object DedupQueries {
        |  FROM documents),
        |k AS (
        |  SELECT doc_id, source, toks, n,
-       |         CASE WHEN n <= $c THEN 0 ELSE (n - $c + ${c - 1}) // $c END AS max_k
+       |         ${CurationQueries.chunkCountSql(c, overlap = 0)}
        |  FROM t),
        |ch AS (
        |  SELECT DISTINCT source, array_to_string(list_slice(toks, k * $c + 1, k * $c + $c), ' ') AS chunk_text

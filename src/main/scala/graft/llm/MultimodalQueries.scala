@@ -1,6 +1,6 @@
 package graft.llm
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{QueryDef, Tables}
 
@@ -10,6 +10,12 @@ import graft.{QueryDef, Tables}
   * shape is real: binary payload column, typed metadata schema,
   * partition-batched decode via mapPartitions, feature vectors out.
   *
+  * One media kernel serves every query: the stub frame timeline
+  * ([[dimsOf]], [[nFramesOf]], [[mimeOf]] and their SQL twins), one
+  * unsampled frame explode ([[allFrames]]), one stub decode boundary
+  * ([[stubDecoded]]), one pixel carrier for the real decoder
+  * ([[pixelCarrier]]), each used on the Spark side and in the oracle.
+  *
   * Scale notes: payloads stay opaque bytes end-to-end (no row-level
   * string conversions); the decode runs partition-local in micro-
   * batches (the same shape a vectorized/Arrow UDF would have), so a
@@ -17,13 +23,30 @@ import graft.{QueryDef, Tables}
   */
 object MultimodalQueries {
 
-  /** The container mime sniff the decode queries share (deterministic
-    * stand-in for reading the magic bytes).
+  // ----------------------------------------------------------------
+  // The stub frame timeline over a payload of `n` bytes: dims, frame
+  // count and container mime, each a Spark column plus its SQL twin.
+  // [[stubDecodeBatch]] holds the only other copy, in Scala.
+  // ----------------------------------------------------------------
+
+  private def dimsOf(n: Column): Seq[Column] = Seq(
+    (n % 640 + 1).cast("long").as("width"),
+    ((n * 7) % 480 + 1).cast("long").as("height"))
+  private def dimsSql(n: String): String =
+    s"""CAST($n % 640 + 1 AS BIGINT) AS width,
+       |       CAST(($n * 7) % 480 + 1 AS BIGINT) AS height""".stripMargin
+
+  private def nFramesOf(n: Column): Column = (n % 24 + 1).cast("long")
+  private def nFramesSql(n: String): String = s"CAST($n % 24 + 1 AS BIGINT)"
+
+  /** The container mime sniff (deterministic stand-in for reading the
+    * magic bytes).
     */
   private def mimeOf(docId: Column): Column =
     when(docId % 3 === 0, "jpeg")
       .when(docId % 3 === 1, "png")
       .otherwise("webp")
+  private val mimeSql = "CASE doc_id % 3 WHEN 0 THEN 'jpeg' WHEN 1 THEN 'png' ELSE 'webp' END"
 
   /** Oracle twin of [[stubDecodeBatch]]'s rolling checksum — the
     * `(a*31 + byte) mod 1e9+7` fold over the payload bytes, expressed
@@ -36,43 +59,27 @@ object MultimodalQueries {
        |             list_transform(string_split($textCol, ''), c -> CAST(ascii(c) AS BIGINT))),
        |           (a, b) -> (a * 31 + b) % 1000000007)""".stripMargin
 
-  /** Oracle twins of the stub's modular dims + quantized feature[0],
-    * over CTE columns `n` (byte length) and `checksum`. `f0_q`'s
-    * float-vs-double rounding agrees: the float step (2^-24 relative)
-    * is 100× smaller than the closest any `(x/255)*1000` value comes
-    * to a rounding boundary (1/102).
-    */
-  private val dimsSql =
-    """CAST(n % 640 + 1 AS BIGINT) AS width,
-      |       CAST((n * 7) % 480 + 1 AS BIGINT) AS height""".stripMargin
-  private val f0qSql =
-    "CAST(round((CAST((checksum & 255) AS DOUBLE) / 255) * 1000) AS BIGINT) AS f0_q"
-
   /** Metadata extraction over the binary payload — pure built-in
     * expressions (byte length, format sniff, derived dimensions), all
     * oracle-checkable.
     */
   val multimodalMeta: QueryDef = QueryDef.sql(
     "x_multimodal_meta",
-    """WITH m AS (SELECT doc_id, encode(text) AS payload, source FROM documents)
-      |SELECT doc_id,
-      |       CAST(octet_length(payload) AS BIGINT) AS n_bytes,
-      |       CAST(octet_length(payload) % 640 + 1 AS BIGINT) AS width,
-      |       CAST((octet_length(payload) * 7) % 480 + 1 AS BIGINT) AS height,
-      |       CASE doc_id % 3 WHEN 0 THEN 'jpeg' WHEN 1 THEN 'png' ELSE 'webp' END AS format,
-      |       CAST(octet_length(payload) % 24 + 1 AS BIGINT) AS n_frames,
-      |       base64(encode(substr(source, 1, 16))) AS thumb_b64
-      |FROM m""") { (s, d) =>
+    s"""WITH m AS (SELECT doc_id, octet_length(encode(text)) AS n, source FROM documents)
+       |SELECT doc_id,
+       |       CAST(n AS BIGINT) AS n_bytes,
+       |       ${dimsSql("n")},
+       |       $mimeSql AS format,
+       |       ${nFramesSql("n")} AS n_frames,
+       |       base64(encode(substr(source, 1, 16))) AS thumb_b64
+       |FROM m""".stripMargin) { (s, d) =>
+    val n = length(col("payload"))
     Tables.documents(s, d)
       .withColumn("payload", col("text").cast("binary"))
-      .select(
-        col("doc_id"),
-        length(col("payload")).cast("long").as("n_bytes"),
-        (length(col("payload")) % 640 + 1).cast("long").as("width"),
-        ((length(col("payload")) * 7) % 480 + 1).cast("long").as("height"),
+      .select(Seq(col("doc_id"), n.cast("long").as("n_bytes")) ++ dimsOf(n) ++ Seq(
         mimeOf(col("doc_id")).as("format"),
-        (length(col("payload")) % 24 + 1).cast("long").as("n_frames"),
-        base64(substring(col("source"), 1, 16).cast("binary")).as("thumb_b64"))
+        nFramesOf(n).as("n_frames"),
+        base64(substring(col("source"), 1, 16).cast("binary")).as("thumb_b64")): _*)
   }
 
   /** The byte ≡ char precondition [[checksumSql]] relies on: the
@@ -108,24 +115,24 @@ object MultimodalQueries {
   /** STUB batch decoder — deterministic fake standing in for an
     * image/audio library (none available in this container). The
     * BATCH signature is the real contract: a native decoder is handed
-    * the whole batch once (one JNI/subprocess crossing per 64 items,
-    * reusing decode state), not one call per row. Real byte access,
-    * fake pixels: dimensions/features derive from payload bytes so the
-    * pipeline is testable and reproducible.
+    * the whole batch once (one JNI/subprocess crossing per
+    * [[MediaDecode.DecodeBatch]] items, reusing decode state), not one
+    * call per row. Real byte access, fake pixels: dimensions/features
+    * derive from payload bytes so the pipeline is testable and
+    * reproducible. Each item's key (its frame number) passes through.
     */
-  private def stubDecodeBatch(batch: Seq[MediaRow]): Seq[DecodedMedia] = {
-    // The real-decoder seam is WIRED in [[MediaDecode]]: pure-JVM
-    // PPM(P6)/BMP(24bpp) parsers dispatched on magic bytes through the
-    // same 64-item partition-local boundary (golden-bytes-tested by
-    // MediaDecodeSpec). The registry queries keep this deterministic
-    // fake because their payloads are the testdata's TEXT bytes, not
-    // image containers; a heavier codec (ffmpeg/imageio) would slot
-    // into MediaDecode.decodeBatchReal the same way.
-    batch.map { m =>
+  private def stubDecodeBatch(batch: Seq[(Long, MediaRow)]): Seq[(Long, DecodedMedia)] =
+    // The stub payloads are the testdata's TEXT bytes, not image
+    // containers, so they need a fake decoder. Real containers go
+    // through MediaDecode.decodeBatchReal (PPM/BMP parsers dispatched
+    // on magic bytes) behind the same boundary; x_multimodal_real and
+    // x_multimodal_bmp run it on synthesized images, and a heavier
+    // codec (ffmpeg/imageio) would slot in the same way.
+    batch.map { case (frameNo, m) =>
       val bytes = m.payload
       val n = bytes.length
       val checksum = bytes.foldLeft(0L)((a, b) => (a * 31 + (b & 0xff)) % 1000000007L)
-      DecodedMedia(
+      frameNo -> DecodedMedia(
         doc_id = m.doc_id,
         width = (n % 640) + 1,
         height = ((n * 7) % 480) + 1,
@@ -133,40 +140,27 @@ object MultimodalQueries {
         n_frames = (n % 24) + 1,
         features = Array.tabulate(8)(i => ((checksum >> (i * 4)) & 0xff).toFloat / 255f))
     }
-  }
 
-  /** Partition-batched decode: mapPartitions feeding 64-item batches
-    * to the batch decoder — the JVM analog of an Arrow-batched decode
-    * UDF. Fully oracle-checked: the stub is a deterministic function
-    * of the payload bytes, and DuckDB reproduces the checksum/dims via
-    * [[checksumSql]]/[[dimsSql]].
+  /** The one stub decode boundary: each (doc_id, frame_no, text) row
+    * decodes its frame's byte slice — the payload suffix from byte
+    * `frame_no`, so frame 0 is the whole payload — in partition-local
+    * batches ([[MediaDecode.decodeBatches]]). Returns doc_id, frame_no,
+    * width, height, format, n_frames and the quantized feature[0]
+    * `f0_q`.
     */
-  val multimodalDecode: QueryDef = QueryDef.sql(
-    "x_multimodal_decode",
-    s"""WITH m AS (
-       |  SELECT doc_id,
-       |         octet_length(encode(text)) AS n,
-       |         CASE doc_id % 3 WHEN 0 THEN 'jpeg' WHEN 1 THEN 'png' ELSE 'webp' END AS mime,
-       |         ${checksumSql("text")} AS checksum
-       |  FROM documents)
-       |SELECT doc_id,
-       |       $dimsSql,
-       |       mime AS format,
-       |       CAST(n % 24 + 1 AS BIGINT) AS n_frames,
-       |       $f0qSql
-       |FROM m""".stripMargin) { (s, d) =>
-    val spark: SparkSession = s
+  private def stubDecoded(frames: DataFrame): DataFrame = {
+    val spark: SparkSession = frames.sparkSession
     import spark.implicits._
-    val media: Dataset[MediaRow] = Tables.documents(s, d)
-      .select(
-        col("doc_id"),
-        asciiCheckedPayload(col("text"), col("doc_id")).as("payload"),
-        mimeOf(col("doc_id")).as("mime"))
-      .as[MediaRow]
-    media
-      .mapPartitions(_.grouped(64).flatMap(stubDecodeBatch))
-      .toDF()
-      .select(col("doc_id"),
+    val media = frames
+      .select(col("frame_no"), struct(col("doc_id"),
+        asciiCheckedPayload(expr("substring(text, cast(frame_no + 1 as int))"),
+          col("doc_id")).as("payload"),
+        mimeOf(col("doc_id")).as("mime")))
+      .as[(Long, MediaRow)]
+    MediaDecode.decodeBatches(media)(stubDecodeBatch)
+      .toDF("frame_no", "m")
+      .select("frame_no", "m.*")
+      .select(col("doc_id"), col("frame_no"),
         col("width").cast("long").as("width"),
         col("height").cast("long").as("height"),
         col("format"),
@@ -174,183 +168,163 @@ object MultimodalQueries {
         round(element_at(col("features"), 1).cast("double") * 1000).cast("long").as("f0_q"))
   }
 
-  /** The REAL container decoder ([[MediaDecode]]), oracle-audited end
-    * to end: each document synthesizes a deterministic binary-PPM (P6)
-    * gradient image from its own doc_id — dimensions `(4 + id%5) ×
-    * (3 + id%7)`, pixel i carrying `((id + 3i) % 256, (2id + 5i) %
-    * 256, (3id + 7i) % 256)` — so the container BYTES (ASCII header +
-    * packed RGB) are pure arithmetic both engines can produce. The
-    * payload is assembled entirely with codegen'd column functions
-    * (`transform` → per-pixel hex pairs → `unhex` → binary concat
-    * with the header); the only non-codegen step remains the
-    * documented 64-item `mapPartitions` decode boundary, now running
-    * [[MediaDecode.decodeBatchReal]]'s magic-byte dispatch + P6
-    * parser on real container bytes instead of the stub.
+  /** Oracle twin of [[stubDecoded]] over the frame slices of CTE `s`
+    * (doc_id, frame_no, ftext): `cols`, the dims and `f0_q` per slice.
+    * `f0_q`'s float-vs-double rounding agrees: the float step (2^-24
+    * relative) is 100× smaller than the closest any `(x/255)*1000`
+    * value comes to a rounding boundary (1/102).
+    */
+  private def stubDecodedSql(slices: String, cols: String): String =
+    s"""WITH $slices,
+       |c AS (
+       |  SELECT doc_id, frame_no,
+       |         octet_length(encode(ftext)) AS n,
+       |         ${checksumSql("ftext")} AS checksum
+       |  FROM s)
+       |SELECT doc_id, $cols,
+       |       ${dimsSql("n")},
+       |       CAST(round((CAST((checksum & 255) AS DOUBLE) / 255) * 1000) AS BIGINT) AS f0_q
+       |FROM c""".stripMargin
+
+  /** Partition-batched decode of each whole payload — the frame-0 case
+    * of [[stubDecoded]], the JVM analog of an Arrow-batched decode UDF.
+    * Fully oracle-checked: the stub is a deterministic function of the
+    * payload bytes, and DuckDB reproduces the checksum/dims.
+    */
+  val multimodalDecode: QueryDef = QueryDef.sql(
+    "x_multimodal_decode",
+    stubDecodedSql("s AS (SELECT doc_id, 0 AS frame_no, text AS ftext FROM documents)",
+      s"$mimeSql AS format,\n       ${nFramesSql("n")} AS n_frames")) { (s, d) =>
+    stubDecoded(Tables.documents(s, d).withColumn("frame_no", lit(0L)))
+      .select("doc_id", "width", "height", "format", "n_frames", "f0_q")
+  }
+
+  // ----------------------------------------------------------------
+  // Pixel carriers: the REAL container decoder ([[MediaDecode]]),
+  // oracle-audited end to end on images synthesized per document.
+  // ----------------------------------------------------------------
+
+  /** One byte as 2 hex chars: `v` mod 256, zero-padded. */
+  private def hexByte(v: Column): Column = lpad(hex(v % 256), 2, "0")
+
+  /** Little-endian hex of an int column's low 4 (resp. 2) bytes — the
+    * codegen'd building blocks for real BMP headers.
+    */
+  private def le32hex(v: Column): Column = concat(
+    hexByte(v), hexByte(shiftright(v, 8)), hexByte(shiftright(v, 16)), hexByte(shiftright(v, 24)))
+  private def le16hex(v: Column): Column = concat(hexByte(v), hexByte(shiftright(v, 8)))
+
+  /** Channel `(a, b)` of logical pixel `i` of doc `id` — the byte
+    * `(a·id + b·i) % 256` — as hex.
+    */
+  private def chanHex(ab: (Int, Int), i: Column): Column =
+    hexByte((if (ab._1 == 1) col("doc_id") else col("doc_id") * ab._1) + i * ab._2)
+
+  /** Every carrier's image size: `(4 + id%5) × (3 + id%7)` pixels. */
+  private def carrierSize(documents: DataFrame): DataFrame =
+    documents.select(col("doc_id"),
+      (lit(4) + col("doc_id") % 5).cast("int").as("w"),
+      (lit(3) + col("doc_id") % 7).cast("int").as("h"))
+
+  /** The (a, b) channel coefficients of each carrier's r, g, b. */
+  private val PpmRgb = Seq((1, 3), (2, 5), (3, 7))
+  private val BmpRgb = Seq((1, 7), (3, 5), (5, 2))
+
+  /** A real-decoder carrier query: `payloads` synthesizes each
+    * document's container (doc_id, payload, mime) — logical pixel i
+    * of doc `id` carries channels `(a·id + b·i) % 256` for the `rgb`
+    * coefficients — and [[MediaDecode.decodeMedia]] decodes it through
+    * the magic-byte dispatch. The only non-codegen step is the decode
+    * boundary itself.
     *
     * Output is integer-exact: the decoder's float features are
     * rescaled back to the integer statistics they encode (sum_r =
-    * f0·n·255, min_luma3 = f3·765, bright_n = f6·n — float error
-    * ≤ 2⁻²⁴·18360 ≈ 0.001, three orders under the rounding
-    * boundary), so the DuckDB twin is a closed-form aggregate over
-    * `generate_series`, not a float compare. bright: luma > 127.5 ⇔
-    * r+g+b > 382.5 ⇔ ≥ 383 on integers.
+    * f0·n·255, min_luma3 = f3·765, bright_n = f6·n, posw_r =
+    * f8·n²·255 — float error ≤ 2⁻²⁴·18360 ≈ 0.001 for the sums, see
+    * [[MediaDecode.featuresOf]] for posw_r), so the DuckDB twin is a
+    * closed-form aggregate over `generate_series`, not a float
+    * compare. bright: luma > 127.5 ⇔ r+g+b > 382.5 ⇔ ≥ 383 on
+    * integers. posw_r is the one statistic that is not invariant
+    * under pixel permutation, so it pins each parser's row order.
     */
-  val multimodalReal: QueryDef = QueryDef.sql(
-    "x_multimodal_real",
-    """WITH d AS (
-      |  SELECT doc_id, 4 + doc_id % 5 AS w, 3 + doc_id % 7 AS h FROM documents),
-      |p AS (
-      |  SELECT doc_id, w, h, i,
-      |         (doc_id + 3 * i) % 256 AS r,
-      |         (2 * doc_id + 5 * i) % 256 AS g,
-      |         (3 * doc_id + 7 * i) % 256 AS b
-      |  FROM d, generate_series(0, 71) t(i)
-      |  WHERE i < w * h)
-      |SELECT doc_id,
-      |       CAST(w AS BIGINT) AS width, CAST(h AS BIGINT) AS height,
-      |       'ppm' AS format, CAST(1 AS BIGINT) AS n_frames,
-      |       CAST(sum(r) AS BIGINT) AS sum_r,
-      |       CAST(sum(g) AS BIGINT) AS sum_g,
-      |       CAST(sum(b) AS BIGINT) AS sum_b,
-      |       CAST(min(r + g + b) AS BIGINT) AS min_luma3,
-      |       CAST(max(r + g + b) AS BIGINT) AS max_luma3,
-      |       CAST(sum(CASE WHEN r + g + b >= 383 THEN 1 ELSE 0 END) AS BIGINT) AS bright_n,
-      |       CAST(sum(i * r) AS BIGINT) AS posw_r
-      |FROM p GROUP BY doc_id, w, h""") { (s, d) =>
-    val spark: SparkSession = s
-    import spark.implicits._
-    val gen = Tables.documents(s, d)
-      .select(col("doc_id"),
-        (lit(4) + col("doc_id") % 5).cast("int").as("w"),
-        (lit(3) + col("doc_id") % 7).cast("int").as("h"))
-      .withColumn("n", col("w") * col("h"))
-    def chan(v: Column): Column = lpad(hex(v % 256), 2, "0")
+  private def pixelCarrier(name: String, format: String, rgb: Seq[(Int, Int)])(
+      payloads: DataFrame => DataFrame): QueryDef = {
+    val chans = rgb.zip(Seq("r", "g", "b")).map { case ((a, b), c) =>
+      s"(${if (a == 1) "doc_id" else s"$a * doc_id"} + $b * i) % 256 AS $c"
+    }
+    QueryDef.sql(name,
+      s"""WITH d AS (
+         |  SELECT doc_id, 4 + doc_id % 5 AS w, 3 + doc_id % 7 AS h FROM documents),
+         |p AS (
+         |  SELECT doc_id, w, h, i,
+         |         ${chans.mkString(",\n         ")}
+         |  FROM d, generate_series(0, 71) t(i)
+         |  WHERE i < w * h)
+         |SELECT doc_id,
+         |       CAST(w AS BIGINT) AS width, CAST(h AS BIGINT) AS height,
+         |       '$format' AS format, CAST(1 AS BIGINT) AS n_frames,
+         |       CAST(sum(r) AS BIGINT) AS sum_r,
+         |       CAST(sum(g) AS BIGINT) AS sum_g,
+         |       CAST(sum(b) AS BIGINT) AS sum_b,
+         |       CAST(min(r + g + b) AS BIGINT) AS min_luma3,
+         |       CAST(max(r + g + b) AS BIGINT) AS max_luma3,
+         |       CAST(sum(CASE WHEN r + g + b >= 383 THEN 1 ELSE 0 END) AS BIGINT) AS bright_n,
+         |       CAST(sum(i * r) AS BIGINT) AS posw_r
+         |FROM p GROUP BY doc_id, w, h""".stripMargin) { (s, d) =>
+      val spark: SparkSession = s
+      import spark.implicits._
+      MediaDecode.decodeMedia(payloads(Tables.documents(s, d)).as[MediaRow]).toDF()
+        .withColumn("npx", col("width") * col("height"))
+        .select(
+          col("doc_id"),
+          col("width").cast("long").as("width"),
+          col("height").cast("long").as("height"),
+          col("format"),
+          col("n_frames").cast("long").as("n_frames"),
+          round(element_at(col("features"), 1).cast("double") * col("npx") * 255).cast("long").as("sum_r"),
+          round(element_at(col("features"), 2).cast("double") * col("npx") * 255).cast("long").as("sum_g"),
+          round(element_at(col("features"), 3).cast("double") * col("npx") * 255).cast("long").as("sum_b"),
+          round(element_at(col("features"), 4).cast("double") * 765).cast("long").as("min_luma3"),
+          round(element_at(col("features"), 5).cast("double") * 765).cast("long").as("max_luma3"),
+          round(element_at(col("features"), 7).cast("double") * col("npx")).cast("long").as("bright_n"),
+          round(element_at(col("features"), 9).cast("double") * col("npx") * col("npx") * 255).cast("long").as("posw_r"))
+    }
+  }
+
+  /** Binary PPM (P6) carrier: ASCII header + packed RGB, the pixels
+    * hex pairs from `transform`, one `unhex`, binary concat with the
+    * header.
+    */
+  val multimodalReal: QueryDef = pixelCarrier("x_multimodal_real", "ppm", PpmRgb) { documents =>
+    val gen = carrierSize(documents).withColumn("n", col("w") * col("h"))
     val hexPix = concat_ws("",
-      transform(sequence(lit(0), col("n") - 1), i => concat(
-        chan(col("doc_id") + i * 3),
-        chan(col("doc_id") * 2 + i * 5),
-        chan(col("doc_id") * 3 + i * 7))))
+      transform(sequence(lit(0), col("n") - 1), i => concat(PpmRgb.map(chanHex(_, i)): _*)))
     val payload = concat(
       concat(lit("P6\n"), col("w").cast("string"), lit(" "),
         col("h").cast("string"), lit("\n255\n")).cast("binary"),
       unhex(hexPix))
-    val media = gen
-      .select(col("doc_id"), payload.as("payload"), lit("ppm").as("mime"))
-      .as[MediaRow]
-    MediaDecode.decodeMedia(media).toDF()
-      .withColumn("npx", col("width") * col("height"))
-      .select(
-        col("doc_id"),
-        col("width").cast("long").as("width"),
-        col("height").cast("long").as("height"),
-        col("format"),
-        col("n_frames").cast("long").as("n_frames"),
-        round(element_at(col("features"), 1).cast("double") * col("npx") * 255).cast("long").as("sum_r"),
-        round(element_at(col("features"), 2).cast("double") * col("npx") * 255).cast("long").as("sum_g"),
-        round(element_at(col("features"), 3).cast("double") * col("npx") * 255).cast("long").as("sum_b"),
-        round(element_at(col("features"), 4).cast("double") * 765).cast("long").as("min_luma3"),
-        round(element_at(col("features"), 5).cast("double") * 765).cast("long").as("max_luma3"),
-        round(element_at(col("features"), 7).cast("double") * col("npx")).cast("long").as("bright_n"),
-        // Feature 9, Σ i·rᵢ over logical pixel order (round 16): the
-        // P6 path has no row-order ambiguity to catch, but emitting
-        // the same statistic keeps both real-decoder carriers on the
-        // identical 9-column contract and pins the feature's
-        // normalization law in a second, independent pixel formula.
-        round(element_at(col("features"), 9).cast("double") * col("npx") * col("npx") * 255).cast("long").as("posw_r"))
+    gen.select(col("doc_id"), payload.as("payload"), lit("ppm").as("mime"))
   }
 
-  /** Little-endian hex of an int column's low 4 (resp. 2) bytes — the
-    * codegen'd building blocks for real BMP headers. Values are
-    * mod-256'd before `hex`, so each piece is exactly 2 hex chars.
-    */
-  private def le32hex(v: Column): Column = concat(
-    lpad(hex(v % 256), 2, "0"),
-    lpad(hex(shiftright(v, 8) % 256), 2, "0"),
-    lpad(hex(shiftright(v, 16) % 256), 2, "0"),
-    lpad(hex(shiftright(v, 24) % 256), 2, "0"))
-  private def le16hex(v: Column): Column = concat(
-    lpad(hex(v % 256), 2, "0"),
-    lpad(hex(shiftright(v, 8) % 256), 2, "0"))
-
-  /** The BMP sibling of [[multimodalReal]], closing the last decoder
-    * path with no registry carrier: each document synthesizes a
-    * deterministic uncompressed 24-bpp BMP from its own doc_id —
-    * a real `BM` file header + 40-byte BITMAPINFOHEADER built from
-    * little-endian column arithmetic, pixel rows stored BOTTOM-UP in
-    * BGR order and padded to 4-byte boundaries (w ∈ 4..8 ⇒ row bytes
-    * 12,15,18,21,24 ⇒ all four pad widths 0..3 occur in every run) —
-    * and decodes it through [[MediaDecode.decodeBatchReal]]'s
-    * magic-byte dispatch + BMP parser. Logical (top-down, RGB) pixel
-    * i of doc `id` carries `((id+7i)%256, (3id+5i)%256, (5id+2i)%256)`,
-    * so the DuckDB twin is the same closed-form `generate_series`
-    * aggregate shape as the P6 carrier's, with integer-exact rescaled
-    * statistics (identical float-error budget: n ≤ 72, sums ≤ 18360,
-    * error ≤ 2⁻²⁴·18360 ≈ 0.001 ≪ 0.5).
+  /** Uncompressed 24-bpp BMP carrier: a real `BM` file header + 40-byte
+    * BITMAPINFOHEADER from little-endian column arithmetic, pixel rows
+    * stored BOTTOM-UP in BGR order and padded to 4-byte boundaries
+    * (w ∈ 4..8 ⇒ row bytes 12,15,18,21,24 ⇒ all four pad widths 0..3
+    * occur in every run).
     *
     * What the oracle pins end-to-end: header field encoding/parsing
     * (dims, pixel offset, bpp, compression), BGR→RGB channel order
     * (the three channel formulas differ, so a swap breaks sum_r vs
-    * sum_b), row padding (a parser that misaligned the 4-byte
-    * stride would read pad bytes as pixels), and — via `posw_r`
-    * (round 16) — bottom-up vs top-down ROW ORDER: the first eight
-    * statistics are whole-image aggregates, invariant under pixel
-    * permutation (the r15 verdict's documented blind spot), but
-    * Σ i·rᵢ over the logical top-down index is broken by any row
-    * reordering while staying closed-form in the same
-    * `generate_series` twin. MediaDecodeSpec's hand-built golden
-    * fixtures still pin the byte level (bottom-up and
-    * negative-height top-down bytes decoding to identical pixels),
-    * and the synthesis side is pinned against hand-computed
-    * container bytes there so a consistent-but-wrong synth/parse
-    * pair can't cancel out.
+    * sum_b), row padding (a parser that misaligned the 4-byte stride
+    * would read pad bytes as pixels), and — via `posw_r` — bottom-up
+    * vs top-down ROW ORDER, which the eight whole-image aggregates
+    * cannot see. MediaDecodeSpec's hand-built golden fixtures still
+    * pin the byte level (bottom-up and negative-height top-down bytes
+    * decoding to identical pixels), and the synthesis side is pinned
+    * against hand-computed container bytes there so a
+    * consistent-but-wrong synth/parse pair can't cancel out.
     */
-  val multimodalBmp: QueryDef = QueryDef.sql(
-    "x_multimodal_bmp",
-    """WITH d AS (
-      |  SELECT doc_id, 4 + doc_id % 5 AS w, 3 + doc_id % 7 AS h FROM documents),
-      |p AS (
-      |  SELECT doc_id, w, h, i,
-      |         (doc_id + 7 * i) % 256 AS r,
-      |         (3 * doc_id + 5 * i) % 256 AS g,
-      |         (5 * doc_id + 2 * i) % 256 AS b
-      |  FROM d, generate_series(0, 71) t(i)
-      |  WHERE i < w * h)
-      |SELECT doc_id,
-      |       CAST(w AS BIGINT) AS width, CAST(h AS BIGINT) AS height,
-      |       'bmp' AS format, CAST(1 AS BIGINT) AS n_frames,
-      |       CAST(sum(r) AS BIGINT) AS sum_r,
-      |       CAST(sum(g) AS BIGINT) AS sum_g,
-      |       CAST(sum(b) AS BIGINT) AS sum_b,
-      |       CAST(min(r + g + b) AS BIGINT) AS min_luma3,
-      |       CAST(max(r + g + b) AS BIGINT) AS max_luma3,
-      |       CAST(sum(CASE WHEN r + g + b >= 383 THEN 1 ELSE 0 END) AS BIGINT) AS bright_n,
-      |       CAST(sum(i * r) AS BIGINT) AS posw_r
-      |FROM p GROUP BY doc_id, w, h""") { (s, d) =>
-    val spark: SparkSession = s
-    import spark.implicits._
-    val media = bmpPayloads(Tables.documents(s, d)).as[MediaRow]
-    MediaDecode.decodeMedia(media).toDF()
-      .withColumn("npx", col("width") * col("height"))
-      .select(
-        col("doc_id"),
-        col("width").cast("long").as("width"),
-        col("height").cast("long").as("height"),
-        col("format"),
-        col("n_frames").cast("long").as("n_frames"),
-        round(element_at(col("features"), 1).cast("double") * col("npx") * 255).cast("long").as("sum_r"),
-        round(element_at(col("features"), 2).cast("double") * col("npx") * 255).cast("long").as("sum_g"),
-        round(element_at(col("features"), 3).cast("double") * col("npx") * 255).cast("long").as("sum_b"),
-        round(element_at(col("features"), 4).cast("double") * 765).cast("long").as("min_luma3"),
-        round(element_at(col("features"), 5).cast("double") * 765).cast("long").as("max_luma3"),
-        round(element_at(col("features"), 7).cast("double") * col("npx")).cast("long").as("bright_n"),
-        // Position-weighted channel sum over LOGICAL pixel order
-        // (feature 9) — the round-16 addition that closes the
-        // row-order blind spot documented above: every other emitted
-        // statistic is pixel-permutation-invariant, this one breaks
-        // under any row reordering, so the oracle now pins bottom-up
-        // storage → top-down logical normalization in-registry.
-        round(element_at(col("features"), 9).cast("double") * col("npx") * col("npx") * 255).cast("long").as("posw_r"))
-  }
+  val multimodalBmp: QueryDef = pixelCarrier("x_multimodal_bmp", "bmp", BmpRgb)(bmpPayloads)
 
   /** The BMP container synthesis, exposed for the golden-bytes spec:
     * (doc_id, payload, mime) rows whose payload is the complete BMP
@@ -360,13 +334,9 @@ object MultimodalQueries {
     * each pixel as BGR, then `rowsize − 3w` zero pad bytes.
     */
   private[graft] def bmpPayloads(documents: DataFrame): DataFrame = {
-    val gen = documents
-      .select(col("doc_id"),
-        (lit(4) + col("doc_id") % 5).cast("int").as("w"),
-        (lit(3) + col("doc_id") % 7).cast("int").as("h"))
+    val gen = carrierSize(documents)
       .withColumn("rowsize", ((col("w") * 3 + 3) / 4).cast("int") * 4)
       .withColumn("imgsize", col("rowsize") * col("h"))
-    def chan(v: Column): Column = lpad(hex(v % 256), 2, "0")
     val headerHex = concat(
       lit("424D"),                      // "BM"
       le32hex(col("imgsize") + 54),     // file size
@@ -386,10 +356,7 @@ object MultimodalQueries {
         concat(
           concat_ws("", transform(sequence(lit(0), col("w") - 1), x => {
             val i = (col("h") - 1 - rs) * col("w") + x // logical top-down index
-            concat(
-              chan(col("doc_id") * 5 + i * 2),  // B
-              chan(col("doc_id") * 3 + i * 5),  // G
-              chan(col("doc_id") + i * 7))      // R
+            concat(BmpRgb.reverse.map(chanHex(_, i)): _*) // B, G, R
           })),
           repeat(lit("00"), (col("rowsize") - col("w") * 3).cast("int")))))
     gen.select(col("doc_id"),
@@ -402,21 +369,24 @@ object MultimodalQueries {
   // standalone sampler query and the composed sample-then-decode one.
   // ----------------------------------------------------------------
 
-  /** Keyframe selection over the deterministic frame count: every 4th
-    * frame plus the final frame. Adds `n_frames`/`frame_no`, keeps the
-    * input's other columns (the composed query still needs the text).
+  /** Every frame of every document: adds `n_frames`/`frame_no` and
+    * keeps the input's other columns (the composed query still needs
+    * the text).
     */
-  private def sampledFrames(docs: DataFrame): DataFrame =
+  private def allFrames(docs: DataFrame): DataFrame =
     docs
-      .withColumn("n_frames", (length(col("text").cast("binary")) % 24 + 1).cast("long"))
+      .withColumn("n_frames", nFramesOf(length(col("text").cast("binary"))))
       .withColumn("frame_no", explode(sequence(lit(0L), col("n_frames") - 1)))
-      .where(col("frame_no") % 4 === 0 || col("frame_no") === col("n_frames") - 1)
+
+  /** Keyframe selection: every 4th frame plus the final frame. */
+  private def sampledFrames(docs: DataFrame): DataFrame =
+    allFrames(docs).where(col("frame_no") % 4 === 0 || col("frame_no") === col("n_frames") - 1)
 
   /** The matching oracle CTE pair (m → exploded f) and sample filter. */
   private def frameCtes(carryText: Boolean): String = {
     val t = if (carryText) "text, " else ""
     s"""m AS (
-       |  SELECT doc_id, ${t}CAST(octet_length(encode(text)) % 24 + 1 AS BIGINT) AS n_frames
+       |  SELECT doc_id, $t${nFramesSql("octet_length(encode(text))")} AS n_frames
        |  FROM documents),
        |f AS (
        |  SELECT doc_id, ${t}n_frames, unnest(generate_series(0, n_frames - 1)) AS frame_no
@@ -438,60 +408,26 @@ object MultimodalQueries {
       .select("doc_id", "frame_no", "n_frames")
   }
 
-  /** One sampled frame awaiting decode: the frame's own byte slice of
-    * the media payload plus the container mime.
-    */
-  final case class FrameRow(doc_id: Long, frame_no: Long, payload: Array[Byte], mime: String)
-
-  final case class DecodedFrame(doc_id: Long, frame_no: Long,
-      width: Long, height: Long, f0_q: Long)
-
-  /** Frame-level batch decode: same 64-item batch contract as
-    * [[stubDecodeBatch]], re-used per frame slice.
-    */
-  private def decodeFrameBatch(batch: Seq[FrameRow]): Seq[DecodedFrame] = {
-    val dec = stubDecodeBatch(batch.map(f => MediaRow(f.doc_id, f.payload, f.mime)))
-    batch.zip(dec).map { case (f, m) =>
-      DecodedFrame(f.doc_id, f.frame_no, m.width.toLong, m.height.toLong,
-        math.round(m.features(0).toDouble * 1000))
-    }
-  }
-
   /** Sample-before-decode, end to end: [[sampledFrames]] runs FIRST,
     * so the expensive batched decode only ever touches the sampled
     * subset — the composed shape of a video-preprocessing pipeline,
     * where decoding all frames would dominate the job. Each sampled
-    * frame decodes its own byte slice of the payload (suffix at the
-    * frame offset — deterministic, so the checksum/dims are
-    * oracle-checkable per frame exactly like x_multimodal_decode).
-    * Zero shuffle: sample, slice, and decode are all partition-local.
+    * frame decodes its own byte slice of the payload through
+    * [[stubDecoded]], oracle-checkable per frame exactly like
+    * x_multimodal_decode. Zero shuffle: sample, slice, and decode are
+    * all partition-local.
     */
   val framesDecoded: QueryDef = QueryDef.sql(
     "x_frames_decoded",
-    s"""WITH ${frameCtes(carryText = true)},
-       |s AS (
-       |  SELECT doc_id, CAST(frame_no AS BIGINT) AS frame_no,
-       |         substr(text, CAST(frame_no + 1 AS INTEGER)) AS ftext
-       |  FROM f
-       |  WHERE $frameSamplePredSql),
-       |c AS (
-       |  SELECT doc_id, frame_no,
-       |         octet_length(encode(ftext)) AS n,
-       |         ${checksumSql("ftext")} AS checksum
-       |  FROM s)
-       |SELECT doc_id, frame_no,
-       |       $dimsSql,
-       |       $f0qSql
-       |FROM c""".stripMargin) { (s, d) =>
-    val spark: SparkSession = s
-    import spark.implicits._
-    val frames = sampledFrames(Tables.documents(s, d))
-      .select(col("doc_id"), col("frame_no"),
-        asciiCheckedPayload(expr("substring(text, cast(frame_no + 1 as int))"),
-          col("doc_id")).as("payload"),
-        mimeOf(col("doc_id")).as("mime"))
-      .as[FrameRow]
-    frames.mapPartitions(_.grouped(64).flatMap(decodeFrameBatch)).toDF()
+    stubDecodedSql(
+      s"""${frameCtes(carryText = true)},
+         |s AS (
+         |  SELECT doc_id, CAST(frame_no AS BIGINT) AS frame_no,
+         |         substr(text, CAST(frame_no + 1 AS INTEGER)) AS ftext
+         |  FROM f
+         |  WHERE $frameSamplePredSql)""".stripMargin, "frame_no")) { (s, d) =>
+    stubDecoded(sampledFrames(Tables.documents(s, d)))
+      .select("doc_id", "frame_no", "width", "height", "f0_q")
   }
 
   // ----------------------------------------------------------------
@@ -500,15 +436,14 @@ object MultimodalQueries {
   // ----------------------------------------------------------------
 
   /** Frame ↔ caption-segment alignment: each document is a media item
-    * whose frames tick at a fixed `frameUs` cadence (frame count =
-    * the deterministic n_frames fake shared with x_frame_sample) and
-    * whose text is the caption/transcript track — chunked into
-    * `chunkTokens`-token segments, each spanning `tokUs` µs per token
-    * on the same timeline (fixed-rate speech, the standard forced-
-    * alignment stand-in). A frame pairs with every segment whose time
-    * interval it overlaps — subtitle alignment / audio-visual sync,
-    * the join a video-training pipeline runs to label frames with
-    * concurrent speech.
+    * whose frames ([[allFrames]], the timeline x_frame_sample samples)
+    * tick at a fixed `frameUs` cadence and whose text is the
+    * caption/transcript track — chunked into `chunkTokens`-token
+    * segments, each spanning `tokUs` µs per token on the same timeline
+    * (fixed-rate speech, the standard forced-alignment stand-in). A
+    * frame pairs with every segment whose time interval it overlaps —
+    * subtitle alignment / audio-visual sync, the join a video-training
+    * pipeline runs to label frames with concurrent speech.
     *
     * Built on [[graft.operators.IntervalJoin.intervalJoinById]]
     * (doc_id-keyed banded equi-join; frame_no / chunk_id are the
@@ -521,15 +456,14 @@ object MultimodalQueries {
     *
     * Scale shape: both sides explode partition-locally (fan-out ≤
     * frames-per-item and segments-per-doc), then one banded equi-join
-    * on (doc_id, band) — no corpus×corpus term anywhere; band width
-    * is pinned to the max segment span, so per-row band fan-out ≤ 2.
+    * on (doc_id, band) — no corpus×corpus term anywhere; the band is
+    * the segment span `chunkTokens · tokUs` (whole seconds for both
+    * configs), the longest segment, so per-row band fan-out ≤ 2.
     */
   private def avAlignDf(s: SparkSession, d: String, chunkTokens: Int,
-      tokUs: Long, frameUs: Long, bandSec: Long): DataFrame = {
+      tokUs: Long, frameUs: Long): DataFrame = {
     val docs = Tables.documents(s, d)
-    val frames = docs
-      .withColumn("n_frames", (length(col("text").cast("binary")) % 24 + 1).cast("long"))
-      .select(col("doc_id"), explode(sequence(lit(0L), col("n_frames") - 1)).as("frame_no"))
+    val frames = allFrames(docs)
       .select(col("doc_id"), col("frame_no"),
         (col("frame_no") * frameUs).as("f_s"),
         (col("frame_no") * frameUs + (frameUs - 1)).as("f_e"))
@@ -541,7 +475,7 @@ object MultimodalQueries {
     graft.operators.IntervalJoin.intervalJoinById(frames, segs, key = "doc_id",
         lId = "frame_no", rId = "chunk_id",
         lStartUs = "f_s", lEndUs = "f_e", rStartUs = "c_s", rEndUs = "c_e",
-        bandSec = bandSec)
+        bandSec = segUs / 1000000L)
       .select(col("doc_id"), col("frame_no"), col("chunk_id"),
         expr("(least(f_e, c_e) - greatest(f_s, c_s) + 1) div 1000").as("overlap_ms"))
   }
@@ -549,12 +483,13 @@ object MultimodalQueries {
   /** Naive-inequality oracle over the same deterministic timeline. */
   private def avAlignSql(chunkTokens: Int, tokUs: Long, frameUs: Long): String = {
     val c = chunkTokens
-    s"""WITH t AS (
+    s"""WITH ${frameCtes(carryText = false)},
+       |t AS (
        |  SELECT doc_id, CAST(len(regexp_extract_all(lower(text), '[a-z0-9]+')) AS BIGINT) AS n
        |  FROM documents),
        |k AS (
        |  SELECT doc_id, n,
-       |         CASE WHEN n <= $c THEN 0 ELSE (n - $c + ${c - 1}) // $c END AS max_k
+       |         ${CurationQueries.chunkCountSql(c, overlap = 0)}
        |  FROM t),
        |seg AS (
        |  SELECT doc_id, CAST(k AS BIGINT) AS chunk_id,
@@ -565,27 +500,24 @@ object MultimodalQueries {
        |  SELECT doc_id, CAST(frame_no AS BIGINT) AS frame_no,
        |         CAST(frame_no * $frameUs AS BIGINT) AS f_s,
        |         CAST(frame_no * $frameUs + ${frameUs - 1} AS BIGINT) AS f_e
-       |  FROM (SELECT doc_id, unnest(generate_series(0, octet_length(encode(text)) % 24)) AS frame_no
-       |        FROM documents))
+       |  FROM f)
        |SELECT fi.doc_id, fi.frame_no, seg.chunk_id,
        |       CAST((least(f_e, c_e) - greatest(f_s, c_s) + 1) // 1000 AS BIGINT) AS overlap_ms
        |FROM fi JOIN seg ON fi.doc_id = seg.doc_id AND f_s <= c_e AND c_s <= f_e""".stripMargin
   }
 
-  /** 2 s frames, 16-token segments at 0.5 s/token (8 s max span,
-    * band = 8 s so segment fan-out stays ≤ 2).
-    */
+  /** 2 s frames, 16-token segments at 0.5 s/token (8 s span = band). */
   val avAlign: QueryDef = QueryDef.sql(
     "x_av_align", avAlignSql(chunkTokens = 16, tokUs = 500000L, frameUs = 2000000L)) { (s, d) =>
-    avAlignDf(s, d, chunkTokens = 16, tokUs = 500000L, frameUs = 2000000L, bandSec = 8L)
+    avAlignDf(s, d, chunkTokens = 16, tokUs = 500000L, frameUs = 2000000L)
   }
 
   /** Faster cadence: 1 s frames, 24-token segments at 0.25 s/token
-    * (6 s max span, band = 6 s) — both knobs real on both sides.
+    * (6 s span = band) — both knobs real on both sides.
     */
   val avAlignF1: QueryDef = QueryDef.sql(
     "x_av_align_f1", avAlignSql(chunkTokens = 24, tokUs = 250000L, frameUs = 1000000L)) { (s, d) =>
-    avAlignDf(s, d, chunkTokens = 24, tokUs = 250000L, frameUs = 1000000L, bandSec = 6L)
+    avAlignDf(s, d, chunkTokens = 24, tokUs = 250000L, frameUs = 1000000L)
   }
 
   val all: Seq[QueryDef] =

@@ -22,6 +22,12 @@ object Relational {
     */
   def pivotEav(eav: Column): Column = map_from_entries(eav)
 
+  /** The CUSTOMFIELDS record [[pivotEav]] reads: one
+    * `struct<FIELD_NAME, FIELD_VALUE>` entry per `name -> value` pair.
+    */
+  def customFields(fields: (String, Column)*): Column =
+    array(fields.map { case (k, v) => struct(lit(k).as("FIELD_NAME"), v.as("FIELD_VALUE")) }: _*)
+
   /** Custom-field extraction with the reference's `dict.get(k, "")`
     * default (quote.py:211-213). `try_element_at` keeps ANSI mode from
     * erroring on absent keys.

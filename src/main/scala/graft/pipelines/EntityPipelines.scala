@@ -157,11 +157,10 @@ object EntityPipelines {
     val reg = Tables.region(s, d)
     val nsup = sup.agg(count(lit(1)).as("nsup"))
 
-    val eav = array(
-      struct(lit("Active__c").as("FIELD_NAME"),
-        when(col("p_size") % 2 === 0, "true").otherwise("false").as("FIELD_VALUE")),
-      struct(lit("Quantity__c").as("FIELD_NAME"), col("p_size").cast("string").as("FIELD_VALUE")),
-      struct(lit("Entity__c").as("FIELD_NAME"), (col("p_partkey") % 25).cast("string").as("FIELD_VALUE")))
+    val eav = customFields(
+      "Active__c" -> when(col("p_size") % 2 === 0, "true").otherwise("false"),
+      "Quantity__c" -> col("p_size").cast("string"),
+      "Entity__c" -> (col("p_partkey") % 25).cast("string"))
 
     dedup(p.crossJoin(broadcast(nsup))
       .withColumn("owner_id", col("p_partkey") % col("nsup"))

@@ -88,10 +88,10 @@ object FanoutQueries {
       |       CAST(p_size AS VARCHAR) AS size_str,
       |       '' AS missing_field
       |FROM part""") { (s, d) =>
-    val eav = array(
-      struct(lit("Brand__c").as("FIELD_NAME"), col("p_brand").as("FIELD_VALUE")),
-      struct(lit("Type__c").as("FIELD_NAME"), col("p_type").as("FIELD_VALUE")),
-      struct(lit("Size__c").as("FIELD_NAME"), col("p_size").cast("string").as("FIELD_VALUE")))
+    val eav = customFields(
+      "Brand__c" -> col("p_brand"),
+      "Type__c" -> col("p_type"),
+      "Size__c" -> col("p_size").cast("string"))
     Tables.part(s, d)
       .withColumn("cf", pivotEav(eav))
       .select(

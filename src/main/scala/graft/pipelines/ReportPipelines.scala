@@ -62,12 +62,10 @@ object ReportPipelines {
       date_format(min(col("o_orderdate")), "yyyy-MM-dd HH:mm:ss").as("created_raw"))
 
     // CUSTOMFIELDS synthesis → G3 pivot back through map_from_entries.
-    val eav = array(
-      struct(lit("Active__c").as("FIELD_NAME"),
-        when(col("c_acctbal") > 0, "true").otherwise("false").as("FIELD_VALUE")),
-      struct(lit("Region__c").as("FIELD_NAME"), col("c_mktsegment").as("FIELD_VALUE")),
-      struct(lit("Call_Frequency__c").as("FIELD_NAME"),
-        (col("c_custkey") % 4).cast("string").as("FIELD_VALUE")))
+    val eav = customFields(
+      "Active__c" -> when(col("c_acctbal") > 0, "true").otherwise("false"),
+      "Region__c" -> col("c_mktsegment"),
+      "Call_Frequency__c" -> (col("c_custkey") % 4).cast("string"))
 
     dedup(cust
       .join(broadcast(nat), cust("c_nationkey") === nat("n_nationkey"), "left")
@@ -125,15 +123,12 @@ object ReportPipelines {
       |LEFT JOIN customer c2 ON o.o_custkey = c2.c_custkey""") { (s, d) =>
     val o = Tables.orders(s, d)
     val c = Tables.customer(s, d).select("c_custkey", "c_name")
-    val eav = array(
-      struct(lit("GST_Percentage__c").as("FIELD_NAME"),
-        (col("o_orderkey") % 10).cast("string").as("FIELD_VALUE")),
-      struct(lit("Sales_Person__c").as("FIELD_NAME"),
-        col("o_custkey").cast("string").as("FIELD_VALUE")),
-      struct(lit("Shipping_Terms__c").as("FIELD_NAME"),
-        when(col("o_orderkey") % 3 === 0, "FOB")
-          .when(col("o_orderkey") % 3 === 1, "CIF")
-          .otherwise("EXW").as("FIELD_VALUE")))
+    val eav = customFields(
+      "GST_Percentage__c" -> (col("o_orderkey") % 10).cast("string"),
+      "Sales_Person__c" -> col("o_custkey").cast("string"),
+      "Shipping_Terms__c" -> when(col("o_orderkey") % 3 === 0, "FOB")
+        .when(col("o_orderkey") % 3 === 1, "CIF")
+        .otherwise("EXW"))
     val withCf = o.withColumn("cf", pivotEav(eav))
     // J3: the sales-person FK lives in a custom field (string-typed);
     // join on the pivoted-out value cast back to the dim key type.
@@ -234,11 +229,9 @@ object ReportPipelines {
     val prods = li.groupBy(col("l_orderkey").as("prod_order"))
       .agg(sort_array(collect_set(col("l_partkey"))).as("pids"))
 
-    val eav = array(
-      struct(lit("Trial__c").as("FIELD_NAME"),
-        when(col("o_orderkey") % 2 === 0, "true").otherwise("false").as("FIELD_VALUE")),
-      struct(lit("Quantity__c").as("FIELD_NAME"),
-        (col("o_orderkey") % 10).cast("string").as("FIELD_VALUE")))
+    val eav = customFields(
+      "Trial__c" -> when(col("o_orderkey") % 2 === 0, "true").otherwise("false"),
+      "Quantity__c" -> (col("o_orderkey") % 10).cast("string"))
 
     val fact = o.crossJoin(broadcast(nsup))
       .withColumn("owner_id", col("o_orderkey") % col("nsup"))

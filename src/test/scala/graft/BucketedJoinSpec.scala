@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
 class BucketedJoinSpec extends SparkSpec {
 
   test("bucketed fact-fact join plans without shuffle exchanges") {
-    val wh = java.nio.file.Files.createTempDirectory("graftwh").toString
+    val wh = llm.SharedIndex.tempDir("graftwh").toString
     val sf = "/root/testdata/sf0.001"
     val nBuckets = 8
 

@@ -7,7 +7,7 @@ import graft.operators.Compaction
 class CompactionSpec extends SparkSpec {
 
   private def mkDataset(n: Int): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graftcompact").resolve("t").toString
+    val dir = llm.SharedIndex.tempDir("graftcompact").resolve("t").toString
     Tables.documents(spark, "/root/testdata/sf0.001")
       .repartition(n).write.mode("overwrite").parquet(dir)
     dir
@@ -52,7 +52,7 @@ class CompactionSpec extends SparkSpec {
     val before = rows(dir)
     Compaction.compactParquet(spark, dir)
     // another writer appends a plain (un-prefixed) part file
-    val extraSrc = java.nio.file.Files.createTempDirectory("graftappend")
+    val extraSrc = llm.SharedIndex.tempDir("graftappend")
     Tables.documents(spark, "/root/testdata/sf0.001")
       .where(org.apache.spark.sql.functions.col("doc_id") < 3)
       .coalesce(1).write.mode("overwrite").parquet(extraSrc.resolve("out").toString)
@@ -72,7 +72,7 @@ class CompactionSpec extends SparkSpec {
   }
 
   test("compaction refuses a partitioned root (per-partition leaves compact fine)") {
-    val dir = java.nio.file.Files.createTempDirectory("graftcompactpart").resolve("t").toString
+    val dir = llm.SharedIndex.tempDir("graftcompactpart").resolve("t").toString
     Tables.documents(spark, "/root/testdata/sf0.001")
       .write.mode("overwrite").partitionBy("lang").parquet(dir)
     // compacting the root would collapse partition columns into data
@@ -91,7 +91,7 @@ class CompactionSpec extends SparkSpec {
   }
 
   test("empty directory is a clean no-op") {
-    val dir = java.nio.file.Files.createTempDirectory("graftcompactempty").resolve("t")
+    val dir = llm.SharedIndex.tempDir("graftcompactempty").resolve("t")
     Files.createDirectories(dir)
     // zero parquet files: a no-op result, no staging dir leaked, no
     // schema-inference crash
@@ -132,7 +132,7 @@ class CompactionSpec extends SparkSpec {
 
     // build generation 2 out-of-band and move it in WITHOUT committing:
     // this is the mid-swap state (old committed + new files present)
-    val scratch = Files.createTempDirectory("graftgen2")
+    val scratch = llm.SharedIndex.tempDir("graftgen2")
     spark.read.parquet(gen1.toString).coalesce(1)
       .write.mode("overwrite").parquet(scratch.resolve("out").toString)
     val gen2name = s"${Compaction.GenPrefix}gen2run-part-0.parquet"
@@ -166,7 +166,7 @@ class CompactionSpec extends SparkSpec {
   }
 
   test("a failing compaction write cleans up its staging; crashed staging dirs are swept") {
-    val dir = java.nio.file.Files.createTempDirectory("graftcompactbad").resolve("t")
+    val dir = llm.SharedIndex.tempDir("graftcompactbad").resolve("t")
     Files.createDirectories(dir)
     Files.write(dir.resolve("broken.parquet"), "this is not parquet".getBytes)
     // a hard-crash leftover staging dir from a previous run of THIS dataset
@@ -220,7 +220,7 @@ class CompactionSpec extends SparkSpec {
     // dirs written by the pre-hash '.compact-<name>-<digits>' scheme
     // must be reclaimed after the prefix upgrade instead of leaking
     // forever; the digits-only suffix keeps sibling `t-x` safe
-    val parent = java.nio.file.Files.createTempDirectory("graftlegacy")
+    val parent = llm.SharedIndex.tempDir("graftlegacy")
     val t = parent.resolve("t")
     Files.createDirectories(t)
     Tables.documents(spark, "/root/testdata/sf0.001")
@@ -240,7 +240,7 @@ class CompactionSpec extends SparkSpec {
     // datasets `t` and `t-x` share a parent; a raw-name scope token
     // would make t's prefix a string prefix of t-x's staging dirs and
     // t's sweep would reclaim the sibling's in-flight compaction
-    val parent = java.nio.file.Files.createTempDirectory("graftsibling")
+    val parent = llm.SharedIndex.tempDir("graftsibling")
     val t = parent.resolve("t")
     Files.createDirectories(t)
     Tables.documents(spark, "/root/testdata/sf0.001")

@@ -267,7 +267,7 @@ class CurationSpec extends SparkSpec {
     // passes the default word floor (25 ≥ 20) but not the strict one
     // (25 < 30); the raw stage is config-independent.
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("funnel").toString
+    val dir = llm.SharedIndex.tempDir("funnel").toString
     def words(n: Int) = (1 to n).map(i => s"word$i").mkString(" ")
     Seq((1L, words(25), "en", "s1"), (2L, words(40), "en", "s1"),
         (3L, words(5), "en", "s2"))

@@ -103,7 +103,7 @@ class LlmOpsSpec extends SparkSpec {
   test("identical texts produce identical exact-dedup fingerprints") {
     val q = llm.DedupQueries.dedupExact
     // crafted frame: write a tiny documents.parquet and run the query on it
-    val dir = java.nio.file.Files.createTempDirectory("graftspec").toString
+    val dir = llm.SharedIndex.tempDir("graftspec").toString
     Seq((1L, "Spark  makes\nETL fast", "en", "s", 20L),
         (2L, "spark makes etl FAST", "en", "s", 20L),
         (3L, "something else", "en", "s", 14L))
@@ -118,7 +118,7 @@ class LlmOpsSpec extends SparkSpec {
   }
 
   test("near-identical docs are found by ngram dedup; disjoint docs are not") {
-    val dir = java.nio.file.Files.createTempDirectory("graftspec2").toString
+    val dir = llm.SharedIndex.tempDir("graftspec2").toString
     val base = (1 to 30).map(i => s"tok$i").mkString(" ")
     Seq((1L, base, "en", "s", 10L),
         (2L, base + " extra", "en", "s", 10L),             // near-dup of 1
@@ -486,7 +486,7 @@ class LlmOpsSpec extends SparkSpec {
   }
 
   test("dup profile scores the recycled fraction of each doc's shingles; shingle-less docs stay rows") {
-    val dir = java.nio.file.Files.createTempDirectory("dupprof").toString
+    val dir = llm.SharedIndex.tempDir("dupprof").toString
     Seq((1L, "a b c d"), (2L, "a b c x"), (3L, "p q r"), (4L, "z z"))
       .toDF("doc_id", "text").write.parquet(s"$dir/documents.parquet")
     // trigrams: doc1 {abc, bcd}, doc2 {abc, bcx}, doc3 {pqr}, doc4 none;
@@ -546,7 +546,7 @@ class LlmOpsSpec extends SparkSpec {
   }
 
   test("multimodal stub decode: deterministic, one output row per input") {
-    val dir = java.nio.file.Files.createTempDirectory("graftspec3").toString
+    val dir = llm.SharedIndex.tempDir("graftspec3").toString
     Seq((1L, "abc", "en", "s", 3L), (2L, "defgh", "en", "s", 5L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
@@ -603,7 +603,7 @@ class LlmOpsSpec extends SparkSpec {
   }
 
   test("mutual-kNN graph: a clump of identical vectors is fully reciprocal; an opposite vector never pairs") {
-    val dir = java.nio.file.Files.createTempDirectory("knng").toString
+    val dir = llm.SharedIndex.tempDir("knng").toString
     // ids 0-3: identical vectors -> same bucket in every band (same
     // sign on every plane), pairwise sim 1.0; id 9 is the NEGATED
     // vector -> every plane dot flips sign, so its per-band bucket is
@@ -721,7 +721,7 @@ class LlmOpsSpec extends SparkSpec {
   }
 
   test("kNN density: a dense clump drops, candidate-less vectors are absent (trivially kept)") {
-    val dir = java.nio.file.Files.createTempDirectory("knnd").toString
+    val dir = llm.SharedIndex.tempDir("knnd").toString
     val v = Seq(1.0f, 2.0f, 0.5f, -1.5f)
     val neg = v.map(-_)
     (Seq(0L, 1L, 2L, 3L).map(id => (id, v, 0)) :+ ((9L, neg, 1)))
@@ -920,7 +920,7 @@ class LlmOpsSpec extends SparkSpec {
   }
 
   test("edit dedup: single-char edit pairs; big length gap is pruned before any DP") {
-    val dir = java.nio.file.Files.createTempDirectory("graftspec-edit").toString
+    val dir = llm.SharedIndex.tempDir("graftspec-edit").toString
     val base = (1 to 30).map(i => s"tok$i").mkString(" ")
     Seq((1L, base, "en", "s", 10L),
         (2L, base.dropRight(1) + "Z", "en", "s", 10L),   // 1-char substitution

@@ -39,7 +39,7 @@ class NearDupIngestSpec extends SparkSpec {
     Compaction.readCompacted(spark, dir).select("doc_id").as[Long].collect().toSet
 
   test("streaming near-dup ingest is exactly-once across a concurrent compaction commit") {
-    val dir = java.nio.file.Files.createTempDirectory("graftndingest").resolve("t").toString
+    val dir = llm.SharedIndex.tempDir("graftndingest").resolve("t").toString
     // seed corpus, then compact so the manifest protocol is active
     Seq((1L, t1), (2L, t2), (3L, t3)).toDF("doc_id", "text")
       .write.mode("overwrite").parquet(dir)
@@ -81,7 +81,7 @@ class NearDupIngestSpec extends SparkSpec {
   }
 
   test("ingestBatch replay (same input, same batchId) is idempotent") {
-    val dir = java.nio.file.Files.createTempDirectory("graftndreplay").resolve("t").toString
+    val dir = llm.SharedIndex.tempDir("graftndreplay").resolve("t").toString
     Seq((1L, t1), (2L, t2)).toDF("doc_id", "text").write.mode("overwrite").parquet(dir)
     Compaction.compactParquet(spark, dir)
 
@@ -111,7 +111,7 @@ class NearDupIngestSpec extends SparkSpec {
   }
 
   test("compactStoreAndIndexes folds only its OWN store's side tables, never a prefix-sibling's") {
-    val parent = java.nio.file.Files.createTempDirectory("graftsibling")
+    val parent = llm.SharedIndex.tempDir("graftsibling")
     val dirA = parent.resolve("t").toString
     val dirB = parent.resolve("t2").toString // name-prefix sibling of "t"
     for (d <- Seq(dirA, dirB)) {
@@ -138,7 +138,7 @@ class NearDupIngestSpec extends SparkSpec {
   }
 
   test("ingestBatch with an all-duplicate batch appends nothing and replays clean") {
-    val dir = java.nio.file.Files.createTempDirectory("graftndempty").resolve("t").toString
+    val dir = llm.SharedIndex.tempDir("graftndempty").resolve("t").toString
     Seq((1L, t1)).toDF("doc_id", "text").write.mode("overwrite").parquet(dir)
     val batch = Seq(Doc(50, ts(0), t1)).toDF() // exact dup of corpus
     assert(NearDupIngest.ingestBatch(spark, batch, dir, batchId = 7) == 0L)
@@ -167,7 +167,7 @@ class NearDupIngestSpec extends SparkSpec {
     // two DIFFERENT texts under one id (upstream contract violation):
     // keep-one (lexicographically-least text) — the store must never
     // hold two rows for one id
-    val dir = java.nio.file.Files.createTempDirectory("graftdupid").resolve("t").toString
+    val dir = llm.SharedIndex.tempDir("graftdupid").resolve("t").toString
     Seq((1L, t1)).toDF("doc_id", "text").write.mode("overwrite").parquet(dir)
     NearDupIngest.ingestBatch(spark, Seq(Doc(5, ts(0), tNovel), Doc(5, ts(1), tNovel2)).toDF(),
       dir, batchId = 0)
@@ -286,7 +286,7 @@ class NearDupIngestSpec extends SparkSpec {
   }
 
   test("steady-state admission scans ONLY the digest indexes, never the store's text") {
-    val dir = java.nio.file.Files.createTempDirectory("graftndplan").resolve("t").toString
+    val dir = llm.SharedIndex.tempDir("graftndplan").resolve("t").toString
     Seq((1L, t1), (2L, t2)).toDF("doc_id", "text").write.mode("overwrite").parquet(dir)
     NearDupIngest.ensureDocIdx(spark, dir, 3)
     val batch = Seq(Doc(10, ts(0), tNovel)).toDF()
@@ -301,7 +301,7 @@ class NearDupIngestSpec extends SparkSpec {
   }
 
   test("admission aggregates are delta/candidate-bounded — no full-index Aggregate") {
-    val dir = java.nio.file.Files.createTempDirectory("graftndagg").resolve("t").toString
+    val dir = llm.SharedIndex.tempDir("graftndagg").resolve("t").toString
     Seq((1L, t1), (2L, t2)).toDF("doc_id", "text").write.mode("overwrite").parquet(dir)
     NearDupIngest.ensureDocIdx(spark, dir, 3)
     val idxDirs = Seq(NearDupIngest.fpIdxDir(dir), NearDupIngest.shIdxDir(dir, 3),
@@ -398,7 +398,7 @@ class NearDupIngestSpec extends SparkSpec {
   }
 
   test("a real ingestBatch never shuffles an index: every index scan streams under a broadcast probe") {
-    val dir = java.nio.file.Files.createTempDirectory("graftndguard").resolve("t").toString
+    val dir = llm.SharedIndex.tempDir("graftndguard").resolve("t").toString
     Seq((1L, t1), (2L, t2), (3L, t3)).toDF("doc_id", "text").write.mode("overwrite").parquet(dir)
     NearDupIngest.ingestBatch(spark, Seq(Doc(10, ts(0), tNovel)).toDF(), dir, batchId = 0)
     // a steady-state batch: novel, exact repeat, near-dup of a seed doc
@@ -468,7 +468,7 @@ class NearDupIngestSpec extends SparkSpec {
   test("incremental-index admission matches the full-rescan formulation batch for batch") {
     // two stores seeded identically; one ingested incrementally, one
     // adjudicated by the rescan oracle before each ingest
-    val dir = java.nio.file.Files.createTempDirectory("graftndequiv").resolve("t").toString
+    val dir = llm.SharedIndex.tempDir("graftndequiv").resolve("t").toString
     Seq((1L, t1), (2L, t2), (3L, t3)).toDF("doc_id", "text")
       .write.mode("overwrite").parquet(dir)
     Compaction.compactParquet(spark, dir)
@@ -499,7 +499,7 @@ class NearDupIngestSpec extends SparkSpec {
   }
 
   test("a store compaction between batches leaves the index path exact") {
-    val dir = java.nio.file.Files.createTempDirectory("graftndcompact").resolve("t").toString
+    val dir = llm.SharedIndex.tempDir("graftndcompact").resolve("t").toString
     Seq((1L, t1)).toDF("doc_id", "text").write.mode("overwrite").parquet(dir)
     NearDupIngest.ingestBatch(spark, Seq(Doc(10, ts(0), tNovel)).toDF(), dir, batchId = 0)
     // ONE maintenance entry point folds seed + ingest-0 AND every
@@ -521,7 +521,7 @@ class NearDupIngestSpec extends SparkSpec {
 
   test("a bootstrap that loses the race to a concurrent one discards its snapshot") {
     import java.nio.file.{Files, Paths}
-    val idx = Files.createTempDirectory("graftndrace").resolve("t.fpidx").toString
+    val idx = llm.SharedIndex.tempDir("graftndrace").resolve("t.fpidx").toString
     NearDupIngest.ensureIdx(idx) {
       // a concurrent bootstrap publishes the index between our
       // existence check and our rename
@@ -536,7 +536,7 @@ class NearDupIngestSpec extends SparkSpec {
     import java.nio.file.{Files, Path, Paths}
     import scala.jdk.CollectionConverters._
     import org.apache.spark.sql.functions._
-    val dir = Files.createTempDirectory("graftndlegacy").resolve("t").toString
+    val dir = llm.SharedIndex.tempDir("graftndlegacy").resolve("t").toString
     Seq((1L, t1), (2L, t2)).toDF("doc_id", "text").write.mode("overwrite").parquet(dir)
     assert(NearDupIngest.ingestBatch(spark, Seq(Doc(10, ts(0), tNovel)).toDF(), dir, 0) == 1L)
     // the older layout: no flat fp index, `pfx=<first hex char>` leaves
@@ -589,7 +589,7 @@ class NearDupIngestSpec extends SparkSpec {
   }
 
   test("deleting an index directory triggers an exact rebuild from the store") {
-    val dir = java.nio.file.Files.createTempDirectory("graftndrebuild").resolve("t").toString
+    val dir = llm.SharedIndex.tempDir("graftndrebuild").resolve("t").toString
     Seq((1L, t1)).toDF("doc_id", "text").write.mode("overwrite").parquet(dir)
     NearDupIngest.ingestBatch(spark, Seq(Doc(10, ts(0), tNovel)).toDF(), dir, batchId = 0)
     // repair path: lose the indexes; the next batch bootstraps them
@@ -603,7 +603,7 @@ class NearDupIngestSpec extends SparkSpec {
 
   test("quality gate rejects junk before the index; the same doc admits ungated later") {
     import org.apache.spark.sql.functions.col
-    val dir = java.nio.file.Files.createTempDirectory("graftndgate").resolve("t").toString
+    val dir = llm.SharedIndex.tempDir("graftndgate").resolve("t").toString
     Seq((1L, t1)).toDF("doc_id", "text").write.mode("overwrite").parquet(dir)
     Compaction.compactParquet(spark, dir)
 
@@ -633,7 +633,7 @@ class NearDupIngestSpec extends SparkSpec {
 
   test("lifecycle: gated streaming store feeds the batch sweep — empty when clean, catches crash-window dups, funnel reconciles") {
     import org.apache.spark.sql.functions.col
-    val dir = java.nio.file.Files.createTempDirectory("graftndlife").resolve("t").toString
+    val dir = llm.SharedIndex.tempDir("graftndlife").resolve("t").toString
     Seq((1L, t1), (2L, t2)).toDF("doc_id", "text").write.mode("overwrite").parquet(dir)
     Compaction.compactParquet(spark, dir)
 
@@ -707,7 +707,7 @@ class NearDupIngestSpec extends SparkSpec {
   }
 
   test("alarm monitor tails the funnel and materializes flagged batches into a queryable log") {
-    val dir = java.nio.file.Files.createTempDirectory("graftndalarm").resolve("t").toString
+    val dir = llm.SharedIndex.tempDir("graftndalarm").resolve("t").toString
     Seq((1L, t1), (2L, t2)).toDF("doc_id", "text").write.mode("overwrite").parquet(dir)
     Compaction.compactParquet(spark, dir)
 
@@ -761,7 +761,7 @@ class NearDupIngestSpec extends SparkSpec {
       finally ls.close()
     }
     // a 1,000-event table whose batch 1 replays batch 0: one low_admission alarm
-    val d = Files.createTempDirectory("graftalarmq")
+    val d = llm.SharedIndex.tempDir("graftalarmq")
     try {
       (0L until 1000L).map(i => (i, i % 500 % 50, "click", new Timestamp(i * 1000L)))
         .toDF("event_id", "user_id", "event_type", "ts")

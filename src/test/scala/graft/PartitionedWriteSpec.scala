@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
 class PartitionedWriteSpec extends SparkSpec {
 
   test("partitionBy write + partition-pruned read") {
-    val dir = java.nio.file.Files.createTempDirectory("graftpart").toString
+    val dir = llm.SharedIndex.tempDir("graftpart").toString
     Tables.documents(spark, "/root/testdata/sf0.001")
       .write.mode("overwrite").partitionBy("lang").parquet(dir)
 
@@ -33,7 +33,7 @@ class PartitionedWriteSpec extends SparkSpec {
     // the backfill/restatement op: re-run one day/language without
     // touching the other partitions — with STATIC overwrite (the
     // default) the same write would wipe every other partition.
-    val dir = java.nio.file.Files.createTempDirectory("graftrestate").toString
+    val dir = llm.SharedIndex.tempDir("graftrestate").toString
     val docs = Tables.documents(spark, "/root/testdata/sf0.001")
     docs.write.mode("overwrite").partitionBy("lang").parquet(dir)
     val before = spark.read.parquet(dir).groupBy("lang").count()

@@ -347,7 +347,7 @@ class PropertySpec extends SparkSpec {
     check(Prop.forAll(Gen.listOfN(4, genDoc)) { texts =>
       // dupProfileOf reads a directory (it runs on the shared postings
       // index); each sample gets its own temp dir = its own tiny index
-      val dir = java.nio.file.Files.createTempDirectory("dupprof_prop").toString
+      val dir = llm.SharedIndex.tempDir("dupprof_prop").toString
       texts.zipWithIndex.map { case (t, i) => (i.toLong + 1, t) }
         .toDF("doc_id", "text").write.parquet(s"$dir/documents.parquet")
       val got = graft.llm.DedupQueries.dupProfileOf(spark, dir, minDf)

@@ -60,7 +60,7 @@ class SessionTuningSpec extends AnyFunSuite {
   }
 
   test("inputBytes: recursive over part-dirs, 0 for unreadable paths") {
-    val dir = Files.createTempDirectory("tuning").toFile
+    val dir = llm.SharedIndex.tempDir("tuning").toFile
     val sub = new java.io.File(dir, "table.parquet"); sub.mkdirs()
     Files.write(new java.io.File(sub, "part-0").toPath, new Array[Byte](1000))
     Files.write(new java.io.File(dir, "flat.parquet").toPath, new Array[Byte](500))
@@ -172,6 +172,24 @@ class SessionTuningSpec extends AnyFunSuite {
       "index sessions in SQL with Sessionize.sessionIndexedSql, band time with " +
         "IntervalJoin.bandOf, share the as-of oracle and read gaps from Sessionize.GapMs; " +
         s"found session CTEs in $sessionSql, bands $bands, as-of oracles $asof, gap literals $gaps")
+  }
+
+  test("one media kernel: one decode boundary, one hex byte, one frame count, one carrier rescale, one chunk count, one CUSTOMFIELDS record") {
+    val boundaries = mainLinesWith(".grouped(")
+    val hexBytes = mainLinesWith("lpad(hex(")
+    val frameCounts = mainLinesWith("% 24")
+    val rescales = mainLinesWith("element_at(col(\"features\"), 9)")
+    val chunkCounts = mainLinesWith("END AS max_k")
+    val eav = mainSourcesWith("FIELD_NAME", "Relational.scala")
+    assert(boundaries.size == 1 && hexBytes.size == 1 && frameCounts.size <= 3 &&
+        rescales.size == 1 && chunkCounts.size == 1 &&
+        chunkCounts.forall(_.startsWith("graft/llm/CurationQueries.scala:")) && eav.isEmpty,
+      "decode through MediaDecode.decodeBatches, build hex bytes with hexByte, count frames " +
+        "with nFramesOf / nFramesSql (the stub keeps its own copy), rescale carrier features " +
+        "in pixelCarrier, count chunks with CurationQueries.chunkCountSql and build EAV entries " +
+        s"with Relational.customFields; found boundaries $boundaries, hex bytes $hexBytes, " +
+        s"frame counts $frameCounts, rescales $rescales, chunk counts $chunkCounts, " +
+        s"FIELD_NAME in $eav")
   }
 
   test("one quantized-cosine kernel: qdot and the ×1000 quantization only in TextOps.scala") {

@@ -13,7 +13,7 @@ class SourceFormatsSpec extends SparkSpec {
     Tables.documents(spark, "/root/testdata/sf0.001").limit(50).cache()
 
   test("CSV round-trip preserves rows and values (header + explicit schema)") {
-    val dir = java.nio.file.Files.createTempDirectory("graftcsv").toString
+    val dir = llm.SharedIndex.tempDir("graftcsv").toString
     docs.write.mode("overwrite").option("header", "true").csv(dir)
     val schema = StructType(Seq(
       StructField("doc_id", LongType), StructField("text", StringType),
@@ -25,7 +25,7 @@ class SourceFormatsSpec extends SparkSpec {
   }
 
   test("JSON round-trip preserves rows and values") {
-    val dir = java.nio.file.Files.createTempDirectory("graftjson").toString
+    val dir = llm.SharedIndex.tempDir("graftjson").toString
     docs.write.mode("overwrite").json(dir)
     val back = spark.read.json(dir)
       .select(col("doc_id"), col("text"), col("lang"), col("source"), col("n_chars"))

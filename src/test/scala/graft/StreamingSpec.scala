@@ -57,7 +57,7 @@ class StreamingSpec extends SparkSpec {
   test("K2 upsert protocol: resolve → find-child → replace, atomically, in a temp dir") {
     import graft.streaming.{Created, Replaced, UpsertSink}
     import java.nio.file.Files
-    val folder = Files.createTempDirectory("graftupsert")
+    val folder = llm.SharedIndex.tempDir("graftupsert")
     // step 1: resolve — a directory resolves, anything else is None
     // (the reference logs and skips unresolvable links)
     assert(UpsertSink.resolveFolder(folder.toString).contains(folder.toAbsolutePath.normalize))
@@ -75,7 +75,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("K2 upsert sink end-to-end: report lands as one named file; re-run replaces it") {
-    val folder = java.nio.file.Files.createTempDirectory("graftupsert2")
+    val folder = llm.SharedIndex.tempDir("graftupsert2")
     def runOnce(): Unit = {
       val q = StreamingIngest.startUpsertReportSink(
         spark, "/root/testdata/sf0.001", folder.toString, "events_report.parquet")

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import java.sql.Timestamp
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -31,7 +30,7 @@ class TablesSchemaSpec extends SparkSpec {
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
 
   test("Tables.events yields identical rows from long-nanos, timestamp, and timestamp_ntz encodings") {
-    val base = Files.createTempDirectory("events_encodings").toString
+    val base = llm.SharedIndex.tempDir("events_encodings").toString
     // legacy shape: ts arrives as a raw nanosecond long (what a
     // TIMESTAMP(NANOS) file reads as under the nanosAsLong conf)
     writeFixture(s"$base/nanos", (col("us") * 1000).as("ts"))
