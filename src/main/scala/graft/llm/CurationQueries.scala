@@ -93,7 +93,7 @@ object CurationQueries {
     "x_token_pack",
     s"""WITH t AS (
        |  SELECT doc_id,
-       |         CAST(len(regexp_extract_all(lower(text), '[a-z0-9]+')) AS BIGINT) AS n_tokens
+       |         CAST(len(${tokensSql()}) AS BIGINT) AS n_tokens
        |  FROM documents),
        |c AS (
        |  SELECT doc_id, n_tokens,
@@ -113,8 +113,8 @@ object CurationQueries {
     "x_corpus_curate",
     s"""WITH t AS (
        |  SELECT doc_id, lang,
-       |         trim(regexp_replace(lower(text), '\\s+', ' ', 'g')) AS norm,
-       |         regexp_extract_all(lower(text), '[a-z0-9]+') AS toks
+       |         $normTextSql AS norm,
+       |         ${tokensSql()} AS toks
        |  FROM documents),
        |q AS (
        |  SELECT doc_id, lang, norm,
@@ -223,8 +223,8 @@ object CurationQueries {
     val c = chunkTokens
     val st = chunkTokens - overlap
     s"""WITH t AS (
-       |  SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS toks,
-       |         CAST(len(regexp_extract_all(lower(text), '[a-z0-9]+')) AS BIGINT) AS n
+       |  SELECT doc_id, ${tokensSql()} AS toks,
+       |         CAST(len(${tokensSql()}) AS BIGINT) AS n
        |  FROM documents),
        |k AS (
        |  SELECT doc_id, toks, n,
@@ -296,12 +296,9 @@ object CurationQueries {
     * it; the training side never self-joins.
     */
   private val decontaminateOracle: String =
-    """WITH toks AS (
-      |  SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS tok FROM documents),
-      |g AS (
-      |  SELECT DISTINCT doc_id, array_to_string(list_slice(tok, i, i + 7), ' ') AS ng
-      |  FROM (SELECT doc_id, tok, generate_subscripts(tok, 1) AS i FROM toks)
-      |  WHERE i + 7 <= len(tok)),
+    s"""WITH toks AS (
+      |  SELECT doc_id, ${tokensSql()} AS tok FROM documents),
+      |g AS (${shinglePostingsSql("toks", 8)}),
       |bench AS (SELECT DISTINCT ng FROM g WHERE doc_id % 25 = 0)
       |SELECT g.doc_id, count(*) AS n_contaminated_ngrams
       |FROM g JOIN bench USING (ng)
@@ -359,13 +356,11 @@ object CurationQueries {
     * tokenized `toks` and the positional gram CTE `g`.
     */
   private val deconHitStartsSql: String =
-    """WITH toks AS (
-      |  SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS tok FROM documents),
+    s"""WITH toks AS (
+      |  SELECT doc_id, ${tokensSql()} AS tok FROM documents),
       |g AS (
-      |  SELECT doc_id, CAST(i AS BIGINT) AS pos,
-      |         array_to_string(list_slice(tok, i, i + 7), ' ') AS ng
-      |  FROM (SELECT doc_id, tok, generate_subscripts(tok, 1) AS i FROM toks)
-      |  WHERE i + 7 <= len(tok)),
+      |  SELECT doc_id, CAST(generate_subscripts(grams, 1) AS BIGINT) AS pos, unnest(grams) AS ng
+      |  FROM (SELECT doc_id, ${shinglesSql("tok", 8)} AS grams FROM toks)),
       |bench AS (SELECT DISTINCT ng FROM g WHERE doc_id % 25 = 0),
       |r AS (
       |  SELECT g.doc_id, g.pos FROM g JOIN bench USING (ng)
@@ -514,12 +509,9 @@ object CurationQueries {
 
   val decontaminateFrac: QueryDef = QueryDef.sql(
     "x_decontaminate_frac",
-    """WITH toks AS (
-      |  SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS tok FROM documents),
-      |g AS (
-      |  SELECT DISTINCT doc_id, array_to_string(list_slice(tok, i, i + 7), ' ') AS ng
-      |  FROM (SELECT doc_id, tok, generate_subscripts(tok, 1) AS i FROM toks)
-      |  WHERE i + 7 <= len(tok)),
+    s"""WITH toks AS (
+      |  SELECT doc_id, ${tokensSql()} AS tok FROM documents),
+      |g AS (${shinglePostingsSql("toks", 8)}),
       |bench AS (SELECT DISTINCT ng FROM g WHERE doc_id % 25 = 0),
       |cnt AS (
       |  SELECT doc_id, CAST(count(*) AS BIGINT) AS n_ngrams
@@ -587,11 +579,8 @@ object CurationQueries {
     */
   private def deconReportSql(k: Int): String =
     s"""WITH toks AS (
-       |  SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS tok FROM documents),
-       |g AS (
-       |  SELECT DISTINCT doc_id, array_to_string(list_slice(tok, i, i + ${k - 1}), ' ') AS ng
-       |  FROM (SELECT doc_id, tok, generate_subscripts(tok, 1) AS i FROM toks)
-       |  WHERE i + ${k - 1} <= len(tok))
+       |  SELECT doc_id, ${tokensSql()} AS tok FROM documents),
+       |g AS (${shinglePostingsSql("toks", k)})
        |SELECT b.doc_id AS bench_id,
        |       CAST(count(DISTINCT t.doc_id) AS BIGINT) AS n_train_docs,
        |       CAST(count(DISTINCT b.ng) AS BIGINT) AS n_leaked_ngrams
@@ -640,9 +629,9 @@ object CurationQueries {
     */
   val mixWeights: QueryDef = QueryDef.sql(
     "x_mix_weights",
-    """WITH s AS (
+    s"""WITH s AS (
       |  SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-      |         CAST(sum(len(regexp_extract_all(lower(text), '[a-z0-9]+'))) AS BIGINT) AS n_tokens
+      |         CAST(sum(len(${tokensSql()})) AS BIGINT) AS n_tokens
       |  FROM documents GROUP BY source)
       |SELECT source, n_docs, n_tokens,
       |       CAST(n_tokens AS DOUBLE) / sum(n_tokens) OVER () AS token_share,
@@ -676,7 +665,7 @@ object CurationQueries {
   private val chunkPackSql: String =
     s"""ct AS (
        |  SELECT d.doc_id,
-       |         CAST(len(regexp_extract_all(lower(d.text), '[a-z0-9]+')) AS BIGINT) AS n
+       |         CAST(len(${tokensSql("d.text")}) AS BIGINT) AS n
        |  FROM documents d JOIN surv USING (doc_id)),
        |ck AS (
        |  SELECT doc_id, n, ${chunkCountSql(40, 8)}
@@ -713,8 +702,8 @@ object CurationQueries {
     "x_pipeline_e2e",
     s"""WITH t AS (
        |  SELECT doc_id, lang,
-       |         trim(regexp_replace(lower(text), '\\s+', ' ', 'g')) AS norm,
-       |         regexp_extract_all(lower(text), '[a-z0-9]+') AS toks
+       |         $normTextSql AS norm,
+       |         ${tokensSql()} AS toks
        |  FROM documents),
        |q AS (
        |  SELECT doc_id, lang, norm,
@@ -730,11 +719,8 @@ object CurationQueries {
        |  SELECT doc_id FROM (SELECT doc_id, $hashBucketSql AS bucket FROM keep WHERE rn = 1)
        |  WHERE bucket < 500),
        |dtoks AS (
-       |  SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS tok FROM documents),
-       |g8 AS (
-       |  SELECT DISTINCT doc_id, array_to_string(list_slice(tok, i, i + 7), ' ') AS ng
-       |  FROM (SELECT doc_id, tok, generate_subscripts(tok, 1) AS i FROM dtoks)
-       |  WHERE i + 7 <= len(tok)),
+       |  SELECT doc_id, ${tokensSql()} AS tok FROM documents),
+       |g8 AS (${shinglePostingsSql("dtoks", 8)}),
        |bench AS (SELECT DISTINCT ng FROM g8 WHERE doc_id % 25 = 0),
        |contam AS (
        |  SELECT DISTINCT g8.doc_id FROM g8 JOIN bench USING (ng) WHERE g8.doc_id % 25 != 0),
@@ -828,7 +814,7 @@ object CurationQueries {
 
   private def gopherFilterSql(rule: GopherRule): String =
     s"""WITH t AS (
-       |  SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS toks FROM documents),
+       |  SELECT doc_id, ${tokensSql()} AS toks FROM documents),
        |stats AS (
        |  SELECT doc_id,
        |         CAST(len(toks) AS BIGINT) AS n_words,
@@ -836,8 +822,7 @@ object CurationQueries {
        |         CAST(len(list_distinct(toks)) AS BIGINT) AS n_distinct
        |  FROM t),
        |g AS (
-       |  SELECT doc_id, unnest(list_transform(generate_series(1, len(toks) - 1),
-       |           i -> array_to_string(list_slice(toks, i, i + 1), ' '))) AS gram
+       |  SELECT doc_id, unnest(${shinglesSql("toks", 2)}) AS gram
        |  FROM t),
        |gc AS (SELECT doc_id, gram, count(*) AS cnt FROM g GROUP BY doc_id, gram),
        |top AS (
@@ -884,7 +869,7 @@ object CurationQueries {
        |  SELECT d.doc_id, d.text FROM documents d
        |  JOIN gf ON d.doc_id = gf.doc_id AND gf.kept = 1),
        |nrm AS (
-       |  SELECT doc_id, trim(regexp_replace(lower(text), '\\s+', ' ', 'g')) AS norm FROM kd),
+       |  SELECT doc_id, $normTextSql AS norm FROM kd),
        |keep AS (
        |  SELECT doc_id, row_number() OVER (PARTITION BY md5(norm) ORDER BY doc_id) AS rn
        |  FROM nrm),
@@ -943,7 +928,7 @@ object CurationQueries {
       bulNum: Int, bulDen: Int): String =
     s"""WITH t AS (
        |  SELECT doc_id,
-       |         CAST(len(regexp_extract_all(lower(text), '[a-z0-9]+')) AS BIGINT) AS n_words,
+       |         CAST(len(${tokensSql()}) AS BIGINT) AS n_words,
        |         CAST(length(text) - length(replace(text, '#', '')) AS BIGINT)
        |           + CAST((length(text) - length(replace(text, '...', ''))) // 3 AS BIGINT)
        |           AS n_symbols,
@@ -992,7 +977,7 @@ object CurationQueries {
     */
   private def tokenBudgetSql(num: Int, den: Int): String =
     s"""WITH s AS (
-       |  SELECT source, CAST(sum(len(regexp_extract_all(lower(text), '[a-z0-9]+'))) AS BIGINT) AS n_tokens
+       |  SELECT source, CAST(sum(len(${tokensSql()})) AS BIGINT) AS n_tokens
        |  FROM documents GROUP BY source),
        |w AS (
        |  SELECT source, n_tokens,
@@ -1089,7 +1074,7 @@ object CurationQueries {
     */
   private def lengthTrimSql(loPct: Int, hiPct: Int): String =
     s"""WITH lens AS (
-       |  SELECT doc_id, CAST(len(regexp_extract_all(lower(text), '[a-z0-9]+')) AS BIGINT) AS n_tokens
+       |  SELECT doc_id, CAST(len(${tokensSql()}) AS BIGINT) AS n_tokens
        |  FROM documents),
        |freq AS (SELECT n_tokens, CAST(count(*) AS BIGINT) AS cnt FROM lens GROUP BY n_tokens),
        |cum AS (
@@ -1200,7 +1185,7 @@ object CurationQueries {
   private def shardAssignSql(nShards: Int): String =
     s"""WITH per_doc AS (
        |  SELECT ((doc_id % 2147483648) * 2654435761) % 4294967296 AS h,
-       |         CAST(len(regexp_extract_all(lower(text), '[a-z0-9]+')) AS BIGINT) AS n_tok
+       |         CAST(len(${tokensSql()}) AS BIGINT) AS n_tok
        |  FROM documents),
        |shards AS (
        |  SELECT h % $nShards AS shard, CAST(count(*) AS BIGINT) AS n_docs,
@@ -1350,7 +1335,7 @@ object CurationQueries {
   private def packAuditSql(budget: Long): String =
     s"""WITH tp AS (
        |  SELECT doc_id,
-       |         CAST(len(regexp_extract_all(lower(text), '[a-z0-9]+')) AS BIGINT) AS n_tokens
+       |         CAST(len(${tokensSql()}) AS BIGINT) AS n_tokens
        |  FROM documents),
        |cp AS (
        |  SELECT doc_id, n_tokens,
@@ -1407,8 +1392,8 @@ object CurationQueries {
        |${gopherFilterSql(rule)}),
        |tokf AS (
        |  SELECT doc_id, source,
-       |         CAST(len(regexp_extract_all(lower(text), '[a-z0-9]+')) AS BIGINT) AS n,
-       |         trim(regexp_replace(lower(text), '\\s+', ' ', 'g')) AS norm
+       |         CAST(len(${tokensSql()}) AS BIGINT) AS n,
+       |         $normTextSql AS norm
        |  FROM documents),
        |qd AS (
        |  SELECT t.doc_id, t.source, t.n, t.norm
@@ -1474,7 +1459,7 @@ object CurationQueries {
        |  FROM lab),
        |dt AS (
        |  SELECT doc_id, source, lang,
-       |         CAST(len(regexp_extract_all(lower(text), '[a-z0-9]+')) AS BIGINT) AS n_toks
+       |         CAST(len(${tokensSql()}) AS BIGINT) AS n_toks
        |  FROM documents),
        |base AS (
        |  SELECT dt.source, dt.n_toks, gf.kept, sz.cluster_size

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{QueryDef, Tables}
-import graft.llm.TextOps.{exactFp, normText, tokens}
+import graft.llm.TextOps.{exactFp, exactFpSql, normText, normTextSql, shinglePostingsSql, tokens, tokensSql}
 
 /** Deduplication operators for LLM training-data pipelines: exact
   * (hash-group), n-gram Jaccard (inverted-index join), MinHash+LSH
@@ -62,8 +62,8 @@ object DedupQueries {
     */
   val dedupExact: QueryDef = QueryDef.sql(
     "x_dedup_exact",
-    """WITH f AS (
-      |  SELECT doc_id, md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))) AS fp
+    s"""WITH f AS (
+      |  SELECT doc_id, $exactFpSql AS fp
       |  FROM documents)
       |SELECT doc_id, fp,
       |       min(doc_id) OVER (PARTITION BY fp) AS keeper_id,
@@ -288,12 +288,9 @@ object DedupQueries {
   // ----------------------------------------------------------------
 
   private val sidPostingsSql =
-    """toks AS (
-      |  SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS tok FROM documents),
-      |sh AS (
-      |  SELECT DISTINCT doc_id, tok[i] || ' ' || tok[i+1] || ' ' || tok[i+2] AS shingle
-      |  FROM (SELECT doc_id, tok, generate_subscripts(tok, 1) AS i FROM toks)
-      |  WHERE i + 2 <= len(tok)),
+    s"""toks AS (
+      |  SELECT doc_id, ${tokensSql()} AS tok FROM documents),
+      |sh AS (${shinglePostingsSql("toks", 3, as = "shingle")}),
       |dict AS (
       |  SELECT shingle, CAST(row_number() OVER (ORDER BY shingle) AS BIGINT) AS sid
       |  FROM (SELECT DISTINCT shingle FROM sh)),
@@ -401,12 +398,9 @@ object DedupQueries {
     * by the n-gram pair query and the cluster query built on top of it.
     */
   private val ngramPairCtes =
-    """toks AS (
-      |  SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS tok FROM documents),
-      |sh AS (
-      |  SELECT DISTINCT doc_id, tok[i] || ' ' || tok[i+1] || ' ' || tok[i+2] AS shingle
-      |  FROM (SELECT doc_id, tok, generate_subscripts(tok, 1) AS i FROM toks)
-      |  WHERE i + 2 <= len(tok)),
+    s"""toks AS (
+      |  SELECT doc_id, ${tokensSql()} AS tok FROM documents),
+      |sh AS (${shinglePostingsSql("toks", 3, as = "shingle")}),
       |rare AS (SELECT shingle FROM sh GROUP BY shingle HAVING count(*) <= 8),
       |cand AS (
       |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
@@ -806,7 +800,7 @@ object DedupQueries {
   val dedupCorpus: QueryDef = QueryDef.sql(
     "x_dedup_corpus",
     s"""WITH f AS (
-       |  SELECT doc_id, md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))) AS fp
+       |  SELECT doc_id, $exactFpSql AS fp
        |  FROM documents),
        |exact_drop AS (
        |  SELECT doc_id FROM (
@@ -950,8 +944,8 @@ object DedupQueries {
   private def passageDedupSql(chunkTokens: Int): String = {
     val c = chunkTokens
     s"""WITH t AS (
-       |  SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS toks,
-       |         CAST(len(regexp_extract_all(lower(text), '[a-z0-9]+')) AS BIGINT) AS n
+       |  SELECT doc_id, ${tokensSql()} AS toks,
+       |         CAST(len(${tokensSql()}) AS BIGINT) AS n
        |  FROM documents),
        |k AS (
        |  SELECT doc_id, toks, n,
@@ -1020,11 +1014,8 @@ object DedupQueries {
 
   private def dupProfileSql(minDf: Int): String =
     s"""WITH toks AS (
-       |  SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS tok FROM documents),
-       |sh AS (
-       |  SELECT DISTINCT doc_id, tok[i] || ' ' || tok[i+1] || ' ' || tok[i+2] AS shingle
-       |  FROM (SELECT doc_id, tok, generate_subscripts(tok, 1) AS i FROM toks)
-       |  WHERE i + 2 <= len(tok)),
+       |  SELECT doc_id, ${tokensSql()} AS tok FROM documents),
+       |sh AS (${shinglePostingsSql("toks", 3, as = "shingle")}),
        |dfs AS (SELECT shingle, count(*) AS df FROM sh GROUP BY 1),
        |per AS (
        |  SELECT s.doc_id, CAST(count(*) AS BIGINT) AS n_shingles,
@@ -1085,8 +1076,8 @@ object DedupQueries {
   private def crossSourceOverlapSql(chunkTokens: Int): String = {
     val c = chunkTokens
     s"""WITH t AS (
-       |  SELECT doc_id, source, regexp_extract_all(lower(text), '[a-z0-9]+') AS toks,
-       |         CAST(len(regexp_extract_all(lower(text), '[a-z0-9]+')) AS BIGINT) AS n
+       |  SELECT doc_id, source, ${tokensSql()} AS toks,
+       |         CAST(len(${tokensSql()}) AS BIGINT) AS n
        |  FROM documents),
        |k AS (
        |  SELECT doc_id, source, toks, n,
@@ -1167,12 +1158,11 @@ object DedupQueries {
   // ----------------------------------------------------------------
 
   /** The whitespace-normalized text + its length — the comparison
-    * units of the edit-distance verifier. Raw (non-interpolated)
-    * string so the `\s` regex survives.
+    * units of the edit-distance verifier.
     */
   private val normTextCtes =
-    """nrm AS (
-      |  SELECT doc_id, trim(regexp_replace(lower(text), '\s+', ' ', 'g')) AS norm_text
+    s"""nrm AS (
+      |  SELECT doc_id, $normTextSql AS norm_text
       |  FROM documents),
       |nl AS (SELECT doc_id, norm_text, CAST(length(norm_text) AS BIGINT) AS len FROM nrm)""".stripMargin
 
@@ -1403,7 +1393,7 @@ object DedupQueries {
     * exact dedup itself.
     */
   private def mirrorDocsSql(normalize: Boolean): String = {
-    val key = if (normalize) "trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))" else "text"
+    val key = if (normalize) normTextSql else "text"
     s"""WITH h AS (
        |  SELECT md5($key) AS content_id, doc_id, source FROM documents),
        |g AS (

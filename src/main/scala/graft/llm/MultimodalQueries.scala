@@ -485,7 +485,7 @@ object MultimodalQueries {
     val c = chunkTokens
     s"""WITH ${frameCtes(carryText = false)},
        |t AS (
-       |  SELECT doc_id, CAST(len(regexp_extract_all(lower(text), '[a-z0-9]+')) AS BIGINT) AS n
+       |  SELECT doc_id, CAST(len(${TextOps.tokensSql()}) AS BIGINT) AS n
        |  FROM documents),
        |k AS (
        |  SELECT doc_id, n,

@@ -21,10 +21,17 @@ import graft.llm.TextOps._
   */
 object SimilarityQueries {
 
-  private val qcosSql =
-    """CAST(list_sum(list_transform(generate_series(1, len(a.qe)), i -> a.qe[i] * b.qe[i])) AS DOUBLE) /
-      |    (sqrt(CAST(list_sum(list_transform(generate_series(1, len(a.qe)), i -> a.qe[i] * a.qe[i])) AS DOUBLE)) *
-      |     sqrt(CAST(list_sum(list_transform(generate_series(1, len(b.qe)), i -> b.qe[i] * b.qe[i])) AS DOUBLE)))""".stripMargin
+  /** The `q(vec_id, qe)` and `e(vec_id, qe, nrm)` oracle CTEs — the SQL
+    * twin of [[TextOps.quantizedVecs]].
+    */
+  private val quantizedVecsCtes: String =
+    s"""q AS (
+       |  SELECT vec_id, ${quantizeSql()} AS qe
+       |  FROM embeddings),
+       |e AS (
+       |  SELECT vec_id, qe,
+       |         ${qnormSql("qe")} AS nrm
+       |  FROM q)""".stripMargin
 
   /** Exact brute-force cosine top-`topK` `(query_id, neighbor_id, sim)`
     * over a quantized-vector frame: every `every`-th vector is a query,
@@ -54,10 +61,10 @@ object SimilarityQueries {
   val annTopK: QueryDef = QueryDef.sql(
     "x_ann_topk",
     s"""WITH q AS (
-       |  SELECT vec_id, list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 1000) AS BIGINT)) AS qe
+       |  SELECT vec_id, ${quantizeSql()} AS qe
        |  FROM embeddings)
        |SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
-       |       $qcosSql AS sim
+       |       ${qcosSql("a.qe", "b.qe")} AS sim
        |FROM q a JOIN q b ON a.vec_id % 50 = 0 AND a.vec_id != b.vec_id
        |QUALIFY row_number() OVER (PARTITION BY a.vec_id ORDER BY sim DESC, b.vec_id) <= 5""".stripMargin) { (s, d) =>
     bruteTopKDf(s, d, every = 50, topK = 5)
@@ -71,12 +78,12 @@ object SimilarityQueries {
     */
   private[llm] val embedPairCtes: String =
     s"""eq AS (
-       |  SELECT vec_id, label, list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 1000) AS BIGINT)) AS qe
+       |  SELECT vec_id, label, ${quantizeSql()} AS qe
        |  FROM embeddings),
        |esp AS (
        |  SELECT * FROM (
        |    SELECT a.vec_id AS vec_a, b.vec_id AS vec_b, a.label,
-       |           $qcosSql AS sim
+       |           ${qcosSql("a.qe", "b.qe")} AS sim
        |    FROM eq a JOIN eq b ON a.label = b.label AND a.vec_id < b.vec_id)
        |  WHERE sim >= 0.4)""".stripMargin
 
@@ -152,24 +159,16 @@ object SimilarityQueries {
   /** The q + dots + bkt CTE chain at a given plane count (oracle side). */
   private def lshBucketCtes(planes: Int): String =
     s"""q AS (
-       |  SELECT vec_id, list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 1000) AS BIGINT)) AS qe
+       |  SELECT vec_id, ${quantizeSql()} AS qe
        |  FROM embeddings),
-       |dots AS (
-       |  SELECT vec_id, p.i AS plane,
-       |         list_sum(list_transform(generate_series(1, len(qe)),
-       |           j -> qe[j] * (((p.i * 97 + (j - 1) * 31 + 7) % 21) - 10))) AS dot
-       |  FROM q, generate_series(0, ${planes - 1}) p(i)),
-       |bkt AS (
-       |  SELECT vec_id,
-       |         CAST(sum(CASE WHEN dot >= 0 THEN (1::BIGINT << plane) ELSE 0 END) AS BIGINT) AS bucket
-       |  FROM dots GROUP BY vec_id)""".stripMargin
+       |${planeBucketCtes(planes, band = None)}""".stripMargin
 
   /** Full bucketed-pairs oracle at a given config. */
   private def lshPairsSql(planes: Int, topK: Int): String =
     s"""WITH ${lshBucketCtes(planes)},
        |pairs AS (
        |  SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-       |         $qcosSql AS sim
+       |         ${qcosSql("a.qe", "b.qe")} AS sim
        |  FROM bkt ba
        |  JOIN bkt bb ON ba.bucket = bb.bucket AND ba.vec_id < bb.vec_id
        |  JOIN q a ON a.vec_id = ba.vec_id
@@ -234,18 +233,12 @@ object SimilarityQueries {
     */
   val annIvf: QueryDef = QueryDef.sql(
     "x_ann_ivf",
-    """WITH q AS (
-      |  SELECT vec_id, list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 1000) AS BIGINT)) AS qe
-      |  FROM embeddings),
-      |e AS (
-      |  SELECT vec_id, qe,
-      |         sqrt(CAST(list_sum(list_transform(generate_series(1, len(qe)), i -> qe[i] * qe[i])) AS DOUBLE)) AS nrm
-      |  FROM q),
+    s"""WITH $quantizedVecsCtes,
       |cent AS (
       |  SELECT vec_id AS cent_id, qe AS cent_qe, nrm AS cent_nrm FROM e WHERE vec_id % 100 = 0),
       |scored_cent AS (
       |  SELECT e.vec_id, e.qe, e.nrm, c.cent_id,
-      |         CAST(list_sum(list_transform(generate_series(1, len(e.qe)), i -> e.qe[i] * c.cent_qe[i])) AS DOUBLE) /
+      |         CAST(${qdotSql("e.qe", "c.cent_qe")} AS DOUBLE) /
       |           (e.nrm * c.cent_nrm) AS csim
       |  FROM e CROSS JOIN cent c),
       |ranked AS (
@@ -257,7 +250,7 @@ object SimilarityQueries {
       |  FROM ranked WHERE vec_id % 50 = 0 AND rn <= 2),
       |scored AS (
       |  SELECT p.query_id, a.vec_id AS neighbor_id,
-      |         CAST(list_sum(list_transform(generate_series(1, len(p.q_qe)), i -> p.q_qe[i] * a.qe[i])) AS DOUBLE) /
+      |         CAST(${qdotSql("p.q_qe", "a.qe")} AS DOUBLE) /
       |           (p.q_nrm * a.nrm) AS sim
       |  FROM assigned a JOIN probes p ON a.cell = p.probe_cell AND p.query_id != a.vec_id)
       |SELECT query_id, neighbor_id, sim FROM scored
@@ -283,13 +276,7 @@ object SimilarityQueries {
     */
   private def ivfTrainedSql(iters: Int): String = {
     val base =
-      """q AS (
-        |  SELECT vec_id, list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 1000) AS BIGINT)) AS qe
-        |  FROM embeddings),
-        |e AS (
-        |  SELECT vec_id, qe,
-        |         sqrt(CAST(list_sum(list_transform(generate_series(1, len(qe)), i -> qe[i] * qe[i])) AS DOUBLE)) AS nrm
-        |  FROM q),
+      s"""$quantizedVecsCtes,
         |seeds AS (
         |  SELECT vec_id AS cent_id, qe AS cent_qe, nrm AS cent_nrm FROM e WHERE vec_id % 100 = 0)""".stripMargin
     val steps = (1 to iters).map { k =>
@@ -298,7 +285,7 @@ object SimilarityQueries {
          |  SELECT vec_id, qe, cell FROM (
          |    SELECT e.vec_id, e.qe, c.cent_id AS cell,
          |           row_number() OVER (PARTITION BY e.vec_id ORDER BY
-         |             CAST(list_sum(list_transform(generate_series(1, len(e.qe)), i -> e.qe[i] * c.cent_qe[i])) AS DOUBLE) /
+         |             CAST(${qdotSql("e.qe", "c.cent_qe")} AS DOUBLE) /
          |               (e.nrm * c.cent_nrm) DESC, c.cent_id) AS rn
          |    FROM e CROSS JOIN $prev c)
          |  WHERE rn = 1),
@@ -308,7 +295,7 @@ object SimilarityQueries {
          |  SELECT cell AS cent_id, list(v ORDER BY i) AS cent_qe FROM cmean$k GROUP BY cell),
          |tn$k AS (
          |  SELECT cent_id, cent_qe,
-         |         sqrt(CAST(list_sum(list_transform(generate_series(1, len(cent_qe)), i -> cent_qe[i] * cent_qe[i])) AS DOUBLE)) AS cent_nrm
+         |         ${qnormSql("cent_qe")} AS cent_nrm
          |  FROM trained$k)""".stripMargin
     }
     val last = if (iters == 0) "seeds" else s"tn$iters"
@@ -316,7 +303,7 @@ object SimilarityQueries {
       s"""ranked AS (
          |  SELECT e.vec_id, e.qe, e.nrm, c.cent_id,
          |         row_number() OVER (PARTITION BY e.vec_id ORDER BY
-         |           CAST(list_sum(list_transform(generate_series(1, len(e.qe)), i -> e.qe[i] * c.cent_qe[i])) AS DOUBLE) /
+         |           CAST(${qdotSql("e.qe", "c.cent_qe")} AS DOUBLE) /
          |             (e.nrm * c.cent_nrm) DESC, c.cent_id) AS rn
          |  FROM e CROSS JOIN $last c),
          |assigned AS (SELECT vec_id, qe, nrm, cent_id AS cell FROM ranked WHERE rn = 1),
@@ -325,7 +312,7 @@ object SimilarityQueries {
          |  FROM ranked WHERE vec_id % 50 = 0 AND rn <= 2),
          |scored AS (
          |  SELECT p.query_id, a.vec_id AS neighbor_id,
-         |         CAST(list_sum(list_transform(generate_series(1, len(p.q_qe)), i -> p.q_qe[i] * a.qe[i])) AS DOUBLE) /
+         |         CAST(${qdotSql("p.q_qe", "a.qe")} AS DOUBLE) /
          |           (p.q_nrm * a.nrm) AS sim
          |  FROM assigned a JOIN probes p ON a.cell = p.probe_cell AND p.query_id != a.vec_id)
          |SELECT query_id, neighbor_id, sim FROM scored
@@ -543,7 +530,7 @@ object SimilarityQueries {
     s"""WITH RECURSIVE ${lshBucketCtes(planes)},
        |pairs AS (
        |  SELECT vec_a, vec_b FROM (
-       |    SELECT a.vec_id AS vec_a, b.vec_id AS vec_b, $qcosSql AS sim
+       |    SELECT a.vec_id AS vec_a, b.vec_id AS vec_b, ${qcosSql("a.qe", "b.qe")} AS sim
        |    FROM bkt ba JOIN bkt bb ON ba.bucket = bb.bucket AND ba.vec_id < bb.vec_id
        |    JOIN q a ON a.vec_id = ba.vec_id
        |    JOIN q b ON b.vec_id = bb.vec_id)
@@ -614,20 +601,14 @@ object SimilarityQueries {
     * sides' parameterization cannot drift.
     */
   private def semAssignedCtes(seedRem: Int): String =
-    s"""q AS (
-       |  SELECT vec_id, list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 1000) AS BIGINT)) AS qe
-       |  FROM embeddings),
-       |e AS (
-       |  SELECT vec_id, qe,
-       |         sqrt(CAST(list_sum(list_transform(generate_series(1, len(qe)), i -> qe[i] * qe[i])) AS DOUBLE)) AS nrm
-       |  FROM q),
+    s"""$quantizedVecsCtes,
        |cent AS (
        |  SELECT vec_id AS cent_id, qe AS cent_qe, nrm AS cent_nrm FROM e WHERE vec_id % 100 = $seedRem),
        |assigned AS (
        |  SELECT vec_id, qe, nrm, cent_id AS cell FROM (
        |    SELECT e.vec_id, e.qe, e.nrm, c.cent_id,
        |           row_number() OVER (PARTITION BY e.vec_id ORDER BY
-       |             CAST(list_sum(list_transform(generate_series(1, len(e.qe)), i -> e.qe[i] * c.cent_qe[i])) AS DOUBLE) /
+       |             CAST(${qdotSql("e.qe", "c.cent_qe")} AS DOUBLE) /
        |               (e.nrm * c.cent_nrm) DESC, c.cent_id) AS rn
        |    FROM e CROSS JOIN cent c)
        |  WHERE rn = 1)""".stripMargin
@@ -670,7 +651,7 @@ object SimilarityQueries {
        |dropped AS (
        |  SELECT DISTINCT b.vec_id FROM assigned a JOIN assigned b
        |    ON a.cell = b.cell AND a.vec_id < b.vec_id
-       |  WHERE CAST(list_sum(list_transform(generate_series(1, len(a.qe)), i -> a.qe[i] * b.qe[i])) AS DOUBLE) /
+       |  WHERE CAST(${qdotSql("a.qe", "b.qe")} AS DOUBLE) /
        |          (a.nrm * b.nrm) >= $tau)
        |SELECT a.vec_id, a.cell,
        |       CAST(CASE WHEN d.vec_id IS NULL THEN 1 ELSE 0 END AS BIGINT) AS kept
@@ -721,14 +702,14 @@ object SimilarityQueries {
 
   private def hardNegativesSql(k: Int): String =
     s"""WITH q AS (
-       |  SELECT vec_id, label, list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 1000) AS BIGINT)) AS qe
+       |  SELECT vec_id, label, ${quantizeSql()} AS qe
        |  FROM embeddings)
        |SELECT query_id, neighbor_id, q_label, n_label, sim,
        |       CAST(row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS BIGINT) AS rnk
        |FROM (
        |  SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
        |         a.label AS q_label, b.label AS n_label,
-       |         $qcosSql AS sim
+       |         ${qcosSql("a.qe", "b.qe")} AS sim
        |  FROM q a JOIN q b ON a.vec_id % 50 = 0 AND a.label != b.label)
        |QUALIFY rnk <= $k""".stripMargin
 
@@ -779,7 +760,7 @@ object SimilarityQueries {
        |dropped AS (
        |  SELECT DISTINCT d.vec_id FROM assigned d JOIN assigned c
        |    ON d.cell = c.cell AND d.vec_id % 10 = 0 AND c.vec_id % 10 != 0
-       |  WHERE CAST(list_sum(list_transform(generate_series(1, len(d.qe)), i -> d.qe[i] * c.qe[i])) AS DOUBLE) /
+       |  WHERE CAST(${qdotSql("d.qe", "c.qe")} AS DOUBLE) /
        |          (d.nrm * c.nrm) >= $tau)
        |SELECT a.vec_id, a.cell,
        |       CAST(CASE WHEN dr.vec_id IS NULL THEN 1 ELSE 0 END AS BIGINT) AS kept
@@ -823,6 +804,34 @@ object SimilarityQueries {
         posexplode(org.apache.spark.sql.graft.PlaneBuckets(col("qe"), bands * r, r))
           .as(Seq("band", "bucket")))
       .select(col("vec_id"), col("band").cast("long").as("band"), col("bucket"))
+  }
+
+  /** The `dots`/`bkt` oracle CTEs over `q(vec_id, qe, …)` — the SQL
+    * twin of [[bandedBuckets]] (and of [[planeBucket]]): one
+    * [[TextOps.planeDotSql]] per (vector, plane) for `planes` planes,
+    * then the sign bits packed into `bucket`. `band = Some(r)` groups
+    * them `r` planes per band into `(vec_id, band, bucket)`;
+    * `band = None` is the single-band index `(vec_id, bucket)`.
+    */
+  private def planeBucketCtes(planes: Int, band: Option[Int],
+      materialized: Boolean = false): String = {
+    val bkt = band match {
+      case None =>
+        """bkt AS (
+          |  SELECT vec_id,
+          |         CAST(sum(CASE WHEN dot >= 0 THEN (1::BIGINT << plane) ELSE 0 END) AS BIGINT) AS bucket
+          |  FROM dots GROUP BY vec_id)""".stripMargin
+      case Some(r) =>
+        s"""bkt AS${if (materialized) " MATERIALIZED" else ""} (
+           |  SELECT vec_id, plane // $r AS band,
+           |         CAST(sum(CASE WHEN dot >= 0 THEN (1::BIGINT << (plane % $r)) ELSE 0 END) AS BIGINT) AS bucket
+           |  FROM dots GROUP BY vec_id, plane // $r)""".stripMargin
+    }
+    s"""dots AS (
+       |  SELECT vec_id, p.i AS plane,
+       |         $planeDotSql AS dot
+       |  FROM q, generate_series(0, ${planes - 1}) p(i)),
+       |$bkt""".stripMargin
   }
 
   /** The quantized-vector table `(vec_id, qe, nrm)` as a shared
@@ -943,24 +952,22 @@ object SimilarityQueries {
     */
   private def knnEdgeCtes(bands: Int, r: Int, k: Int): String =
     s"""q AS MATERIALIZED (
-       |  SELECT vec_id, list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 1000) AS BIGINT)) AS qe
+       |  SELECT vec_id, ${quantizeSql()} AS qe
        |  FROM embeddings),
-       |dots AS (
-       |  SELECT vec_id, p.i AS plane,
-       |         list_sum(list_transform(generate_series(1, len(qe)),
-       |           j -> qe[j] * (((p.i * 97 + (j - 1) * 31 + 7) % 21) - 10))) AS dot
-       |  FROM q, generate_series(0, ${bands * r - 1}) p(i)),
-       |bkt AS MATERIALIZED (
-       |  SELECT vec_id, plane // $r AS band,
-       |         CAST(sum(CASE WHEN dot >= 0 THEN (1::BIGINT << (plane % $r)) ELSE 0 END) AS BIGINT) AS bucket
-       |  FROM dots GROUP BY vec_id, plane // $r),
-       |cand AS (
+       |${planeBucketCtes(bands * r, Some(r), materialized = true)},
+       |${knnEdgesFromCtes(k)}""".stripMargin
+
+  /** The cand/edges oracle CTEs over `q` and a banded `bkt` — the SQL
+    * twin of [[knnEdgesFrom]].
+    */
+  private def knnEdgesFromCtes(k: Int): String =
+    s"""cand AS (
        |  SELECT DISTINCT ba.vec_id AS vec_a, bb.vec_id AS vec_b
        |  FROM bkt ba JOIN bkt bb
        |    ON ba.band = bb.band AND ba.bucket = bb.bucket AND ba.vec_id != bb.vec_id),
        |edges AS MATERIALIZED (
        |  SELECT vec_a, vec_b, sim FROM (
-       |    SELECT c.vec_a, c.vec_b, $qcosSql AS sim
+       |    SELECT c.vec_a, c.vec_b, ${qcosSql("a.qe", "b.qe")} AS sim
        |    FROM cand c JOIN q a ON a.vec_id = c.vec_a JOIN q b ON b.vec_id = c.vec_b)
        |  QUALIFY row_number() OVER (PARTITION BY vec_a ORDER BY sim DESC, vec_b) <= $k)""".stripMargin
 
@@ -1043,29 +1050,20 @@ object SimilarityQueries {
     s"""rc AS (SELECT CAST(round($rBase + log2(count(*) / $nBase.0)) AS INTEGER) AS r
        |       FROM embeddings),
        |q AS MATERIALIZED (
-       |  SELECT vec_id, list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 1000) AS BIGINT)) AS qe
+       |  SELECT vec_id, ${quantizeSql()} AS qe
        |  FROM embeddings),
        |dots AS (
        |  SELECT vec_id,
        |         p.i // (SELECT r FROM rc) AS band,
        |         p.i % (SELECT r FROM rc) AS bit,
-       |         list_sum(list_transform(generate_series(1, len(qe)),
-       |           j -> qe[j] * (((p.i * 97 + (j - 1) * 31 + 7) % 21) - 10))) AS dot
+       |         $planeDotSql AS dot
        |  FROM q, generate_series(0, ${bands * rMax - 1}) p(i)
        |  WHERE p.i < $bands * (SELECT r FROM rc)),
        |bkt AS MATERIALIZED (
        |  SELECT vec_id, band,
        |         CAST(sum(CASE WHEN dot >= 0 THEN (1::BIGINT << bit) ELSE 0 END) AS BIGINT) AS bucket
        |  FROM dots GROUP BY vec_id, band),
-       |cand AS (
-       |  SELECT DISTINCT ba.vec_id AS vec_a, bb.vec_id AS vec_b
-       |  FROM bkt ba JOIN bkt bb
-       |    ON ba.band = bb.band AND ba.bucket = bb.bucket AND ba.vec_id != bb.vec_id),
-       |edges AS MATERIALIZED (
-       |  SELECT vec_a, vec_b, sim FROM (
-       |    SELECT c.vec_a, c.vec_b, $qcosSql AS sim
-       |    FROM cand c JOIN q a ON a.vec_id = c.vec_a JOIN q b ON b.vec_id = c.vec_b)
-       |  QUALIFY row_number() OVER (PARTITION BY vec_a ORDER BY sim DESC, vec_b) <= $k)""".stripMargin
+       |${knnEdgesFromCtes(k)}""".stripMargin
 
   /** Mutual-kNN graph whose plane count is derived through
     * [[planesFor]] — the productized form of the round-13 measured
@@ -1219,22 +1217,22 @@ object SimilarityQueries {
     */
   private def labelOutliersSql(k: Int): String =
     s"""WITH q AS (
-       |  SELECT vec_id, label, list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 1000) AS BIGINT)) AS qe
+       |  SELECT vec_id, label, ${quantizeSql()} AS qe
        |  FROM embeddings),
        |e AS (
        |  SELECT vec_id, label, qe,
-       |         sqrt(CAST(list_sum(list_transform(generate_series(1, len(qe)), i -> qe[i] * qe[i])) AS DOUBLE)) AS nrm
+       |         ${qnormSql("qe")} AS nrm
        |  FROM q),
        |comp AS (SELECT label, qe, generate_subscripts(qe, 1) AS i FROM e),
        |cmean AS (SELECT label, i, CAST(round(avg(qe[i])) AS BIGINT) AS v FROM comp GROUP BY label, i),
        |cent AS (SELECT label, list(v ORDER BY i) AS cent_qe FROM cmean GROUP BY label),
        |cn AS (
        |  SELECT label, cent_qe,
-       |         sqrt(CAST(list_sum(list_transform(generate_series(1, len(cent_qe)), i -> cent_qe[i] * cent_qe[i])) AS DOUBLE)) AS cent_nrm
+       |         ${qnormSql("cent_qe")} AS cent_nrm
        |  FROM cent),
        |scored AS (
        |  SELECT e.label, e.vec_id,
-       |         CAST(list_sum(list_transform(generate_series(1, len(e.qe)), i -> e.qe[i] * c.cent_qe[i])) AS DOUBLE) /
+       |         CAST(${qdotSql("e.qe", "c.cent_qe")} AS DOUBLE) /
        |           (e.nrm * c.cent_nrm) AS centroid_sim
        |  FROM e JOIN cn c ON e.label = c.label)
        |SELECT label, vec_id, centroid_sim, CAST(rk AS BIGINT) AS rk FROM (
@@ -1290,24 +1288,16 @@ object SimilarityQueries {
     */
   private def labelPropSql(bands: Int, r: Int, k: Int): String =
     s"""WITH q AS (
-       |  SELECT vec_id, label, list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 1000) AS BIGINT)) AS qe
+       |  SELECT vec_id, label, ${quantizeSql()} AS qe
        |  FROM embeddings),
-       |dots AS (
-       |  SELECT vec_id, p.i AS plane,
-       |         list_sum(list_transform(generate_series(1, len(qe)),
-       |           j -> qe[j] * (((p.i * 97 + (j - 1) * 31 + 7) % 21) - 10))) AS dot
-       |  FROM q, generate_series(0, ${bands * r - 1}) p(i)),
-       |bkt AS (
-       |  SELECT vec_id, plane // $r AS band,
-       |         CAST(sum(CASE WHEN dot >= 0 THEN (1::BIGINT << (plane % $r)) ELSE 0 END) AS BIGINT) AS bucket
-       |  FROM dots GROUP BY vec_id, plane // $r),
+       |${planeBucketCtes(bands * r, Some(r))},
        |cand AS (
        |  SELECT DISTINCT ba.vec_id AS vec_a, bb.vec_id AS vec_b
        |  FROM bkt ba JOIN bkt bb ON ba.band = bb.band AND ba.bucket = bb.bucket
        |  WHERE ba.vec_id % 5 = 0 AND bb.vec_id % 5 != 0),
        |topk AS (
        |  SELECT vec_a, vec_b, true_label, nb_label, sim FROM (
-       |    SELECT c.vec_a, c.vec_b, a.label AS true_label, b.label AS nb_label, $qcosSql AS sim
+       |    SELECT c.vec_a, c.vec_b, a.label AS true_label, b.label AS nb_label, ${qcosSql("a.qe", "b.qe")} AS sim
        |    FROM cand c JOIN q a ON a.vec_id = c.vec_a JOIN q b ON b.vec_id = c.vec_b)
        |  QUALIFY row_number() OVER (PARTITION BY vec_a ORDER BY sim DESC, vec_b) <= $k),
        |votes AS (
@@ -1395,10 +1385,10 @@ object SimilarityQueries {
     */
   private def semanticDeconSql(tau: Double): String =
     s"""WITH q AS (
-       |  SELECT vec_id, list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 1000) AS BIGINT)) AS qe
+       |  SELECT vec_id, ${quantizeSql()} AS qe
        |  FROM embeddings),
        |hit AS (
-       |  SELECT a.vec_id AS vec_a, b.vec_id AS vec_b, $qcosSql AS sim
+       |  SELECT a.vec_id AS vec_a, b.vec_id AS vec_b, ${qcosSql("a.qe", "b.qe")} AS sim
        |  FROM q a JOIN q b ON a.vec_id % 25 != 0 AND b.vec_id % 25 = 0)
        |SELECT vec_a AS vec_id, CAST(count(*) AS BIGINT) AS n_bench_hits, max(sim) AS max_sim
        |FROM hit WHERE sim >= $tau GROUP BY vec_a""".stripMargin
@@ -1451,7 +1441,7 @@ object SimilarityQueries {
   private def annRecallSql(planes: Int): String =
     s"""WITH ${lshBucketCtes(planes)},
        |truth AS (
-       |  SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id, $qcosSql AS sim
+       |  SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id, ${qcosSql("a.qe", "b.qe")} AS sim
        |  FROM q a JOIN q b ON a.vec_id % 50 = 0 AND a.vec_id != b.vec_id
        |  QUALIFY row_number() OVER (PARTITION BY a.vec_id ORDER BY sim DESC, b.vec_id) <= 5)
        |SELECT t.query_id, CAST(count(*) AS BIGINT) AS n_truth,
@@ -1513,18 +1503,18 @@ object SimilarityQueries {
     */
   private def scaleTopkCtes(tag: String, scale: Int, every: Int, topK: Int): String =
     s"""e$tag AS (
-       |  SELECT vec_id, list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * $scale) AS BIGINT)) AS qe
+       |  SELECT vec_id, ${quantizeSql(scale)} AS qe
        |  FROM embeddings),
        |v$tag AS (
        |  SELECT vec_id, qe,
-       |         sqrt(CAST(list_sum(list_transform(qe, x -> x * x)) AS DOUBLE)) AS nrm
+       |         ${qnormSql("qe")} AS nrm
        |  FROM e$tag
-       |  WHERE list_sum(list_transform(qe, x -> x * x)) > 0),
+       |  WHERE ${qdotSql("qe", "qe")} > 0),
        |t$tag AS (
        |  SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id
        |  FROM v$tag a JOIN v$tag b ON a.vec_id % $every = 0 AND a.vec_id != b.vec_id
        |  QUALIFY row_number() OVER (PARTITION BY a.vec_id
-       |    ORDER BY CAST(list_sum(list_transform(generate_series(1, len(a.qe)), i -> a.qe[i] * b.qe[i])) AS DOUBLE)
+       |    ORDER BY CAST(${qdotSql("a.qe", "b.qe")} AS DOUBLE)
        |             / (a.nrm * b.nrm) DESC, b.vec_id) <= $topK)""".stripMargin
 
   private def quantRecallSql(coarse: Int): String =
@@ -1682,7 +1672,7 @@ object SimilarityQueries {
           |  SELECT e.label AS grp, c.vec_id, c.i, c.x
           |  FROM comp c JOIN embeddings e ON e.vec_id = c.vec_id)""".stripMargin
     s"""WITH q AS (
-       |  SELECT vec_id, list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 1000) AS BIGINT)) AS qe
+       |  SELECT vec_id, ${quantizeSql()} AS qe
        |  FROM embeddings),
        |comp AS (
        |  SELECT vec_id, i, qe[i] AS x
@@ -1839,7 +1829,7 @@ object SimilarityQueries {
           |  SELECT e.label AS grp, c.vec_id, c.i, c.x
           |  FROM comp c JOIN embeddings e ON e.vec_id = c.vec_id)""".stripMargin
     s"""WITH q AS (
-       |  SELECT vec_id, list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 1000) AS BIGINT)) AS qe
+       |  SELECT vec_id, ${quantizeSql()} AS qe
        |  FROM embeddings),
        |comp AS (
        |  SELECT vec_id, i, qe[i] AS x

@@ -13,20 +13,25 @@ import org.apache.spark.sql.functions._
   */
 object TextOps {
 
-  /** Tokenize: lowercase word/number runs. Matches DuckDB's
-    * `regexp_extract_all(lower(text), '[a-z0-9]+')`.
-    */
+  /** Tokenize: lowercase word/number runs. */
   def tokens(text: Column): Column =
     regexp_extract_all(lower(text), lit("[a-z0-9]+"), lit(0))
 
-  /** Whitespace-normalized text: lowercase, every whitespace run one
-    * space, trimmed (DuckDB `trim(regexp_replace(lower(text), '\s+', ' ', 'g'))`).
-    */
+  /** DuckDB twin of [[tokens]]. */
+  def tokensSql(text: String = "text"): String = s"regexp_extract_all(lower($text), '[a-z0-9]+')"
+
+  /** Whitespace-normalized text: lowercase, every whitespace run one space, trimmed. */
   def normText(text: Column): Column =
     trim(regexp_replace(lower(text), "\\s+", " "))
 
+  /** DuckDB twin of [[normText]] over the `text` column. */
+  val normTextSql = "trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))"
+
   /** Exact-dedup fingerprint: md5 of [[normText]] (x_dedup_exact's). */
   def exactFp(text: Column): Column = md5(normText(text))
+
+  /** DuckDB twin of [[exactFp]] over the `text` column. */
+  val exactFpSql = s"md5($normTextSql)"
 
   /** Exact-dedup keeper: the rows of a (doc_id, text, …) frame whose
     * doc_id is the least among the rows sharing its [[exactFp]]
@@ -47,6 +52,17 @@ object TextOps {
         explode(org.apache.spark.sql.graft.StringShingles(tokens(col("text")), k))
           .as("shingle"))
       .distinct()
+
+  /** DuckDB twin of [[org.apache.spark.sql.graft.StringShingles]]: every
+    * complete `n`-token window of the list `toks`, in order, space-joined.
+    */
+  def shinglesSql(toks: String, n: Int): String =
+    s"list_transform(generate_series(1, len($toks) - ${n - 1}),\n" +
+      s"    i -> array_to_string(list_slice($toks, i, i + ${n - 1}), ' '))"
+
+  /** DuckDB twin of [[shinglePostings]] over a `(doc_id, tok)` CTE, the gram named `as`. */
+  def shinglePostingsSql(toks: String, n: Int, as: String = "ng"): String =
+    s"SELECT DISTINCT doc_id, unnest(${shinglesSql("tok", n)}) AS $as FROM $toks"
 
   /** Global shingle dictionary: deterministic dense integer ids, sid =
     * global rank among the sorted distinct shingles (the oracle's
@@ -164,6 +180,10 @@ object TextOps {
   def quantize(embedding: Column, scale: Int = 1000): Column =
     transform(embedding, x => round(x.cast("double") * scale).cast("long"))
 
+  /** DuckDB twin of [[quantize]] over the `embedding` column. */
+  def quantizeSql(scale: Int = 1000): String =
+    s"list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * $scale) AS BIGINT))"
+
   /** Exact integer dot product of two quantized vectors — native
     * codegen'd expression; the equivalent HOF
     * `aggregate(zip_with(a,b,_*_),0,_+_)` runs interpreted and is
@@ -172,10 +192,24 @@ object TextOps {
   def qdot(a: Column, b: Column): Column =
     org.apache.spark.sql.graft.QuantizedDot(a, b)
 
+  /** DuckDB twin of [[qdot]] over the list expressions `a` and `b`. */
+  def qdotSql(a: String, b: String): String =
+    s"list_sum(list_transform(generate_series(1, len($a)), i -> $a[i] * $b[i]))"
+
+  /** DuckDB twin of [[org.apache.spark.sql.graft.PlaneBuckets]]' dot of
+    * `qe` with plane `p.i`: weights `((i·97 + j·31 + 7) mod 21) − 10`.
+    */
+  val planeDotSql: String =
+    """list_sum(list_transform(generate_series(1, len(qe)),
+      |           j -> qe[j] * (((p.i * 97 + (j - 1) * 31 + 7) % 21) - 10)))""".stripMargin
+
   /** Norm of a quantized vector: the square root of its exact integer
     * self-dot, computed once per vector and carried next to it.
     */
   def qnorm(qe: Column): Column = sqrt(qdot(qe, qe).cast("double"))
+
+  /** DuckDB twin of [[qnorm]]. */
+  def qnormSql(qe: String): String = s"sqrt(CAST(${qdotSql(qe, qe)} AS DOUBLE))"
 
   /** Quantized cosine — the embedding family's whole reproducibility
     * contract: an exact integer dot and ONE double division by the
@@ -184,6 +218,12 @@ object TextOps {
     */
   def qcos(qa: Column, na: Column, qb: Column, nb: Column): Column =
     qdot(qa, qb) / (na * nb)
+
+  /** DuckDB twin of [[qcos]] with both norms computed in place. */
+  def qcosSql(a: String, b: String): String =
+    s"CAST(${qdotSql(a, b)} AS DOUBLE) /\n" +
+      s"    (${qnormSql(a)} *\n" +
+      s"     ${qnormSql(b)})"
 
   /** The quantized-vector frame `(vec_id, carry…, qe, nrm)` of an
     * embeddings table — the scoring input of every similarity query.

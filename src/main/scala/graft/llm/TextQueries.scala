@@ -21,9 +21,9 @@ object TextQueries {
     */
   val textStats: QueryDef = QueryDef.sql(
     "x_text_stats",
-    """WITH t AS (
+    s"""WITH t AS (
       |  SELECT doc_id, length(text) AS n_chars,
-      |         regexp_extract_all(lower(text), '[a-z0-9]+') AS toks
+      |         ${tokensSql()} AS toks
       |  FROM documents)
       |SELECT doc_id, n_chars,
       |       CAST(len(toks) AS BIGINT) AS n_tokens,
@@ -85,9 +85,9 @@ object TextQueries {
     */
   val langId: QueryDef = QueryDef.sql(
     "x_lang_id",
-    """WITH t AS (
+    s"""WITH t AS (
       |  SELECT doc_id, lang AS labeled_lang,
-      |         regexp_extract_all(lower(text), '[a-z0-9]+') AS toks
+      |         ${tokensSql()} AS toks
       |  FROM documents),
       |c AS (
       |  SELECT doc_id, labeled_lang,
@@ -144,9 +144,9 @@ object TextQueries {
     */
   val langAudit: QueryDef = QueryDef.sql(
     "x_lang_audit",
-    """WITH t AS (
+    s"""WITH t AS (
       |  SELECT doc_id, source, lang AS labeled_lang,
-      |         regexp_extract_all(lower(text), '[a-z0-9]+') AS toks
+      |         ${tokensSql()} AS toks
       |  FROM documents),
       |c AS (
       |  SELECT doc_id, source, labeled_lang,
@@ -188,8 +188,8 @@ object TextQueries {
     */
   val fingerprint: QueryDef = QueryDef.sql(
     "x_fingerprint",
-    """WITH n AS (
-      |  SELECT doc_id, trim(regexp_replace(lower(text), '\s+', ' ', 'g')) AS norm
+    s"""WITH n AS (
+      |  SELECT doc_id, $normTextSql AS norm
       |  FROM documents)
       |SELECT doc_id,
       |       md5(norm) AS fp_md5,
@@ -223,15 +223,14 @@ object TextQueries {
     */
   val qualitySignals: QueryDef = QueryDef.sql(
     "x_quality_signals",
-    """WITH t AS (
+    s"""WITH t AS (
       |  SELECT doc_id,
-      |         regexp_extract_all(lower(text), '[a-z0-9]+') AS toks,
+      |         ${tokensSql()} AS toks,
       |         string_split(text, chr(10)) AS lines
       |  FROM documents),
       |g AS (
       |  SELECT doc_id, lines,
-      |         list_transform(generate_series(1, len(toks) - 2),
-      |           i -> array_to_string(list_slice(toks, i, i + 2), ' ')) AS grams
+      |         ${shinglesSql("toks", 3)} AS grams
       |  FROM t)
       |SELECT doc_id,
       |       CAST(len(grams) AS BIGINT) AS n_3grams,
@@ -265,10 +264,9 @@ object TextQueries {
     */
   private def winnowCtes(win: Int, gram: Int): String =
     s"""t AS (
-       |  SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS toks FROM documents),
+       |  SELECT doc_id, ${tokensSql()} AS toks FROM documents),
        |g AS (
-       |  SELECT doc_id, list_transform(generate_series(1, len(toks) - ${gram - 1}),
-       |    i -> array_to_string(list_slice(toks, i, i + ${gram - 1}), ' ')) AS grams
+       |  SELECT doc_id, ${shinglesSql("toks", gram)} AS grams
        |  FROM t),
        |h AS (
        |  SELECT doc_id, list_transform(grams,
@@ -440,10 +438,9 @@ object TextQueries {
 
   private def ngramTopkSql(n: Int, k: Int): String =
     s"""WITH t AS (
-       |  SELECT lang, regexp_extract_all(lower(text), '[a-z0-9]+') AS toks FROM documents),
+       |  SELECT lang, ${tokensSql()} AS toks FROM documents),
        |g AS (
-       |  SELECT lang, unnest(list_transform(generate_series(1, len(toks) - ${n - 1}),
-       |    i -> array_to_string(list_slice(toks, i, i + ${n - 1}), ' '))) AS gram
+       |  SELECT lang, unnest(${shinglesSql("toks", n)}) AS gram
        |  FROM t),
        |c AS (SELECT lang, gram, CAST(count(*) AS BIGINT) AS cnt FROM g GROUP BY 1, 2),
        |r AS (SELECT lang, gram, cnt,
@@ -522,7 +519,7 @@ object TextQueries {
     */
   private def repeatedCtes(gram: Int, minOcc: Int): String =
     s"""t AS (
-       |  SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS toks FROM documents),
+       |  SELECT doc_id, ${tokensSql()} AS toks FROM documents),
        |g AS (
        |  SELECT doc_id, unnest(list_transform(generate_series(1, len(toks) - ${gram - 1}),
        |    i -> struct_pack(pos := CAST(i AS BIGINT),
@@ -656,7 +653,7 @@ object TextQueries {
 
   private def tfidfTopkSql(k: Int): String =
     s"""WITH t AS (
-       |  SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS toks FROM documents),
+       |  SELECT doc_id, ${tokensSql()} AS toks FROM documents),
        |n AS (SELECT CAST(count(*) AS BIGINT) AS n_docs FROM t),
        |tf AS (
        |  SELECT doc_id, term, CAST(count(*) AS BIGINT) AS tf
@@ -713,7 +710,7 @@ object TextQueries {
 
   private def skipgramTopkSql(w: Int, k: Int): String =
     s"""WITH t AS (
-       |  SELECT regexp_extract_all(lower(text), '[a-z0-9]+') AS toks FROM documents),
+       |  SELECT ${tokensSql()} AS toks FROM documents),
        |p AS (
        |  SELECT toks[i] AS tok_a,
        |         unnest(list_slice(toks, i + 1, i + $w)) AS tok_b
@@ -753,7 +750,7 @@ object TextQueries {
     */
   private def vocabCoverageSql(v: Int): String =
     s"""WITH toks AS (
-       |  SELECT doc_id, source, unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS tok
+       |  SELECT doc_id, source, unnest(${tokensSql()}) AS tok
        |  FROM documents),
        |vocab AS (
        |  SELECT tok FROM (SELECT tok, count(*) AS cnt FROM toks GROUP BY tok)
@@ -816,7 +813,7 @@ object TextQueries {
   private def tokenDriftSql(k: Int): String =
     s"""WITH toks AS (
        |  SELECT try_cast(substr(source, 4) AS INT) < 10 AS is_a,
-       |         unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS tok
+       |         unnest(${tokensSql()}) AS tok
        |  FROM documents),
        |cnt AS (
        |  SELECT tok,
@@ -895,11 +892,8 @@ object TextQueries {
     */
   private def ngramNoveltySql(k: Int): String =
     s"""WITH toks AS (
-       |  SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS tok FROM documents),
-       |g AS (
-       |  SELECT DISTINCT doc_id, array_to_string(list_slice(tok, i, i + ${k - 1}), ' ') AS ng
-       |  FROM (SELECT doc_id, tok, generate_subscripts(tok, 1) AS i FROM toks)
-       |  WHERE i + ${k - 1} <= len(tok)),
+       |  SELECT doc_id, ${tokensSql()} AS tok FROM documents),
+       |g AS (${shinglePostingsSql("toks", k)}),
        |f AS (SELECT ng, min(doc_id) AS first_doc FROM g GROUP BY 1)
        |SELECT g.doc_id, CAST(count(*) AS BIGINT) AS n_grams,
        |       CAST(sum(CASE WHEN f.first_doc = g.doc_id THEN 1 ELSE 0 END) AS BIGINT) AS n_novel,
@@ -974,7 +968,7 @@ object TextQueries {
 
   private def rarityProfileSql(rareMax: Long, midMax: Long): String =
     s"""WITH toks AS (
-       |  SELECT doc_id, unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS tok
+       |  SELECT doc_id, unnest(${tokensSql()}) AS tok
        |  FROM documents),
        |cf AS (SELECT tok, CAST(count(*) AS BIGINT) AS cf FROM toks GROUP BY tok),
        |p AS (
@@ -1057,7 +1051,7 @@ object TextQueries {
 
   private def pmiTopkSql(minCount: Long, k: Int): String =
     s"""WITH t AS (
-       |  SELECT lang, regexp_extract_all(lower(text), '[a-z0-9]+') AS toks FROM documents),
+       |  SELECT lang, ${tokensSql()} AS toks FROM documents),
        |uni AS (
        |  SELECT lang, tok, CAST(count(*) AS BIGINT) AS cf
        |  FROM (SELECT lang, unnest(toks) AS tok FROM t) GROUP BY 1, 2),
@@ -1123,9 +1117,9 @@ object TextQueries {
     * (≤ ~1.4k cells at round 1), never on corpus rows.
     */
   private def wordFreqSql: String =
-    """wf AS (
+    s"""wf AS (
       |  SELECT word, CAST(count(*) AS BIGINT) AS freq
-      |  FROM (SELECT unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS word
+      |  FROM (SELECT unnest(${tokensSql()}) AS word
       |        FROM documents)
       |  GROUP BY word)""".stripMargin
 
@@ -1427,7 +1421,7 @@ object TextQueries {
        |$roundCtes,
        |wfs AS (
        |  SELECT source, word, CAST(count(*) AS BIGINT) AS freq
-       |  FROM (SELECT source, unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS word
+       |  FROM (SELECT source, unnest(${tokensSql()}) AS word
        |        FROM documents)
        |  GROUP BY source, word),
        |enc AS (

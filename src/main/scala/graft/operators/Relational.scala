@@ -99,6 +99,21 @@ object Relational {
     */
   def dedup(df: DataFrame): DataFrame = df.dropDuplicates()
 
+  // ---------------------------------------------------------------- S5
+  /** S5's lookback (opportunity_stage.py:131-173): the events within
+    * 15 days of the newest `ts`, anchored at max ts for determinism —
+    * one broadcast max, crossJoined back.
+    */
+  def lookback(events: DataFrame): DataFrame = {
+    val maxTs = events.agg(max(col("ts")).as("max_ts"))
+    events.crossJoin(broadcast(maxTs))
+      .where(col("ts") >= col("max_ts") - expr("INTERVAL 15 DAYS"))
+      .drop("max_ts")
+  }
+
+  /** DuckDB predicate twin of [[lookback]] over `events`. */
+  val lookbackSql = "ts >= (SELECT max(ts) - INTERVAL 15 DAY FROM events)"
+
   // ------------------------------------------------------------- skew
   /** Salted equi-join for skewed fact keys: the dim side is replicated
     * `buckets` times (one copy per salt value), the fact side gets a

@@ -247,19 +247,16 @@ object EntityPipelines {
     */
   val stageReport: QueryDef = QueryDef.sql(
     "stage_report",
-    """SELECT event_id AS row_id,
+    s"""SELECT event_id AS row_id,
       |       user_id AS reporter,
       |       value AS amount,
       |       strftime(ts, '%Y-%m-%d %H:%M:%S.%f') AS received,
       |       CASE WHEN props LIKE '{%' THEN 'json' ELSE 'csv' END AS fmt
       |FROM events
-      |WHERE ts >= (SELECT max(ts) - INTERVAL 15 DAY FROM events)
+      |WHERE $lookbackSql
       |  AND event_type = 'purchase'""") { (s, d) =>
-    val ev = Tables.events(s, d)
-    val maxTs = ev.agg(max(col("ts")).as("max_ts"))
-    ev.crossJoin(broadcast(maxTs))
-      .where(col("ts") >= col("max_ts") - expr("INTERVAL 15 DAYS") &&
-        col("event_type") === "purchase")
+    lookback(Tables.events(s, d))
+      .where(col("event_type") === "purchase")
       .select(
         col("event_id").as("row_id"),
         col("user_id").as("reporter"),

@@ -144,15 +144,12 @@ object FanoutQueries {
     */
   val pTimeTopN: QueryDef = QueryDef.sql(
     "p_time_topn",
-    """SELECT event_id, event_type,
+    s"""SELECT event_id, event_type,
       |       strftime(ts, '%Y-%m-%d %H:%M:%S.%f') AS ts_str
       |FROM events
-      |WHERE ts >= (SELECT max(ts) - INTERVAL 15 DAY FROM events)
+      |WHERE $lookbackSql
       |ORDER BY ts DESC, event_id DESC LIMIT 5""") { (s, d) =>
-    val ev = Tables.events(s, d)
-    val maxTs = ev.agg(max(col("ts")).as("max_ts"))
-    ev.crossJoin(broadcast(maxTs))
-      .where(col("ts") >= col("max_ts") - expr("INTERVAL 15 DAYS"))
+    lookback(Tables.events(s, d))
       .orderBy(col("ts").desc, col("event_id").desc)
       .limit(5)
       .select(col("event_id"), col("event_type"),

@@ -192,6 +192,20 @@ class SessionTuningSpec extends AnyFunSuite {
         s"FIELD_NAME in $eav")
   }
 
+  test("one oracle twin per text and vector kernel") {
+    val textOps = "graft/llm/TextOps.scala:"
+    val copies = Seq("'[a-z0-9]+'", "s+', ' ', 'g')", "round(CAST(x AS DOUBLE) *",
+        "list_sum(list_transform(generate_series(1, len(")
+      .map(n => n -> mainLinesWith(n).filterNot(_.startsWith(textOps)))
+      .filter(_._2.nonEmpty)
+    val planeDots = mainLinesWith("p.i * 97")
+    assert(copies.isEmpty && planeDots.size == 1,
+      "spell DuckDB tokens, normal forms, quantized vectors and dots through the TextOps " +
+        "twins (tokensSql, normTextSql, quantizeSql, qdotSql, planeDotSql); found " +
+        copies.map { case (n, ls) => s"${ls.size} lines with $n: $ls" }.mkString("; ") +
+        s"; plane dots $planeDots")
+  }
+
   test("one quantized-cosine kernel: qdot and the ×1000 quantization only in TextOps.scala") {
     val offenders = Seq("qdot(", "quantize(col(\"embedding\"))")
       .flatMap(mainSourcesWith(_, "TextOps.scala")).distinct

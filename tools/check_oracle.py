@@ -14,8 +14,40 @@ Disable with GRAFT_ORACLE_CACHE=0; cache lives under
 $GRAFT_ORACLE_CACHE_DIR (default /tmp/graft_oracle_cache).
 
 Usage: python3 tools/check_oracle.py [sf_dir] [verify_out_dir]
+       python3 tools/check_oracle.py --sql-diff A/oracle_sql.json B/oracle_sql.json
+
+--sql-diff compares the oracle SQL of two Verify dumps and runs no
+DuckDB: it prints each query whose oracle text differs, once as a
+byte-for-byte difference and, when the texts still differ after every
+whitespace run is collapsed to one space, once more as a text
+difference; queries present in only one dump are named too. Exit
+status is 1 when anything differs.
 """
 import sys, os, json, glob, hashlib
+
+
+def sql_diff(path_a: str, path_b: str) -> int:
+    a, b = json.load(open(path_a)), json.load(open(path_b))
+    norm = lambda sql: " ".join(sql.split())
+    both = sorted(set(a) & set(b))
+    raw = [n for n in both if a[n] != b[n]]
+    text = [n for n in raw if norm(a[n]) != norm(b[n])]
+    only_a, only_b = sorted(set(a) - set(b)), sorted(set(b) - set(a))
+    for label, names in (("byte-for-byte", raw), ("after whitespace normalisation", text),
+                         (f"only in {path_a}", only_a), (f"only in {path_b}", only_b)):
+        print(f"{len(names)} differ {label}" if not label.startswith("only")
+              else f"{len(names)} {label}")
+        for n in names:
+            print(f"  {n}")
+    print(f"{len(both) - len(raw)}/{len(both)} shared oracle strings byte-identical")
+    return 1 if raw or only_a or only_b else 0
+
+
+if len(sys.argv) > 1 and sys.argv[1] == "--sql-diff":
+    if len(sys.argv) != 4:
+        sys.exit("usage: check_oracle.py --sql-diff A/oracle_sql.json B/oracle_sql.json")
+    sys.exit(sql_diff(sys.argv[2], sys.argv[3]))
+
 import duckdb
 import pandas as pd
 
